@@ -1312,10 +1312,16 @@ def lsh_recall_audit(
     Ground truth uses SHARED-SHINGLE blocking, which is LOSSLESS for any
     threshold > 0 (J ≥ t > 0 implies at least one common shingle), so
     truth is exact without an N² pair scan; its cost is Σ_shingle df² —
-    the same worst-case as the LSH bucket join itself. found ⊆ truth by
-    construction (every verified LSH pair passes the same J filter and
-    thus shares a shingle), so the audit reports true/found/missed counts
-    — precision is 1 by the verify step; recall is the banding's.
+    the same worst-case as the LSH bucket join itself.
+
+    ``found`` is NOT verified: it is the raw banding candidate set (every
+    (band, bucket) collision, false positives included), never passed
+    through a Jaccard filter. n_found = |cand ∩ truth| is exact only
+    because the count is anchored on the truth side — truth rows
+    left-join the candidates and count a match, so a candidate outside
+    truth can never be counted. Any new use of ``found`` as "verified
+    pairs" (say, to report precision) must verify it first; the audit
+    reports true/found/missed counts, and recall is the banding's.
 
     Output: ONE row (n_true_pairs, n_found_pairs, n_missed) — exact
     integers; the caller derives recall ratios. The hashed-shingle table

@@ -41,18 +41,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.layouts import hadoop_fs, read_parquet, write_schema_sidecar
+from nilm_data_framework_spark.operators.text import BM25_POSTINGS_SCHEMA, BM25_STATS_SCHEMA
+
 
 # --- Hadoop FileSystem helpers (driver-side metadata ops) ----------------------
-
-
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) for ``path`` via the JVM Hadoop API — the same
-    mechanism Spark's own dynamic-overwrite commit uses to drop dead
-    partition directories. Driver-side metadata call, never data."""
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
 
 
 def _unescape_partition_value(name: str) -> str:
@@ -81,7 +74,7 @@ def list_partition_values(spark: SparkSession, path: str, key: str) -> dict[str,
     dataset root (e.g. {"vector": "term=vector"}). One driver-side
     listStatus — the same O(#partitions) metadata pass partition
     discovery performs on every read of the dataset."""
-    fs, hpath = _hadoop_fs(spark, path)
+    fs, hpath = hadoop_fs(spark, path)
     prefix = f"{key}="
     out: dict[str, str] = {}
     for st in fs.listStatus(hpath):
@@ -99,7 +92,7 @@ def _delete_partition_dirs(
     rows are written into them)."""
     if not values:
         return
-    fs, _ = _hadoop_fs(spark, path)
+    fs, _ = hadoop_fs(spark, path)
     jvm = spark._jvm
     dirs = list_partition_values(spark, path, key)
     for v in values:
@@ -118,7 +111,7 @@ def _swap_directory(spark: SparkSession, old_path: str, new_path: str) -> None:
     single-writer contract, concurrent readers race the renames
     (documented in the module docstring); a real table format would
     commit a manifest instead."""
-    fs, old = _hadoop_fs(spark, old_path)
+    fs, old = hadoop_fs(spark, old_path)
     jvm = spark._jvm
     new = jvm.org.apache.hadoop.fs.Path(new_path)
     retired = jvm.org.apache.hadoop.fs.Path(f"{old_path}_retired")
@@ -189,7 +182,7 @@ def delete_bm25_docs(
     postings, not this implementation (Lucene tracks live-docs bitmaps
     for the same reason)."""
     del_ids = deleted.select(F.col(id_col).alias("doc_id")).distinct()
-    post = spark.read.parquet(f"{path}/postings")
+    post = spark.read.schema(BM25_POSTINGS_SCHEMA).parquet(f"{path}/postings")
     victims = post.join(F.broadcast(del_ids), "doc_id", "semi").localCheckpoint()
 
     aff_terms = victims.select("term").distinct().localCheckpoint()
@@ -247,10 +240,10 @@ def delete_bm25_docs(
     ).partitionBy("term").parquet(f"{path}/postings")
     _delete_partition_dirs(spark, f"{path}/postings", "term", emptied)
 
-    old = spark.read.parquet(f"{path}/stats").collect()[0]
+    old = spark.read.schema(BM25_STATS_SCHEMA).parquet(f"{path}/stats").collect()[0]
     spark.createDataFrame(
         [(old["n_docs"] - delta["n_del"], old["sum_dl"] - delta["dl_del"])],
-        "n_docs long, sum_dl long",
+        BM25_STATS_SCHEMA,
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
@@ -273,7 +266,7 @@ def compact_bm25_postings(
     point. Stats are untouched: compaction is row-preserving by
     construction, and the probe-equivalence gate
     (bm25_compact_probe_equiv) proves it."""
-    post = spark.read.parquet(f"{path}/postings")
+    post = spark.read.schema(BM25_POSTINGS_SCHEMA).parquet(f"{path}/postings")
     tmp = f"{path}/postings_compacting"
     post.repartition(write_partitions, "term").write.mode("overwrite").partitionBy(
         "term"
@@ -303,7 +296,7 @@ def delete_ivf_vecs(
     probing the maintained layout hash-matches the IVF oracle over the
     surviving corpus with the SAME centroids."""
     del_ids = deleted.select(F.col(id_col).alias(id_col)).distinct()
-    corpus = spark.read.parquet(path)
+    corpus = read_parquet(spark, path)
     victims = corpus.join(F.broadcast(del_ids), id_col, "semi")
     affected = {r["cid"] for r in victims.select("cid").distinct().collect()}
     if not affected:
@@ -333,9 +326,10 @@ def compact_ivf_corpus(
     write-new-then-swap shape as compact_bm25_postings; ``n_lists`` pins
     the shuffle count (= len(centroids) at gate scale; K·n_lists for
     K-way write parallelism per list at 100 TB, per write_ivf_corpus)."""
-    corpus = spark.read.parquet(path)
+    corpus = read_parquet(spark, path)
     tmp = f"{path}_compacting"
     corpus.repartition(n_lists, "cid").write.mode("overwrite").partitionBy(
         "cid"
     ).parquet(tmp)
+    write_schema_sidecar(spark, tmp, corpus.schema)
     _swap_directory(spark, path, tmp)

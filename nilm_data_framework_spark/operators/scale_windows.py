@@ -239,8 +239,20 @@ def exact_ranks_for_candidates_pair(
     caller's fused-score join consumed, minus two joins.
 
     Preconditions: as exact_ranks_for_candidates (non-null values/ids),
-    plus ``id_col`` unique within each candidate frame.
+    plus ``id_col`` unique within each candidate frame, plus ``value_a``
+    and ``value_b`` of the SAME data type (checked: raises TypeError).
+    The two rankings share one unioned value column, and a union of, say,
+    long and double widens both to double — longs above 2^53 would then
+    compare differently than in two unfused calls.
     """
+    for side, a_df, b_df in (("base", base_a, base_b), ("candidate", cand_a, cand_b)):
+        ta, tb = a_df.schema[value_a].dataType, b_df.schema[value_b].dataType
+        if ta != tb:
+            raise TypeError(
+                f"exact_ranks_for_candidates_pair: {side} value columns differ "
+                f"in type ({value_a}: {ta.simpleString()}, {value_b}: "
+                f"{tb.simpleString()}); cast them to one type first"
+            )
     b_u = base_a.select(
         F.lit(0).alias("_t"), F.col(value_a).alias("_bv"), F.col(id_col).alias("_bid")
     ).unionByName(

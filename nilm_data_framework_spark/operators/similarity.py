@@ -12,6 +12,8 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.layouts import read_parquet, write_schema_sidecar
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two array columns, computed in double (JVM-side)."""
@@ -948,7 +950,9 @@ def write_ivf_corpus(
     reference (operators/dedup.py::write_lsh_reference): centroids are
     trained once offline and must be the SAME list at write and probe
     time — :func:`ivf_topk_partitioned` takes them explicitly so the
-    caller owns that invariant.
+    caller owns that invariant. The layout's schema is recorded as
+    ``{path}/_schema.json`` so its readers skip schema inference
+    (nilm_data_framework_spark/layouts.py).
     """
     # repartition by cid so each writer task owns whole partition dirs:
     # without it every upstream task writes a sliver into every cid dir
@@ -958,9 +962,11 @@ def write_ivf_corpus(
     # shuffle, re-mixing cids across tasks — measured 4 files/dir). At
     # 100 TB scale the count per list instead: repartition(K·n_lists,
     # "cid") for K-way write parallelism per list.
-    assign_centroids(corpus, centroids, id_col, vec_col).repartition(
-        len(centroids), "cid"
-    ).write.mode("overwrite").partitionBy("cid").parquet(path)
+    assigned = assign_centroids(corpus, centroids, id_col, vec_col)
+    assigned.repartition(len(centroids), "cid").write.mode("overwrite").partitionBy(
+        "cid"
+    ).parquet(path)
+    write_schema_sidecar(corpus.sparkSession, path, assigned.schema)
 
 
 def ivf_topk_partitioned(
@@ -980,11 +986,20 @@ def ivf_topk_partitioned(
     tests/test_plan_quality.py::test_ivf_persisted_scan_partition_pruned),
     so only n_probe/n_centroids of the corpus directories are read.
 
-    The probe set is collected to the driver — bounded by
-    n_probe × |queries| ints (query sets are small by contract, same
-    bounded-collect rule as sample_centroids); results are identical to
-    :func:`ivf_topk` with the same centroids because the per-query
-    candidate join on cid already restricts to each query's own probes.
+    ``queries`` is evaluated exactly ONCE: one row per query — (query_id,
+    its vector, its n_probe centroid ids) — is collected to the driver,
+    the probe set is read off those rows, and the broadcast query side is
+    rebuilt from them with ``createDataFrame`` (Arrow into a JVM-local
+    relation: no second scan, no second Python-worker start for a
+    Python-built frame). The collect is bounded by |queries| × (dim +
+    n_probe) values — query sets are small by contract, the same
+    bounded-collect rule as sample_centroids; queries = corpus is
+    :func:`ivf_knn_join`'s job. Because the probe set and the joined rows
+    come from the same collected rows, a nondeterministic ``queries``
+    frame cannot yield a probe set that disagrees with the joined rows.
+    Results are identical to :func:`ivf_topk` with the same centroids
+    because the per-query candidate join on cid already restricts to
+    each query's own probes.
 
     ``pre_filter`` is FILTERED vector search (the metadata-constrained
     ANN every RAG deployment runs — "top-k among docs with lang='de'"):
@@ -1015,15 +1030,20 @@ def ivf_topk_partitioned(
         )
         return F.slice(F.array_sort(scored), 1, n)
 
-    q = queries.select(
+    # the one evaluation of ``queries`` (see the docstring)
+    probes = queries.select(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).alias("qv"),
-        F.explode(
-            F.transform(nearest(F.col(vec_col), n_probe), lambda s: s["cid"])
-        ).alias("cid"),
+        F.transform(nearest(F.col(vec_col), n_probe), lambda s: s["cid"]).alias(
+            "probe"
+        ),
     )
-    probed = sorted({r["cid"] for r in q.select("cid").distinct().collect()})
-    c = spark.read.parquet(path).filter(F.col("cid").isin(probed))
+    pdf = probes.toPandas()
+    probed = sorted({int(c) for cids in pdf["probe"] for c in cids})
+    q = spark.createDataFrame(pdf, probes.schema).select(
+        "query_id", "qv", F.explode("probe").alias("cid")
+    )
+    c = read_parquet(spark, path).filter(F.col("cid").isin(probed))
     if pre_filter is not None:
         c = c.filter(pre_filter)
     c = c.select(
@@ -1059,7 +1079,9 @@ def append_ivf_batch(
     maintains itself, never rebuilt; the same incremental contract as the
     LSH reference's bucket-spec INSERT). The caller owns centroid
     identity, exactly as for probing; re-clustering (centroid drift after
-    heavy growth) is an offline rebuild, not an append."""
+    heavy growth) is an offline rebuild, not an append. A batch carries
+    the layout's columns: readers keep the schema write_ivf_corpus
+    recorded."""
     assign_centroids(batch, centroids, id_col, vec_col).repartition(
         len(centroids), "cid"
     ).write.mode("append").partitionBy("cid").parquet(path)

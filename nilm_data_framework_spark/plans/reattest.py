@@ -17,36 +17,39 @@ into the 50-row window.
 
 from __future__ import annotations
 
-# r9 rewrites never driver-re-attested after the rewrite (VERDICT r9 gate
-# note) + every path whose physical execution round 10 touches.
+# Every name below runs code whose physical execution changed after the
+# round-10 CORRECTNESS file (which re-recorded the whole previous list).
 REATTEST: frozenset[str] = frozenset({
-    # r9 rewritten paths outside the r9 window (VERDICT r9 item 1b)
-    "rag_retrieval_pipeline",
-    "rag_retrieval_pipeline_persisted",
-    "mmr_diversified_topk",
-    "pagerank_power_iterations",
-    "neardup_clusters",
-    "entity_resolution_clusters",
-    "bm25_index_lifecycle",
-    "neardup_cluster_diameter",
-    "incremental_neardup_clusters_equiv",
-    "entity_clusters_incremental_equiv",
+    # serve-mode RAG gate: the rewritten _rag_tail fusion, never attested
+    "rag_retrieval_pipeline_serve",
+    # BM25 layout readers now pass the layout's fixed schemas
+    # (bm25_hits_indexed / bm25_topk_indexed / append_bm25_batch /
+    # delete_bm25_docs / compact_bm25_postings)
+    "bm25_topk_indexed",
+    "bm25_topk_filtered",
+    "bm25_phrase_shingle_topk",
+    "bm25_prf_expanded_topk",
     "bm25_append_probe_equiv",
-    "incremental_neardup_persisted",
-    "training_set_materialize",
-    # r10 optimization targets (rewritten this round)
-    "kmv_distinct_ops",
-    "kmv_jaccard_pairs",
-    "knn_confusion_matrix",
-    "label_noise_screen",
-    "lsh_recall_audit",
-    "tensor_export",
-    "tensor_export_flat",
-    "prefix_filter_neardup_pairs",
-    "containment_neardup_pairs",
-    "greedy_set_cover_sources",
-    "weighted_jaccard_pairs",
-    "degree_assortativity",
-    "item_cf_similarity_topk",
-    "bloom_decontamination",
+    "bm25_index_lifecycle",
+    "bm25_delete_probe_equiv",
+    "bm25_compact_probe_equiv",
+    "bm25_delete_then_append_equiv",
+    "bm25_upsert_probe_equiv",
+    # ivf_topk_partitioned evaluates its query side once (collect +
+    # local relation) instead of a distinct-collect plus a re-evaluation
+    "ivf_topk_persisted",
+    "ivf_append_probe_equiv",
+    "ivf_delete_probe_equiv",
+    "ivf_compact_probe_equiv",
+    "ivf_upsert_probe_equiv",
+    "ivf_retrain_rebuild_equiv",
+    "cosine_topk_ivf_filtered",
+    "ivf_filtered_recall_at_k",
+    # the IVF layout records a schema sidecar; its readers pass it
+    "cosine_topk_filtered_exact",
+    # both legs
+    "rag_retrieval_pipeline_persisted",
+    # _rag_tail casts rel to double before the fused pair ranking
+    # (exact_ranks_for_candidates_pair now requires one value type)
+    "rag_retrieval_pipeline",
 })

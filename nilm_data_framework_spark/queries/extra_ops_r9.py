@@ -61,6 +61,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.layouts import read_parquet
 from nilm_data_framework_spark.plans.registry import query, registry as _registry
 from nilm_data_framework_spark.sources.testdata import load_table
 
@@ -204,7 +205,7 @@ def cosine_topk_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     "baseline the filtered recall gate measures against",
 )
 def cosine_topk_filtered_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """brute_force_topk over spark.read.parquet(layout).filter(label=3):
+    """brute_force_topk over the persisted layout filtered to label=3:
     the scan touches every cid directory but the pushed predicate skips
     non-matching row groups (plan-pinned PushedFilters), and only the
     ~12% surviving vectors reach the cosine — at 100 TB this is a
@@ -216,7 +217,7 @@ def cosine_topk_filtered_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.operators import similarity as S
 
     path, _cents, queries_df = _write_filtered_layout(spark, sf_dir, "fex")
-    corpus = spark.read.parquet(path).filter(F.col("label") == _FLT_LABEL)
+    corpus = read_parquet(spark, path).filter(F.col("label") == _FLT_LABEL)
     out = S.brute_force_topk(corpus, queries_df, k=_FLT_K)
     return out.select(
         "query_id", "match_id", F.round("cosine", 4).alias("cosine"),
@@ -256,7 +257,7 @@ def ivf_filtered_recall_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     path, cents, queries_df = _write_filtered_layout(spark, sf_dir, "frc")
     pred = F.col("label") == _FLT_LABEL
     exact = S.brute_force_topk(
-        spark.read.parquet(path).filter(pred), queries_df, k=_FLT_K
+        read_parquet(spark, path).filter(pred), queries_df, k=_FLT_K
     ).select("query_id", "match_id")
     ivf = S.ivf_topk_partitioned(
         spark, path, queries_df, k=_FLT_K, centroids=cents, n_probe=_FLT_PROBE,
@@ -1478,11 +1479,11 @@ def bm25_prf_expanded_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     )
     terms5 = list(_BM25_TERMS) + [r["tok"] for r in exp_rows]
-    post = spark.read.parquet(f"{path}/postings").filter(
+    post = spark.read.schema(T.BM25_POSTINGS_SCHEMA).parquet(f"{path}/postings").filter(
         F.col("term").isin(terms5)
     )
     dfq = post.groupBy("term").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    stats = spark.read.parquet(f"{path}/stats")
+    stats = spark.read.schema(T.BM25_STATS_SCHEMA).parquet(f"{path}/stats")
     contrib = (
         post.join(dfq, "term")
         .crossJoin(F.broadcast(stats))

@@ -11,6 +11,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the nilm_data_framework_spark package
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_session(
     app_name: str = "nilm-data-framework-spark",
@@ -28,6 +31,12 @@ def get_session(
       - Arrow enabled for the few pandas-UDF kernels.
       - shuffle partitions sized to cores locally; on a real cluster this
         is left to AQE's coalescing from a high initial value.
+      - local masters fork Python workers from
+        :mod:`nilm_data_framework_spark.pydaemon`, which stops CPython < 3.12
+        from re-reading ``pyspark.zip`` and the spark-core jar before every
+        task (230-280 ms per Python task on a 4-core host; see that module).
+        The package root goes on the workers' ``PYTHONPATH`` so the daemon
+        imports from any cwd.
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
     if master is None:
@@ -56,6 +65,12 @@ def get_session(
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )
+    if master.startswith("local"):
+        # workers run on this host, where the package root exists; remote
+        # executors keep the stock daemon unless the package is installed
+        builder = builder.config(
+            "spark.python.daemon.module", "nilm_data_framework_spark.pydaemon"
+        ).config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -115,3 +115,37 @@ def test_reattest_names_front_load_the_window():
         assert not missing, (
             f"rewritten queries missing from the driver window: {sorted(missing)}"
         )
+
+
+def test_slow_parity_rows_stay_attested():
+    """Default runs deselect the `slow` oracle-parity rows because the
+    round's correctness run attests those queries directly. That reason
+    holds only while each one is in REATTEST, or has a hash-matching row
+    in a CORRECTNESS file of the round that first ran its current code or
+    a later one — so pruning REATTEST early, or rewriting a slow query
+    without adding it there, fails here instead of silently dropping its
+    attestation."""
+    import glob
+    import json
+    import re
+
+    from nilm_data_framework_spark.plans.reattest import REATTEST
+    from tests.test_oracle_parity import _SLOW_PARITY
+
+    passed_in: dict[str, list[int]] = {}
+    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
+        rnd = int(re.search(r"CORRECTNESS_r(\d+)\.json$", path).group(1))
+        with open(path) as f:
+            rows = json.load(f)
+        for name, row in rows.items():
+            if isinstance(row, dict) and row.get("hash_match"):
+                passed_in.setdefault(name, []).append(rnd)
+    stale = {
+        name: since
+        for name, since in _SLOW_PARITY.items()
+        if name not in REATTEST and not any(r >= since for r in passed_in.get(name, []))
+    }
+    assert not stale, (
+        f"slow-marked parity rows with no CORRECTNESS attestation of their "
+        f"current code (name -> round of last rewrite): {stale}"
+    )

@@ -202,3 +202,19 @@ def test_exact_ranks_pair_bit_identical_to_two_calls(spark, df):
     }
     assert got == expected
     assert got, "vacuous: no overlapping candidate ids"
+
+
+def test_exact_ranks_pair_rejects_mixed_value_types(spark, df):
+    """The fused form unions both value columns into one; long vs double
+    would widen the longs to double, which two separate calls never do —
+    the pair refuses mixed types instead of ranking on widened values."""
+    from nilm_data_framework_spark.operators.scale_windows import (
+        exact_ranks_for_candidates_pair,
+    )
+
+    base_a = df.select("id", "v")
+    base_b = df.select("id", F.col("v").cast("double").alias("w"))
+    with pytest.raises(TypeError, match="differ in type"):
+        exact_ranks_for_candidates_pair(
+            base_a, base_a, "v", base_b, base_b, "w", "id"
+        )
