@@ -658,24 +658,24 @@ def main() -> None:
     # with the trained centroids passed (zero per-query centroid cost).
     if only is None or "rag_retrieval_pipeline_serve" in (only or set()):
         from nilm_data_framework_spark.queries.extra_ops_r7 import (
-            build_rag_persisted_frames,
+            build_rag_indexes,
             rag_persisted_pipeline,
         )
         from nilm_data_framework_spark.sources.testdata import load_table
 
-        built = build_rag_persisted_frames(spark, sf_dir)
-        built["result"].write.mode("overwrite").format("noop").save()
         docs = load_table(spark, sf_dir, "documents", parallelize=True)
         emb = load_table(spark, sf_dir, "embeddings", parallelize=True)
+        index = build_rag_indexes(spark, docs, emb)
+        rag_persisted_pipeline(spark, emb, **index)["result"].write.mode(
+            "overwrite"
+        ).format("noop").save()
         best = float("inf")
         for _ in range(3):
             spark.catalog.clearCache()
             t0 = time.perf_counter()
-            rag_persisted_pipeline(
-                spark, docs, emb,
-                bm_path=built["bm_path"], ivf_path=built["ivf_path"],
-                centroids=built["centroids"], kept_ids=built["kept_ids"],
-            )["result"].write.mode("overwrite").format("noop").save()
+            rag_persisted_pipeline(spark, emb, **index)["result"].write.mode(
+                "overwrite"
+            ).format("noop").save()
             best = min(best, time.perf_counter() - t0)
         timings["rag_retrieval_pipeline_serve"] = round(best, 3)
 

@@ -54,36 +54,6 @@ def _md5_64(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def minhash_signature(
-    shingles: Column, num_hashes: int, seed: int = 42
-) -> Column:
-    """MinHash signature (array<long>, length num_hashes) over a shingle
-    array. Universal hashes h_i(x) = (a_i * x + b_i) mod p derived
-    deterministically from ``seed`` driver-side (the SAME
-    _minhash_hash_params stream the banded pipeline uses — one source of
-    truth for the oracle-parity contract); the per-row work is pure
-    column arithmetic, and the md5 base hashes are LET-BOUND via the
-    single-element-array transform so each shingle is hashed once, not
-    once per signature position (the word_ngrams lesson)."""
-    params = _minhash_hash_params(num_hashes, seed)
-
-    def hash_with(a: int, b: int):
-        # closure factory, not a default-arg lambda (pyspark binds HOF
-        # lambda vars by parameter count)
-        return lambda x: (
-            (x % _MERSENNE_P) * F.lit(a) + F.lit(b)
-        ) % F.lit(_MERSENNE_P)
-
-    sig = F.transform(
-        F.array(F.transform(shingles, _md5_64)),
-        lambda base: F.array(
-            *[F.array_min(F.transform(base, hash_with(a, b))) for a, b in params]
-        ),
-    )[0]
-    # empty shingle set → null mins; substitute sentinel p so bands still form
-    return F.transform(sig, lambda m: F.coalesce(m, F.lit(_MERSENNE_P)))
-
-
 def _minhash_hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
     import random
 

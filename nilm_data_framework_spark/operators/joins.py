@@ -36,33 +36,6 @@ def enrich(
     return out
 
 
-def time_axis_align(
-    per_series: DataFrame,
-    ts: str,
-    series: str,
-    value: str,
-    series_values: list[str],
-) -> DataFrame:
-    """J4: union-of-timestamps alignment with missing→0
-    (UnifiedNILM.py:481-488 pd.concat(axis=1).fillna(0)).
-
-    Long-format idiom: pivot on the series column over the union of
-    timestamps; fill 0. Equivalent to the reference's full outer join.
-
-    Cell aggregate is ``max`` (deterministic), not ``first`` (arbitrary
-    under duplicate (ts, series) rows — shuffle-order-dependent output,
-    the r7 review's determinism hazard). The reference's pd.concat
-    assumes a unique index; run A3 dedup-mean first when duplicates are
-    possible, in which case max == the single value.
-    """
-    return (
-        per_series.groupBy(ts)
-        .pivot(series, series_values)
-        .agg(F.max(value))
-        .na.fill(0.0)
-    )
-
-
 def common_channel_best_pick(
     channels_stats: DataFrame,
     group: list[str],

@@ -3,6 +3,11 @@
 Brute-force cosine top-k is the correctness baseline (broadcast the query
 set — the corpus never shuffles); random-hyperplane LSH bucketing is the
 scale path (candidate generation touches only same-bucket rows).
+
+Column contract: every corpus and query frame carries ``(vec_id,
+embedding)`` (plus ``label`` for :func:`hard_negatives`); callers rename
+with ``select``/``alias``. Top-k results are per query, ties broken on
+match_id.
 """
 
 from __future__ import annotations
@@ -13,6 +18,13 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from nilm_data_framework_spark.layouts import read_parquet, write_schema_sidecar
+
+# seed of the SRP hyperplanes: table t uses LSH_SEED + 1000·t (the oracles
+# replay the same planes through _hyperplanes)
+LSH_SEED = 42
+# bits per packed sign word (sign_words): every word is exact as a BIGINT
+# in both engines
+WORD_BITS = 32
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -40,30 +52,51 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def _corpus(df: DataFrame, *extra) -> DataFrame:
+    """Corpus side of a similarity join: ``(match_id, cv, *extra)``."""
+    return df.select(F.col("vec_id").alias("match_id"), F.col("embedding").alias("cv"), *extra)
+
+
+def _queries(df: DataFrame, *extra) -> DataFrame:
+    """Query side of a similarity join: ``(query_id, qv, *extra)``."""
+    return df.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"), *extra)
+
+
+def _topk(df: DataFrame, order: Column, k: int) -> DataFrame:
+    """Per-query top-k: rank each query's candidates by the score ordering
+    ``order`` (e.g. ``F.col("cosine").desc()``; ties → lower match_id) as
+    ``rk`` and keep ranks ≤ k — the global top-k merge after local pruning
+    (REPOSE, ICDE 2021) every operator here ends with."""
+    w = Window.partitionBy("query_id").orderBy(order, F.col("match_id"))
+    return df.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+
+
+def _join_back(shortlist: DataFrame, corpus: DataFrame, queries: DataFrame) -> DataFrame:
+    """Second stage of the shortlist ANN operators: the raw vectors
+    (``cv``/``qv``) join back onto a ``(query_id, match_id, …)`` shortlist,
+    so the Q×N window shuffle that built it carried ids only and the exact
+    re-rank scores Q×shortlist rows."""
+    return shortlist.join(_corpus(corpus), "match_id").join(
+        F.broadcast(_queries(queries)), "query_id"
+    )
+
+
+def _int_dot(a: Column, b: Column) -> Column:
+    """Exact BIGINT dot product of two integer array columns."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y), F.lit(0).cast("long"), lambda acc, x: acc + x
+    )
+
+
+def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Exact cosine top-k: for each query vector, the k nearest corpus
     vectors (self-matches excluded). The query side broadcasts; scoring is a
     broadcast nested-loop join + per-query row_number — the corpus is
     scanned once, never shuffled by pair."""
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    c = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv"))
-    scored = c.join(F.broadcast(q), F.col("match_id") != F.col("query_id")).withColumn(
-        "cosine", cosine(F.col("qv"), F.col("cv"))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    scored = _corpus(corpus).join(
+        F.broadcast(_queries(queries)), F.col("match_id") != F.col("query_id")
+    ).withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
+    return _topk(scored, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
 
 
 def truncated_prefix_topk(
@@ -72,8 +105,6 @@ def truncated_prefix_topk(
     k: int,
     prefix_dim: int,
     shortlist: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Matryoshka-style two-stage ANN (Kusupati et al., arXiv:2205.13147:
     MRL-trained embeddings rank usefully under prefix truncation): shortlist
@@ -86,31 +117,25 @@ def truncated_prefix_topk(
     100 TB the prefix lives as its own column (or a separate narrow table),
     so column pruning makes the shortlist scan read prefix_dim * 4 bytes
     per vector instead of the full embedding; only the shortlist rows
-    (|Q| * shortlist of the corpus) ever evaluate the full-width cosine.
+    (|Q| * shortlist of the corpus) ever evaluate the full-width cosine,
+    after the shortlist joins the full vectors back (:func:`_join_back`).
     Both stages break ties on match_id, so shortlist membership and the
     final ranking are deterministic and cross-engine replayable.
     """
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    c = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv"))
-    scored = c.join(F.broadcast(q), F.col("match_id") != F.col("query_id")).withColumn(
-        "cos_prefix",
-        cosine(F.slice("qv", 1, prefix_dim), F.slice("cv", 1, prefix_dim)),
+    scored = _corpus(corpus).join(
+        F.broadcast(_queries(queries)), F.col("match_id") != F.col("query_id")
+    ).select(
+        "query_id",
+        "match_id",
+        cosine(F.slice("qv", 1, prefix_dim), F.slice("cv", 1, prefix_dim)).alias(
+            "cos_prefix"
+        ),
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_prefix").desc(), F.col("match_id")
+    short = _topk(scored, F.col("cos_prefix").desc(), shortlist).select("query_id", "match_id")
+    rer = _join_back(short, corpus, queries).withColumn(
+        "cosine", cosine(F.col("qv"), F.col("cv"))
     )
-    short = scored.withColumn("rk_p", F.row_number().over(w1)).filter(
-        F.col("rk_p") <= shortlist
-    )
-    rer = short.withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id")
-    )
-    return (
-        rer.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _topk(rer, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -148,19 +173,11 @@ def _bucket_of(vec: Column, planes: Column) -> Column:
     return F.aggregate(bits, F.lit(0.0), lambda a, b: a + b).cast("long")
 
 
-def lsh_bucket(vec: Column, planes: list[list[float]]) -> Column:
-    """Random-hyperplane (SRP) LSH bucket id: bit i = sign(vec · plane_i).
-    Deterministic given the seed; pure column arithmetic."""
-    return _bucket_of(vec, array_lit(planes))
-
-
-def _bucketize_tables(
-    df: DataFrame, idname: str, id_col: str, vec_col: str, tables: list
-) -> DataFrame:
+def _bucketize_tables(df: DataFrame, idname: str, tables: list) -> DataFrame:
     """(id, vec) → one row per (id, table, SRP bucket). All tables in one
     nested literal + one transform: the per-table expression-build loop was
     the dominant plan-build cost."""
-    out = df.select(F.col(id_col).alias(idname), F.col(vec_col).alias(f"{idname}_v"))
+    out = df.select(F.col("vec_id").alias(idname), F.col("embedding").alias(f"{idname}_v"))
     buckets = F.transform(
         array_lit(tables),
         lambda planes, t: F.struct(
@@ -186,34 +203,26 @@ def _lsh_rank_candidates(cb: DataFrame, qb: DataFrame, k: int) -> DataFrame:
         .groupBy("query_id", "match_id")
         .agg(F.first("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _topk(cand, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
 
 
 def lsh_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     n_planes: int = 8,
     n_tables: int = 2,
-    seed: int = 42,
 ) -> DataFrame:
     """Approximate cosine top-k: score only candidates sharing an LSH bucket
     with the query in ≥1 of ``n_tables`` hash tables. At 100 TB the corpus
     is bucketed once (a cheap narrow projection) and the join shuffles on
     (table, bucket) — recall tunes with n_planes/n_tables."""
     tables = [
-        _hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
+        _hyperplanes(dim, n_planes, LSH_SEED + 1000 * t) for t in range(n_tables)
     ]
-    qb = _bucketize_tables(queries, "query_id", id_col, vec_col, tables)
-    cb = _bucketize_tables(corpus, "match_id", id_col, vec_col, tables)
+    qb = _bucketize_tables(queries, "query_id", tables)
+    cb = _bucketize_tables(corpus, "match_id", tables)
     return _lsh_rank_candidates(cb, qb, k)
 
 
@@ -221,12 +230,9 @@ def lsh_topk_multiprobe(
     corpus: DataFrame,
     queries: DataFrame,
     k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     dim: int = 64,
     n_planes: int = 8,
     n_tables: int = 2,
-    seed: int = 42,
 ) -> DataFrame:
     """Multi-probe SRP-LSH top-k (the Hamming-1 specialization of Lv et
     al., "Multi-Probe LSH", VLDB'07, to sign-bit buckets): the CORPUS
@@ -242,10 +248,10 @@ def lsh_topk_multiprobe(
     Plan shape is identical to lsh_topk: one (tbl, bkt) equi-join, dedup
     agg, per-query rank."""
     tables = [
-        _hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)
+        _hyperplanes(dim, n_planes, LSH_SEED + 1000 * t) for t in range(n_tables)
     ]
-    cb = _bucketize_tables(corpus, "match_id", id_col, vec_col, tables)
-    qb0 = _bucketize_tables(queries, "query_id", id_col, vec_col, tables)
+    cb = _bucketize_tables(corpus, "match_id", tables)
+    qb0 = _bucketize_tables(queries, "query_id", tables)
     # mask 0 = the base bucket; mask 2^i flips sign bit i. Plain-column
     # outer ref inside the HOF lambda (not a computed array — the repo's
     # HOF let-binding trap does not apply).
@@ -264,45 +270,44 @@ def lsh_topk_multiprobe(
     return _lsh_rank_candidates(cb, qb, k)
 
 
-def sample_centroids(
-    corpus: DataFrame,
-    n: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "hash",
-    seed: int = 42,
-) -> list[list[float]]:
-    """Pick ``n`` corpus vectors as IVF seed centroids.
+def sample_centroids(corpus: DataFrame, n: int, method: str = "hash") -> list[list[float]]:
+    """Pick ``n`` corpus vectors as IVF seed centroids, content-addressed:
+    keep rows with ``md5(vec_id) < '2'`` (a deterministic 1/8 Bernoulli any
+    engine can recompute), then take the ``n`` smallest md5s of that
+    subset. Costs one cheap hash per row; the ordered take's heap only sees
+    ~N/8 rows, and the DuckDB oracles replay the pick bit for bit.
+    ``method`` names that sampler; ``"hash"`` is the only one.
 
-    - ``method="cheap"`` (the scale path): ``sample(fraction, seed).limit(n)``
-      — LIMIT without ORDER BY short-circuits after enough partitions
-      produce rows, so the cost is ~one partition scan regardless of corpus
-      size. Deterministic for a fixed file layout, but NOT replayable by
-      another engine (Spark's Bernoulli sampler is Spark-specific).
-    - ``method="hash"`` (the oracle path): content-addressed — keep rows with
-      ``md5(id) < '2'`` (a deterministic 1/8 Bernoulli any engine can
-      recompute), then take the ``n`` smallest md5s of that subset. Costs one
-      cheap hash per row; the ordered take's heap only sees ~N/8 rows. Use
-      when cross-engine bit-parity matters (the DuckDB correctness gate).
-
-    At 100 TB neither runs per query: centroids are trained once (kmeans_step
-    iterations) and passed to :func:`ivf_topk` via ``centroids=``, making
-    per-query centroid cost zero.
+    At 100 TB this does not run per query: centroids are trained once
+    (kmeans_step iterations) and passed to :func:`ivf_topk` via
+    ``centroids=`` (or to :func:`write_ivf_corpus` /
+    :func:`ivf_topk_partitioned`), making per-query centroid cost zero.
     """
-    if method == "cheap":
-        rows = corpus.select(vec_col).sample(False, 0.1, seed).limit(n).collect()
-        if len(rows) < n:  # tiny corpus: sampling under-produced
-            rows = corpus.select(vec_col).limit(n).collect()
-    else:
-        h = F.md5(F.col(id_col).cast("string"))
-        rows = (
-            corpus.filter(h < F.lit("2"))
-            .select(vec_col, h.alias("_h"))
-            .orderBy("_h")
-            .limit(n)
-            .collect()
-        )
+    if method != "hash":
+        raise ValueError(f"sample_centroids: unknown method {method!r} (only 'hash')")
+    h = F.md5(F.col("vec_id").cast("string"))
+    rows = (
+        corpus.filter(h < F.lit("2"))
+        .select("embedding", h.alias("_h"))
+        .orderBy("_h")
+        .limit(n)
+        .collect()
+    )
     return [[float(x) for x in row[0]] for row in rows]
+
+
+def _nearest(cent_arr: Column, n: int) -> Column:
+    """The ``n`` centroids nearest to the row's ``embedding`` by cosine,
+    nearest first, as (negcos, cid) structs (ties → lower cid, by struct
+    ordering; a query's cids are distinct). ``cent_arr`` is the operator's
+    one :func:`array_lit` of the centroid list (centroid index = cid)."""
+    scored = F.transform(
+        cent_arr,
+        lambda cv, i: F.struct(
+            (-cosine(F.col("embedding"), cv)).alias("negcos"), i.cast("integer").alias("cid")
+        ),
+    )
+    return F.slice(F.array_sort(scored), 1, n)
 
 
 def ivf_topk(
@@ -311,58 +316,33 @@ def ivf_topk(
     k: int,
     n_centroids: int = 16,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     centroids: list[list[float]] | None = None,
-    centroid_method: str = "hash",
 ) -> DataFrame:
     """IVF-flat approximate top-k: assign every corpus vector to its nearest
     centroid (coarse quantizer), search only the ``n_probe`` centroids
     closest to each query. Pass precomputed/trained ``centroids`` for the
     production path (zero per-query selection cost); otherwise they are
-    seeded via :func:`sample_centroids` (``centroid_method`` picks the
-    constant-cost ``"cheap"`` sampler or the oracle-replayable ``"hash"``
-    one). Scale: corpus partitioned by centroid id = partition pruning for
-    vector search."""
-    cents = centroids if centroids is not None else sample_centroids(
-        corpus, n_centroids, id_col, vec_col, centroid_method, seed
-    )
+    seeded via :func:`sample_centroids`. Scale: corpus partitioned by
+    centroid id = partition pruning for vector search.
+
+    PRECONDITION: vec_ids are unique within the corpus and within the
+    queries. Each corpus vector then sits in exactly one list and each
+    query's probe cids are distinct, so every (query_id, match_id) pair
+    meets in exactly one cid and needs no dedup aggregate."""
+    cents = centroids if centroids is not None else sample_centroids(corpus, n_centroids)
     # one nested literal (centroid index = cid) — see array_lit on why.
     cent_arr = array_lit(cents)
-
-    def nearest(vec: Column, n: int) -> Column:
-        scored = F.transform(
-            cent_arr,
-            lambda cv, i: F.struct(
-                (-cosine(vec, cv)).alias("negcos"), i.cast("integer").alias("cid")
-            ),
-        )
-        return F.slice(F.array_sort(scored), 1, n)
-
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("cv"),
-        nearest(F.col(vec_col), 1)[0]["cid"].alias("cid"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(F.transform(nearest(F.col(vec_col), n_probe), lambda s: s["cid"])).alias("cid"),
+    c = _corpus(corpus, _nearest(cent_arr, 1)[0]["cid"].alias("cid"))
+    q = _queries(
+        queries,
+        F.explode(F.transform(_nearest(cent_arr, n_probe), lambda s: s["cid"])).alias("cid"),
     )
     cand = (
         c.join(F.broadcast(q), on="cid")
         .filter(F.col("match_id") != F.col("query_id"))
         .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-        .groupBy("query_id", "match_id")
-        .agg(F.first("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("match_id"))
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _topk(cand, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
 
 
 def ivf_knn_join(
@@ -370,8 +350,6 @@ def ivf_knn_join(
     k: int,
     centroids: list[list[float]],
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """All-pairs approximate kNN over the corpus — EVERY vector is a query
     (the batch kNN-join behind dedup graphs, related-item tables and
@@ -393,49 +371,20 @@ def ivf_knn_join(
     Returns (query_id, match_id, cosine, rk) with rk ≤ k per query,
     ties broken on match_id (the uniform similarity-family policy)."""
     cent_arr = array_lit(centroids)
-
-    def nearest(vec: Column, n: int) -> Column:
-        scored = F.transform(
-            cent_arr,
-            lambda cv, i: F.struct(
-                (-cosine(vec, cv)).alias("negcos"), i.cast("integer").alias("cid")
-            ),
-        )
-        return F.slice(F.array_sort(scored), 1, n)
-
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("cv"),
-        nearest(F.col(vec_col), 1)[0]["cid"].alias("cid"),
-    )
-    q = corpus.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            F.transform(nearest(F.col(vec_col), n_probe), lambda s: s["cid"])
-        ).alias("cid"),
+    c = _corpus(corpus, _nearest(cent_arr, 1)[0]["cid"].alias("cid"))
+    q = _queries(
+        corpus,
+        F.explode(F.transform(_nearest(cent_arr, n_probe), lambda s: s["cid"])).alias("cid"),
     )
     cand = (
         c.join(q, on="cid")
         .filter(F.col("match_id") != F.col("query_id"))
         .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id")
-    )
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _topk(cand, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
 
 
-def assign_centroids(
-    corpus: DataFrame,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def assign_centroids(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
     """Assign every vector to its nearest centroid by cosine (ties → lower
     centroid index), via a per-row argmax over a one-call centroid literal —
     no shuffle, no join; the centroid list rides into the task closure like
@@ -443,35 +392,21 @@ def assign_centroids(
     columns (label/lang/tenant) ride along into the partitioned layout,
     which is what makes FILTERED vector search a parquet pushdown instead
     of a join-back (ivf_topk_partitioned's pre_filter)."""
-    cent_arr = array_lit(centroids)
-    scored = F.transform(
-        cent_arr,
-        lambda cv, i: F.struct(
-            (-cosine(F.col(vec_col), cv)).alias("negcos"),
-            i.cast("integer").alias("cid"),
-        ),
-    )
-    return corpus.select(
-        "*",
-        F.array_sort(scored)[0]["cid"].alias("cid"),
-    )
+    return corpus.select("*", _nearest(array_lit(centroids), 1)[0]["cid"].alias("cid"))
 
 
 def semantic_dedup(
     corpus: DataFrame,
     n_centroids: int = 16,
     threshold: float = 0.35,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     centroids: list[list[float]] | None = None,
-    centroid_method: str = "hash",
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): embedding-level
     semantic deduplication made tractable by k-means blocking. Every vector
     is assigned to its nearest centroid; within each cluster, a vector is
     DROPPED when a lower-id clustermate has cosine >= ``threshold`` with it
     (keep-min-id, the same survivor rule as exact dedup). Returns survivors
-    as (id, cid).
+    as (vec_id, cid).
 
     Scale shape — the whole point of the paper: candidate pairs form ONLY
     inside a cluster (equi-join on cid), never across the corpus, so the
@@ -482,32 +417,25 @@ def semantic_dedup(
     the dropped-id set. Centroids come pre-trained in production
     (``centroids=``); the default is the oracle-replayable hash sample.
     """
-    cents = centroids if centroids is not None else sample_centroids(
-        corpus, n_centroids, id_col, vec_col, centroid_method
-    )
-    assigned = assign_centroids(corpus, cents, id_col, vec_col)
+    cents = centroids if centroids is not None else sample_centroids(corpus, n_centroids)
+    assigned = assign_centroids(corpus, cents)
     a = assigned.select(
-        F.col(id_col).alias("_id_a"), F.col("cid"), F.col(vec_col).alias("_va")
+        F.col("vec_id").alias("_id_a"), F.col("cid"), F.col("embedding").alias("_va")
     )
     b = assigned.select(
-        F.col(id_col).alias("_id_b"), F.col("cid"), F.col(vec_col).alias("_vb")
+        F.col("vec_id").alias("_id_b"), F.col("cid"), F.col("embedding").alias("_vb")
     )
     dropped = (
         a.join(b, "cid")
         .filter(F.col("_id_a") < F.col("_id_b"))
         .filter(cosine(F.col("_va"), F.col("_vb")) >= threshold)
-        .select(F.col("_id_b").alias(id_col))
+        .select(F.col("_id_b").alias("vec_id"))
         .distinct()
     )
-    return assigned.select(id_col, "cid").join(dropped, id_col, "left_anti")
+    return assigned.select("vec_id", "cid").join(dropped, "vec_id", "left_anti")
 
 
-def kmeans_step(
-    corpus: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_step(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     """One Lloyd iteration for the IVF coarse quantizer: assign every vector
     to its nearest centroid by cosine (ties → lower cid), then emit updated
     centroids as element-wise means, FLAT as (cid, pos, c_val).
@@ -520,7 +448,7 @@ def kmeans_step(
     array form is needed.
     """
     scored = corpus.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).alias("_v")
+        F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")
     ).crossJoin(F.broadcast(centroids)).withColumn(
         "_cos", cosine(F.col("_v"), F.col("cv"))
     )
@@ -545,22 +473,30 @@ def l2_sq(a: Column, b: Column) -> Column:
     )
 
 
-def pq_codebook(
-    corpus: DataFrame,
-    n_sub: int,
-    ksub: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    method: str = "hash",
-    seed: int = 42,
-) -> list[list[list[float]]]:
-    """Product-quantization codebook: ``ksub`` sampled corpus vectors
-    (:func:`sample_centroids` — constant-cost or oracle-replayable) split
-    into ``n_sub`` contiguous subvectors: ``codebook[m][j]`` is subspace
-    ``m`` of sample ``j``. A k-means-refined codebook (per-subspace
-    :func:`kmeans_step` on the slices) drops in without changing any
-    downstream plan shape."""
-    samples = sample_centroids(corpus, ksub, id_col, vec_col, method, seed)
+def _adc(codebook: list[list[list[float]]]) -> Column:
+    """Asymmetric PQ distance of query ``qv`` to the coded corpus row:
+    ``Σ_m L2²(sub_m(qv), codebook[m][codes[m]])`` — table lookups against
+    one codebook literal, never the raw corpus floats."""
+    dsub = len(codebook[0][0])
+    cb = array_lit(codebook)
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(len(codebook) - 1)),
+        F.lit(0.0),
+        lambda acc, mi: acc
+        + l2_sq(
+            F.slice(F.col("qv"), mi * dsub + 1, dsub),
+            F.element_at(F.element_at(cb, mi + 1), F.element_at("codes", mi + 1) + 1),
+        ),
+    )
+
+
+def pq_codebook(corpus: DataFrame, n_sub: int, ksub: int) -> list[list[list[float]]]:
+    """Product-quantization codebook: ``ksub`` oracle-replayable corpus
+    samples (:func:`sample_centroids`) split into ``n_sub`` contiguous
+    subvectors: ``codebook[m][j]`` is subspace ``m`` of sample ``j``. A
+    k-means-refined codebook (per-subspace :func:`kmeans_step` on the
+    slices) drops in without changing any downstream plan shape."""
+    samples = sample_centroids(corpus, ksub)
     dim = len(samples[0])
     dsub = dim // n_sub
     return [
@@ -568,14 +504,10 @@ def pq_codebook(
     ]
 
 
-def pq_encode(
-    df: DataFrame,
-    codebook: list[list[list[float]]],
-    vec_col: str = "embedding",
-    out: str = "codes",
-) -> DataFrame:
-    """PQ encode: ``codes[m] = argmin_j L2²(sub_m(vec), codebook[m][j])``
-    (ties → smallest j, via struct ordering on (dist, j)).
+def pq_encode(df: DataFrame, codebook: list[list[list[float]]]) -> DataFrame:
+    """PQ encode ``embedding`` into ``codes``:
+    ``codes[m] = argmin_j L2²(sub_m(vec), codebook[m][j])`` (ties →
+    smallest j, via struct ordering on (dist, j)).
 
     The code array is M small ints per vector — at 100 TB this is the point:
     the corpus compresses ~dim·4/M bytes per vector (64-dim float → 8 bytes
@@ -592,12 +524,12 @@ def pq_encode(
             F.transform(
                 F.element_at(cb, mi + 1),
                 lambda c, j: F.struct(
-                    l2_sq(sub(F.col(vec_col), mi), c).alias("d"), j.alias("j")
+                    l2_sq(sub(F.col("embedding"), mi), c).alias("d"), j.alias("j")
                 ),
             )
         )["j"],
     )
-    return df.withColumn(out, codes)
+    return df.withColumn("codes", codes)
 
 
 def pq_topk(
@@ -606,49 +538,27 @@ def pq_topk(
     k: int,
     n_sub: int = 8,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: list[list[list[float]]] | None = None,
-    codebook_method: str = "hash",
-    seed: int = 42,
 ) -> DataFrame:
     """PQ/ADC approximate top-k: corpus vectors are replaced by their code
-    arrays; per (query, corpus) pair the asymmetric distance is
-    ``Σ_m L2²(sub_m(q), codebook[m][codes[m]])`` — table lookups against the
-    broadcast codebook, never the raw corpus floats. Smallest distance
-    wins; ties break on match_id.
+    arrays; per (query, corpus) pair the asymmetric distance (:func:`_adc`)
+    is looked up against the broadcast codebook, never the raw corpus
+    floats. Smallest distance wins; ties break on match_id.
 
     Scale: encode once (narrow projection, no shuffle), store codes; query
     scoring reads M ints/vector instead of dim floats (~32× less IO at
     dim=64/M=8) with the query side broadcast — same scan-once shape as
     brute force but over the compressed table. Compose with IVF bucketing
     for sub-linear candidate generation (IVF-PQ)."""
-    cbook = codebook if codebook is not None else pq_codebook(
-        corpus, n_sub, ksub, id_col, vec_col, codebook_method, seed
-    )
-    dsub = len(cbook[0][0])
-    cb = array_lit(cbook)
-    encoded = pq_encode(corpus, cbook, vec_col).select(
-        F.col(id_col).alias("match_id"), F.col("codes").alias("codes")
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(len(cbook) - 1)),
-        F.lit(0.0),
-        lambda acc, mi: acc
-        + l2_sq(
-            F.slice(F.col("qv"), mi * dsub + 1, dsub),
-            F.element_at(F.element_at(cb, mi + 1), F.element_at("codes", mi + 1) + 1),
-        ),
+    cbook = codebook if codebook is not None else pq_codebook(corpus, n_sub, ksub)
+    encoded = pq_encode(corpus, cbook).select(
+        F.col("vec_id").alias("match_id"), F.col("codes").alias("codes")
     )
     scored = encoded.join(
-        F.broadcast(q), F.col("match_id") != F.col("query_id")
-    ).withColumn("approx_d", adc)
-    w = Window.partitionBy("query_id").orderBy(F.col("approx_d").asc(), F.col("match_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "approx_d", "rk")
+        F.broadcast(_queries(queries)), F.col("match_id") != F.col("query_id")
+    ).withColumn("approx_d", _adc(cbook))
+    return _topk(scored, F.col("approx_d").asc(), k).select(
+        "query_id", "match_id", "approx_d", "rk"
     )
 
 
@@ -659,11 +569,7 @@ def pq_rerank_topk(
     rerank: int = 50,
     n_sub: int = 8,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     codebook: list[list[list[float]]] | None = None,
-    codebook_method: str = "hash",
-    seed: int = 42,
 ) -> DataFrame:
     """PQ shortlist + exact re-rank — how production PQ is actually used
     (FAISS IVF-PQ style): the compressed-domain ADC scan picks ``rerank``
@@ -672,23 +578,13 @@ def pq_rerank_topk(
     touches Q×rerank rows instead of Q×N; the N-sized scan reads codes
     (M ints) not vectors (dim floats). Ties break on match_id at both
     stages, so the result is deterministic and oracle-replayable."""
-    shortlist = pq_topk(
-        corpus, queries, rerank, n_sub, ksub, id_col, vec_col,
-        codebook, codebook_method, seed,
-    ).select("query_id", "match_id")
-    c = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    exact = (
-        shortlist.join(c, "match_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("dist", l2_sq(F.col("qv"), F.col("cv")))
+    shortlist = pq_topk(corpus, queries, rerank, n_sub, ksub, codebook).select(
+        "query_id", "match_id"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("match_id"))
-    return (
-        exact.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "dist", "rk")
+    exact = _join_back(shortlist, corpus, queries).withColumn(
+        "dist", l2_sq(F.col("qv"), F.col("cv"))
     )
+    return _topk(exact, F.col("dist").asc(), k).select("query_id", "match_id", "dist", "rk")
 
 
 def ivf_pq_topk(
@@ -700,12 +596,6 @@ def ivf_pq_topk(
     rerank: int = 20,
     n_sub: int = 8,
     ksub: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    centroids: list[list[float]] | None = None,
-    codebook: list[list[list[float]]] | None = None,
-    method: str = "hash",
-    seed: int = 42,
 ) -> DataFrame:
     """IVF-PQ: the production ANN composition (FAISS IVFPQ shape) — coarse
     quantizer prunes to ``n_probe`` inverted lists per query, the ADC scan
@@ -720,143 +610,79 @@ def ivf_pq_topk(
     (centroid sample, codebook, ties) is deterministic → DuckDB replays the
     whole composition.
     """
-    cents = centroids if centroids is not None else sample_centroids(
-        corpus, n_centroids, id_col, vec_col, method, seed
-    )
-    cent_arr = array_lit(cents)
-    cbook = codebook if codebook is not None else pq_codebook(
-        corpus, n_sub, ksub, id_col, vec_col, method, seed
-    )
-    dsub = len(cbook[0][0])
-    cb = array_lit(cbook)
-
-    def nearest(vec: Column, n: int) -> Column:
-        scored = F.transform(
-            cent_arr,
-            lambda cv, i: F.struct(
-                (-cosine(vec, cv)).alias("negcos"), i.cast("integer").alias("cid")
-            ),
-        )
-        return F.slice(F.array_sort(scored), 1, n)
-
+    cent_arr = array_lit(sample_centroids(corpus, n_centroids))
+    cbook = pq_codebook(corpus, n_sub, ksub)
     # stored form of the corpus: (cid, codes) — encode + assign, one narrow pass
-    coded = pq_encode(corpus, cbook, vec_col).select(
-        F.col(id_col).alias("match_id"),
-        nearest(F.col(vec_col), 1)[0]["cid"].alias("cid"),
+    coded = pq_encode(corpus, cbook).select(
+        F.col("vec_id").alias("match_id"),
+        _nearest(cent_arr, 1)[0]["cid"].alias("cid"),
         "codes",
     )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.explode(
-            F.transform(nearest(F.col(vec_col), n_probe), lambda s: s["cid"])
-        ).alias("cid"),
-    )
-    adc = F.aggregate(
-        F.sequence(F.lit(0), F.lit(len(cbook) - 1)),
-        F.lit(0.0),
-        lambda acc, mi: acc
-        + l2_sq(
-            F.slice(F.col("qv"), mi * dsub + 1, dsub),
-            F.element_at(F.element_at(cb, mi + 1), F.element_at("codes", mi + 1) + 1),
-        ),
+    q = _queries(
+        queries,
+        F.explode(F.transform(_nearest(cent_arr, n_probe), lambda s: s["cid"])).alias("cid"),
     )
     # each corpus vector lives in exactly one list and probe cids are
     # distinct per query → (query_id, match_id) is already unique, no dedup
     scored = (
         coded.join(F.broadcast(q), on="cid")
         .filter(F.col("match_id") != F.col("query_id"))
-        .withColumn("approx_d", adc)
+        .withColumn("approx_d", _adc(cbook))
     )
-    w_adc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d").asc(), F.col("match_id")
+    shortlist = _topk(scored, F.col("approx_d").asc(), rerank).select(
+        "query_id", "match_id"
     )
-    shortlist = (
-        scored.withColumn("_rk", F.row_number().over(w_adc))
-        .filter(F.col("_rk") <= rerank)
-        .select("query_id", "match_id")
+    exact = _join_back(shortlist, corpus, queries).withColumn(
+        "dist", l2_sq(F.col("qv"), F.col("cv"))
     )
-    c_raw = corpus.select(F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv"))
-    q_raw = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"))
-    exact = (
-        shortlist.join(c_raw, "match_id")
-        .join(F.broadcast(q_raw), "query_id")
-        .withColumn("dist", l2_sq(F.col("qv"), F.col("cv")))
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dist").asc(), F.col("match_id"))
-    return (
-        exact.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "dist", "rk")
-    )
+    return _topk(exact, F.col("dist").asc(), k).select("query_id", "match_id", "dist", "rk")
 
 
-def hard_negatives(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-) -> DataFrame:
+def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     """Contrastive hard-negative mining: for each anchor vector, the ``k``
-    most cosine-similar corpus vectors with a DIFFERENT label — the standard
-    batch-mining step for embedding-model training (high-similarity,
-    wrong-class examples are the gradient-rich negatives). Same plan shape
-    as :func:`brute_force_topk` — anchor side broadcast, corpus scanned once
-    and never shuffled by pair — plus the label-mismatch predicate evaluated
-    inside the broadcast join, so disqualified pairs die before scoring.
+    most cosine-similar corpus vectors with a DIFFERENT ``label`` — the
+    standard batch-mining step for embedding-model training
+    (high-similarity, wrong-class examples are the gradient-rich
+    negatives). Same plan shape as :func:`brute_force_topk` — anchor side
+    broadcast, corpus scanned once and never shuffled by pair — plus the
+    label-mismatch predicate evaluated inside the broadcast join, so
+    disqualified pairs die before scoring.
 
     At 100 TB the anchor set is a training batch (10³-10⁴ rows, genuinely
     broadcast-sized by construction); for anchor sets that outgrow broadcast,
     the LSH/IVF bucketed paths compose the same way (mismatch filter inside
     the bucket join).
     """
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.col(label_col).alias("q_label"),
-    )
-    c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        F.col(vec_col).alias("cv"),
-        F.col(label_col).alias("c_label"),
-    )
+    q = _queries(queries, F.col("label").alias("q_label"))
+    c = _corpus(corpus, F.col("label").alias("c_label"))
     scored = c.join(
         F.broadcast(q), F.col("c_label") != F.col("q_label")
     ).withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id")
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _topk(scored, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
 
 
-def sign_words(vec: Column, dim: int, word_bits: int = 32) -> Column:
+def sign_words(vec: Column, dim: int) -> Column:
     """Binary (1-bit) quantization: pack the sign pattern of ``vec`` into an
-    array of ``dim // word_bits`` non-negative integer words (bit j of word
-    w is set iff vec[w*word_bits + j] >= 0, MSB-first inside the word).
+    array of ``dim // WORD_BITS`` non-negative integer words (bit j of word
+    w is set iff vec[w*WORD_BITS + j] >= 0, MSB-first inside the word).
     32-bit words keep every value exactly representable as a BIGINT in both
     engines (no signed-64 overflow edge at bit 63).
 
     The packing is a pure per-row HOF expression — each word is
-    Σ_j sign_bit · 2^(word_bits-1-j), a sum of exact powers of two — so
+    Σ_j sign_bit · 2^(WORD_BITS-1-j), a sum of exact powers of two — so
     codes are bit-identical cross-engine and the whole binary index is a
     narrow projection (no shuffle, 32× smaller than float32 vectors)."""
     def word(w: int) -> Column:
         # MSB-first: folding acc*2 + bit gives the first element weight
-        # 2^(word_bits-1) — same layout as the oracle's 1<<(word_bits-j) sum.
+        # 2^(WORD_BITS-1) — same layout as the oracle's 1<<(WORD_BITS-j) sum.
         return F.aggregate(
-            F.slice(vec, w * word_bits + 1, word_bits),
+            F.slice(vec, w * WORD_BITS + 1, WORD_BITS),
             F.lit(0).cast("long"),
             lambda acc, v: acc * 2
             + F.when(v.cast("double") >= 0, 1).otherwise(0).cast("long"),
         )
 
-    return F.array(*[word(w) for w in range(dim // word_bits)])
+    return F.array(*[word(w) for w in range(dim // WORD_BITS)])
 
 
 def hamming_rerank_topk(
@@ -865,8 +691,6 @@ def hamming_rerank_topk(
     k: int,
     dim: int,
     rerank: int = 48,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Binary-quantization ANN (the 1-bit extreme of the int8/PQ compression
     family): shortlist by Hamming distance between sign words —
@@ -883,12 +707,10 @@ def hamming_rerank_topk(
     pruning keeps the shortlist scan tiny), same layout argument as the
     matryoshka prefix path."""
     c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        sign_words(F.col(vec_col), dim).alias("cw"),
+        F.col("vec_id").alias("match_id"), sign_words(F.col("embedding"), dim).alias("cw")
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        sign_words(F.col(vec_col), dim).alias("qw"),
+        F.col("vec_id").alias("query_id"), sign_words(F.col("embedding"), dim).alias("qw")
     )
     hamming = F.aggregate(
         F.zip_with(
@@ -898,47 +720,21 @@ def hamming_rerank_topk(
         F.lit(0).cast("long"),
         lambda acc, x: acc + x.cast("long"),
     )
-    # the Q×N window shuffle carries only (ids, hamming) — raw vectors
-    # join back for the Q×rerank survivors alone (pq_rerank_topk shape)
     scored = c.join(
         F.broadcast(q), F.col("match_id") != F.col("query_id")
     ).select("query_id", "match_id", hamming.alias("hamming"))
-    w_h = Window.partitionBy("query_id").orderBy(
-        F.col("hamming").asc(), F.col("match_id")
+    shortlist = _topk(scored, F.col("hamming").asc(), rerank).select(
+        "query_id", "match_id", "hamming"
     )
-    shortlist = (
-        scored.withColumn("rk_h", F.row_number().over(w_h))
-        .filter(F.col("rk_h") <= rerank)
-        .select("query_id", "match_id", "hamming")
+    rer = _join_back(shortlist, corpus, queries).withColumn(
+        "cosine", cosine(F.col("qv"), F.col("cv"))
     )
-    c_raw = corpus.select(
-        F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv")
-    )
-    q_raw = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv")
-    )
-    rer = (
-        shortlist.join(c_raw, "match_id")
-        .join(F.broadcast(q_raw), "query_id")
-        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-    )
-    w_c = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id")
-    )
-    return (
-        rer.withColumn("rk", F.row_number().over(w_c))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "hamming", "cosine", "rk")
+    return _topk(rer, F.col("cosine").desc(), k).select(
+        "query_id", "match_id", "hamming", "cosine", "rk"
     )
 
 
-def write_ivf_corpus(
-    corpus: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def write_ivf_corpus(corpus: DataFrame, path: str, centroids: list[list[float]]) -> None:
     """Persist the IVF layout SCALE.md's similarity row promises: the
     corpus WRITTEN partitioned by centroid id, so probing becomes parquet
     PARTITION PRUNING — a query touching n_probe of n_centroids lists
@@ -962,7 +758,7 @@ def write_ivf_corpus(
     # shuffle, re-mixing cids across tasks — measured 4 files/dir). At
     # 100 TB scale the count per list instead: repartition(K·n_lists,
     # "cid") for K-way write parallelism per list.
-    assigned = assign_centroids(corpus, centroids, id_col, vec_col)
+    assigned = assign_centroids(corpus, centroids)
     assigned.repartition(len(centroids), "cid").write.mode("overwrite").partitionBy(
         "cid"
     ).parquet(path)
@@ -976,8 +772,6 @@ def ivf_topk_partitioned(
     k: int,
     centroids: list[list[float]],
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     pre_filter: Column | None = None,
 ) -> DataFrame:
     """IVF top-k against a :func:`write_ivf_corpus` layout: the probed
@@ -999,7 +793,9 @@ def ivf_topk_partitioned(
     frame cannot yield a probe set that disagrees with the joined rows.
     Results are identical to :func:`ivf_topk` with the same centroids
     because the per-query candidate join on cid already restricts to
-    each query's own probes.
+    each query's own probes; the same unique-vec_id precondition makes
+    every (query_id, match_id) pair meet in exactly one cid, so no dedup
+    aggregate runs.
 
     ``pre_filter`` is FILTERED vector search (the metadata-constrained
     ANN every RAG deployment runs — "top-k among docs with lang='de'"):
@@ -1020,23 +816,9 @@ def ivf_topk_partitioned(
     the cosine evaluates only on surviving rows.
     """
     cent_arr = array_lit(centroids)
-
-    def nearest(vec: Column, n: int) -> Column:
-        scored = F.transform(
-            cent_arr,
-            lambda cv, i: F.struct(
-                (-cosine(vec, cv)).alias("negcos"), i.cast("integer").alias("cid")
-            ),
-        )
-        return F.slice(F.array_sort(scored), 1, n)
-
     # the one evaluation of ``queries`` (see the docstring)
-    probes = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("qv"),
-        F.transform(nearest(F.col(vec_col), n_probe), lambda s: s["cid"]).alias(
-            "probe"
-        ),
+    probes = _queries(
+        queries, F.transform(_nearest(cent_arr, n_probe), lambda s: s["cid"]).alias("probe")
     )
     pdf = probes.toPandas()
     probed = sorted({int(c) for cids in pdf["probe"] for c in cids})
@@ -1046,33 +828,16 @@ def ivf_topk_partitioned(
     c = read_parquet(spark, path).filter(F.col("cid").isin(probed))
     if pre_filter is not None:
         c = c.filter(pre_filter)
-    c = c.select(
-        F.col(id_col).alias("match_id"), F.col(vec_col).alias("cv"), "cid"
-    )
     cand = (
-        c.join(F.broadcast(q), on="cid")
+        _corpus(c, "cid")
+        .join(F.broadcast(q), on="cid")
         .filter(F.col("match_id") != F.col("query_id"))
         .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-        .groupBy("query_id", "match_id")
-        .agg(F.first("cosine").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("match_id")
-    )
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "cosine", "rk")
-    )
+    return _topk(cand, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
 
 
-def append_ivf_batch(
-    batch: DataFrame,
-    path: str,
-    centroids: list[list[float]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> None:
+def append_ivf_batch(batch: DataFrame, path: str, centroids: list[list[float]]) -> None:
     """Incrementally grow a :func:`write_ivf_corpus` layout: assign the new
     batch to the SAME centroids and append its rows into the existing cid
     partition directories (Spark appends per-partition files — the layout
@@ -1082,13 +847,13 @@ def append_ivf_batch(
     heavy growth) is an offline rebuild, not an append. A batch carries
     the layout's columns: readers keep the schema write_ivf_corpus
     recorded."""
-    assign_centroids(batch, centroids, id_col, vec_col).repartition(
+    assign_centroids(batch, centroids).repartition(
         len(centroids), "cid"
     ).write.mode("append").partitionBy("cid").parquet(path)
 
 
-def sq8_dim_stats(corpus: DataFrame, vec_col: str = "embedding") -> list[tuple[int, int]]:
-    """Per-dimension (min, max) of the 1e-6-floored integer components —
+def sq8_dim_stats(corpus: DataFrame) -> list[tuple[int, int]]:
+    """Per-dimension (min, max) of the 1e-6-floored integer ``embedding`` components —
     the codebook of scalar (int8-style) quantization. Returns a
     ``dim``-long Python list of exact BIGINT bounds.
 
@@ -1102,7 +867,7 @@ def sq8_dim_stats(corpus: DataFrame, vec_col: str = "embedding") -> list[tuple[i
     from nilm_data_framework_spark.operators.embed_stats import u6_components
 
     rows = (
-        corpus.select(F.posexplode(u6_components(vec_col)).alias("i", "q"))
+        corpus.select(F.posexplode(u6_components("embedding")).alias("i", "q"))
         .groupBy("i")
         .agg(F.min("q").alias("mn"), F.max("q").alias("mx"))
         .collect()
@@ -1143,8 +908,6 @@ def sq8_rerank_topk(
     k: int,
     stats: list[tuple[int, int]],
     rerank: int = 48,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Scalar-quantization ANN (the int8 member of the 1-bit/PQ compression
     family, cf. FAISS ScalarQuantizer / vector-DB "SQ8 + rescore"):
@@ -1164,55 +927,19 @@ def sq8_rerank_topk(
     from nilm_data_framework_spark.operators.embed_stats import u6_components
 
     c = corpus.select(
-        F.col(id_col).alias("match_id"),
-        sq8_codes(vec_col, stats).alias("cc"),
+        F.col("vec_id").alias("match_id"), sq8_codes("embedding", stats).alias("cc")
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        sq8_codes(vec_col, stats).alias("qc"),
+        F.col("vec_id").alias("query_id"), sq8_codes("embedding", stats).alias("qc")
     )
-    dot_codes = F.aggregate(
-        F.zip_with("qc", "cc", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    # shortlist stage carries ONLY (query_id, match_id, dot_sq8) through
-    # the per-query window shuffle — the raw u6 components join back for
-    # the Q×rerank survivors alone (the pq_rerank_topk shape; dragging
-    # two dim-long arrays per candidate pair through the Q×N shuffle
-    # contradicted this docstring's own claim)
+    # the shortlist stage carries ONLY (query_id, match_id, dot_sq8)
+    # through the per-query window shuffle; the raw vectors join back for
+    # the Q×rerank survivors alone (_join_back)
     scored = c.join(
         F.broadcast(q), F.col("match_id") != F.col("query_id")
-    ).select("query_id", "match_id", dot_codes.alias("dot_sq8"))
-    w_s = Window.partitionBy("query_id").orderBy(
-        F.col("dot_sq8").desc(), F.col("match_id")
+    ).select("query_id", "match_id", _int_dot(F.col("qc"), F.col("cc")).alias("dot_sq8"))
+    shortlist = _topk(scored, F.col("dot_sq8").desc(), rerank).select("query_id", "match_id")
+    rer = _join_back(shortlist, corpus, queries).withColumn(
+        "dot_u12", _int_dot(u6_components("qv"), u6_components("cv"))
     )
-    shortlist = (
-        scored.withColumn("rk_s", F.row_number().over(w_s))
-        .filter(F.col("rk_s") <= rerank)
-        .select("query_id", "match_id")
-    )
-    c_raw = corpus.select(
-        F.col(id_col).alias("match_id"), u6_components(vec_col).alias("c6")
-    )
-    q_raw = queries.select(
-        F.col(id_col).alias("query_id"), u6_components(vec_col).alias("q6")
-    )
-    dot_exact = F.aggregate(
-        F.zip_with("q6", "c6", lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    rer = (
-        shortlist.join(c_raw, "match_id")
-        .join(F.broadcast(q_raw), "query_id")
-        .withColumn("dot_u12", dot_exact)
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dot_u12").desc(), F.col("match_id")
-    )
-    return (
-        rer.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "match_id", "dot_u12", "rk")
-    )
+    return _topk(rer, F.col("dot_u12").desc(), k).select("query_id", "match_id", "dot_u12", "rk")

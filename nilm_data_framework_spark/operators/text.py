@@ -19,6 +19,11 @@ from nilm_data_framework_spark.operators.exact_math import ratio_e4
 # one-task footer job per directory, 60-80 ms of a probe on a 4-core host.
 BM25_POSTINGS_SCHEMA = "doc_id long, tf long, dl long, term string"
 BM25_STATS_SCHEMA = "n_docs long, sum_dl long"
+# Okapi BM25 parameters (the Lucene defaults) and the pinned writer-task
+# count of the postings layout (see write_bm25_index)
+BM25_K1 = 1.2
+BM25_B = 0.75
+BM25_WRITE_PARTITIONS = 32
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deterministic, dependency-free; replace with fastText at deploy.
@@ -658,18 +663,11 @@ def _check_terms(terms: list[str]) -> None:
         raise ValueError(f"duplicate BM25 query terms: {terms!r}")
 
 
-def bm25_scores(
-    df: DataFrame,
-    terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
-    """Okapi BM25 scoring of every document against a fixed term query
-    (Robertson & Zaragoza 2009; the Lucene/Elasticsearch default ranking
-    function — the lexical-retrieval half of a RAG stack, beside the
-    ANN family):
+def bm25_scores(df: DataFrame, terms: list[str]) -> DataFrame:
+    """Okapi BM25 scoring of every ``(doc_id, text)`` document against a
+    fixed term query (Robertson & Zaragoza 2009; the Lucene/Elasticsearch
+    default ranking function — the lexical-retrieval half of a RAG stack,
+    beside the ANN family):
 
         score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1−b + b·dl/avgdl))
         idf(t)   = ln(1 + (N − df + 0.5)/(df + 0.5))      (Lucene form, ≥ 0)
@@ -689,13 +687,14 @@ def bm25_scores(
     (see ``inverted_index``); this form is the gate because it keeps the
     whole computation in two scans with zero Python.
 
-    Returns (id, dl, tf_<term>..., bm25) with bm25 rounded 4dp for
-    display and ``bm25_raw`` kept for deterministic ordering."""
+    Returns (doc_id, dl, tf_<term>..., bm25) with bm25 rounded 4dp for
+    display and ``bm25_raw`` kept for deterministic ordering. k1 and b are
+    BM25_K1 / BM25_B."""
     _check_terms(terms)
     toks = df.select(
-        F.col(id_col), tokens(F.col(text)).alias("_toks")
+        F.col("doc_id"), tokens(F.col("text")).alias("_toks")
     ).select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.size("_toks").cast("long").alias("dl"),
         # NOTE: term filters are built by a def-closure factory, never a
         # default-arg lambda — pyspark binds HOF lambda vars by parameter
@@ -711,9 +710,9 @@ def bm25_scores(
         ],
     )
     scored = toks.crossJoin(F.broadcast(stats))
-    score = _bm25_score_expr(terms, k1, b)
+    score = _bm25_score_expr(terms)
     return scored.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "dl",
         *[F.col(f"tf_{t_}") for t_ in terms],
         score.alias("bm25_raw"),
@@ -721,12 +720,13 @@ def bm25_scores(
     )
 
 
-def _bm25_score_expr(terms: list[str], k1: float, b: float) -> Column:
+def _bm25_score_expr(terms: list[str]) -> Column:
     """The BM25 score expression over (dl, tf_<t>..., n_docs, sum_dl,
     df_<t>...) columns — factored so the full-scan path (bm25_scores) and
     the inverted-index path (bm25_topk_indexed) execute the IDENTICAL
     fixed-order IEEE op sequence: bit-equal scores are what let the
     indexed probe share the full-scan DuckDB oracle."""
+    k1, b = BM25_K1, BM25_B
     avgdl = F.expr("CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)")
     score = F.lit(0.0)
     for t_ in terms:
@@ -742,13 +742,27 @@ def _bm25_score_expr(terms: list[str], k1: float, b: float) -> Column:
     return score
 
 
-def write_bm25_index(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text: str = "text",
-    write_partitions: int = 32,
-) -> None:
+def _doc_tokens(df: DataFrame) -> DataFrame:
+    """``(doc_id, _toks, dl)``: each document's token array and length."""
+    return df.select("doc_id", tokens(F.col("text")).alias("_toks")).select(
+        "doc_id", F.col("_toks"), F.size("_toks").cast("long").alias("dl")
+    )
+
+
+def _write_postings(toks: DataFrame, path: str, mode: str) -> None:
+    """Write the (term, doc_id) postings of a :func:`_doc_tokens` frame —
+    ``(doc_id, tf, dl)`` partitioned by term — into ``{path}/postings``."""
+    postings = (
+        toks.select("doc_id", "dl", F.explode("_toks").alias("term"))
+        .groupBy("term", "doc_id")
+        .agg(F.count(F.lit(1)).cast("long").alias("tf"), F.first("dl").alias("dl"))
+    )
+    postings.repartition(BM25_WRITE_PARTITIONS, "term").write.mode(mode).partitionBy(
+        "term"
+    ).parquet(f"{path}/postings")
+
+
+def write_bm25_index(df: DataFrame, path: str) -> None:
     """Persist the inverted-index layout ``bm25_scores``' docstring (and
     the RAG pipeline's 100 TB note) promises — the lexical twin of the
     persisted LSH reference and the cid-partitioned IVF corpus:
@@ -761,22 +775,13 @@ def write_bm25_index(
       constants; per-term df is exactly the pruned partitions' row counts,
       so it needs no precomputation.
 
-    The writer repartitions on term with a PINNED count (bare
+    ``df`` carries ``(doc_id, text)``. The writer repartitions on term
+    with a PINNED count, BM25_WRITE_PARTITIONS (bare
     ``repartition("term")`` lets AQE coalesce and re-mix terms across
     writer tasks — the small-file failure write_ivf_corpus documents).
     Reference analog: none (pure retrieval-infrastructure extension).
     """
-    toks = df.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text)).alias("_toks")
-    ).select("doc_id", F.col("_toks"), F.size("_toks").cast("long").alias("dl"))
-    postings = (
-        toks.select("doc_id", "dl", F.explode("_toks").alias("term"))
-        .groupBy("term", "doc_id")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"), F.first("dl").alias("dl"))
-    )
-    postings.repartition(write_partitions, "term").write.mode(
-        "overwrite"
-    ).partitionBy("term").parquet(f"{path}/postings")
+    _write_postings(_doc_tokens(df), path, "overwrite")
     # Stats WITHOUT a second tokenize pass (r9 optimization round, guide
     # §1.2 step 1): the old form re-ran the tokenize scan for the 2-value
     # aggregate — at 100 TB that is a second full pass over the corpus
@@ -797,13 +802,7 @@ def write_bm25_index(
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
-def append_bm25_batch(
-    df: DataFrame,
-    path: str,
-    id_col: str = "doc_id",
-    text: str = "text",
-    write_partitions: int = 32,
-) -> None:
+def append_bm25_batch(df: DataFrame, path: str) -> None:
     """Incrementally grow a :func:`write_bm25_index` layout: the batch's
     postings APPEND into the existing term directories, and the 1-row
     stats table is replaced with the exact merged totals (n_docs and
@@ -824,9 +823,6 @@ def append_bm25_batch(
     cannot guarantee disjoint ingest should dedup upstream (exact-hash
     dedup keyed on doc_id is a single linear pass) or rebuild via
     :func:`write_bm25_index`."""
-    toks = df.select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text)).alias("_toks")
-    ).select("doc_id", F.col("_toks"), F.size("_toks").cast("long").alias("dl"))
     # one tokenize pass per batch (r9 optimization round): the postings
     # write and the stats aggregate both consume toks — persist it across
     # the two actions (bounded by the BATCH, not the corpus, so the cache
@@ -834,16 +830,9 @@ def append_bm25_batch(
     # corpus-sized case differently — count + sum over the written
     # postings — because persisting a full corpus of token arrays is not
     # scale-safe)
-    toks = toks.persist()
+    toks = _doc_tokens(df).persist()
     try:
-        postings = (
-            toks.select("doc_id", "dl", F.explode("_toks").alias("term"))
-            .groupBy("term", "doc_id")
-            .agg(F.count(F.lit(1)).cast("long").alias("tf"), F.first("dl").alias("dl"))
-        )
-        postings.repartition(write_partitions, "term").write.mode("append").partitionBy(
-            "term"
-        ).parquet(f"{path}/postings")
+        _write_postings(toks, path, "append")
         spark = df.sparkSession
         old = spark.read.schema(BM25_STATS_SCHEMA).parquet(f"{path}/stats").collect()[0]
         # coalesce: sum() over an EMPTY batch is NULL — an empty ingest batch
@@ -863,13 +852,7 @@ def append_bm25_batch(
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
-def bm25_hits_indexed(
-    spark,
-    path: str,
-    terms: list[str],
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_hits_indexed(spark, path: str, terms: list[str]) -> DataFrame:
     """Every matching doc's BM25 score served from a
     :func:`write_bm25_index` layout WITHOUT touching the corpus: the term
     list becomes a literal partition filter on the postings scan (only
@@ -905,7 +888,7 @@ def bm25_hits_indexed(
             for t_ in terms
         ],
     )
-    score = _bm25_score_expr(terms, k1, b)
+    score = _bm25_score_expr(terms)
     return per_doc.crossJoin(F.broadcast(stats)).select(
         "doc_id",
         "dl",
@@ -915,14 +898,7 @@ def bm25_hits_indexed(
     )
 
 
-def bm25_topk_indexed(
-    spark,
-    path: str,
-    terms: list[str],
-    k: int,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
+def bm25_topk_indexed(spark, path: str, terms: list[str], k: int) -> DataFrame:
     """BM25 top-k over :func:`bm25_hits_indexed` (see there for the
     pruning + exactness contract). Ranking among matching docs equals the
     full-scan ranking for every positively-scored rank. The top-k cut is
@@ -930,7 +906,7 @@ def bm25_topk_indexed(
     assigned afterwards over the ≤k coalesced rows."""
     from pyspark.sql import Window
 
-    scored = bm25_hits_indexed(spark, path, terms, k1, b)
+    scored = bm25_hits_indexed(spark, path, terms)
     top = scored.orderBy(F.col("bm25_raw").desc(), "doc_id").limit(k).coalesce(1)
     w = Window.orderBy(F.col("bm25_raw").desc(), "doc_id")
     return top.withColumn("rk", F.row_number().over(w)).drop("bm25_raw")

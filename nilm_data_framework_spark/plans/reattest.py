@@ -20,7 +20,8 @@ from __future__ import annotations
 # Every name below runs code whose physical execution changed after the
 # round-10 CORRECTNESS file (which re-recorded the whole previous list).
 REATTEST: frozenset[str] = frozenset({
-    # serve-mode RAG gate: the rewritten _rag_tail fusion, never attested
+    # serve-mode RAG gate: the rewritten _rag_tail fusion, never attested;
+    # it now runs the persisted gate's code (build_rag_indexes → serve)
     "rag_retrieval_pipeline_serve",
     # BM25 layout readers now pass the layout's fixed schemas
     # (bm25_hits_indexed / bm25_topk_indexed / append_bm25_batch /
@@ -36,7 +37,8 @@ REATTEST: frozenset[str] = frozenset({
     "bm25_delete_then_append_equiv",
     "bm25_upsert_probe_equiv",
     # ivf_topk_partitioned evaluates its query side once (collect +
-    # local relation) instead of a distinct-collect plus a re-evaluation
+    # local relation) instead of a distinct-collect plus a re-evaluation,
+    # and runs no (query_id, match_id) dedup aggregate
     "ivf_topk_persisted",
     "ivf_append_probe_equiv",
     "ivf_delete_probe_equiv",
@@ -52,4 +54,17 @@ REATTEST: frozenset[str] = frozenset({
     # _rag_tail casts rel to double before the fused pair ranking
     # (exact_ranks_for_candidates_pair now requires one value type)
     "rag_retrieval_pipeline",
+    # ivf_topk drops its (query_id, match_id) dedup aggregate (the
+    # persisted callers above lose it through ivf_topk_partitioned)
+    "cosine_topk_ivf",
+    "ivf_recall_at_k",
+    # the shortlist re-rankers join the raw vectors back through the
+    # shared _join_back/_topk steps (rank and column names changed; the
+    # matryoshka prefix path now joins back instead of carrying vectors)
+    "truncated_rerank_topk",
+    "hamming_topk_rerank",
+    "sq8_topk_rerank",
+    "ivf_pq_topk",
+    # assign_centroids takes the cid through the shared _nearest kernel
+    "semantic_dedup_survivors",
 })

@@ -27,12 +27,7 @@ from nilm_data_framework_spark.sources.testdata import load_table
 # --- RAG pipeline over the persisted indexes ---------------------------------
 
 
-def build_rag_persisted_frames(
-    spark: SparkSession,
-    sf_dir: str,
-    bm_path: str | None = None,
-    ivf_path: str | None = None,
-) -> dict[str, DataFrame]:
+def build_rag_persisted_frames(spark: SparkSession, sf_dir: str) -> dict:
     """Build the persisted-index RAG pipeline and return its named frames
     (exposed so tests/test_plan_quality.py can pin PartitionFilters on the
     two PRE-checkpoint index-probe plans: ``bm25_hits`` and ``ivf_probe``).
@@ -67,82 +62,83 @@ def build_rag_persisted_frames(
        this twin verbatim (hash equality, not fixture luck; the
        embedding-coverage assumption is inherited from the original).
 
-    At 100 TB the only corpus-sized passes left are the quality gate, the
-    one-off index writes, and the exact-rel scan demanded by the exact
-    fusion-rank contract; dropping that contract (ANN ranks) removes the
-    last one — the candidate machinery is already served by pruned reads.
+    Steps 1 and the two writes are :func:`build_rag_indexes`; the probes,
+    the zero-fill, the rels pass and the tail are
+    :func:`rag_persisted_pipeline`. At 100 TB the only corpus-sized passes
+    left are the quality gate, the one-off index writes, and the
+    exact-rel scan demanded by the exact fusion-rank contract; dropping
+    that contract (ANN ranks) removes the last one — the candidate
+    machinery is already served by pruned reads.
     """
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     emb = load_table(spark, sf_dir, "embeddings", parallelize=True)
-    return rag_persisted_pipeline(
-        spark, docs, emb, bm_path=bm_path, ivf_path=ivf_path
+    return rag_persisted_pipeline(spark, emb, **build_rag_indexes(spark, docs, emb))
+
+
+def build_rag_indexes(spark: SparkSession, docs: DataFrame, emb: DataFrame) -> dict:
+    """Index time of the persisted RAG pipeline: run the quality gate, then
+    write the BM25 and IVF layouts of the kept corpus to per-pid scratch
+    directories. Returns the keyword arguments of
+    :func:`rag_persisted_pipeline`: ``kept_ids`` (the checkpointed gated id
+    frame), ``bm_path``, ``ivf_path`` and the IVF ``centroids`` (the
+    oracle-replayable hash sample of the kept embeddings). The caller owns
+    their identity: the serve call trusts that the layouts hold exactly
+    the kept docs, under these centroids."""
+    from nilm_data_framework_spark.operators import similarity as S
+    from nilm_data_framework_spark.operators.text import (
+        quality_classifier_score,
+        write_bm25_index,
     )
+    from nilm_data_framework_spark.queries.extra_ops import _RAG_QVEC
+    from nilm_data_framework_spark.tmpdirs import pid_scratch_dir
+
+    kept_ids = (
+        quality_classifier_score(docs)
+        .where(F.col("keep") & (F.col("doc_id") != _RAG_QVEC))
+        .select("doc_id")
+        .localCheckpoint(eager=True)
+    )
+    bm_path = pid_scratch_dir(
+        os.path.join(tempfile.gettempdir(), "nilm_spark_rag_bm25"), "idx_"
+    )
+    write_bm25_index(docs.join(kept_ids, "doc_id"), bm_path)
+    kept_emb = emb.join(kept_ids, emb["vec_id"] == kept_ids["doc_id"]).select(
+        "vec_id", "embedding"
+    )
+    cents = S.sample_centroids(kept_emb, 16)
+    ivf_path = pid_scratch_dir(
+        os.path.join(tempfile.gettempdir(), "nilm_spark_rag_ivf"), "corpus_"
+    )
+    S.write_ivf_corpus(kept_emb, ivf_path, cents)
+    return {"kept_ids": kept_ids, "bm_path": bm_path, "ivf_path": ivf_path, "centroids": cents}
 
 
 def rag_persisted_pipeline(
     spark: SparkSession,
-    docs: DataFrame,
     emb: DataFrame,
-    bm_path: str | None = None,
-    ivf_path: str | None = None,
-    centroids: list[list[float]] | None = None,
-    kept_ids: DataFrame | None = None,
+    kept_ids: DataFrame,
+    bm_path: str,
+    ivf_path: str,
+    centroids: list[list[float]],
 ) -> dict[str, DataFrame]:
-    """Frame-level form of the persisted-index RAG pipeline (see
-    build_rag_persisted_frames for the full construction + proof). Two
-    modes: with ``bm_path``/``ivf_path`` = None the index layouts are
-    written to per-pid scratch first (the self-contained gate mode the
-    registered query uses); with explicit paths they must point at
-    EXISTING write_bm25_index / write_ivf_corpus layouts over the SAME
-    kept corpus — the production serve mode, where index writes amortize
-    across queries and this call performs only the pruned probes, the
-    id-only zero-fill, the layout rels pass, and fusion/MMR (the mode
-    scripts/stress_scaling.py sweeps as rag_persisted_serve). Pass the
-    trained ``centroids`` with the paths (they are returned by the write
-    call, same caller-owns-identity contract as ivf_topk_partitioned) —
-    the production serve then pays ZERO per-query centroid cost; when
-    omitted they are re-derived by the deterministic sample_centroids
-    over the kept embeddings, so write-time and probe-time lists still
-    agree, at the cost of one extra kept-corpus pass.
-
-    ``kept_ids`` (r8, same caller-owns-identity contract): the gated id
-    frame returned by a previous call's frames dict. Passing it with the
-    paths removes the per-query quality-classifier corpus scan — the
-    ONE serve-mode stage that re-derived an index-time property per
-    query (the written layouts already contain exactly the kept docs;
-    measured ~1.0 s of the sf0.1 serve constant). When omitted it is
-    re-derived by the same deterministic gate, so results are identical
-    either way — the parameter trades a corpus scan for trusting the
-    caller to pass the ids the layouts were built from.
-    """
+    """Serve time of the persisted RAG pipeline (see
+    build_rag_persisted_frames for the full construction + proof) over the
+    layouts :func:`build_rag_indexes` wrote: the pruned probes, the id-only
+    zero-fill, the layout rels pass and fusion/MMR — no corpus gate, no
+    index write, no centroid pick. Index writes amortize across serves
+    (the mode scripts/stress_scaling.py sweeps as rag_persisted_serve).
+    Returns the ``result`` frame plus the two pre-checkpoint probe frames
+    ``bm25_hits`` and ``ivf_probe``."""
     from nilm_data_framework_spark.operators import similarity as S
     from nilm_data_framework_spark.operators.embed_stats import u6_components
-    from nilm_data_framework_spark.operators.text import (
-        bm25_hits_indexed,
-        quality_classifier_score,
-        write_bm25_index,
-    )
+    from nilm_data_framework_spark.operators.text import bm25_hits_indexed
     from nilm_data_framework_spark.queries.extra_ops import (
         _BM25_TERMS,
         _RAG_QVEC,
         _RAG_SHORTLIST,
         _rag_tail,
     )
-    from nilm_data_framework_spark.tmpdirs import pid_scratch_dir
 
-    if kept_ids is None:
-        kept_ids = (
-            quality_classifier_score(docs)
-            .where(F.col("keep") & (F.col("doc_id") != _RAG_QVEC))
-            .select("doc_id")
-            .localCheckpoint(eager=True)
-        )
-    kept_docs = docs.join(kept_ids, "doc_id")
-    if bm_path is None:
-        bm_path = pid_scratch_dir(
-            os.path.join(tempfile.gettempdir(), "nilm_spark_rag_bm25"), "idx_"
-        )
-        write_bm25_index(kept_docs, bm_path)
     hits = bm25_hits_indexed(spark, bm_path, _BM25_TERMS).select(
         "doc_id", "bm25_raw"
     )
@@ -151,22 +147,9 @@ def rag_persisted_pipeline(
     )
     bmscored = hits.unionByName(zero).localCheckpoint(eager=True)
 
-    kept_emb = emb.join(kept_ids, emb["vec_id"] == kept_ids["doc_id"]).select(
-        "vec_id", "embedding"
-    )
-    cents = (
-        centroids
-        if centroids is not None
-        else S.sample_centroids(kept_emb, 16, "vec_id", "embedding", "hash", 42)
-    )
-    if ivf_path is None:
-        ivf_path = pid_scratch_dir(
-            os.path.join(tempfile.gettempdir(), "nilm_spark_rag_ivf"), "corpus_"
-        )
-        S.write_ivf_corpus(kept_emb, ivf_path, cents)
     qdf = emb.where(F.col("vec_id") == _RAG_QVEC)
     ivf_probe = S.ivf_topk_partitioned(
-        spark, ivf_path, qdf, k=_RAG_SHORTLIST, centroids=cents, n_probe=4
+        spark, ivf_path, qdf, k=_RAG_SHORTLIST, centroids=centroids, n_probe=4
     )
 
     lay = read_parquet(spark, ivf_path)
@@ -205,13 +188,19 @@ def rag_persisted_pipeline(
         "bm25_hits": hits,
         "ivf_probe": ivf_probe,
         "result": _rag_tail(bmscored, rels, cand_ids, cvec),
-        "bm_path": bm_path,
-        "ivf_path": ivf_path,
-        "centroids": cents,
-        "kept_ids": kept_ids,
     }
 
 
+# The two gates run identical code (index build, then serve); both names
+# stay registered because each has its own CORRECTNESS attestation rows.
+@query(
+    "rag_retrieval_pipeline_serve",
+    oracle=_rag_oracle(),
+    survey_ref="§2.10 retrieval, SERVE mode of rag_retrieval_pipeline_persisted: "
+    "the layouts are built once (build_rag_indexes), then served from with "
+    "the trained centroids and kept ids passed in (pruned probes, "
+    "zero-fill, layout rels, fusion/MMR only) — same oracle verbatim",
+)
 @query(
     "rag_retrieval_pipeline_persisted",
     oracle=_rag_oracle(),
@@ -224,39 +213,10 @@ def rag_persisted_pipeline(
 )
 def rag_retrieval_pipeline_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """See build_rag_persisted_frames for the construction and the
-    superset-inertness proof. Closes judge r6 item 3: the RAG composition
-    now runs over write_bm25_index + write_ivf_corpus layouts with both
-    index scans partition-pruned (plan-pinned in
-    tests/test_plan_quality.py::test_rag_persisted_scans_pruned), gated
-    result-invariant against the exact pipeline's oracle."""
+    superset-inertness proof: the BM25 and IVF layouts are built once,
+    then served from, with both index scans partition-pruned (plan-pinned
+    in tests/test_plan_quality.py::test_rag_persisted_scans_pruned).
+    bench.py times the serve half alone as its
+    ``rag_retrieval_pipeline_serve`` row. Results equal the exact
+    pipeline's, so its oracle gates both names verbatim."""
     return build_rag_persisted_frames(spark, sf_dir)["result"]
-
-
-@query(
-    "rag_retrieval_pipeline_serve",
-    oracle=_rag_oracle(),
-    survey_ref="§2.10 retrieval, SERVE mode of rag_retrieval_pipeline_persisted: "
-    "the layouts are written once, then a second call serves from them "
-    "with the trained centroids and kept ids passed in (pruned probes, "
-    "zero-fill, layout rels, fusion/MMR only) — same oracle verbatim",
-)
-def rag_retrieval_pipeline_serve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production serve path of the persisted RAG pipeline as a gate:
-    the same call bench.py times as its ``rag_retrieval_pipeline_serve``
-    row. The first call writes the BM25 and IVF layouts (its own result
-    frame is never evaluated); the returned frame is the second call,
-    which reuses the paths, centroids and kept ids and so runs only the
-    serve stages. Results equal the gate-mode pipeline's, so the exact
-    pipeline's oracle gates it verbatim."""
-    built = build_rag_persisted_frames(spark, sf_dir)
-    docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    emb = load_table(spark, sf_dir, "embeddings", parallelize=True)
-    return rag_persisted_pipeline(
-        spark,
-        docs,
-        emb,
-        bm_path=built["bm_path"],
-        ivf_path=built["ivf_path"],
-        centroids=built["centroids"],
-        kept_ids=built["kept_ids"],
-    )["result"]

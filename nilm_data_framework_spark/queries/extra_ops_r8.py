@@ -547,7 +547,7 @@ def _lsh_multiprobe_oracle() -> str:
     from nilm_data_framework_spark.operators import similarity as S
 
     tables = [
-        S._hyperplanes(64, _MP_PLANES, 42 + 1000 * t) for t in range(_MP_TABLES)
+        S._hyperplanes(64, _MP_PLANES, S.LSH_SEED + 1000 * t) for t in range(_MP_TABLES)
     ]
 
     def bucket_expr(planes: list[list[float]], vcol: str) -> str:

@@ -451,7 +451,7 @@ def ivf_delete_probe_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.queries.similarity import N_QUERIES, TOP_K, _emb
 
     emb = _emb(spark, sf_dir)
-    cents = S.sample_centroids(emb, 16, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 16)
     path = pid_scratch_dir(
         os.path.join(tempfile.gettempdir(), "nilm_spark_ivf_del"), "corpus_"
     )
@@ -493,7 +493,7 @@ def ivf_compact_probe_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.queries.similarity import N_QUERIES, TOP_K, _emb
 
     emb = _emb(spark, sf_dir)
-    cents = S.sample_centroids(emb, 16, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 16)
     path = pid_scratch_dir(
         os.path.join(tempfile.gettempdir(), "nilm_spark_ivf_cmp"), "corpus_"
     )

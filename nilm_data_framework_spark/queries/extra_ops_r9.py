@@ -149,7 +149,7 @@ def _write_filtered_layout(spark: SparkSession, sf_dir: str, tag: str):
     from nilm_data_framework_spark.tmpdirs import pid_scratch_dir
 
     emb = _emb(spark, sf_dir)
-    cents = S.sample_centroids(emb, _FLT_CENTROIDS, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, _FLT_CENTROIDS)
     path = pid_scratch_dir(
         os.path.join(tempfile.gettempdir(), f"nilm_spark_ivf_{tag}"), "corpus_"
     )
@@ -995,7 +995,7 @@ def ivf_knn_self_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.operators import similarity as S
 
     emb = _emb(spark, sf_dir)
-    cents = S.sample_centroids(emb, _FLT_CENTROIDS, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, _FLT_CENTROIDS)
     out = S.ivf_knn_join(emb, k=_KNN_K, centroids=cents, n_probe=_FLT_PROBE)
     return out.select(
         "query_id", "match_id", F.round("cosine", 4).alias("cosine"),
@@ -1161,9 +1161,7 @@ def ivf_retrain_rebuild_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.operators import similarity as S
 
     emb = _emb(spark, sf_dir)
-    cents0 = S.sample_centroids(
-        emb, _FLT_CENTROIDS, "vec_id", "embedding", "hash", 42
-    )
+    cents0 = S.sample_centroids(emb, _FLT_CENTROIDS)
     cents0_df = spark.createDataFrame(
         [(i, v) for i, v in enumerate(cents0)], "cid int, cv array<double>"
     )

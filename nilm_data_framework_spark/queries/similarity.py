@@ -158,9 +158,9 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _lsh_oracle_sql(
     k: int = TOP_K, n_queries: int = N_QUERIES, n_planes: int = 4,
-    n_tables: int = 4, dim: int = 64, seed: int = 42,
+    n_tables: int = 4, dim: int = 64,
 ) -> str:
-    tables = [S._hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
+    tables = [S._hyperplanes(dim, n_planes, S.LSH_SEED + 1000 * t) for t in range(n_tables)]
 
     def bucket_expr(planes: list[list[float]], vcol: str) -> str:
         terms = []
@@ -853,7 +853,7 @@ def ivf_topk_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.tmpdirs import pid_scratch_dir
 
     emb = _emb(spark, sf_dir)
-    cents = S.sample_centroids(emb, 16, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 16)
     path = pid_scratch_dir(
         os.path.join(tempfile.gettempdir(), "nilm_spark_ivf"), "corpus_"
     )
@@ -889,7 +889,7 @@ def ivf_append_probe_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.tmpdirs import pid_scratch_dir
 
     emb = _emb(spark, sf_dir)
-    cents = S.sample_centroids(emb, 16, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 16)
     path = pid_scratch_dir(
         os.path.join(tempfile.gettempdir(), "nilm_spark_ivf_app"), "corpus_"
     )

@@ -48,14 +48,3 @@ def read_refit(spark: SparkSession, path_glob: str) -> DataFrame:
         .filter(F.col("power").isNotNull())
         .select("dataset", "house_id", "channel_id", "ts", "power")
     )
-
-
-def infer_house_rates(readings: DataFrame) -> DataFrame:
-    """Per-house median sample rate (A15 over A6) — reference
-    REFITLoader.py:111-116 medians the per-channel rates."""
-    from nilm_data_framework_spark.operators.resample import infer_sample_rate
-
-    per_channel = infer_sample_rate(readings, ["house_id", "channel_id"])
-    return per_channel.groupBy("house_id").agg(
-        F.expr("median(rate_s)").alias("house_rate_s")
-    )

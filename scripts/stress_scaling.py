@@ -1689,27 +1689,26 @@ def main() -> None:
         rag_p_names = {"rag_persisted_build", "rag_persisted_serve"}
         if only is None or only & rag_p_names:
             # r7: the composed RAG pipeline over the persisted indexes, in
-            # its two modes. build = quality gate + BOTH index writes +
-            # first serve (the gate-mode cost the registered query pays);
-            # serve = probe-only against the existing layouts (production:
-            # writes amortize). Expected: serve ~linear with a small
-            # constant — the pruned probes are flat, but the quality-gate
-            # scan, the id-only zero-fill, and the exact-rel layout pass
-            # are (narrow) corpus passes demanded by the exact fusion-rank
-            # contract (see queries/extra_ops_r7.py's 100 TB note).
+            # its two phases. build = quality gate + BOTH index writes +
+            # first serve (the cost the registered query pays); serve =
+            # probe-only against the existing layouts (production: writes
+            # amortize). Expected: serve ~linear with a small constant —
+            # the pruned probes are flat, but the id-only zero-fill and
+            # the exact-rel layout pass are (narrow) corpus passes demanded
+            # by the exact fusion-rank contract (see
+            # queries/extra_ops_r7.py's 100 TB note).
             from nilm_data_framework_spark.queries.extra_ops_r7 import (
+                build_rag_indexes,
                 rag_persisted_pipeline,
             )
 
             emb_rp = replicate_embeddings(emb_base, k)
             t0 = time.perf_counter()
-            frames = rag_persisted_pipeline(spark, docs, emb_rp)
-            frames["result"].count()
+            index = build_rag_indexes(spark, docs, emb_rp)
+            rag_persisted_pipeline(spark, emb_rp, **index)["result"].count()
             build_sec = time.perf_counter() - t0
             serve = lambda: rag_persisted_pipeline(  # noqa: E731
-                spark, docs, emb_rp,
-                bm_path=frames["bm_path"], ivf_path=frames["ivf_path"],
-                centroids=frames["centroids"], kept_ids=frames["kept_ids"],
+                spark, emb_rp, **index
             )["result"].count()
             serve()  # warm
             times = []
@@ -1726,8 +1725,8 @@ def main() -> None:
                                   "result_rows": rr, "sec": round(sec, 3)}))
             import shutil
 
-            shutil.rmtree(frames["bm_path"], ignore_errors=True)
-            shutil.rmtree(frames["ivf_path"], ignore_errors=True)
+            shutil.rmtree(index["bm_path"], ignore_errors=True)
+            shutil.rmtree(index["ivf_path"], ignore_errors=True)
 
         lc_names = {
             "bm25_delete_fixed", "bm25_rebuild_survivors", "bm25_compact",
@@ -1798,9 +1797,7 @@ def main() -> None:
                 shutil.rmtree(p2, ignore_errors=True)
             emb_lc = replicate_embeddings(emb_base, k)
             n_emb_lc = emb_lc.count()
-            cents_lc = SIM.sample_centroids(
-                emb_lc, 16, "vec_id", "embedding", "hash", 42
-            )
+            cents_lc = SIM.sample_centroids(emb_lc, 16)
             onelist = (
                 SIM.assign_centroids(emb_lc, cents_lc)
                 .filter(F.col("cid") == 0)
@@ -1985,9 +1982,7 @@ def main() -> None:
             emb9 = emb9.repartition(32, "vec_id").localCheckpoint(eager=True)
             n_emb9 = emb9.count()
             if only is None or "ivf_filtered_probe" in (only or r9_names):
-                cents9 = SIM9.sample_centroids(
-                    emb9, 16, "vec_id", "embedding", "hash", 42
-                )
+                cents9 = SIM9.sample_centroids(emb9, 16)
                 p9 = _psd(
                     os.path.join(_tf.gettempdir(), "nilm_spark_fltprobe"),
                     f"k{k}_",
@@ -2039,12 +2034,8 @@ def main() -> None:
                 embk = embk.unionByName(p)
             embk = embk.repartition(32, "vec_id").localCheckpoint(eager=True)
             n_embk = embk.count()
-            cents_fixed = SIMK.sample_centroids(
-                embk, 16, "vec_id", "embedding", "hash", 42
-            )
-            cents_scaled = SIMK.sample_centroids(
-                embk, 16 * k, "vec_id", "embedding", "hash", 42
-            )
+            cents_fixed = SIMK.sample_centroids(embk, 16)
+            cents_scaled = SIMK.sample_centroids(embk, 16 * k)
 
             def _knn_fixed():
                 return SIMK.ivf_knn_join(

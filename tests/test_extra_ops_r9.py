@@ -26,7 +26,7 @@ def test_filtered_ivf_equals_ivf_over_prefiltered_corpus(spark):
     # was filtered before indexing: the predicate only removes candidates,
     # it never changes assignment or probing.
     emb = _emb(spark)
-    cents = S.sample_centroids(emb, 8, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 8)
     queries = emb.filter(F.col("vec_id") < 5)
     pred = F.col("label") == 3
     path = pid_scratch_dir(
@@ -54,7 +54,7 @@ def test_filtered_ivf_equals_ivf_over_prefiltered_corpus(spark):
 
 def test_filtered_ivf_results_all_match_predicate(spark):
     emb = _emb(spark)
-    cents = S.sample_centroids(emb, 8, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 8)
     queries = emb.filter(F.col("vec_id") < 5)
     path = pid_scratch_dir(
         os.path.join(tempfile.gettempdir(), "nilm_test_ivf_fltpred"), "c_"
@@ -226,7 +226,7 @@ def test_ivf_knn_join_equals_broadcast_form(spark):
     # broadcast form returns when fed the corpus as its query set — same
     # candidates (per-query probed lists), same ranking, same tiebreak.
     emb = _emb(spark)
-    cents = S.sample_centroids(emb, 8, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 8)
     got = sorted(
         map(
             tuple,

@@ -805,6 +805,24 @@ def test_ivf_persisted_scan_partition_pruned(spark):
     assert any("cid" in l and ("In(" in l or "IN" in l) for l in pf), (
         f"cid probe-set filter missing from partition filters: {pf}"
     )
+    # with unique vec_ids every (query_id, match_id) pair meets in exactly
+    # one cid, so neither IVF top-k (persisted: ivf_topk_partitioned; in
+    # memory: ivf_topk) may run a pair-dedup aggregate in its executed plan
+    import re
+
+    for name in ("ivf_topk_persisted", "cosine_topk_ivf"):
+        df = SPECS[name].spark(spark, SF_DIR)
+        df.collect()
+        executed = df._jdf.queryExecution().executedPlan().toString()
+        pair_aggs = [
+            l
+            for l in executed.splitlines()
+            if "Aggregate" in l
+            and (m := re.search(r"keys=\[([^\]]*)\]", l))
+            and "query_id" in m.group(1)
+            and "match_id" in m.group(1)
+        ]
+        assert not pair_aggs, f"{name}: (query_id, match_id) dedup aggregate: {pair_aggs}"
 
 
 def test_gram_matrix_join_free_single_agg_exchange(spark):

@@ -114,7 +114,7 @@ def _counting_identity(evaluated_rows):
 
 def test_ivf_partitioned_evaluates_queries_once(spark, tmp_path):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = S.sample_centroids(emb, 8, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 8)
     path = str(tmp_path / "ivf")
     S.write_ivf_corpus(emb, path, cents)
     rows = emb.filter(F.col("vec_id") < 4).select("vec_id", "embedding").collect()
@@ -139,7 +139,7 @@ def test_ivf_partitioned_evaluates_queries_once(spark, tmp_path):
 
 def test_ivf_partitioned_empty_queries(spark, tmp_path):
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
-    cents = S.sample_centroids(emb, 8, "vec_id", "embedding", "hash", 42)
+    cents = S.sample_centroids(emb, 8)
     path = str(tmp_path / "ivf_empty")
     S.write_ivf_corpus(emb, path, cents)
     none = emb.filter(F.col("vec_id") < 0)
