@@ -1,6 +1,10 @@
-"""Schema sidecars for the parquet layouts this package writes and serves
-from: the canonical store (sources/canonical.py) and the cid-partitioned
-IVF corpus (operators/similarity.py::write_ivf_corpus).
+"""The one partitioned-write path and the schema sidecars for the parquet
+layouts this package writes and serves from: the canonical store
+(sources/canonical.py), the term-partitioned BM25 postings
+(operators/text.py) and the cid-partitioned IVF corpus
+(operators/similarity.py::write_ivf_corpus).
+
+Every key-partitioned writer starts from :func:`partitioned_writer`.
 
 ``spark.read.parquet(path)`` without a schema runs a one-task Spark job
 that reads file footers to infer one — 60-80 ms per read on a 4-core
@@ -18,11 +22,36 @@ Layouts with one fixed schema declare a constant instead
 from __future__ import annotations
 
 import json
+from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql.types import StructType
 
 SCHEMA_SIDECAR = "_schema.json"
+
+
+def partitioned_writer(
+    df: DataFrame, cols: Sequence[str], order: Sequence[str] = ()
+) -> DataFrameWriter:
+    """``df``'s writer partitioned by ``cols``; with ``order``, the rows of
+    each file are sorted by ``(*cols, *order)``. The caller sets the mode
+    and options and picks the format.
+
+    The rebalance exchange hash-partitions on ``cols``, so each key lands
+    in one shuffle partition; AQE (always on in ``session.get_session``)
+    then drops the empty partitions and packs whole ones into
+    byte-balanced tasks, so each key is written by one task, into one
+    file, and no task is empty (a 6-key write: 1-2 tasks instead of 32).
+    Only a key larger than ``spark.sql.adaptive.advisoryPartitionSizeInBytes``
+    is split, into files of about that size. The width starts at the
+    session's shuffle width, at least 32. The sort leads with ``cols``
+    because the planned write needs rows grouped by them: a sort with
+    that prefix survives, any other is replaced by the planner's."""
+    width = max(32, int(df.sparkSession.conf.get("spark.sql.shuffle.partitions")))
+    out = df.hint("rebalance", width, *cols)
+    if order:
+        out = out.sortWithinPartitions(*cols, *order)
+    return out.write.partitionBy(*cols)
 
 
 def hadoop_fs(spark: SparkSession, path: str):

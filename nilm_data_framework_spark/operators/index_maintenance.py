@@ -21,7 +21,7 @@ segment-merge compaction that undoes append fragmentation:
   dead files).
 - **compaction = rewrite-new-then-swap.** Appends leave one file per
   batch per partition directory (the small-file problem); compaction
-  rewrites the dataset with a pinned partition count into a sibling
+  rewrites the dataset, one file per partition directory, into a sibling
   directory and atomically swaps it in, never overwriting the files it
   is still reading (the write-new/rename pattern of every production
   compactor; single-writer contract — concurrent readers of the swapped
@@ -41,7 +41,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from nilm_data_framework_spark.layouts import hadoop_fs, read_parquet, write_schema_sidecar
+from nilm_data_framework_spark.layouts import (
+    hadoop_fs,
+    partitioned_writer,
+    read_parquet,
+    write_schema_sidecar,
+)
 from nilm_data_framework_spark.operators.text import BM25_POSTINGS_SCHEMA, BM25_STATS_SCHEMA
 
 
@@ -140,13 +145,12 @@ def delete_bm25_docs(
     spark: SparkSession,
     path: str,
     deleted: DataFrame,
-    id_col: str = "doc_id",
-    write_partitions: int = 32,
     isin_max_terms: int = _ISIN_MAX_TERMS,
 ) -> None:
     """Copy-on-write DELETE from a ``write_bm25_index`` layout (the
     right-to-be-forgotten path a GDPR erasure demands of a persisted
-    index, completing the CREATE/APPEND lifecycle):
+    index, completing the CREATE/APPEND lifecycle). ``deleted`` carries
+    a ``doc_id`` column:
 
     1. ONE map-only scan of the postings locates victim rows via a
        broadcast semi-join on the (distinct) deleted ids — the inverted
@@ -181,7 +185,7 @@ def delete_bm25_docs(
     tokenizes to >= 1 term), and the limitation is inherent to inverted
     postings, not this implementation (Lucene tracks live-docs bitmaps
     for the same reason)."""
-    del_ids = deleted.select(F.col(id_col).alias("doc_id")).distinct()
+    del_ids = deleted.select("doc_id").distinct()
     post = spark.read.schema(BM25_POSTINGS_SCHEMA).parquet(f"{path}/postings")
     victims = post.join(F.broadcast(del_ids), "doc_id", "semi").localCheckpoint()
 
@@ -208,13 +212,11 @@ def delete_bm25_docs(
         # small erasure vocabulary: literal filter → parquet partition
         # pruning, the scan touches only affected directories
         affected_posts = post.filter(F.col("term").isin(head))
-        n_parts = max(min(write_partitions, len(head)), 1)
     else:
         # huge erasure vocabulary: keep the term set distributed (a 10^5+
         # element isin literal bloats the plan and the driver); costs one
         # unpruned re-scan, still ≪ a rebuild which re-tokenizes the corpus
         affected_posts = post.join(aff_terms, "term", "semi")
-        n_parts = write_partitions
     # localCheckpoint before the rewrite: (a) Spark refuses to overwrite a
     # path its plan still reads from — the checkpoint cuts that lineage
     # (the rewrite materializes exactly this data anyway; at 100 TB a
@@ -235,9 +237,9 @@ def delete_bm25_docs(
             surv.select("term").distinct(), "term", "anti"
         ).collect()
     }
-    surv.repartition(n_parts, "term").write.mode("overwrite").option(
+    partitioned_writer(surv, ["term"]).mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
-    ).partitionBy("term").parquet(f"{path}/postings")
+    ).parquet(f"{path}/postings")
     _delete_partition_dirs(spark, f"{path}/postings", "term", emptied)
 
     old = spark.read.schema(BM25_STATS_SCHEMA).parquet(f"{path}/stats").collect()[0]
@@ -247,9 +249,7 @@ def delete_bm25_docs(
     ).write.mode("overwrite").parquet(f"{path}/stats")
 
 
-def compact_bm25_postings(
-    spark: SparkSession, path: str, write_partitions: int = 32
-) -> None:
+def compact_bm25_postings(spark: SparkSession, path: str) -> None:
     """Compact a ``write_bm25_index`` postings layout back to one
     right-sized file per term directory. Every ``append_bm25_batch``
     leaves one file per batch per touched term dir (and a delete's
@@ -257,8 +257,8 @@ def compact_bm25_postings(
     degrades scan planning at scale; compaction is the Lucene segment
     merge / lakehouse OPTIMIZE analog.
 
-    Shape: read postings, repartition on term with a PINNED count (the
-    write_ivf_corpus AQE-coalesce lesson), write into a sibling
+    Shape: read postings, write them through
+    ``layouts.partitioned_writer`` (one file per term) into a sibling
     ``postings_compacting`` directory, then swap it in. Writing new
     files FIRST means the job never overwrites data it is still reading
     (Spark cannot overwrite a path being scanned) and a mid-compaction
@@ -268,25 +268,18 @@ def compact_bm25_postings(
     (bm25_compact_probe_equiv) proves it."""
     post = spark.read.schema(BM25_POSTINGS_SCHEMA).parquet(f"{path}/postings")
     tmp = f"{path}/postings_compacting"
-    post.repartition(write_partitions, "term").write.mode("overwrite").partitionBy(
-        "term"
-    ).parquet(tmp)
+    partitioned_writer(post, ["term"]).mode("overwrite").parquet(tmp)
     _swap_directory(spark, f"{path}/postings", tmp)
 
 
 # --- IVF corpus maintenance ----------------------------------------------------
 
 
-def delete_ivf_vecs(
-    spark: SparkSession,
-    path: str,
-    deleted: DataFrame,
-    id_col: str = "vec_id",
-) -> None:
-    """Copy-on-write DELETE from a ``write_ivf_corpus`` layout: one scan
-    locates the victims' centroid lists (broadcast semi-join — the IVF
-    corpus is keyed by cid, so the deleted ids' lists are not known
-    up front), then ONLY the affected cid directories are rewritten
+def delete_ivf_vecs(spark: SparkSession, path: str, deleted: DataFrame) -> None:
+    """Copy-on-write DELETE of ``deleted``'s ``vec_id``s from a
+    ``write_ivf_corpus`` layout: one scan locates the victims' centroid
+    lists (broadcast semi-join — the IVF corpus is keyed by cid, so the
+    deleted ids' lists are not known up front), then ONLY the affected cid directories are rewritten
     without the victims (dynamic partition overwrite); lists emptied
     entirely are dropped through the filesystem. Centroids are NOT
     retrained — the caller keeps serving with the same trained list,
@@ -295,9 +288,9 @@ def delete_ivf_vecs(
     and the operation is idempotent. Gate: ivf_delete_probe_equiv —
     probing the maintained layout hash-matches the IVF oracle over the
     surviving corpus with the SAME centroids."""
-    del_ids = deleted.select(F.col(id_col).alias(id_col)).distinct()
+    del_ids = deleted.select("vec_id").distinct()
     corpus = read_parquet(spark, path)
-    victims = corpus.join(F.broadcast(del_ids), id_col, "semi")
+    victims = corpus.join(F.broadcast(del_ids), "vec_id", "semi")
     affected = {r["cid"] for r in victims.select("cid").distinct().collect()}
     if not affected:
         return
@@ -306,30 +299,26 @@ def delete_ivf_vecs(
     # surviving-cid probe + the write from one materialization
     surv = (
         corpus.filter(F.col("cid").isin(list(affected)))
-        .join(F.broadcast(del_ids), id_col, "anti")
+        .join(F.broadcast(del_ids), "vec_id", "anti")
         .localCheckpoint()
     )
     surviving = {r["cid"] for r in surv.select("cid").distinct().collect()}
-    surv.repartition(max(len(affected), 1), "cid").write.mode("overwrite").option(
+    partitioned_writer(surv, ["cid"]).mode("overwrite").option(
         "partitionOverwriteMode", "dynamic"
-    ).partitionBy("cid").parquet(path)
+    ).parquet(path)
     _delete_partition_dirs(
         spark, path, "cid", {str(c) for c in affected - surviving}
     )
 
 
-def compact_ivf_corpus(
-    spark: SparkSession, path: str, n_lists: int
-) -> None:
+def compact_ivf_corpus(spark: SparkSession, path: str) -> None:
     """Compact a ``write_ivf_corpus`` layout to one file per cid list
     (appends fragment the lists one file per batch). Same
-    write-new-then-swap shape as compact_bm25_postings; ``n_lists`` pins
-    the shuffle count (= len(centroids) at gate scale; K·n_lists for
-    K-way write parallelism per list at 100 TB, per write_ivf_corpus)."""
+    write-new-then-swap shape as compact_bm25_postings, through
+    ``layouts.partitioned_writer`` (a list larger than the advisory
+    partition size becomes files of about that size)."""
     corpus = read_parquet(spark, path)
     tmp = f"{path}_compacting"
-    corpus.repartition(n_lists, "cid").write.mode("overwrite").partitionBy(
-        "cid"
-    ).parquet(tmp)
+    partitioned_writer(corpus, ["cid"]).mode("overwrite").parquet(tmp)
     write_schema_sidecar(spark, tmp, corpus.schema)
     _swap_directory(spark, path, tmp)

@@ -17,7 +17,11 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from nilm_data_framework_spark.layouts import read_parquet, write_schema_sidecar
+from nilm_data_framework_spark.layouts import (
+    partitioned_writer,
+    read_parquet,
+    write_schema_sidecar,
+)
 
 # seed of the SRP hyperplanes: table t uses LSH_SEED + 1000·t (the oracles
 # replay the same planes through _hyperplanes)
@@ -742,26 +746,18 @@ def write_ivf_corpus(corpus: DataFrame, path: str, centroids: list[list[float]])
 
     Centroid assignment is the shuffle-free per-row argmax
     (:func:`assign_centroids`); the only data movement is the writer's
-    own partitioned layout. Same production contract as the persisted LSH
-    reference (operators/dedup.py::write_lsh_reference): centroids are
-    trained once offline and must be the SAME list at write and probe
-    time — :func:`ivf_topk_partitioned` takes them explicitly so the
-    caller owns that invariant. The layout's schema is recorded as
+    own partitioned layout, through ``layouts.partitioned_writer``: one
+    file per cid list (a list larger than the advisory partition size is
+    split into files of about that size). Same production contract as
+    the persisted LSH reference (operators/dedup.py::write_lsh_reference):
+    centroids are trained once offline and must be the SAME list at
+    write and probe time — :func:`ivf_topk_partitioned` takes them
+    explicitly so the caller owns that invariant. The layout's schema is recorded as
     ``{path}/_schema.json`` so its readers skip schema inference
     (nilm_data_framework_spark/layouts.py).
     """
-    # repartition by cid so each writer task owns whole partition dirs:
-    # without it every upstream task writes a sliver into every cid dir
-    # (tasks × centroids small files — measured 104 files for 500 rows);
-    # with it the layout is one right-sized file per list. The partition
-    # count is pinned (bare repartition("cid") lets AQE COALESCE the
-    # shuffle, re-mixing cids across tasks — measured 4 files/dir). At
-    # 100 TB scale the count per list instead: repartition(K·n_lists,
-    # "cid") for K-way write parallelism per list.
     assigned = assign_centroids(corpus, centroids)
-    assigned.repartition(len(centroids), "cid").write.mode("overwrite").partitionBy(
-        "cid"
-    ).parquet(path)
+    partitioned_writer(assigned, ["cid"]).mode("overwrite").parquet(path)
     write_schema_sidecar(corpus.sparkSession, path, assigned.schema)
 
 
@@ -847,9 +843,7 @@ def append_ivf_batch(batch: DataFrame, path: str, centroids: list[list[float]]) 
     heavy growth) is an offline rebuild, not an append. A batch carries
     the layout's columns: readers keep the schema write_ivf_corpus
     recorded."""
-    assign_centroids(batch, centroids).repartition(
-        len(centroids), "cid"
-    ).write.mode("append").partitionBy("cid").parquet(path)
+    partitioned_writer(assign_centroids(batch, centroids), ["cid"]).mode("append").parquet(path)
 
 
 def sq8_dim_stats(corpus: DataFrame) -> list[tuple[int, int]]:

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.layouts import partitioned_writer
 from nilm_data_framework_spark.operators.exact_math import ratio_e4
 
 # The two fixed schemas of the write_bm25_index layout (doc_id is an integer
@@ -19,11 +20,9 @@ from nilm_data_framework_spark.operators.exact_math import ratio_e4
 # one-task footer job per directory, 60-80 ms of a probe on a 4-core host.
 BM25_POSTINGS_SCHEMA = "doc_id long, tf long, dl long, term string"
 BM25_STATS_SCHEMA = "n_docs long, sum_dl long"
-# Okapi BM25 parameters (the Lucene defaults) and the pinned writer-task
-# count of the postings layout (see write_bm25_index)
+# Okapi BM25 parameters (the Lucene defaults)
 BM25_K1 = 1.2
 BM25_B = 0.75
-BM25_WRITE_PARTITIONS = 32
 
 # Tiny per-language stopword lists for the n-gram/stopword language-ID
 # heuristic. Deterministic, dependency-free; replace with fastText at deploy.
@@ -757,9 +756,7 @@ def _write_postings(toks: DataFrame, path: str, mode: str) -> None:
         .groupBy("term", "doc_id")
         .agg(F.count(F.lit(1)).cast("long").alias("tf"), F.first("dl").alias("dl"))
     )
-    postings.repartition(BM25_WRITE_PARTITIONS, "term").write.mode(mode).partitionBy(
-        "term"
-    ).parquet(f"{path}/postings")
+    partitioned_writer(postings, ["term"]).mode(mode).parquet(f"{path}/postings")
 
 
 def write_bm25_index(df: DataFrame, path: str) -> None:
@@ -775,10 +772,9 @@ def write_bm25_index(df: DataFrame, path: str) -> None:
       constants; per-term df is exactly the pruned partitions' row counts,
       so it needs no precomputation.
 
-    ``df`` carries ``(doc_id, text)``. The writer repartitions on term
-    with a PINNED count, BM25_WRITE_PARTITIONS (bare
-    ``repartition("term")`` lets AQE coalesce and re-mix terms across
-    writer tasks — the small-file failure write_ivf_corpus documents).
+    ``df`` carries ``(doc_id, text)``. The postings go through
+    ``layouts.partitioned_writer``: one file per term directory, written
+    by as few tasks as AQE packs the terms into.
     Reference analog: none (pure retrieval-infrastructure extension).
     """
     _write_postings(_doc_tokens(df), path, "overwrite")

@@ -67,4 +67,7 @@ REATTEST: frozenset[str] = frozenset({
     "ivf_pq_topk",
     # assign_centroids takes the cid through the shared _nearest kernel
     "semantic_dedup_survivors",
+    # its fixture write goes through layouts.partitioned_writer (the
+    # BM25/IVF writers above moved there too)
+    "dpp_partition_pruned_join",
 })

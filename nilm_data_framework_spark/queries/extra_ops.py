@@ -1603,15 +1603,15 @@ def simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Writes a partitioned-by-event_type copy of events to pid-keyed
-    scratch (pinned repartition(5, key) so each writer task owns whole
-    type dirs — the small-file rule), then joins it against a
-    runtime-filtered type dim. The RESULT is partition-layout-invariant
-    (oracle is a plain filtered agg); the PLAN is the deliverable —
-    SubqueryAdaptiveBroadcast dynamicpruning on the fact scan. v6 sums
-    are exact integers."""
+    scratch (through ``layouts.partitioned_writer``, one file per type
+    dir), then joins it against a runtime-filtered type dim. The RESULT
+    is partition-layout-invariant (oracle is a plain filtered agg); the
+    PLAN is the deliverable — SubqueryAdaptiveBroadcast dynamicpruning on
+    the fact scan. v6 sums are exact integers."""
     import os
     import tempfile
 
+    from nilm_data_framework_spark.layouts import partitioned_writer
     from nilm_data_framework_spark.tmpdirs import pid_scratch_dir
 
     ev = load_table(spark, sf_dir, "events").select(
@@ -1622,9 +1622,7 @@ def dpp_partition_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = pid_scratch_dir(
         os.path.join(tempfile.gettempdir(), "nilm_spark_dpp"), "events_"
     )
-    ev.repartition(5, "event_type").write.mode("overwrite").partitionBy(
-        "event_type"
-    ).parquet(path)
+    partitioned_writer(ev, ["event_type"]).mode("overwrite").parquet(path)
     fact = spark.read.parquet(path)
     dim = (
         load_table(spark, sf_dir, "events")

@@ -147,8 +147,8 @@ def _ivf_full_oracle() -> str:
     "bm25_compact_probe_equiv",
     oracle=_bm25_full_oracle(),
     survey_ref="§2.10 text retrieval: small-file compaction of the "
-    "persisted BM25 postings (write-new-then-swap, pinned partition "
-    "count) after fragmenting appends — probe invariant vs the one-shot "
+    "persisted BM25 postings (write-new-then-swap, one file per term "
+    "directory) after fragmenting appends — probe invariant vs the one-shot "
     "index (same oracle as bm25_topk_indexed verbatim); file counts "
     "pinned by tests/test_index_lifecycle.py",
 )
@@ -500,7 +500,7 @@ def ivf_compact_probe_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     S.write_ivf_corpus(emb.filter(~(F.col("vec_id") % 10).isin([7, 8])), path, cents)
     S.append_ivf_batch(emb.filter(F.col("vec_id") % 10 == 7), path, cents)
     S.append_ivf_batch(emb.filter(F.col("vec_id") % 10 == 8), path, cents)
-    compact_ivf_corpus(spark, path, n_lists=16)
+    compact_ivf_corpus(spark, path)
     queries_df = emb.filter(F.col("vec_id") < N_QUERIES)
     out = S.ivf_topk_partitioned(
         spark, path, queries_df, k=TOP_K, centroids=cents, n_probe=4

@@ -15,47 +15,35 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from nilm_data_framework_spark.layouts import read_parquet, write_schema_sidecar
+from nilm_data_framework_spark.layouts import (
+    partitioned_writer,
+    read_parquet,
+    write_schema_sidecar,
+)
 
 
-def _sort_keys(partition_cols: list[str]) -> list[str]:
-    """In-file order of the canonical store: the partition columns first,
-    then ts, then channel_id. Spark's planned write needs the rows sorted
-    by the partition columns; a sort that starts with them satisfies that
-    requirement and survives, while any other sort is replaced by the
-    planner's own (partition columns only) and the file order is lost.
-    ts-major (not channel-major) keeps each row group's ts min/max tight,
-    which is what a time-slice scan skips on; channel-major measured a
-    20% larger store on the benchmark's raw set."""
-    return [*partition_cols, "ts", "channel_id"]
+# in-file order after the partition columns: ts-major (not channel-major)
+# keeps each row group's ts min/max tight, which is what a time-slice scan
+# skips on; channel-major measured a 20% larger store on the benchmark's
+# raw set
+_FILE_ORDER = ("ts", "channel_id")
+_PARTITION_COLS = ("dataset", "house_id")
 
 
-def write_readings(
-    readings: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    write_partitions: int = 32,
-) -> None:
+def write_readings(readings: DataFrame, path: str, mode: str = "overwrite") -> None:
     """At 100 TB: partition pruning on (dataset, house_id) + min/max ts
     statistics in the footer give the P3 time-slice near-free scans.
-    Rows inside each file are ordered by (ts, channel_id) — see
-    :func:`_sort_keys` for why the sort names the partition columns too.
+    Rows inside each file are ordered by (ts, channel_id).
     Caveat: when ``dataset`` is one literal for the whole frame, Catalyst
     folds that sort key away and the planner re-sorts by ``house_id``
     alone, so such a write keeps only the partition order.
-    The pre-write repartition count is PINNED (r7, the write_ivf_corpus
-    rule): bare repartition(keys) lets AQE coalesce the shuffle and
-    re-mix partition keys across writer tasks — the small-file
-    explosion. Size write_partitions ≈ touched partitions × K.
+    The write goes through ``layouts.partitioned_writer``: one file per
+    (dataset, house_id) directory and no empty writer tasks; a house
+    larger than the advisory partition size is split into files of about
+    that size.
     A successful write records the frame's schema as
     ``{path}/_schema.json`` (:func:`read_readings` reads it)."""
-    (
-        readings.repartition(write_partitions, "dataset", "house_id")
-        .sortWithinPartitions(*_sort_keys(["dataset", "house_id"]))
-        .write.mode(mode)
-        .partitionBy("dataset", "house_id")
-        .parquet(path)
-    )
+    partitioned_writer(readings, _PARTITION_COLS, _FILE_ORDER).mode(mode).parquet(path)
     if mode != "ignore":
         write_schema_sidecar(readings.sparkSession, path, readings.schema)
 
@@ -99,9 +87,8 @@ def merge_upsert_partitioned(
     spark: SparkSession,
     changes: DataFrame,
     path: str,
-    partition_cols: list[str] = ("dataset", "house_id"),
+    partition_cols: list[str] = _PARTITION_COLS,
     key_cols: list[str] = ("dataset", "house_id", "channel_id", "ts"),
-    write_partitions: int = 32,
 ) -> None:
     """Warehouse-style MERGE (upsert) against the canonical store WITHOUT a
     table format: rewrite ONLY the partitions the changelog touches, via
@@ -156,13 +143,7 @@ def merge_upsert_partitioned(
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            merged.repartition(write_partitions, *part_cols)
-            .sortWithinPartitions(*_sort_keys(part_cols))
-            .write.mode("overwrite")
-            .partitionBy(*part_cols)
-            .parquet(path)
-        )
+        partitioned_writer(merged, part_cols, _FILE_ORDER).mode("overwrite").parquet(path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     write_schema_sidecar(spark, path, merged.schema)
@@ -177,13 +158,7 @@ def write_readings_orc(readings: DataFrame, path: str, mode: str = "overwrite") 
     lakes that standardized on ORC. Columnar semantics are
     format-symmetric, which `tests/test_sources.py` pins by round-tripping
     the same frame through both sinks and comparing exactly."""
-    (
-        readings.repartition(32, "dataset", "house_id")
-        .sortWithinPartitions(*_sort_keys(["dataset", "house_id"]))
-        .write.mode(mode)
-        .partitionBy("dataset", "house_id")
-        .orc(path)
-    )
+    partitioned_writer(readings, _PARTITION_COLS, _FILE_ORDER).mode(mode).orc(path)
 
 
 def read_readings_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -1,10 +1,12 @@
-"""Call shapes of the retrieval operators in code the suite never runs.
+"""Call shapes of the retrieval operators and layout writers in code the
+suite never runs.
 
 ``bench.py``, ``scripts/*.py`` and ``nilmbench/*.py`` call the similarity,
-text/BM25 and persisted-RAG functions, but no test executes them: a
-keyword or positional slot that a signature dropped (a stale
-``id_col=``/``centroid_method=``) would surface only when someone runs the
-script or the benchmark. This walks their ASTs and binds every such call's
+text/BM25, persisted-RAG, canonical-store and index-maintenance functions,
+but no test executes them: a keyword or positional slot that a signature
+dropped (a stale ``id_col=``/``centroid_method=``/``write_partitions=``/
+``n_lists=``) would surface only when someone runs the script or the
+benchmark. This walks their ASTs and binds every such call's
 positional count and keyword names against the live signature.
 """
 
@@ -14,11 +16,14 @@ import ast
 import inspect
 from pathlib import Path
 
-from nilm_data_framework_spark.operators import similarity, text
+from nilm_data_framework_spark.operators import index_maintenance, similarity, text
 from nilm_data_framework_spark.queries import extra_ops_r7
+from nilm_data_framework_spark.sources import canonical
 
 ROOT = Path(__file__).resolve().parent.parent
-MODULES = {m.__name__: m for m in (similarity, text, extra_ops_r7)}
+MODULES = {
+    m.__name__: m for m in (similarity, text, extra_ops_r7, canonical, index_maintenance)
+}
 
 
 def _public(mod) -> dict:
@@ -83,5 +88,5 @@ def test_unexecuted_callers_match_operator_signatures():
             except TypeError as e:
                 bad.append(f"{path.relative_to(ROOT)}:{node.lineno} {fn.__name__}: {e}")
     assert not bad, "\n".join(bad)
-    # the walk must reach all three modules (it cannot pass by matching nothing)
+    # the walk must reach every module (it cannot pass by matching nothing)
     assert seen == set(MODULES), sorted(seen)

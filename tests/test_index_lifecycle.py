@@ -277,7 +277,7 @@ def test_ivf_compact_restores_one_file_per_list(spark):
     before = _corpus_set(spark, p)
     frag = _parquet_files_per_dir(p)
     assert max(frag.values()) >= 3
-    compact_ivf_corpus(spark, p, n_lists=len(CENTS))
+    compact_ivf_corpus(spark, p)
     after = _parquet_files_per_dir(p)
     assert set(after) == set(frag)
     assert all(n == 1 for n in after.values()), after

@@ -1,7 +1,8 @@
 """Fixed per-request costs of the serve path: program-written layouts open
 without a schema-inference job, the IVF probe evaluates its query frame
-once, the canonical store keeps its in-file sort order, and Python
-workers come from the package's daemon module."""
+once, the canonical store keeps its in-file sort order, partitioned
+writes run no empty writer tasks, and Python workers come from the
+package's daemon module."""
 
 from __future__ import annotations
 
@@ -180,6 +181,57 @@ def test_canonical_store_files_keep_ts_order(spark, tmp_path):
     plan = _final_plan(descs[-1])
     sorts = re.findall(r"\bSort \(\d+\)", plan)
     assert len(sorts) == 1, plan
+
+
+def _write_stage_tasks(spark, write, root: str) -> int:
+    """Tasks of the stage that wrote the files under ``root`` in
+    ``write()``: the last stage of the one SQL execution whose write
+    command targets ``root``."""
+    sc = spark.sparkContext
+    tag = f"write-shape-{uuid.uuid4().hex}"
+    sc.setJobDescription(tag)
+    try:
+        write()
+    finally:
+        sc.setJobDescription(None)
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    last = []
+    for i in range(execs.size()):
+        e = execs.apply(i)
+        if e.description() == tag and f"Arguments: file:{root}," in e.physicalPlanDescription():
+            ids = e.stages().toList()
+            last.append(max(ids.apply(k) for k in range(ids.size())))
+    assert len(last) == 1, f"{len(last)} write executions target {root}"
+    return sc.statusTracker().getStageInfo(last[0]).numTasks
+
+
+def _partitioned_layout(spark, tmp_path, layout):
+    """(write, written root, partition directory glob) for one layout."""
+    if layout == "readings":
+        out = str(tmp_path / "store")
+        return lambda: C.write_readings(_readings(spark), out), out, f"{out}/*/*/"
+    if layout == "bm25":
+        out = str(tmp_path / "bm25")
+        docs = spark.createDataFrame(
+            [(1, "solar power meter"), (2, "power fridge"), (3, "kettle kettle power")],
+            "doc_id long, text string",
+        )
+        return lambda: T.write_bm25_index(docs, out), f"{out}/postings", f"{out}/postings/*/"
+    out = str(tmp_path / "ivf")
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = S.sample_centroids(emb, 8)
+    return lambda: S.write_ivf_corpus(emb, out, cents), out, f"{out}/*/"
+
+
+@pytest.mark.parametrize("layout", ["readings", "bm25", "ivf"])
+def test_partitioned_writes_run_no_empty_tasks(spark, tmp_path, layout):
+    write, root, dirs_glob = _partitioned_layout(spark, tmp_path, layout)
+    tasks = _write_stage_tasks(spark, write, root)
+    dirs = glob.glob(dirs_glob)
+    assert dirs
+    assert tasks <= len(dirs), f"{tasks} writer tasks for {len(dirs)} partition directories"
+    files = {d: len(glob.glob(f"{d}*.parquet")) for d in dirs}
+    assert set(files.values()) == {1}, files
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 12), reason="the shim only patches CPython < 3.12")
