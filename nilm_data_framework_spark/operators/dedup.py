@@ -6,9 +6,14 @@ inside a bucket (hash value, LSH band, SimHash band), never via an O(N²)
 cross join. Bucket keys shuffle once; within-bucket verification is a
 self-join on the bucket key. All hashing is md5-derived (identical in Spark
 and DuckDB) so the exact variants stay oracle-checkable.
+
+Document operators read a ``(doc_id, text)`` frame; edge lists are
+``(id_a, id_b)``.
 """
 
 from __future__ import annotations
+
+import random
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -20,26 +25,51 @@ from nilm_data_framework_spark.operators.text import word_ngrams
 # tricks needed JVM-side; collision rate 2^-31 per hash is ample for MinHash.
 _MERSENNE_P = (1 << 31) - 1
 
+# The one MinHash-LSH configuration: word 3-gram shingles, 16 hashes in 4
+# bands of 4 rows, hash parameters drawn from seed 42. The operators, the
+# persisted reference layout (its _meta row) and the DuckDB oracles all
+# read these.
+SHINGLE_N = 3
+NUM_HASHES = 16
+BANDS = 4
+MINHASH_SEED = 42
+ROWS_PER_BAND = NUM_HASHES // BANDS
+# every hash feeds exactly one band (a trailing hash would be computed
+# and never read)
+assert NUM_HASHES % BANDS == 0
+
+
+def _minhash_params() -> tuple[tuple[int, int], ...]:
+    rng = random.Random(MINHASH_SEED)
+    return tuple(
+        (rng.randrange(1, _MERSENNE_P), rng.randrange(0, _MERSENNE_P))
+        for _ in range(NUM_HASHES)
+    )
+
+
+# (a_i, b_i) of the NUM_HASHES universal hashes, drawn once
+MINHASH_PARAMS = _minhash_params()
+
 
 def normalized(text: Column) -> Column:
     return F.trim(F.regexp_replace(F.lower(text), r"\s+", " "))
 
 
-def exact_dup_groups(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> DataFrame:
+def exact_dup_groups(df: DataFrame) -> DataFrame:
     """Exact dedup: group by md5(normalized text); emit groups with >1 doc,
     the representative (min id) and the member count."""
-    h = df.select(F.col(id_col), F.md5(normalized(F.col(text))).alias("fp"))
+    h = df.select("doc_id", F.md5(normalized(F.col("text"))).alias("fp"))
     return (
         h.groupBy("fp")
-        .agg(F.count(F.lit(1)).alias("n_dups"), F.min(id_col).alias("keep_id"))
+        .agg(F.count(F.lit(1)).alias("n_dups"), F.min("doc_id").alias("keep_id"))
         .filter(F.col("n_dups") > 1)
     )
 
 
-def dedup_exact(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> DataFrame:
+def dedup_exact(df: DataFrame) -> DataFrame:
     """Exact dedup keep-min-id: one row per distinct normalized text."""
-    h = df.withColumn("_fp", F.md5(normalized(F.col(text))))
-    w = Window.partitionBy("_fp").orderBy(id_col)
+    h = df.withColumn("_fp", F.md5(normalized(F.col("text"))))
+    w = Window.partitionBy("_fp").orderBy("doc_id")
     return h.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).drop(
         "_fp", "_rn"
     )
@@ -54,51 +84,28 @@ def _md5_64(c: Column) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("long")
 
 
-def _minhash_hash_params(num_hashes: int, seed: int) -> list[tuple[int, int]]:
-    import random
-
-    rng = random.Random(seed)
-    return [
-        (rng.randrange(1, _MERSENNE_P), rng.randrange(0, _MERSENNE_P))
-        for _ in range(num_hashes)
-    ]
-
-
-def _hashed_shingles(
-    df: DataFrame, id_col: str, text: str, shingle_n: int
-) -> DataFrame:
-    """(id, hs) — distinct 60-bit hashed shingle sets; empty docs dropped.
+def _hashed_shingles(df: DataFrame) -> DataFrame:
+    """(id, hs) — distinct 60-bit hashed SHINGLE_N-gram sets of a
+    (doc_id, text) frame; empty docs dropped.
     hs keeps the FULL md5 residue (the % p reduction happens inside the
     signature transform) so verify compares near-collision-free values,
     not 31-bit ones. array_distinct guards the (astronomically rare)
     within-doc hash collision so |hs| is a true set cardinality."""
     sh = df.select(
-        F.col(id_col).alias("id"), word_ngrams(F.col(text), shingle_n).alias("sh")
+        F.col("doc_id").alias("id"), word_ngrams(F.col("text"), SHINGLE_N).alias("sh")
     ).filter(F.size("sh") > 0)
     return sh.select("id", F.array_distinct(F.transform("sh", _md5_64)).alias("hs"))
 
 
-def _banded(
-    hashed: DataFrame, params: list[tuple[int, int]], bands: int, rows_per: int
-) -> DataFrame:
+def _banded(hashed: DataFrame) -> DataFrame:
     """(id, band, bucket) — LSH band buckets from the minhash signature.
     Single nested HOF over a one-call params literal: sig[i] = min over
     shingle hashes of ((x % p) * a_i + b_i) mod p ((x % p) first: x is the
     60-bit residue, (x % p) * a stays under 2^62 — no long overflow).
-    Building num_hashes separate transform expressions instead costs ~1 s
+    Building NUM_HASHES separate transform expressions instead costs ~1 s
     of Py4J plan construction and a much larger tree for Catalyst."""
-    if len(params) != bands * rows_per:
-        # num_hashes not divisible by bands would silently compute (and
-        # pay for) trailing minhashes that no band ever reads — the caller
-        # gets the recall curve of bands*rows_per hashes while configuring
-        # more. Make the contract explicit.
-        raise ValueError(
-            f"num_hashes ({len(params)}) must equal bands*rows_per "
-            f"({bands}*{rows_per}): trailing hashes would be computed but "
-            f"never banded"
-        )
     params_lit = F.expr(
-        "array(" + ",".join(f"array({a}L,{b}L)" for a, b in params) + ")"
+        "array(" + ",".join(f"array({a}L,{b}L)" for a, b in MINHASH_PARAMS) + ")"
     )
     sig = F.transform(
         params_lit,
@@ -111,12 +118,12 @@ def _banded(
         ),
     )
     buckets = F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
+        F.sequence(F.lit(0), F.lit(BANDS - 1)),
         lambda bnd: F.struct(
             bnd.alias("band"),
             F.array_join(
                 F.transform(
-                    F.slice(F.col("sig"), bnd * rows_per + 1, rows_per),
+                    F.slice(F.col("sig"), bnd * ROWS_PER_BAND + 1, ROWS_PER_BAND),
                     lambda m: m.cast("string"),
                 ),
                 "_",
@@ -150,30 +157,23 @@ def _verify_pairs(
 
 def minhash_lsh_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
     jaccard_threshold: float = 0.5,
-    seed: int = 42,
-    materialize: bool = True,
     hashed: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs: shingle → signature → band →
-    bucket-join → exact-Jaccard verify.
+    """MinHash+LSH near-dup pairs of a (doc_id, text) frame: shingle →
+    signature → band → bucket-join → exact-Jaccard verify.
 
     ``hashed`` (r9 optimization round): a caller-supplied
-    :func:`_hashed_shingles` frame for the SAME (df, id_col, text,
-    shingle_n) — callers composing several LSH operators over one corpus
-    slice (write-reference + within-batch pairs, the incremental-ingest
-    gate) shingle each slice ONCE and pass it here instead of paying the
-    shingle+md5 scan per operator call. The caller owns its lifecycle
-    (persist/unpersist); this function then neither persists nor
-    unpersists it. Parameters are NOT cross-checked — supplying a frame
-    hashed with different settings is the caller's soundness bug.
+    :func:`_hashed_shingles` frame of the SAME df — callers composing
+    several LSH operators over one corpus slice (write-reference +
+    within-batch pairs, the incremental-ingest gate) shingle each slice
+    ONCE and pass it here instead of paying the shingle+md5 scan per
+    operator call. The caller owns its lifecycle (persist/unpersist);
+    this function then neither persists nor unpersists it.
 
-    Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard ≥ threshold.
+    Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard ≥ threshold,
+    eagerly checkpointed, so a caller may feed it to several consumers
+    without re-running the pipeline per branch.
     Scale shape: signatures and band buckets are pure per-row column
     arithmetic over a hashed-shingle array (no shuffle at all until the
     banded self-join), the self-join carries only (id, band, bucket), and
@@ -184,10 +184,8 @@ def minhash_lsh_pairs(
     carries ~8 B per shingle instead of the shingle text; Jaccard over the
     hashed sets equals Jaccard over the string sets absent 60-bit
     collisions (~n²/2^61 per doc — negligible at any realistic shingle
-    count). rows_per_band = num_hashes // bands.
+    count).
     """
-    rows_per = num_hashes // bands
-    params = _minhash_hash_params(num_hashes, seed)
     # hashed feeds the banded branch and both verify sides; persist so the
     # shingle+hash computation isn't re-run per branch — Spark only reuses
     # identical exchange subtrees, not arbitrary common subplans. Persisting
@@ -198,11 +196,9 @@ def minhash_lsh_pairs(
     # a shared session.
     own_hashed = hashed is None
     if own_hashed:
-        hashed = _hashed_shingles(df, id_col, text, shingle_n)
-        if materialize:
-            hashed = hashed.persist()
+        hashed = _hashed_shingles(df).persist()
     try:
-        banded = _banded(hashed, params, bands, rows_per)
+        banded = _banded(hashed)
         a = banded.alias("a")
         b = banded.alias("b")
         cand = (
@@ -212,45 +208,33 @@ def minhash_lsh_pairs(
             .dropDuplicates(["id_a", "id_b"])
         )
         result = _verify_pairs(cand, hashed, hashed, jaccard_threshold)
-        if not materialize:
-            # lazy form: full Catalyst plan preserved (plan inspection /
-            # composition into larger pipelines); the shingle subtree is
-            # evaluated once per branch instead of cached — callers that
-            # execute it should prefer materialize=True.
-            return result
         # Materialize now (blocks are owned by the returned plan's RDD and
         # reclaimed by the ContextCleaner when it is GC'd), so hashed's cache
         # can be released immediately instead of leaking into the session.
         return result.localCheckpoint(eager=True)
     finally:
-        if materialize and own_hashed:
+        if own_hashed:
             hashed.unpersist()
 
 
 def minhash_lsh_join(
     df_new: DataFrame,
     df_ref: DataFrame | None,
-    id_col: str = "doc_id",
-    text: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
     jaccard_threshold: float = 0.5,
-    seed: int = 42,
-    materialize: bool = True,
     ref_banded: DataFrame | None = None,
     ref_hashed: DataFrame | None = None,
     new_hashed: DataFrame | None = None,
 ) -> DataFrame:
     """INCREMENTAL near-dup screen: new-batch documents vs an existing
-    reference corpus — (new_id, ref_id, jaccard) for cross-corpus pairs
-    only, never ref×ref.
+    reference corpus (both (doc_id, text) frames) — (new_id, ref_id,
+    jaccard) for cross-corpus pairs only, never ref×ref, eagerly
+    checkpointed.
 
     This is the shape a production ingest actually runs at 100 TB: the
     reference corpus was deduped once; each arriving batch is LSH-bucketed
-    with the SAME hash parameters (``seed``) and joined against the stored
-    reference buckets — cost O(|batch| + matching buckets), not a full
-    corpus re-dedup.
+    with the SAME hash parameters and joined against the stored reference
+    buckets — cost O(|batch| + matching buckets), not a full corpus
+    re-dedup.
 
     The production shape passes ``ref_banded``/``ref_hashed`` — the
     PERSISTED (id, band, bucket) and (id, hs) tables written once by
@@ -258,58 +242,32 @@ def minhash_lsh_join(
     per-batch join needs NO shuffle on the corpus side (only the small new
     batch is exchanged into the reference's bucketing). When they are None,
     both sides are derived on the fly from ``df_ref`` (the gate tables are
-    plain parquet).
+    plain parquet). :func:`minhash_lsh_join_reference` reads them and
+    checks that the layout was written with this module's MinHash
+    constants.
 
     No self-pairs of the new batch are emitted either (new×new dedup is
     :func:`minhash_lsh_pairs` on the batch alone); candidate generation is
     strictly (new.band, new.bucket) == (ref.band, ref.bucket).
-
-    PARAMETER-AGREEMENT WARNING: when passing ``ref_banded``/``ref_hashed``
-    directly, (shingle_n, num_hashes, bands, seed) MUST equal the values
-    the reference was WRITTEN with — a mismatch produces near-zero bucket
-    collisions and every batch "screens clean" (silent false negatives).
-    This function cannot verify that from the raw tables; use
-    :func:`minhash_lsh_join_reference`, which reads the persisted meta
-    table and ENFORCES agreement, unless you own the invariant yourself.
+    ``new_hashed`` is a caller-shared :func:`_hashed_shingles` frame of
+    df_new (same contract as minhash_lsh_pairs' ``hashed``).
     """
-    rows_per = num_hashes // bands
-    params = _minhash_hash_params(num_hashes, seed)
     # each side's hashed shingles feed its banded branch AND its verify
     # side — scoped persist (same discipline as minhash_lsh_pairs: eager
     # localCheckpoint of the result, then unpersist) halves the shingling
-    # work per side. materialize=False returns the lazy Catalyst plan
-    # instead (no persist, no checkpoint) so plan-quality tests and
-    # gen_plans can assert the real join topology — an eager checkpoint
-    # collapses .explain to a Scan ExistingRDD and would make any
-    # no-cartesian assertion vacuous. A persisted reference side is NEVER
-    # re-persisted or re-derived — it is already a bucketed scan.
+    # work per side. A persisted reference side is NEVER re-persisted or
+    # re-derived — it is already a bucketed scan.
     use_persisted_ref = ref_banded is not None and ref_hashed is not None
     if not use_persisted_ref and df_ref is None:
         raise ValueError("need df_ref or both ref_banded and ref_hashed")
-    # new_hashed: caller-shared _hashed_shingles frame for df_new (same
-    # contract as minhash_lsh_pairs' ``hashed`` — caller owns lifecycle,
-    # parameters not cross-checked)
     own_new = new_hashed is None
-    hashed_new = (
-        _hashed_shingles(df_new, id_col, text, shingle_n)
-        if own_new
-        else new_hashed
-    )
+    hashed_new = _hashed_shingles(df_new).persist() if own_new else new_hashed
     hashed_ref = (
-        ref_hashed if use_persisted_ref
-        else _hashed_shingles(df_ref, id_col, text, shingle_n)
+        ref_hashed if use_persisted_ref else _hashed_shingles(df_ref).persist()
     )
-    if materialize:
-        if own_new:
-            hashed_new = hashed_new.persist()
-        if not use_persisted_ref:
-            hashed_ref = hashed_ref.persist()
     try:
-        banded_new = _banded(hashed_new, params, bands, rows_per).alias("a")
-        banded_ref = (
-            ref_banded if use_persisted_ref
-            else _banded(hashed_ref, params, bands, rows_per)
-        ).alias("b")
+        banded_new = _banded(hashed_new).alias("a")
+        banded_ref = (ref_banded if use_persisted_ref else _banded(hashed_ref)).alias("b")
         cand = (
             banded_new.join(
                 banded_ref,
@@ -323,32 +281,46 @@ def minhash_lsh_join(
         out = out.select(
             F.col("id_a").alias("new_id"), F.col("id_b").alias("ref_id"), "jaccard"
         )
-        if not materialize:
-            return out
         return out.localCheckpoint(eager=True)
     finally:
-        if materialize:
-            if own_new:
-                hashed_new.unpersist()
-            if not use_persisted_ref:
-                hashed_ref.unpersist()
+        if own_new:
+            hashed_new.unpersist()
+        if not use_persisted_ref:
+            hashed_ref.unpersist()
+
+
+def _write_lsh_tables(
+    hashed: DataFrame, table_prefix: str, buckets: int, mode: str, path: str | None
+) -> None:
+    """``{prefix}_buckets`` (id, band, bucket) bucketed+sorted by (band,
+    bucket) and ``{prefix}_hs`` (id, hs) bucketed+sorted by id, from one
+    hashed-shingle frame; ``path`` makes them EXTERNAL under
+    ``{path}/{suffix}``."""
+    for df, suffix, keys in (
+        (_banded(hashed), "buckets", ("band", "bucket")),
+        (hashed, "hs", ("id",)),
+    ):
+        w = df.write.mode(mode)
+        if path is not None:
+            w = w.option("path", f"{path}/{suffix}")
+        (
+            w.bucketBy(buckets, *keys)
+            .sortBy(*keys)
+            .format("parquet")
+            .saveAsTable(f"{table_prefix}_{suffix}")
+        )
 
 
 def write_lsh_reference(
     df_ref: DataFrame,
     table_prefix: str,
-    id_col: str = "doc_id",
-    text: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    seed: int = 42,
     buckets: int = 16,
     path: str | None = None,
     hashed: DataFrame | None = None,
 ) -> None:
-    """Persist the deduped corpus's LSH state once so per-ingest screens are
-    shuffle-free on the corpus side (the 100 TB layout SCALE.md describes):
+    """Persist the deduped (doc_id, text) corpus's LSH state once so
+    per-ingest screens are shuffle-free on the corpus side (the 100 TB
+    layout SCALE.md describes):
 
     - ``{prefix}_buckets``: (id, band, bucket) bucketed+sorted by
       (band, bucket) — the candidate join's key layout, pre-materialized.
@@ -356,19 +328,22 @@ def write_lsh_reference(
       verify join's key layout (8 B/shingle, the hashed form).
     - ``{prefix}_meta``: one row pinning (shingle_n, num_hashes, bands,
       seed, buckets). Incremental screening is only sound when every batch
-      hashes with the SAME parameters; readers enforce this instead of
-      trusting call sites.
+      hashes with the SAME parameters; readers check the row against this
+      module's constants instead of trusting that the layout was written
+      by the same code.
 
     At 100 TB the corpus side of each batch join is then a bucketed scan
     feeding the sort-merge join directly — only the (small) batch side is
     exchanged into the reference's partitioning. Appending a screened batch
     into the reference is an INSERT of its (id, band, bucket)/(id, hs) rows
-    under the same bucket spec (Spark appends per-bucket files), so the
+    under the same bucket spec (:func:`append_lsh_reference`), so the
     layout is maintained incrementally, never rebuilt.
 
     ``path`` makes the three tables EXTERNAL under ``{path}/{suffix}``
     (needed when the session's warehouse dir may not be writable, e.g. a
     driver-invoked run); None keeps them managed in the warehouse.
+    ``hashed`` is a caller-shared :func:`_hashed_shingles` frame of df_ref
+    (same contract as minhash_lsh_pairs' ``hashed``).
 
     Always writes with overwrite semantics: an append would duplicate
     every (id, band, bucket)/(id, hs) row (multiplying verify-join
@@ -376,60 +351,57 @@ def write_lsh_reference(
     incremental growth is a bucket-spec INSERT of NEW ids only (see the
     layout note above), not a re-run of this writer.
     """
-    rows_per = num_hashes // bands
-    params = _minhash_hash_params(num_hashes, seed)
-
-    def _writer(df, suffix):
-        w = df.write.mode("overwrite")
-        if path is not None:
-            w = w.option("path", f"{path}/{suffix}")
-        return w
-
+    spark = df_ref.sparkSession
     # Torn-write protection: meta is the COMMIT MARKER. Drop any existing
     # meta BEFORE touching the data tables and rewrite it LAST, so a write
     # that dies mid-way (new bucket tables, old params) leaves no meta and
     # read_lsh_reference fails LOUDLY instead of silently screening every
-    # batch with mismatched hash parameters (near-zero candidates = silent
-    # false negatives).
-    df_ref.sparkSession.sql(f"DROP TABLE IF EXISTS {table_prefix}_meta")
-
-    # ``hashed``: caller-shared _hashed_shingles frame (same contract as
-    # minhash_lsh_pairs' kwarg — caller owns lifecycle, parameters not
-    # cross-checked); None = derive and persist locally as before
+    # batch against a half-written layout.
+    spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_meta")
     own_hashed = hashed is None
     if own_hashed:
-        hashed = _hashed_shingles(df_ref, id_col, text, shingle_n).persist()
+        hashed = _hashed_shingles(df_ref).persist()
     try:
-        (
-            _writer(_banded(hashed, params, bands, rows_per), "buckets")
-            .bucketBy(buckets, "band", "bucket")
-            .sortBy("band", "bucket")
-            .format("parquet")
-            .saveAsTable(f"{table_prefix}_buckets")
-        )
-        (
-            _writer(hashed, "hs")
-            .bucketBy(buckets, "id")
-            .sortBy("id")
-            .format("parquet")
-            .saveAsTable(f"{table_prefix}_hs")
-        )
-        spark = df_ref.sparkSession
+        _write_lsh_tables(hashed, table_prefix, buckets, "overwrite", path)
         meta = spark.createDataFrame(
-            [(shingle_n, num_hashes, bands, seed, buckets)],
+            [(SHINGLE_N, NUM_HASHES, BANDS, MINHASH_SEED, buckets)],
             "shingle_n int, num_hashes int, bands int, seed int, buckets int",
         )
-        _writer(meta, "meta").format("parquet").saveAsTable(f"{table_prefix}_meta")
+        w = meta.write.mode("overwrite")
+        if path is not None:
+            w = w.option("path", f"{path}/meta")
+        w.format("parquet").saveAsTable(f"{table_prefix}_meta")
     finally:
         if own_hashed:
             hashed.unpersist()
 
 
+def _reference_meta(spark, table_prefix: str) -> dict:
+    """The reference's meta row, checked against this module's MinHash
+    constants: a layout hashed with other settings shares almost no
+    buckets with a batch, so every batch would screen clean."""
+    meta = spark.table(f"{table_prefix}_meta").head().asDict()
+    want = {
+        "shingle_n": SHINGLE_N,
+        "num_hashes": NUM_HASHES,
+        "bands": BANDS,
+        "seed": MINHASH_SEED,
+    }
+    got = {k: meta[k] for k in want}
+    if got != want:
+        raise ValueError(
+            f"LSH reference {table_prefix} was written with MinHash settings "
+            f"{got}, this code hashes with {want}"
+        )
+    return meta
+
+
 def read_lsh_reference(
     spark, table_prefix: str
 ) -> tuple[DataFrame, DataFrame, dict]:
-    """(buckets, hs, params) for :func:`minhash_lsh_join`'s persisted path."""
-    meta = spark.table(f"{table_prefix}_meta").head().asDict()
+    """(buckets, hs, meta) for :func:`minhash_lsh_join`'s persisted path;
+    raises when the meta row does not match the MinHash constants."""
+    meta = _reference_meta(spark, table_prefix)
     return (
         spark.table(f"{table_prefix}_buckets"),
         spark.table(f"{table_prefix}_hs"),
@@ -437,18 +409,13 @@ def read_lsh_reference(
     )
 
 
-def append_lsh_reference(
-    batch: DataFrame,
-    table_prefix: str,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> None:
+def append_lsh_reference(batch: DataFrame, table_prefix: str) -> None:
     """The bucket-spec INSERT :func:`write_lsh_reference`'s layout note
-    promises: grow the persisted reference by a SCREENED batch's
-    (id, band, bucket) and (id, hs) rows — hash parameters read from the
-    persisted meta table, so the append can never use a different
-    seed/banding than the layout (the same reader-enforced soundness rule
-    as :func:`minhash_lsh_join_reference`). Spark appends per-bucket
+    promises: grow the persisted reference by a SCREENED (doc_id, text)
+    batch's (id, band, bucket) and (id, hs) rows, under the bucket count
+    the meta table records; raises when the meta row does not match the
+    MinHash constants (the same check as
+    :func:`minhash_lsh_join_reference`). Spark appends per-bucket
     files under the existing bucketBy spec; the layout is maintained
     incrementally, never rebuilt.
 
@@ -459,27 +426,10 @@ def append_lsh_reference(
     the batch is appended AFTER being screened against the reference, so
     the next batch's candidates cover (old ∪ this) — the endpoint
     decomposition stays exact (see streaming_neardup_ingest_equiv)."""
-    spark = batch.sparkSession
-    meta = spark.table(f"{table_prefix}_meta").head().asDict()
-    rows_per = meta["num_hashes"] // meta["bands"]
-    params = _minhash_hash_params(meta["num_hashes"], meta["seed"])
-    hashed = _hashed_shingles(batch, id_col, text, meta["shingle_n"]).persist()
+    meta = _reference_meta(batch.sparkSession, table_prefix)
+    hashed = _hashed_shingles(batch).persist()
     try:
-        (
-            _banded(hashed, params, meta["bands"], rows_per)
-            .write.mode("append")
-            .bucketBy(meta["buckets"], "band", "bucket")
-            .sortBy("band", "bucket")
-            .format("parquet")
-            .saveAsTable(f"{table_prefix}_buckets")
-        )
-        (
-            hashed.write.mode("append")
-            .bucketBy(meta["buckets"], "id")
-            .sortBy("id")
-            .format("parquet")
-            .saveAsTable(f"{table_prefix}_hs")
-        )
+        _write_lsh_tables(hashed, table_prefix, meta["buckets"], "append", None)
     finally:
         hashed.unpersist()
 
@@ -487,32 +437,19 @@ def append_lsh_reference(
 def minhash_lsh_join_reference(
     df_new: DataFrame,
     table_prefix: str,
-    id_col: str = "doc_id",
-    text: str = "text",
     jaccard_threshold: float = 0.5,
-    materialize: bool = True,
     new_hashed: DataFrame | None = None,
 ) -> DataFrame:
-    """Per-ingest near-dup screen against a :func:`write_lsh_reference`
-    corpus. Hash parameters come from the persisted meta table — the batch
-    side is guaranteed to use the reference's seed/banding, which is the
-    soundness precondition of incremental LSH. ``new_hashed`` passes a
-    caller-shared batch shingle frame through to :func:`minhash_lsh_join`
-    (its contract applies — in particular the caller must have hashed
-    with the reference's shingle_n, which the meta table records)."""
-    spark = df_new.sparkSession
-    ref_banded, ref_hashed, meta = read_lsh_reference(spark, table_prefix)
+    """Per-ingest near-dup screen of a (doc_id, text) batch against a
+    :func:`write_lsh_reference` corpus. The persisted meta row must match
+    the MinHash constants the batch side hashes with (raises otherwise) —
+    the soundness precondition of incremental LSH. ``new_hashed`` passes a
+    caller-shared batch shingle frame through to :func:`minhash_lsh_join`."""
+    ref_banded, ref_hashed, _meta = read_lsh_reference(df_new.sparkSession, table_prefix)
     return minhash_lsh_join(
         df_new,
         None,
-        id_col=id_col,
-        text=text,
-        shingle_n=meta["shingle_n"],
-        num_hashes=meta["num_hashes"],
-        bands=meta["bands"],
-        seed=meta["seed"],
         jaccard_threshold=jaccard_threshold,
-        materialize=materialize,
         ref_banded=ref_banded,
         ref_hashed=ref_hashed,
         new_hashed=new_hashed,
@@ -522,8 +459,6 @@ def minhash_lsh_join_reference(
 def ngram_jaccard_pairs(
     df: DataFrame,
     block_col: str,
-    id_col: str = "doc_id",
-    text: str = "text",
     n: int = 3,
     threshold: float = 0.3,
 ) -> DataFrame:
@@ -543,7 +478,7 @@ def ngram_jaccard_pairs(
     length distribution itself is degenerate.
     """
     g = df.select(
-        F.col(id_col).alias("id"), F.col(block_col).alias("blk"), word_ngrams(F.col(text), n).alias("g")
+        F.col("doc_id").alias("id"), F.col(block_col).alias("blk"), word_ngrams(F.col("text"), n).alias("g")
     ).filter(F.size("g") > 0)
     pairs = _length_blocked_candidates(g, threshold)
     inter = F.size(F.array_intersect("a.g", "b.g")).cast("double")
@@ -598,19 +533,19 @@ def _length_blocked_candidates(g: DataFrame, threshold: float) -> DataFrame:
 
 
 def _df_ranked_prefix(
-    df: DataFrame, id_col: str, text: str, n: int, t_num: int, t_den: int
+    df: DataFrame, t_num: int, t_den: int
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """Shared All-Pairs prefix construction for the Jaccard and
     containment joins (one copy — a fix to the prefix-length formula or
     the df tie-break must hit both). Returns (g, dg, prefix):
-    g = (id, g: distinct n-gram array, s: set size); dg = exploded
+    g = (id, g: distinct word 3-gram array, s: set size); dg = exploded
     (id, s, gram) postings; prefix = the (id, s, gram) rows whose
     ascending-global-df rank (ties by gram — a total order both engines
     agree on) is within p = s − ⌈t·s⌉ + 1, with
     ⌈t_num·s/t_den⌉ = (t_num·s + t_den − 1) div t_den (s ≥ 1 so div ==
     floor in both engines)."""
     g = (
-        df.select(F.col(id_col).alias("id"), word_ngrams(F.col(text), n).alias("g"))
+        df.select(F.col("doc_id").alias("id"), word_ngrams(F.col("text"), 3).alias("g"))
         .filter(F.size("g") > 0)
         .withColumn("s", F.size("g").cast("long"))
         # r10 OVERRIDES the r5 "exchange reuse covers the fan-out" call:
@@ -634,14 +569,7 @@ def _df_ranked_prefix(
     return g, dg, prefix
 
 
-def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    t_num: int = 3,
-    t_den: int = 10,
-) -> DataFrame:
+def prefix_filter_jaccard_pairs(df: DataFrame) -> DataFrame:
     """All-Pairs/PPJoin-style prefix-filtered exact Jaccard join (Chaudhuri
     et al. 2006; Xiao et al. WWW'08) — the third candidate-generation
     strategy beside MinHash-LSH banding and (block, length-bucket) blocking.
@@ -649,7 +577,7 @@ def prefix_filter_jaccard_pairs(
     LOSSLESS prefix lemma: order every doc's n-gram set by ASCENDING global
     document frequency (rarest first, ties by gram string — a total order
     both engines agree on). With prefix length p = s − ⌈t·s⌉ + 1, any pair
-    with J ≥ t = t_num/t_den must share a token inside both prefixes: if
+    with J ≥ t = 3/10 (word 3-grams) must share a token inside both prefixes: if
     the prefixes were disjoint from the intersection, |A∩B| ≤ ⌈t·|A|⌉ − 1
     < t·|A| ≤ t·|A∪B| ≤ |A∩B| — contradiction. Candidates therefore come
     only from the INVERTED INDEX OF PREFIXES, and because the order puts
@@ -670,7 +598,8 @@ def prefix_filter_jaccard_pairs(
     degrading with corpus size, so the one-tokenize-pass materialization
     wins and keeps winning bigger (OPTIMIZATION_r10.md).
     """
-    g, _dg, prefix0 = _df_ranked_prefix(df, id_col, text, n, t_num, t_den)
+    t_num, t_den = 3, 10
+    g, _dg, prefix0 = _df_ranked_prefix(df, t_num, t_den)
     prefix = prefix0.select("id", "gram")
     cand = (
         prefix.alias("a")
@@ -694,16 +623,9 @@ def prefix_filter_jaccard_pairs(
     )
 
 
-def containment_prefix_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    t_num: int = 4,
-    t_den: int = 5,
-) -> DataFrame:
+def containment_prefix_pairs(df: DataFrame) -> DataFrame:
     """Prefix-filtered exact CONTAINMENT join: pairs where the SMALLER
-    doc's n-gram set is ≥ t = t_num/t_den inside the larger's — the
+    doc's word 3-gram set is ≥ t = 4/5 inside the larger's — the
     doc-in-doc / near-subset duplication Jaccard misses (a half-length
     excerpt of a doc has containment ~1 but J ~0.5, under any symmetric
     threshold).
@@ -726,7 +648,8 @@ def containment_prefix_pairs(
     checkpointed once since r10 (the 4x/8x replication A/B overturned the
     r5 sf0.1 reuse measurement; see prefix_filter_jaccard_pairs).
     """
-    g, dg, prefix = _df_ranked_prefix(df, id_col, text, n, t_num, t_den)
+    t_num, t_den = 4, 5
+    g, dg, prefix = _df_ranked_prefix(df, t_num, t_den)
     cand = (
         prefix.alias("a")
         .join(
@@ -751,16 +674,11 @@ def containment_prefix_pairs(
     )
 
 
-def winnowing_fingerprints(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    w: int = 4,
-) -> DataFrame:
+def winnowing_fingerprints(df: DataFrame) -> DataFrame:
     """Winnowing document fingerprints (Schleimer/Wilkerson/Aiken,
     SIGMOD'03 — the MOSS local fingerprinting algorithm): hash every word
-    ``n``-gram IN ORDER, slide a window of ``w`` consecutive gram hashes,
+    ``n``-gram IN ORDER (n = 3), slide a window of ``w`` = 4 consecutive gram
+    hashes,
     and select each window's MINIMUM hash. Guarantees: any shared
     substring of ≥ w+n-1 words yields at least one shared fingerprint
     (the local-selection property MinHash lacks — MinHash samples
@@ -782,9 +700,10 @@ def winnowing_fingerprints(
     in DuckDB. Emits (id, fp)."""
     from nilm_data_framework_spark.operators.text import word_ngrams_all
 
+    n, w = 3, 4
     grams = df.select(
-        F.col(id_col).alias("id"),
-        word_ngrams_all(F.col(text), n).alias("_g"),
+        F.col("doc_id").alias("id"),
+        word_ngrams_all(F.col("text"), n).alias("_g"),
     )
     hashed = grams.select(
         "id", F.transform("_g", lambda g: _md5_64(g)).alias("_h")
@@ -804,25 +723,18 @@ def winnowing_fingerprints(
     )
 
 
-def winnowing_shared_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    w: int = 4,
-    min_shared: int = 2,
-    max_df: int = 50,
-) -> DataFrame:
-    """Document pairs sharing ≥ ``min_shared`` winnowing fingerprints —
+def winnowing_shared_pairs(df: DataFrame) -> DataFrame:
+    """Document pairs sharing ≥ 2 winnowing fingerprints —
     the MOSS plagiarism/copy-detection join. Fingerprints occurring in
-    more than ``max_df`` documents are dropped BEFORE pairing (boilerplate
+    more than 50 documents are dropped BEFORE pairing (boilerplate
     grams — the deterministic df-cap analog of a stopword list; the cap
     is part of the declared semantics, replayed exactly by the oracle,
     not a silent recall trade). Candidate pairs form only inside a
-    fingerprint bucket (≤ max_df² per bucket), never via a cross join.
+    fingerprint bucket (≤ 50² per bucket), never via a cross join.
 
     Emits (id_a, id_b, n_shared, n_fp_a, n_fp_b) with id_a < id_b."""
-    fps = winnowing_fingerprints(df, id_col=id_col, text=text, n=n, w=w)
+    min_shared, max_df = 2, 50
+    fps = winnowing_fingerprints(df)
     fps = fps.localCheckpoint(eager=True)  # feeds df-cap, sizes, and pairing
     kept = fps.join(
         fps.groupBy("fp")
@@ -856,43 +768,36 @@ def winnowing_shared_pairs(
     )
 
 
-def simhash(df: DataFrame, id_col: str = "doc_id", text: str = "text", bits: int = 63) -> DataFrame:
+def simhash(df: DataFrame) -> DataFrame:
     """SimHash signature: per-token md5-derived hash; each bit votes ±1;
     signature bit b = sign of the vote sum. Emits (id, simhash long).
 
-    ``bits`` is capped at 63 (the signature lives in a signed long and
-    the sign bit stays 0) — the default says so now instead of silently
-    honoring only 63 of a requested 64; the 4-band chunking downstream
-    simply has one 15-informative-bit band.
+    63 signature bits (the signature lives in a signed long and the sign
+    bit stays 0); the 4-band chunking downstream simply has one
+    15-informative-bit band.
 
     Column-expression implementation: explode tokens, aggregate per-bit
     votes with bitwise tests, re-assemble — one shuffle on id."""
     from nilm_data_framework_spark.operators.text import tokens
 
-    toked = df.select(F.col(id_col).alias("id"), F.explode(tokens(F.col(text))).alias("tok"))
+    toked = df.select(F.col("doc_id").alias("id"), F.explode(tokens(F.col("text"))).alias("tok"))
     hashed = toked.withColumn("h", _md5_64(F.col("tok")))
     votes = hashed.groupBy("id").agg(
         *[
             F.sum(
                 F.when(F.shiftright(F.col("h"), i).bitwiseAND(F.lit(1)) == 1, 1).otherwise(-1)
             ).alias(f"v{i}")
-            for i in range(min(bits, 63))
+            for i in range(63)
         ]
     )
     sig = F.lit(0).cast("long")
-    for i in range(min(bits, 63)):
+    for i in range(63):
         sig = sig + F.when(F.col(f"v{i}") > 0, F.lit(1).cast("long") * (1 << i)).otherwise(0)
     return votes.select("id", sig.alias("simhash"))
 
 
-def simhash_near_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    max_hamming: int = 3,
-    bands: int = 4,
-) -> DataFrame:
-    """SimHash near-dup pairs: band the 64-bit signature into ``bands``
+def simhash_near_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
+    """SimHash near-dup pairs: band the 64-bit signature into ``bands`` = 4
     16-bit chunks; by pigeonhole, any pair within hamming distance
     ``bands-1`` shares a chunk → bucket-join on (band, chunk), verify exact
     hamming ≤ max_hamming via bit_count(xor).
@@ -901,12 +806,13 @@ def simhash_near_pairs(
     bands-1 would return a silently incomplete pair set (a pair whose
     differing bits hit every chunk shares no bucket yet passes the
     advertised hamming filter)."""
+    bands = 4
     if max_hamming > bands - 1:
         raise ValueError(
             f"pigeonhole completeness requires max_hamming <= bands-1 "
-            f"(got max_hamming={max_hamming}, bands={bands}); raise bands"
+            f"(got max_hamming={max_hamming}, bands={bands})"
         )
-    s = simhash(df, id_col, text)
+    s = simhash(df)
     chunk_bits = 64 // bands
     mask = (1 << chunk_bits) - 1
     banded = s.select(
@@ -940,14 +846,7 @@ def simhash_near_pairs(
     )
 
 
-def connected_components_star(
-    nodes: DataFrame,
-    edges: DataFrame,
-    id_col: str = "id",
-    edge_a: str = "id_a",
-    edge_b: str = "id_b",
-    max_iter: int = 50,
-) -> DataFrame:
+def connected_components_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     """Connected components via alternating large-star / small-star edge
     contraction (Kiveris et al., "Connected Components in MapReduce and
     Beyond", SoCC'14) — the DIAMETER-SAFE escalation the hash-min
@@ -965,7 +864,8 @@ def connected_components_star(
     of diameter, each round two grouped aggs + a distinct over the
     current (shrinking) edge set.
 
-    Same contract as :func:`connected_components`: returns
+    Same contract as :func:`connected_components` (nodes ``(id)``, edges
+    ``(id_a, id_b)``, at most 50 rounds): returns
     (node, cluster_id), cluster_id = min node id of the component,
     singletons labeled by themselves. Equivalence on converging inputs is
     pytest-pinned; prefer THIS form when the similarity graph can be
@@ -974,8 +874,8 @@ def connected_components_star(
     """
     e = (
         edges.select(
-            F.least(F.col(edge_a), F.col(edge_b)).alias("_a"),
-            F.greatest(F.col(edge_a), F.col(edge_b)).alias("_b"),
+            F.least(F.col("id_a"), F.col("id_b")).alias("_a"),
+            F.greatest(F.col("id_a"), F.col("id_b")).alias("_b"),
         )
         .filter(F.col("_a") != F.col("_b"))
         .distinct()
@@ -1024,6 +924,7 @@ def connected_components_star(
             )
         )
 
+    max_iter = 50
     n_e = e.count()
     for _ in range(max_iter):
         # the published alternation: E ← small-star(large-star(E)); the
@@ -1054,7 +955,7 @@ def connected_components_star(
             )
             labeled = leaves.unionByName(centers)
             singles = (
-                nodes.select(F.col(id_col).alias("node"))
+                nodes.select(F.col("id").alias("node"))
                 .join(labeled.select("node"), "node", "left_anti")
                 .select("node", F.col("node").alias("cluster_id"))
             )
@@ -1070,13 +971,12 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    edge_a: str = "id_a",
-    edge_b: str = "id_b",
     max_iter: int = 25,
 ) -> DataFrame:
     """Near-dup CLUSTER assignment: hash-min connected components over the
-    similarity graph — (node, cluster_id) with cluster_id = min node id in
-    the component; nodes with no edges are their own singleton cluster.
+    similarity graph ``edges`` (id_a, id_b) — (node, cluster_id) with
+    cluster_id = min node id in the component; nodes (``id_col`` of
+    ``nodes``) with no edges are their own singleton cluster.
 
     This is the step a real dedup pipeline runs between pair generation
     (minhash_lsh_pairs / simhash_near_pairs) and survivor selection: pairs
@@ -1104,8 +1004,8 @@ def connected_components(
     near-dup subgraph — rounds cost O(pairs), not O(corpus).
     """
     sym = (
-        edges.select(F.col(edge_a).alias("src"), F.col(edge_b).alias("dst"))
-        .union(edges.select(F.col(edge_b).alias("src"), F.col(edge_a).alias("dst")))
+        edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+        .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
         .localCheckpoint(eager=True)
     )
     touched = sym.select("src").distinct().withColumnRenamed("src", "node")
@@ -1159,12 +1059,7 @@ def connected_components(
     )
 
 
-def span_dedup(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    span: int = 20,
-) -> DataFrame:
+def span_dedup(df: DataFrame, span: int = 20) -> DataFrame:
     """Span-level exact dedup (Lee et al. 2021, "Deduplicating Training Data
     Makes Language Models Better", arXiv:2107.06499 — their unit is a 50-token
     window over a suffix array; here fixed ``span``-token chunks, the
@@ -1188,22 +1083,22 @@ def span_dedup(
     from nilm_data_framework_spark.operators.text import tokens
 
     chunked = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
             F.transform(
-                F.array(tokens(F.col(text))),
+                F.array(tokens(F.col("text"))),
                 lambda tk: F.when(F.size(tk) > 0, spans_of(tk)).otherwise(
                     F.array().cast("array<string>")
                 ),
             )[0]
         ).alias("pos", "span_text"),
     )
-    w = Window.partitionBy("span_text").orderBy(F.col(id_col), F.col("pos"))
+    w = Window.partitionBy("span_text").orderBy(F.col("doc_id"), F.col("pos"))
     ranked = chunked.withColumn("rn", F.row_number().over(w))
     kept_struct = F.when(
         F.col("rn") == 1, F.struct(F.col("pos"), F.col("span_text"))
     )
-    return ranked.groupBy(id_col).agg(
+    return ranked.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_spans"),
         F.sum(F.when(F.col("rn") == 1, 1).otherwise(0)).alias("n_kept"),
         F.md5(
@@ -1218,17 +1113,12 @@ def span_dedup(
     )
 
 
-def fuzzy_name_pairs(
-    df: DataFrame,
-    name_col: str,
-    max_dist: int = 2,
-    prefix_len: int = 2,
-) -> DataFrame:
+def fuzzy_name_pairs(df: DataFrame, name_col: str) -> DataFrame:
     """Entity-resolution fuzzy matching: near-identical STRING pairs by
     cheap blocking + Levenshtein verify — the string-similarity sibling of
     the MinHash document path (same blocking discipline, different
     verifier). Returns (nm_a, nm_b, dist) with nm_a < nm_b and
-    dist <= ``max_dist``.
+    Levenshtein dist <= 2.
 
     Deliberately operates on DISTINCT values: identical strings are exact-
     dedup's job (:func:`dedup_exact`), and distinct-value cardinality is
@@ -1236,7 +1126,7 @@ def fuzzy_name_pairs(
     table) — blocking the raw rows would rebuild the quadratic blowup
     inside every repeated-value block. Survivor pairs map back to rows via
     an equi-join on the string, which is how production stacks apply the
-    match. Blocking key = (length bucket, first ``prefix_len`` chars):
+    match. Blocking key = (length bucket, first 2 chars):
     substitutions never change length and rarely the prefix; recall is
     bounded by design — production unions several cheap blockings (prefix,
     suffix, phonetic), each this same plan under a different key. The
@@ -1249,7 +1139,7 @@ def fuzzy_name_pairs(
         F.concat_ws(
             "_",
             F.floor(F.length("nm") / 2).cast("string"),
-            F.substring("nm", 1, prefix_len),
+            F.substring("nm", 1, 2),
         ).alias("blk"),
     )
     a = blocked.select(F.col("nm").alias("nm_a"), "blk")
@@ -1258,23 +1148,15 @@ def fuzzy_name_pairs(
         a.join(b, "blk")
         .filter(F.col("nm_a") < F.col("nm_b"))
         .withColumn("dist", F.levenshtein("nm_a", "nm_b"))
-        .filter(F.col("dist") <= max_dist)
+        .filter(F.col("dist") <= 2)
         .select("nm_a", "nm_b", "dist")
     )
 
 
-def lsh_recall_audit(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 4,
-    jaccard_threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """Measured recall of the LSH BANDING stage: how many true near-dup
-    pairs (exact Jaccard ≥ threshold over the hashed shingle sets) does
+def lsh_recall_audit(df: DataFrame) -> DataFrame:
+    """Measured recall of the LSH BANDING stage over a (doc_id, text)
+    frame: how many true near-dup pairs (exact Jaccard ≥ 0.5, the
+    minhash_lsh_pairs default, over the hashed shingle sets) does
     the (band, bucket) candidate join surface? The accuracy/cost dial
     every probabilistic dedup deployment must report — the banding twin
     of similarity.py's ivf_recall_at_k.
@@ -1298,9 +1180,8 @@ def lsh_recall_audit(
     feeds FIVE branches (truth candidates, banding, both verify sides ×2)
     → localCheckpoint once (repo lineage rule).
     """
-    rows_per = num_hashes // bands
-    params = _minhash_hash_params(num_hashes, seed)
-    hashed = _hashed_shingles(df, id_col, text, shingle_n).localCheckpoint(eager=True)
+    jaccard_threshold = 0.5
+    hashed = _hashed_shingles(df).localCheckpoint(eager=True)
     ex = hashed.select("id", F.explode("hs").alias("h"))
     a, b = ex.alias("a"), ex.alias("b")
     tcand = (
@@ -1311,7 +1192,7 @@ def lsh_recall_audit(
     truth = _verify_pairs(tcand, hashed, hashed, jaccard_threshold).select(
         "id_a", "id_b"
     )
-    banded = _banded(hashed, params, bands, rows_per)
+    banded = _banded(hashed)
     ba, bb = banded.alias("a"), banded.alias("b")
     cand = (
         ba.join(
@@ -1342,12 +1223,9 @@ def lsh_recall_audit(
 
 
 def connected_components_incremental(
-    labels: DataFrame,
-    new_edges: DataFrame,
-    edge_a: str = "id_a",
-    edge_b: str = "id_b",
+    labels: DataFrame, new_edges: DataFrame
 ) -> DataFrame:
-    """Fold a batch of NEW edges into an existing connected-components
+    """Fold a batch of NEW (id_a, id_b) edges into an existing connected-components
     labeling WITHOUT re-touching the old edge set — the graph-family
     member of the repo's append-fold equivalences (append_bm25_batch,
     ivf append, scd2_incremental).
@@ -1372,7 +1250,7 @@ def connected_components_incremental(
     """
     l_a = labels.select(F.col("node").alias("_n"), F.col("cluster_id").alias("_la"))
     e = (
-        new_edges.select(F.col(edge_a).alias("_ea"), F.col(edge_b).alias("_eb"))
+        new_edges.select(F.col("id_a").alias("_ea"), F.col("id_b").alias("_eb"))
         .join(l_a, F.col("_ea") == F.col("_n"), "left")
         .select(F.coalesce("_la", "_ea").alias("la"), "_eb")
         .join(
@@ -1380,22 +1258,22 @@ def connected_components_incremental(
             F.col("_eb") == F.col("_n"),
             "left",
         )
-        .select("la", F.coalesce("_lb", "_eb").alias("lb"))
-        .filter(F.col("la") != F.col("lb"))
+        .select(F.col("la").alias("id_a"), F.coalesce("_lb", "_eb").alias("id_b"))
+        .filter(F.col("id_a") != F.col("id_b"))
     )
     touched = (
-        e.select(F.col("la").alias("id"))
-        .union(e.select(F.col("lb").alias("id")))
+        e.select(F.col("id_a").alias("id"))
+        .union(e.select(F.col("id_b").alias("id")))
         .distinct()
     )
-    relabel = connected_components(
-        touched, e, id_col="id", edge_a="la", edge_b="lb"
-    ).select(F.col("node").alias("_old_label"), F.col("cluster_id").alias("_new_label"))
+    relabel = connected_components(touched, e).select(
+        F.col("node").alias("_old_label"), F.col("cluster_id").alias("_new_label")
+    )
     # nodes first seen in this batch enter the labeling as themselves, then
     # the relabel map (which covers every touched label) applies uniformly
     batch_nodes = (
-        new_edges.select(F.col(edge_a).alias("node"))
-        .union(new_edges.select(F.col(edge_b).alias("node")))
+        new_edges.select(F.col("id_a").alias("node"))
+        .union(new_edges.select(F.col("id_b").alias("node")))
         .distinct()
         .join(labels.select("node"), "node", "left_anti")
         .select("node", F.col("node").alias("cluster_id"))

@@ -17,6 +17,10 @@ SOURCE vertices in the join are AQE-skew-split. A full power iteration loops
 this step with lineage cuts (same localCheckpoint discipline as
 connected_components); convergence typically needs O(10) rounds independent
 of |V|, so the 100 TB cost is ~10 linear passes.
+
+Edge lists are ``(src, dst)``; :func:`transitive_closure` reads
+``(child, parent)``. Kernels whose edge list feeds several branches
+localCheckpoint it once.
 """
 
 from __future__ import annotations
@@ -25,17 +29,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def pagerank_iteration(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    ranks: DataFrame | None = None,
-) -> DataFrame:
-    """One PageRank power-iteration step over an edge list.
+# PageRank damping factor
+DAMPING = 0.85
 
-    Vertices are the union of src/dst endpoints; ``ranks`` (vertex, rank)
-    defaults to the uniform 1/N start vector. Dangling vertices (no
+
+def pagerank_iteration(edges: DataFrame) -> DataFrame:
+    """One PageRank power-iteration step (damping DAMPING) from the uniform
+    1/N start vector over an edge list.
+
+    Vertices are the union of src/dst endpoints. Dangling vertices (no
     out-edges) redistribute their mass uniformly — the standard stochastic
     fix, computed as one scalar aggregate. Returns (vertex, rank) with
     ranks UNROUNDED (callers round at the query edge per repo float rules).
@@ -45,17 +47,16 @@ def pagerank_iteration(
     repo convention, 6dp in the shipped query) — same rule as every grouped
     float agg in this codebase.
     """
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+    e = edges.select(F.col("src").alias("_s"), F.col("dst").alias("_d"))
     verts = (
         e.select(F.col("_s").alias("vertex"))
         .unionByName(e.select(F.col("_d").alias("vertex")))
         .distinct()
     )
     n = verts.agg(F.count(F.lit(1)).alias("_n"))
-    if ranks is None:
-        ranks = verts.crossJoin(F.broadcast(n)).select(
-            "vertex", (F.lit(1.0) / F.col("_n")).alias("rank")
-        )
+    ranks = verts.crossJoin(F.broadcast(n)).select(
+        "vertex", (F.lit(1.0) / F.col("_n")).alias("rank")
+    )
     outdeg = e.groupBy("_s").agg(F.count(F.lit(1)).alias("_deg"))
     # Mass leaving each vertex: rank/outdeg per out-edge. Vertices with no
     # out-edges keep their rank out of this join — their (dangling) mass is
@@ -82,8 +83,8 @@ def pagerank_iteration(
         .select(
             "vertex",
             (
-                (1.0 - damping) / F.col("_n")
-                + F.lit(damping)
+                (1.0 - DAMPING) / F.col("_n")
+                + F.lit(DAMPING)
                 * (F.coalesce(F.col("_in"), F.lit(0.0)) + F.col("_dmass") / F.col("_n"))
             ).alias("rank"),
         )
@@ -131,9 +132,20 @@ def _degree_oriented_wedges(e: DataFrame):
     return deg, wedges, closing
 
 
-def triangles_per_vertex(
-    edges: DataFrame, src: str = "src", dst: str = "dst", materialize: bool = True
-) -> DataFrame:
+def _checkpointed_edges(edges: DataFrame) -> DataFrame:
+    """(_u, _v) of a (src, dst) edge list, localCheckpointed: the kernels
+    below read it from many branches (symmetrization, degrees, both wedge
+    sides, the closure or anti-join set), and an expensive upstream edge
+    BUILD (e.g. the per-order co-occurrence self-join) must run once, not
+    per branch (measured 4.2 s → ~1 s on the sf0.1 co-purchase graph; the
+    cluster equivalent is persisting the edge table, same discipline as
+    connected_components/pagerank)."""
+    return edges.select(
+        F.col("src").alias("_u"), F.col("dst").alias("_v")
+    ).localCheckpoint(eager=True)
+
+
+def triangles_per_vertex(edges: DataFrame) -> DataFrame:
     """Per-vertex triangle participation + degree over an undirected simple
     graph (edge list with each edge in ONE direction, no self-loops).
 
@@ -149,9 +161,7 @@ def triangles_per_vertex(
     where the vertex closes nothing. Degree = distinct-neighbor count
     (edges are unique), exactly the cc denominator's n.
     """
-    e = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
-    if materialize:
-        e = e.localCheckpoint(eager=True)
+    e = _checkpointed_edges(edges)
     deg, wedges, closing = _degree_oriented_wedges(e)
     tri = wedges.join(
         closing,
@@ -175,9 +185,7 @@ def triangles_per_vertex(
     )
 
 
-def triangle_count(
-    edges: DataFrame, src: str = "src", dst: str = "dst", materialize: bool = True
-) -> DataFrame:
+def triangle_count(edges: DataFrame) -> DataFrame:
     """Global triangle count over an undirected simple graph (edge list
     with each edge in ONE direction, no self-loops).
 
@@ -194,19 +202,8 @@ def triangle_count(
     oriented source, one existence semi-join of wedge closures against the
     oriented edge set. Returns a single row (n_vertices, n_edges,
     n_triangles).
-
-    The edge list feeds MANY branches (symmetrization, degrees, both wedge
-    sides, the closure set, the edge count) — ``materialize`` (default)
-    localCheckpoints it once so an expensive upstream edge BUILD (e.g. the
-    per-order co-occurrence self-join) runs exactly once instead of per
-    branch (measured 4.2 s → ~1 s on the sf0.1 co-purchase graph; the
-    cluster equivalent is persisting the edge table, same discipline as
-    connected_components/pagerank). Pass materialize=False to keep the
-    fully lazy Catalyst plan for plan inspection.
     """
-    e = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
-    if materialize:
-        e = e.localCheckpoint(eager=True)
+    e = _checkpointed_edges(edges)
     deg, wedges, closing = _degree_oriented_wedges(e)
     tri = wedges.join(
         closing,
@@ -219,13 +216,33 @@ def triangle_count(
     return n_v.crossJoin(F.broadcast(n_e)).crossJoin(F.broadcast(n_tri))
 
 
-def common_neighbors_topk(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    k: int = 15,
-    materialize: bool = True,
-) -> DataFrame:
+def _linkpred_wedges(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(sym, wedges) for the link-prediction scores: the symmetrized edge
+    list (_u, _v) and every wedge v1—_n—v2 as (_n, v1, v2) with v1 < v2 —
+    one self-join of the adjacency on the shared neighbor."""
+    e = _checkpointed_edges(edges)
+    sym = e.unionByName(e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
+    a1 = sym.select(F.col("_u").alias("_n"), F.col("_v").alias("v1"))
+    a2 = sym.select(F.col("_u").alias("_n"), F.col("_v").alias("v2"))
+    return sym, a1.join(a2, "_n").filter(F.col("v1") < F.col("v2"))
+
+
+def _non_adjacent_topk(cand: DataFrame, sym: DataFrame, score: str, k: int) -> DataFrame:
+    """Top-k candidate pairs by ``score`` desc, then (v1, v2), that are not
+    edges. The anti-join probes the SYMMETRIZED set: probing only the
+    (v1==src, v2==dst) direction trusted the src<dst precondition — one
+    reversed edge would leak an already-adjacent pair into the
+    "non-adjacent" predictions (r7 review; triangle_count normalizes, this
+    matches)."""
+    non_adj = cand.join(
+        sym,
+        (cand["v1"] == sym["_u"]) & (cand["v2"] == sym["_v"]),
+        "left_anti",
+    )
+    return non_adj.orderBy(F.col(score).desc(), "v1", "v2").limit(k)
+
+
+def common_neighbors_topk(edges: DataFrame, k: int = 15) -> DataFrame:
     """Top-k NON-adjacent vertex pairs by common-neighbor count — the
     classic link-prediction score (Liben-Nowell & Kleinberg CIKM'03) over
     an undirected simple edge list (each edge once, src < dst).
@@ -242,41 +259,14 @@ def common_neighbors_topk(
     cap deg(n) (drop wedges through the top-0.1% hubs — a standard
     recall trade) or swap in minhash-of-neighborhood sketches. The exact
     form ships because the gate replays it; the cap is one added filter
-    on the degree agg. ``materialize`` localCheckpoints the edge list once
-    (it feeds the adjacency twice plus the anti-join — same discipline as
-    triangle_count).
+    on the degree agg.
     """
-    e = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
-    if materialize:
-        e = e.localCheckpoint(eager=True)
-    sym = e.unionByName(e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
-    a1 = sym.select(F.col("_u").alias("_n"), F.col("_v").alias("v1"))
-    a2 = sym.select(F.col("_u").alias("_n"), F.col("_v").alias("v2"))
-    cand = (
-        a1.join(a2, "_n")
-        .filter(F.col("v1") < F.col("v2"))
-        .groupBy("v1", "v2")
-        .agg(F.count(F.lit(1)).alias("n_common"))
-    )
-    # anti-join against the SYMMETRIZED set: probing only the (v1==src,
-    # v2==dst) direction trusted the src<dst precondition — one reversed
-    # edge would leak an already-adjacent pair into the "non-adjacent"
-    # predictions (r7 review; triangle_count normalizes, this now matches)
-    non_adj = cand.join(
-        sym,
-        (cand["v1"] == sym["_u"]) & (cand["v2"] == sym["_v"]),
-        "left_anti",
-    )
-    return non_adj.orderBy(F.col("n_common").desc(), "v1", "v2").limit(k)
+    sym, wedges = _linkpred_wedges(edges)
+    cand = wedges.groupBy("v1", "v2").agg(F.count(F.lit(1)).alias("n_common"))
+    return _non_adjacent_topk(cand, sym, "n_common", k)
 
 
-def resource_allocation_topk(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    k: int = 15,
-    materialize: bool = True,
-) -> DataFrame:
+def resource_allocation_topk(edges: DataFrame, k: int = 15) -> DataFrame:
     """Top-k NON-adjacent vertex pairs by the Resource-Allocation index
     RA(a, b) = Σ_{z ∈ N(a)∩N(b)} 1/deg(z) (Zhou/Lü/Zhang EPJ B 2009) —
     the degree-penalized refinement of plain common-neighbor counting:
@@ -297,40 +287,22 @@ def resource_allocation_topk(
     agg joined onto the wedge center BEFORE the pair agg. Wedge volume is
     Σ_z deg(z)² with the same upstream support-threshold/hub-cap levers.
     """
-    e = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
-    if materialize:
-        # feeds the adjacency twice, the degree agg, and the anti-join
-        e = e.localCheckpoint(eager=True)
-    sym = e.unionByName(e.select(F.col("_v").alias("_u"), F.col("_u").alias("_v")))
+    sym, wedges = _linkpred_wedges(edges)
     deg = sym.groupBy(F.col("_u").alias("_n")).agg(
         F.count(F.lit(1)).alias("_deg")
     )
-    a1 = sym.select(F.col("_u").alias("_n"), F.col("_v").alias("v1"))
-    a2 = sym.select(F.col("_u").alias("_n"), F.col("_v").alias("v2"))
     cand = (
-        a1.join(a2, "_n")
-        .filter(F.col("v1") < F.col("v2"))
-        .join(deg, "_n")
+        wedges.join(deg, "_n")
         .groupBy("v1", "v2")
         .agg(
             F.count(F.lit(1)).alias("n_common"),
             F.sum(F.expr("1000000 div _deg")).cast("long").alias("ra_e6"),
         )
     )
-    non_adj = cand.join(
-        sym,
-        (cand["v1"] == sym["_u"]) & (cand["v2"] == sym["_v"]),
-        "left_anti",
-    )
-    return non_adj.orderBy(F.col("ra_e6").desc(), "v1", "v2").limit(k)
+    return _non_adjacent_topk(cand, sym, "ra_e6", k)
 
 
-def transitive_closure(
-    edges: DataFrame,
-    child: str = "child",
-    parent: str = "parent",
-    rounds: int | None = 3,
-) -> DataFrame:
+def transitive_closure(edges: DataFrame, rounds: int | None = 3) -> DataFrame:
     """Ancestor closure over a parent forest via PATH DOUBLING: returns every
     ``(node, anc, depth)`` pair reachable by following parent edges.
 
@@ -353,8 +325,8 @@ def transitive_closure(
     convergence round is a bounded cost).
     """
     closure = edges.select(
-        F.col(child).alias("node"),
-        F.col(parent).alias("anc"),
+        F.col("child").alias("node"),
+        F.col("parent").alias("anc"),
         F.lit(1).cast("long").alias("depth"),
     ).localCheckpoint(eager=True)
     if rounds is None:
@@ -387,13 +359,7 @@ def _double_closure(closure: DataFrame) -> DataFrame:
     )
 
 
-def kcore_peel(
-    edges: DataFrame,
-    k: int = 3,
-    rounds: int = 3,
-    src: str = "src",
-    dst: str = "dst",
-) -> DataFrame:
+def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     """k-core peeling: iteratively drop vertices of degree < k, returning
     the surviving ``(node, deg)`` rows after ``rounds`` degree passes (the
     round-(rounds) survivors and their degrees within the round-(rounds-1)
@@ -410,7 +376,7 @@ def kcore_peel(
     unrolls the same number of passes — both engines compute the
     identical partial peel.
     """
-    sym = edges.select(F.col(src).alias("_u"), F.col(dst).alias("_v"))
+    sym = edges.select(F.col("src").alias("_u"), F.col("dst").alias("_v"))
     sym = sym.unionByName(
         sym.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
     ).localCheckpoint(eager=True)

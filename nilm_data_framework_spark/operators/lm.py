@@ -15,6 +15,7 @@ tfidf_top_terms in operators/text.py) so count-table joins touch
 |doc × distinct-gram| rows, not raw occurrences. The vocab table is tiny
 (V rows) and broadcast; the n-gram count joins are linear equi-joins on
 the gram key — Zipf-hot keys are AQE skew-split territory, never N².
+Document operators read a ``(doc_id, text)`` frame.
 """
 
 from __future__ import annotations
@@ -26,11 +27,7 @@ from nilm_data_framework_spark.operators.exact_math import ratio_e4
 from nilm_data_framework_spark.operators.text import tokens
 
 
-def vocab_top_tokens(
-    df: DataFrame,
-    text: str = "text",
-    vocab_size: int = 100,
-) -> DataFrame:
+def vocab_top_tokens(df: DataFrame, vocab_size: int = 100) -> DataFrame:
     """Corpus vocabulary: the ``vocab_size`` most frequent tokens with a
     total order (count DESC, token ASC) so the cut is deterministic across
     engines and runs. Returns (tok, c).
@@ -40,21 +37,16 @@ def vocab_top_tokens(
     the scaling cost — linear, map-side combined.
     """
     counts = (
-        df.select(F.explode(tokens(F.col(text))).alias("tok"))
+        df.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     return counts.orderBy(F.col("c").desc(), F.col("tok").asc()).limit(vocab_size)
 
 
-def oov_rate(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    vocab_size: int = 100,
-) -> DataFrame:
+def oov_rate(df: DataFrame, vocab_size: int = 100) -> DataFrame:
     """Per-document out-of-vocabulary rate against the corpus top-V vocab:
-    (id, n_tok, n_oov, oov_rate) — the tokenizer-coverage audit run before
+    (doc_id, n_tok, n_oov, oov_rate_e4) — the tokenizer-coverage audit run before
     committing to a vocab size. Empty documents emit no row (no tokens),
     matching the SQL unnest semantics.
 
@@ -66,8 +58,8 @@ def oov_rate(
     join.
     """
     doc_tok = (
-        df.select(F.col(id_col), F.explode(tokens(F.col(text))).alias("tok"))
-        .groupBy(id_col, "tok")
+        df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
+        .groupBy("doc_id", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     # vocab from the SAME per-doc reduction (r7: vocab_top_tokens ran a
@@ -85,7 +77,7 @@ def oov_rate(
         F.broadcast(vocab.withColumn("in_vocab", F.lit(1))), "tok", "left"
     )
     return (
-        flagged.groupBy(id_col)
+        flagged.groupBy("doc_id")
         .agg(
             F.sum("c").alias("n_tok"),
             F.sum(F.when(F.col("in_vocab").isNull(), F.col("c")).otherwise(F.lit(0))).alias(
@@ -93,7 +85,7 @@ def oov_rate(
             ),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_tok",
             "n_oov",
             # exact 1e-4-scaled integer ratio (operators/exact_math.py):
@@ -103,15 +95,15 @@ def oov_rate(
     )
 
 
-def doc_bigrams(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> DataFrame:
-    """(id, w1, w2, c) — per-document adjacent-token-pair counts, built by
+def doc_bigrams(df: DataFrame) -> DataFrame:
+    """(doc_id, w1, w2, c) — per-document adjacent-token-pair counts, built by
     zipping the token array against itself shifted by one (pure JVM HOFs,
     no shuffle) and reducing occurrences per doc."""
-    toks_arr = df.select(F.col(id_col), tokens(F.col(text)).alias("toks"))
+    toks_arr = df.select(F.col("doc_id"), tokens(F.col("text")).alias("toks"))
     pairs = (
         toks_arr.filter(F.size("toks") >= 2)
         .select(
-            F.col(id_col),
+            F.col("doc_id"),
             F.explode(
                 F.zip_with(
                     F.slice("toks", 1, F.size("toks") - 1),
@@ -120,16 +112,12 @@ def doc_bigrams(df: DataFrame, id_col: str = "doc_id", text: str = "text") -> Da
                 )
             ).alias("p"),
         )
-        .select(id_col, F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
+        .select("doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     )
-    return pairs.groupBy(id_col, "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
+    return pairs.groupBy("doc_id", "w1", "w2").agg(F.count(F.lit(1)).alias("c"))
 
 
-def bigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
+def bigram_surprisal(df: DataFrame) -> DataFrame:
     """Per-document average surprisal under an interpolated bigram LM
     estimated on the corpus itself: for each adjacent pair (w1, w2),
 
@@ -141,7 +129,7 @@ def bigram_surprisal(
     document's bigram positions — the perplexity-filter proxy one step up
     from the unigram version (operators/text.py:unigram_surprisal): a
     document of individually common but incoherently ordered words now
-    scores high. Returns (id, n_bigrams, bigram_surprisal) with the score
+    scores high. Returns (doc_id, n_bigrams, bigram_surprisal) with the score
     rounded to 4dp; documents with < 2 tokens emit no row.
 
     The unigram interpolation term keeps P > 0 for every observed pair
@@ -150,9 +138,9 @@ def bigram_surprisal(
     that same reduction (sum of c — one extra linear agg, no second pass
     over text), two unigram joins, a 1-row broadcast total. All linear.
     """
-    doc_bi = doc_bigrams(df, id_col=id_col, text=text)
+    doc_bi = doc_bigrams(df)
     bi = doc_bi.groupBy("w1", "w2").agg(F.sum("c").alias("c_bi"))
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text))).alias("tok"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
     uni = tok.groupBy("tok").agg(F.count(F.lit(1)).alias("c_uni"))
     total = uni.agg(F.sum("c_uni").alias("n_total"))
 
@@ -171,7 +159,7 @@ def bigram_surprisal(
             + (F.col("c_w2") / (F.lit(4) * F.col("n_total"))),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.sum("c").alias("n_bigrams"),
         F.round(-F.sum(F.col("c") * F.log(F.col("p"))) / F.sum("c"), 4).alias(
             "bigram_surprisal"
@@ -179,27 +167,26 @@ def bigram_surprisal(
     )
 
 
-def dsir_importance(
-    df: DataFrame,
-    target_pred,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n_buckets: int = 1024,
-) -> DataFrame:
+# DSIR hashed-bigram bucket count B (a design constant: the bucket-count
+# tables stay ≤ B rows at any corpus size)
+DSIR_BUCKETS = 1024
+
+
+def dsir_importance(df: DataFrame, target_pred) -> DataFrame:
     """DSIR importance weights (Xie et al., arXiv:2302.03169): score every
     document by how much more likely its HASHED-BIGRAM profile is under the
     target distribution than under the raw corpus,
 
         log w(doc) = Σ_g c_g · [ ln p̂_target(b(g)) − ln p̂_raw(b(g)) ]
 
-    with b(g) = md5-hash of the bigram into ``n_buckets`` buckets and
+    with b(g) = md5-hash of the bigram into B = DSIR_BUCKETS buckets and
     Laplace-smoothed bucket MLEs p̂(b) = (n_b + 1)/(N + B). Sampling
     proportionally to w (or keeping top-w) selects raw data that LOOKS LIKE
     the target domain — the data-selection recipe behind DoReMi-era corpus
     reweighting, entirely in hashed count space (no model inference).
 
     ``target_pred`` is a Column predicate over ``df`` rows defining the
-    target subset (e.g. a trusted source). Returns (id, n_grams, log_w 4dp);
+    target subset (e.g. a trusted source). Returns (doc_id, n_grams, log_w 4dp);
     docs with < 2 tokens emit no row.
 
     Scale shape: per-doc (bucket, c) reduction FIRST; the two bucket-count
@@ -210,23 +197,23 @@ def dsir_importance(
     builds the target counts from the same reduction. Logs are rounded at
     4dp per the repo's surprisal discipline.
     """
-    doc_bi = doc_bigrams(df, id_col=id_col, text=text)
+    doc_bi = doc_bigrams(df)
     bucket = F.pmod(
         F.conv(
             F.substring(F.md5(F.concat_ws(" ", "w1", "w2")), 1, 15), 16, 10
         ).cast("long"),
-        F.lit(n_buckets),
+        F.lit(DSIR_BUCKETS),
     )
     # The target flag joins in ONCE at doc granularity, so target and raw
     # bucket counts come out of a SINGLE aggregation (a conditional sum) —
     # one count-table join downstream instead of two, and one fewer
     # re-evaluation of the explode subtree.
-    target_ids = df.filter(target_pred).select(id_col, F.lit(1).alias("_is_t"))
+    target_ids = df.filter(target_pred).select("doc_id", F.lit(1).alias("_is_t"))
     flagged = (
         doc_bi.withColumn("_b", bucket)
-        .groupBy(id_col, "_b")
+        .groupBy("doc_id", "_b")
         .agg(F.sum("c").alias("c"))
-        .join(target_ids, id_col, "left")
+        .join(target_ids, "doc_id", "left")
     )
     counts = flagged.groupBy("_b").agg(
         F.sum("c").alias("n_r"),
@@ -237,7 +224,7 @@ def dsir_importance(
     totals = counts.agg(
         F.sum("n_r").alias("_tot_r"), F.sum("n_t").alias("_tot_t")
     )
-    b = float(n_buckets)
+    b = float(DSIR_BUCKETS)
     scored = (
         flagged.join(counts, "_b")
         .crossJoin(F.broadcast(totals))
@@ -247,7 +234,7 @@ def dsir_importance(
             - F.log((F.col("n_r") + 1) / (F.col("_tot_r") + F.lit(b))),
         )
     )
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.sum("c").alias("n_grams"),
         F.round(F.sum(F.col("c") * F.col("_lr")), 4).alias("log_w"),
     )

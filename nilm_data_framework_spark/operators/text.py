@@ -4,7 +4,7 @@
 All hot-path expressions are JVM-side built-ins (split/regexp/aggregate/
 filter over arrays) — no Python UDFs — so they whole-stage-codegen and scale
 to 100 TB document corpora. Shapes mirror what C4/RefinedWeb-style pipelines
-compute per document.
+compute per document. Document operators read a ``(doc_id, text)`` frame.
 """
 
 from __future__ import annotations
@@ -55,7 +55,7 @@ def bpe_ish_token_count(text: Column) -> Column:
     return F.size(pieces)
 
 
-def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Per-document quality signals: char/token counts, mean token length,
     punctuation ratio, stopword ratio, uppercase ratio, repetition ratio
     (distinct-token fraction). Gopher/C4-style filters are thresholds over
@@ -64,16 +64,16 @@ def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
     # (see word_ngrams on why re-referencing tokens() is quadratic).
     sw = F.array(*[F.lit(w) for w in STOPWORDS["en"]])
     tok_feats = F.transform(
-        F.array(tokens(F.col(text))),
+        F.array(tokens(F.col("text"))),
         lambda tk: F.struct(
             F.size(tk).alias("n_tok"),
             F.size(F.array_distinct(tk)).alias("n_distinct"),
             F.size(F.filter(tk, lambda t: F.array_contains(sw, t))).alias("stop_hits"),
         ),
     )[0]
-    n_char = F.length(F.col(text))
-    punct = F.length(F.regexp_replace(F.col(text), r"[^.,;:!?]", ""))
-    upper = F.length(F.regexp_replace(F.col(text), r"[^A-Z]", ""))
+    n_char = F.length(F.col("text"))
+    punct = F.length(F.regexp_replace(F.col("text"), r"[^.,;:!?]", ""))
+    upper = F.length(F.regexp_replace(F.col("text"), r"[^A-Z]", ""))
     with_feats = df.withColumn("_tf", tok_feats)
     n_tok = F.col("_tf.n_tok")
     return with_feats.select(
@@ -98,14 +98,14 @@ def quality_features(df: DataFrame, text: str = "text") -> DataFrame:
     )
 
 
-def language_id(df: DataFrame, text: str = "text", out: str = "lang_pred") -> DataFrame:
-    """Language-ID: argmax stopword score; ties keep the FIRST language in
-    STOPWORDS dict INSERTION order (en, fr, de, es, zh — NOT sorted; the
-    DuckDB oracle replays the same precedence, and the r3 driver hash is
-    frozen on it, so extending STOPWORDS must append, never reorder);
-    zero evidence → 'und'. Pure column expressions; tokenization
+def language_id(df: DataFrame) -> DataFrame:
+    """Language-ID into column ``lang_pred``: argmax stopword score; ties
+    keep the FIRST language in STOPWORDS dict INSERTION order (en, fr, de,
+    es, zh — NOT sorted; the DuckDB oracle replays the same precedence,
+    and the r3 driver hash is frozen on it, so extending STOPWORDS must
+    append, never reorder); zero evidence → 'und'. Pure column expressions; tokenization
     let-bound once (see word_ngrams)."""
-    col = F.col(text)
+    col = F.col("text")
     word_langs = [(lang, ws) for lang, ws in STOPWORDS.items() if lang != "zh"]
 
     def contains(ws: list[str]):
@@ -146,15 +146,15 @@ def language_id(df: DataFrame, text: str = "text", out: str = "lang_pred") -> Da
         lambda acc, s: F.when(s["score"] > acc["score"], s).otherwise(acc),
     )
     return df.withColumn(
-        out, F.when(winner["score"] > 0, winner["lang"]).otherwise(F.lit("und"))
+        "lang_pred", F.when(winner["score"] > 0, winner["lang"]).otherwise(F.lit("und"))
     )
 
 
-def fingerprint(df: DataFrame, text: str = "text", out: str = "fp") -> DataFrame:
-    """Document fingerprint: md5 of the whitespace/case-normalized text.
-    md5 is identical across Spark and DuckDB → oracle-checkable."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text)), r"\s+", " "))
-    return df.withColumn(out, F.md5(norm))
+def fingerprint(df: DataFrame) -> DataFrame:
+    """Document fingerprint ``fp``: md5 of the whitespace/case-normalized
+    text. md5 is identical across Spark and DuckDB → oracle-checkable."""
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
+    return df.withColumn("fp", F.md5(norm))
 
 
 def word_ngrams(text: Column, n: int) -> Column:
@@ -191,15 +191,9 @@ def word_ngrams_all(text: Column, n: int) -> Column:
     )
 
 
-def doc_chunks(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    size: int = 16,
-    stride: int = 8,
-) -> DataFrame:
-    """RAG-style chunking: overlapping ``size``-token windows every
-    ``stride`` tokens, carrying provenance — (id, chunk_idx, start_tok,
+def doc_chunks(df: DataFrame) -> DataFrame:
+    """RAG-style chunking: overlapping ``size`` = 16-token windows every
+    ``stride`` = 8 tokens, carrying provenance — (doc_id, chunk_idx, start_tok,
     n_tok, chunk_text). The retrieval-prep twin of the model-input windows
     (W4 sliding_windows works on numeric series; this is its text-column
     counterpart feeding chunk embedding + indexing). The final chunks may
@@ -209,9 +203,10 @@ def doc_chunks(
     Pure per-row HOFs (sequence → slice → array_join) + one posexplode —
     a narrow 1→N map with NO shuffle at any scale; output fan-out is
     ~n_tok/stride rows per doc. Downstream embedding/indexing partitions
-    by (id, chunk_idx) — provenance is in the row, so no join back to the
-    parent doc is ever needed.
+    by (doc_id, chunk_idx) — provenance is in the row, so no join back to
+    the parent doc is ever needed.
     """
+    size, stride = 16, 8
     toks_of = lambda tk: F.transform(  # noqa: E731
         F.filter(
             F.sequence(F.lit(1), F.greatest(F.size(tk), F.lit(1)), F.lit(stride)),
@@ -224,13 +219,13 @@ def doc_chunks(
         ),
     )
     chunked = df.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(
-            F.flatten(F.transform(F.array(tokens(F.col(text))), toks_of))
+            F.flatten(F.transform(F.array(tokens(F.col("text"))), toks_of))
         ).alias("chunk_idx", "ch"),
     )
     return chunked.select(
-        id_col,
+        "doc_id",
         "chunk_idx",
         F.col("ch.start_tok").alias("start_tok"),
         F.col("ch.n_tok").alias("n_tok"),
@@ -238,13 +233,8 @@ def doc_chunks(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    k: int = 3,
-) -> DataFrame:
-    """Top-k characteristic terms per document by tf·idf.
+def tfidf_top_terms(df: DataFrame) -> DataFrame:
+    """Top-3 characteristic terms per document by tf·idf.
 
     idf is the RATIONAL form (N + 1) / (df + 1) rather than its log: IEEE
     division of identical integers is bit-identical across engines, while
@@ -259,10 +249,12 @@ def tfidf_top_terms(
     """
     from pyspark.sql import Window
 
-    toks = df.select(F.col(id_col).alias("id"), F.explode(tokens(F.col(text))).alias("term"))
+    toks = df.select(
+        F.col("doc_id").alias("id"), F.explode(tokens(F.col("text"))).alias("term")
+    )
     tf = toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-    n_docs = df.select(F.countDistinct(id_col).alias("n_docs"))
+    n_docs = df.select(F.countDistinct("doc_id").alias("n_docs"))
     scored = (
         # vocabulary grows with the corpus (could be GBs at 100 TB) — the
         # term-dictionary join strategy is AQE's call, not a forced hint.
@@ -278,21 +270,14 @@ def tfidf_top_terms(
     w = Window.partitionBy("id").orderBy(F.col("tfidf").desc(), "term")
     return (
         scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select(F.col("id").alias(id_col), "term", "tf", "df", "tfidf", "rk")
+        .filter(F.col("rk") <= 3)
+        .select(F.col("id").alias("doc_id"), "term", "tf", "df", "tfidf", "rk")
     )
 
 
-def ngram_overlap_pairs(
-    train: DataFrame,
-    eval_df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    min_shared: int = 2,
-) -> DataFrame:
+def ngram_overlap_pairs(train: DataFrame, eval_df: DataFrame) -> DataFrame:
     """Eval-set decontamination: (train_id, eval_id, n_shared) pairs where a
-    training document shares >= ``min_shared`` distinct word n-grams with an
+    training document shares >= 2 distinct word 3-grams with an
     eval/benchmark document — the contamination screen every serious LLM
     data pipeline runs before training (the n-gram-collision method used for
     GPT-3/PaLM-style eval decontamination).
@@ -303,16 +288,16 @@ def ngram_overlap_pairs(
     eval) pair. Cost is bounded by collision volume, not |train| × |eval|:
     only grams that actually occur on both sides produce join rows. The
     gram hash join key is uniform (cryptographic hash), so no skew surface
-    beyond genuinely ubiquitous grams — mitigate those by raising ``n``
-    (standard practice: 8-13 gram windows at production scale; n=3 keeps
-    the gate-scale fixture non-vacuous).
+    beyond genuinely ubiquitous grams — mitigate those by raising the gram
+    length (standard practice: 8-13 gram windows at production scale; 3
+    keeps the gate-scale fixture non-vacuous).
     """
     from nilm_data_framework_spark.operators.dedup import _md5_64
 
     def grams(df: DataFrame, out_id: str) -> DataFrame:
         return df.select(
-            F.col(id_col).alias(out_id),
-            F.explode(word_ngrams(F.col(text), n)).alias("_g"),  # already distinct
+            F.col("doc_id").alias(out_id),
+            F.explode(word_ngrams(F.col("text"), 3)).alias("_g"),  # already distinct
         ).select(out_id, _md5_64(F.col("_g")).alias("_h"))
 
     tg, eg = grams(train, "train_id"), grams(eval_df, "eval_id")
@@ -320,17 +305,12 @@ def ngram_overlap_pairs(
         tg.join(eg, "_h")
         .groupBy("train_id", "eval_id")
         .agg(F.countDistinct("_h").alias("n_shared"))
-        .filter(F.col("n_shared") >= min_shared)
+        .filter(F.col("n_shared") >= 2)
     )
 
 
-def repetition_scores(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 2,
-) -> DataFrame:
-    """Gopher-style intra-document repetition signals: for word ``n``-grams,
+def repetition_scores(df: DataFrame) -> DataFrame:
+    """Gopher-style intra-document repetition signals: for word bigrams,
     ``dup_frac`` = fraction of gram occurrences that are repeats of an
     earlier gram (1 - distinct/total) and ``top_frac`` = occupancy of the
     single most-frequent gram. Filtering on these catches boilerplate /
@@ -342,19 +322,19 @@ def repetition_scores(
     genuinely giant documents (bound those upstream with a length cap).
     """
     g = df.select(
-        F.col(id_col),
-        F.explode(word_ngrams_all(F.col(text), n)).alias("g"),
+        F.col("doc_id"),
+        F.explode(word_ngrams_all(F.col("text"), 2)).alias("g"),
     )
-    per_gram = g.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c"))
+    per_gram = g.groupBy("doc_id", "g").agg(F.count(F.lit(1)).alias("c"))
     return (
-        per_gram.groupBy(id_col)
+        per_gram.groupBy("doc_id")
         .agg(
             F.sum("c").alias("n_grams"),
             F.count(F.lit(1)).alias("n_distinct"),
             F.max("c").alias("top_c"),
         )
         .select(
-            id_col,
+            "doc_id",
             "n_grams",
             # exact 1e-4-scaled integer ratios (operators/exact_math.py):
             # dup_frac = (occurrences that repeat an earlier gram) / total
@@ -364,18 +344,17 @@ def repetition_scores(
     )
 
 
-def frequent_ngrams(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-    min_docs: int = 3,
-) -> DataFrame:
+# word n-gram length of the boilerplate pair frequent_ngrams →
+# boilerplate_coverage (the coverage pass must gram like the detector)
+BOILERPLATE_N = 3
+
+
+def frequent_ngrams(df: DataFrame) -> DataFrame:
     """Cross-document boilerplate phrase detection — the phrase-level analog
     of C4's repeated-line removal (C4 drops any line occurring >= 3 times in
-    the corpus; here the unit is a word ``n``-gram because the corpus has no
-    line structure): returns the 63-bit hash of every distinct ``n``-gram
-    that occurs in at least ``min_docs`` distinct documents, with its
+    the corpus; here the unit is a word BOILERPLATE_N-gram because the
+    corpus has no line structure): returns the 63-bit hash of every
+    distinct gram that occurs in at least 3 distinct documents, with its
     document frequency.
 
     Scale shape: explode per-doc DISTINCT grams (so the count IS document
@@ -387,26 +366,22 @@ def frequent_ngrams(
     from nilm_data_framework_spark.operators.dedup import _md5_64
 
     g = df.select(
-        F.col(id_col),
-        F.explode(word_ngrams(F.col(text), n)).alias("_g"),  # distinct per doc
+        F.col("doc_id"),
+        # distinct per doc
+        F.explode(word_ngrams(F.col("text"), BOILERPLATE_N)).alias("_g"),
     )
     return (
         g.select(_md5_64(F.col("_g")).alias("gram_h"))
         .groupBy("gram_h")
         .agg(F.count(F.lit(1)).alias("n_docs"))
-        .filter(F.col("n_docs") >= min_docs)
+        .filter(F.col("n_docs") >= 3)
     )
 
 
-def boilerplate_coverage(
-    df: DataFrame,
-    frequent: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    n: int = 3,
-) -> DataFrame:
+def boilerplate_coverage(df: DataFrame, frequent: DataFrame) -> DataFrame:
     """Per-document boilerplate coverage against a frequent-gram set from
-    :func:`frequent_ngrams`: how many of the document's distinct ``n``-grams
+    :func:`frequent_ngrams`: how many of the document's distinct
+    BOILERPLATE_N-grams
     are corpus-frequent, and the coverage ratio — the per-doc score a C4-
     style cleaner thresholds on before dropping/trimming boilerplate-heavy
     documents.
@@ -414,20 +389,20 @@ def boilerplate_coverage(
     Scale shape: one explode + hash join on the 8-byte gram hash + one
     aggregation keyed on the doc id. The frequent set grows with the corpus
     (it is NOT broadcast-hinted — AQE decides from its actual size); the
-    join is hash-keyed and uniform. Documents with fewer than ``n`` tokens
+    join is hash-keyed and uniform. Documents with fewer than BOILERPLATE_N tokens
     produce no grams and are absent from the output by construction.
     """
     from nilm_data_framework_spark.operators.dedup import _md5_64
 
     g = df.select(
-        F.col(id_col),
-        F.explode(word_ngrams(F.col(text), n)).alias("_g"),
-    ).select(F.col(id_col), _md5_64(F.col("_g")).alias("gram_h"))
+        F.col("doc_id"),
+        F.explode(word_ngrams(F.col("text"), BOILERPLATE_N)).alias("_g"),
+    ).select(F.col("doc_id"), _md5_64(F.col("_g")).alias("gram_h"))
     flagged = g.join(
         frequent.select("gram_h", F.lit(1).alias("_b")), "gram_h", "left"
     )
     return (
-        flagged.groupBy(id_col)
+        flagged.groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).alias("n_grams"),
             F.coalesce(F.sum("_b"), F.lit(0)).alias("n_boiler"),
@@ -447,11 +422,7 @@ PII_PATTERNS = {
 }
 
 
-def redact_pii(
-    df: DataFrame,
-    text: str = "text",
-    out: str = "redacted",
-) -> DataFrame:
+def redact_pii(df: DataFrame) -> DataFrame:
     """PII scrub: mask emails and IPv4 literals with typed placeholders and
     count occurrences per document — the pre-training privacy pass (C4 and
     most production pipelines run exactly this shape; real deployments add
@@ -474,22 +445,18 @@ def redact_pii(
     """
     email, ip = PII_PATTERNS["email"], PII_PATTERNS["ip"]
     redacted = F.regexp_replace(
-        F.regexp_replace(F.col(text), email, "<EMAIL>"), ip, "<IP>"
+        F.regexp_replace(F.col("text"), email, "<EMAIL>"), ip, "<IP>"
     )
-    passthrough = [c for c in df.columns if c != text]
+    passthrough = [c for c in df.columns if c != "text"]
     return df.select(
         *passthrough,
-        F.regexp_count(F.col(text), F.lit(email)).alias("n_emails"),
-        F.regexp_count(F.col(text), F.lit(ip)).alias("n_ips"),
-        redacted.alias(out),
+        F.regexp_count(F.col("text"), F.lit(email)).alias("n_emails"),
+        F.regexp_count(F.col("text"), F.lit(ip)).alias("n_ips"),
+        redacted.alias("redacted"),
     )
 
 
-def token_pair_counts(
-    df: DataFrame,
-    text: str = "text",
-    min_count: int = 2,
-) -> DataFrame:
+def token_pair_counts(df: DataFrame, min_count: int = 2) -> DataFrame:
     """Corpus-wide adjacent-token-pair frequencies — the inner loop of BPE
     tokenizer training (one merge iteration scores every adjacent pair and
     merges the argmax; training a tokenizer ON the corpus is a standard
@@ -504,7 +471,7 @@ def token_pair_counts(
     so reducer skew is bounded by n_partitions, not pair frequency. Linear
     in corpus token count; no join anywhere.
     """
-    pairs = df.select(F.explode(word_ngrams_all(F.col(text), 2)).alias("pair"))
+    pairs = df.select(F.explode(word_ngrams_all(F.col("text"), 2)).alias("pair"))
     return (
         pairs.groupBy("pair")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -512,17 +479,13 @@ def token_pair_counts(
     )
 
 
-def unigram_surprisal(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-) -> DataFrame:
+def unigram_surprisal(df: DataFrame) -> DataFrame:
     """Per-document mean token surprisal −Σc·ln p(w) / Σc under the corpus's
     own unigram MLE — the perplexity-style quality score (CCNet/Gopher rank
     documents by LM perplexity; a unigram LM keeps it closed-form and
     cross-engine replayable, no KenLM shipping). Low = stopword-heavy
     mainstream text, high = rare-token soup (gibberish, boilerplate codes).
-    Returns (id, n_tok, surprisal) with surprisal rounded to 4dp.
+    Returns (doc_id, n_tok_doc, surprisal) with surprisal rounded to 4dp.
 
     Scale shape: tokens reduce to per-doc (token, count) FIRST (one agg),
     so the vocabulary join touches |doc×distinct-token| rows, not raw token
@@ -531,12 +494,12 @@ def unigram_surprisal(
     doc) — that join is AQE-decided and AQE skew-split handles the hot keys;
     the vocab table itself grows ~log with the corpus, never hint-broadcast.
     """
-    tok = df.select(F.col(id_col), F.explode(tokens(F.col(text))).alias("tok"))
-    doc_tok = tok.groupBy(id_col, "tok").agg(F.count(F.lit(1)).alias("c"))
+    tok = df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("tok"))
+    doc_tok = tok.groupBy("doc_id", "tok").agg(F.count(F.lit(1)).alias("c"))
     vocab = doc_tok.groupBy("tok").agg(F.sum("c").alias("n_tok"))
     total = vocab.agg(F.sum("n_tok").alias("n_total"))
     scored = doc_tok.join(vocab, "tok").crossJoin(F.broadcast(total))
-    return scored.groupBy(id_col).agg(
+    return scored.groupBy("doc_id").agg(
         F.sum("c").alias("n_tok_doc"),
         F.round(
             -F.sum(F.col("c") * F.log(F.col("n_tok") / F.col("n_total")))
@@ -561,41 +524,32 @@ QUALITY_CLF_WEIGHTS: dict[str, float] = {
 QUALITY_CLF_BIAS: float = 0.5
 
 
-def quality_classifier_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    threshold: float = 0.5,
-) -> DataFrame:
+def quality_classifier_score(df: DataFrame) -> DataFrame:
     """Model-based quality filtering, inference side: sigmoid(w·x + b) over
     the :func:`quality_features` signals with fixed offline-trained weights
     — the FineWeb-Edu/DCLM-style classifier gate (reference analog: the
     BERT *data* path stops at features; classifier filtering is the LLM-
-    pipeline extension). Returns (id, quality_score, keep).
+    pipeline extension). Returns (doc_id, quality_score, keep) with keep =
+    score ≥ 0.5.
 
     Scale shape: pure narrow column arithmetic over the feature projection —
     no shuffle, no Python, whole-stage-codegen end to end; the weight vector
     is a plan literal. At 100 TB this is a map-only pass, the cheapest
     possible filtering stage.
     """
-    feats = quality_features(df, text=text)
+    feats = quality_features(df)
     z = F.lit(QUALITY_CLF_BIAS)
     for c, w in QUALITY_CLF_WEIGHTS.items():
         z = z + F.lit(w) * F.col(c)
     score = F.lit(1.0) / (F.lit(1.0) + F.exp(-z))
     return feats.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.round(score, 4).alias("quality_score"),
-        (score >= threshold).alias("keep"),
+        (score >= 0.5).alias("keep"),
     )
 
 
-def inverted_index(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text: str = "text",
-    top_terms: int = 50,
-) -> DataFrame:
+def inverted_index(df: DataFrame, top_terms: int = 50) -> DataFrame:
     """Posting-list inverted index summary: per term, document frequency,
     total term frequency, and an md5 digest of the sorted posting list.
 
@@ -609,7 +563,7 @@ def inverted_index(
     (each term's list is already grouped); the digest form is the gate.
     """
     tok = df.select(
-        F.col(id_col).alias("_doc"), F.explode(tokens(F.col(text))).alias("tok")
+        F.col("doc_id").alias("_doc"), F.explode(tokens(F.col("text"))).alias("tok")
     )
     # ONE exchange for BOTH aggregations: hash-partitioning by tok alone
     # also satisfies the (tok, _doc) clustering, so the tf agg AND the

@@ -70,4 +70,18 @@ REATTEST: frozenset[str] = frozenset({
     # its fixture write goes through layouts.partitioned_writer (the
     # BM25/IVF writers above moved there too)
     "dpp_partition_pruned_join",
+    # the persisted LSH reference: one bucketed writer for its two tables,
+    # and readers check the meta row against the MinHash constants
+    "incremental_neardup_persisted",
+    "incremental_neardup_clusters_equiv",
+    "streaming_neardup_ingest_equiv",
+    # connected_components_incremental names its contracted label edges
+    # (id_a, id_b) and calls connected_components without column options
+    "entity_clusters_incremental_equiv",
+    # the link-prediction scores share one wedge and one top-k step
+    "common_neighbors_linkpred",
+    "resource_allocation_linkpred",
+    # the triangle kernels share one checkpointed edge projection
+    "triangle_count_parts",
+    "clustering_coefficient_parts",
 })

@@ -133,30 +133,22 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # making the approximate dedup fully hash-checked, not rows-only.
 
 
-def _minhash_params(num_hashes: int = 16, seed: int = 42) -> list[tuple[int, int]]:
-    # the ONE source of truth for the hash params is the operator module —
-    # oracle and operator must derive identical (a, b) or the signature
-    # parity silently breaks.
-    return D._minhash_hash_params(num_hashes, seed)
-
-
-def _minhash_ctes(
-    num_hashes: int = 16,
-    bands: int = 4,
-    cand_on: str = "a.id < b.id",
-) -> str:
+def _minhash_ctes(cand_on: str = "a.id < b.id") -> str:
     """The shared CTE chain replaying the MinHash-LSH pipeline in DuckDB up
     to ``verified(id_a, id_b, jaccard)``; composed by the pairs oracle and
     the connected-components oracles below. ``cand_on`` is the extra
     candidate-pair predicate: the default self-join half-plane, or a
-    new-batch/reference split for the incremental join oracle."""
+    new-batch/reference split for the incremental join oracle. The hash
+    parameters and banding are the operator module's constants — oracle
+    and operator must derive identical (a, b) or the signature parity
+    silently breaks."""
     p = D._MERSENNE_P
-    rows_per = num_hashes // bands
+    bands, rows_per = D.BANDS, D.ROWS_PER_BAND
     # (x % p) first — x is the full 60-bit md5 residue; (x % p) * a < 2^62
     # stays inside BIGINT, mirroring the Spark operator exactly.
     sig_items = ", ".join(
         f"list_min(list_transform(hs, x -> ((x % {p}) * {a} + {b}) % {p}))"
-        for a, b in _minhash_params(num_hashes)
+        for a, b in D.MINHASH_PARAMS
     )
     return f"""toked AS (
       SELECT doc_id AS id,
@@ -202,11 +194,11 @@ def _minhash_ctes(
     )"""
 
 
-def _minhash_oracle_sql(num_hashes: int = 16, bands: int = 4, thr: float = 0.5) -> str:
+def _minhash_oracle_sql() -> str:
     return f"""
-    WITH {_minhash_ctes(num_hashes, bands)}
+    WITH {_minhash_ctes()}
     SELECT id_a, id_b, round(jaccard, 4) AS jaccard
-    FROM verified WHERE jaccard >= {thr}
+    FROM verified WHERE jaccard >= 0.5
     """
 
 
@@ -239,9 +231,7 @@ def _components_ctes(thr: float = 0.5) -> str:
     survey_ref="§2.10 MinHash+LSH near-dup (shingle→minhash→band→bucket-join)",
 )
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = D.minhash_lsh_pairs(
-        _docs(spark, sf_dir), shingle_n=3, num_hashes=16, bands=4, jaccard_threshold=0.5
-    )
+    out = D.minhash_lsh_pairs(_docs(spark, sf_dir), jaccard_threshold=0.5)
     return out.withColumn("jaccard", F.round("jaccard", 4))
 
 
@@ -262,9 +252,6 @@ def incremental_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = D.minhash_lsh_join(
         docs.filter(F.col("doc_id") % 5 == 0),
         docs.filter(F.col("doc_id") % 5 != 0),
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
         jaccard_threshold=0.5,
     )
     return out.withColumn("jaccard", F.round("jaccard", 4))
@@ -307,9 +294,6 @@ def incremental_neardup_persisted(spark: SparkSession, sf_dir: str) -> DataFrame
     D.write_lsh_reference(
         docs.filter(F.col("doc_id") % 5 != 0),
         prefix,
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
         buckets=8,
         path=path,
     )
@@ -361,7 +345,7 @@ _SIMHASH_ORACLE = """
     survey_ref="§2.10 SimHash near-dup (banded hamming)",
 )
 def simhash_near_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = D.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3, bands=4)
+    out = D.simhash_near_pairs(_docs(spark, sf_dir), max_hamming=3)
     return out.select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
@@ -527,7 +511,7 @@ def hash_split_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.10 text analysis: tf-idf characteristic terms (rational idf — see operator docstring)",
 )
 def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    out = T.tfidf_top_terms(_docs(spark, sf_dir), k=3)
+    out = T.tfidf_top_terms(_docs(spark, sf_dir))
     return out.select(
         "doc_id", "term", "tf", "df",
         F.round("tfidf", 4).alias("tfidf"),
@@ -595,16 +579,9 @@ def _doc_pairs_clusters(
     call re-runs the whole shingle+md5+band+verify pipeline, which is the
     dominant per-corpus cost at scale."""
     docs = _docs(spark, sf_dir)
-    # materialize=True is the reuse contract, not just the default: both
-    # consumers (CC seed loop + the diameter edge census) re-execute the
-    # full shingle+verify pipeline per branch if this frame is ever lazy
-    # (ADVICE r9 — pin it in code, plan guards can't see behind checkpoints)
-    pairs = D.minhash_lsh_pairs(
-        docs, shingle_n=3, num_hashes=16, bands=4, jaccard_threshold=0.5,
-        materialize=True,
-    )
+    pairs = D.minhash_lsh_pairs(docs, jaccard_threshold=0.5)
     comps = D.connected_components(
-        docs.select("doc_id"), pairs, id_col="doc_id", edge_a="id_a", edge_b="id_b"
+        docs.select("doc_id"), pairs, id_col="doc_id"
     ).select(F.col("node").alias("doc_id"), "cluster_id")
     return pairs, comps
 
@@ -735,7 +712,7 @@ def decontamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     ev = docs.filter(F.col("doc_id") % 40 == 0)
     tr = docs.filter(F.col("doc_id") % 40 != 0)
-    return T.ngram_overlap_pairs(tr, ev, n=3, min_shared=2)
+    return T.ngram_overlap_pairs(tr, ev)
 
 
 @query(
@@ -767,7 +744,7 @@ def decontamination_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.10 intra-doc repetition signals (Gopher-style dup/top n-gram fractions)",
 )
 def repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.repetition_scores(_docs(spark, sf_dir), n=2)
+    return T.repetition_scores(_docs(spark, sf_dir))
 
 
 # --- PII redaction ------------------------------------------------------------
@@ -916,7 +893,7 @@ def training_set_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = docs.filter(F.col("doc_id") % 40 == 0)
     tr = docs.filter(F.col("doc_id") % 40 != 0)
     contaminated = (
-        T.ngram_overlap_pairs(tr, ev, n=3, min_shared=2)
+        T.ngram_overlap_pairs(tr, ev)
         .select(F.col("train_id").alias("doc_id"))
         .distinct()
     )
@@ -979,7 +956,7 @@ _GRAMS3 = """
     survey_ref="§2.10 boilerplate phrase detection (C4 repeated-line removal, phrase unit)",
 )
 def boilerplate_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.frequent_ngrams(_docs(spark, sf_dir), n=3, min_docs=3)
+    return T.frequent_ngrams(_docs(spark, sf_dir))
 
 
 @query(
@@ -1007,8 +984,7 @@ def boilerplate_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def boilerplate_doc_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
-    freq = T.frequent_ngrams(docs, n=3, min_docs=3)
-    return T.boilerplate_coverage(docs, freq, n=3)
+    return T.boilerplate_coverage(docs, T.frequent_ngrams(docs))
 
 
 # --- tokenizer training + LM-quality scoring (§2.10 extensions) ---------------------

@@ -198,7 +198,7 @@ def inverted_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines build IDENTICAL posting lists without emitting arrays
     (the r3 unhashable-list driver lesson)."""
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    return T.inverted_index(docs, "doc_id", "text", top_terms=50)
+    return T.inverted_index(docs, top_terms=50)
 
 
 # --- temporal embargo split --------------------------------------------------
@@ -694,7 +694,7 @@ def lsh_recall_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.operators.exact_math import ratio_e4
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    out = _audit(docs, shingle_n=3, num_hashes=16, bands=4, jaccard_threshold=0.5)
+    out = _audit(docs)
     return out.select(
         "n_true_pairs",
         "n_found_pairs",
@@ -1849,11 +1849,8 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.operators import dedup as D
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    hashed = D._hashed_shingles(docs, "doc_id", "text", 3).localCheckpoint(
-        eager=True
-    )
-    params = D._minhash_hash_params(16, 42)
-    banded = D._banded(hashed, params, 4, 4)
+    hashed = D._hashed_shingles(docs).localCheckpoint(eager=True)
+    banded = D._banded(hashed)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
         a.join(
@@ -4181,7 +4178,7 @@ def prefix_filter_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.operators.exact_math import ratio_e4
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    out = prefix_filter_jaccard_pairs(docs, n=3, t_num=3, t_den=10)
+    out = prefix_filter_jaccard_pairs(docs)
     return out.select(
         "id_a",
         "id_b",
@@ -4654,7 +4651,7 @@ def containment_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("text"),
     )
     src = docs.select("doc_id", "text").unionByName(excerpts)
-    out = containment_prefix_pairs(src, n=3, t_num=4, t_den=5)
+    out = containment_prefix_pairs(src)
     return out.select(
         "id_a",
         "id_b",

@@ -741,31 +741,22 @@ def incremental_neardup_clusters_equiv(spark: SparkSession, sf_dir: str) -> Data
     # the reference write AND the within-c1 pairs; b2 by the reference
     # screen AND the within-b2 pairs), and each call used to re-run the
     # shingle+md5 scan. Hash each slice ONCE and pass the frame through
-    # the operators' shared-``hashed`` kwarg; shingle_n=3 matches every
-    # call site (the reference meta records it). The operator calls all
+    # the operators' shared-``hashed`` kwarg. The operator calls all
     # materialize eagerly inside this function, so unpersisting on exit
     # is safe — the returned plan references only checkpointed frames.
-    h1 = D._hashed_shingles(c1, "doc_id", "text", 3).persist()
-    h2 = D._hashed_shingles(b2, "doc_id", "text", 3).persist()
+    h1 = D._hashed_shingles(c1).persist()
+    h2 = D._hashed_shingles(b2).persist()
     try:
-        D.write_lsh_reference(
-            c1, prefix, shingle_n=3, num_hashes=16, bands=4, buckets=8,
-            path=path, hashed=h1,
-        )
-        pairs1 = D.minhash_lsh_pairs(
-            c1, shingle_n=3, num_hashes=16, bands=4, jaccard_threshold=0.5,
-            hashed=h1,
-        )
+        D.write_lsh_reference(c1, prefix, buckets=8, path=path, hashed=h1)
+        pairs1 = D.minhash_lsh_pairs(c1, jaccard_threshold=0.5, hashed=h1)
         labels1 = D.connected_components(
-            c1.select("doc_id"), pairs1, id_col="doc_id", edge_a="id_a",
-            edge_b="id_b",
+            c1.select("doc_id"), pairs1, id_col="doc_id"
         )
         cross = D.minhash_lsh_join_reference(
             b2, prefix, jaccard_threshold=0.5, new_hashed=h2
         ).select(F.col("new_id").alias("id_a"), F.col("ref_id").alias("id_b"))
         within = D.minhash_lsh_pairs(
-            b2, shingle_n=3, num_hashes=16, bands=4, jaccard_threshold=0.5,
-            hashed=h2,
+            b2, jaccard_threshold=0.5, hashed=h2
         ).select("id_a", "id_b")
         inc = D.connected_components_incremental(
             labels1, cross.unionByName(within)

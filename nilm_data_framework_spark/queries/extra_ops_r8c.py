@@ -742,9 +742,7 @@ def winnowing_fingerprint_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.col("doc_id") + F.lit(1000000)
     )
     duped = docs.unionByName(copies)
-    return winnowing_shared_pairs(
-        duped, n=3, w=4, min_shared=2, max_df=50
-    )
+    return winnowing_shared_pairs(duped)
 
 
 # --- ColBERT-style MaxSim multi-vector retrieval -----------------------------------

@@ -716,16 +716,14 @@ def streaming_neardup_ingest_equiv(spark: SparkSession, sf_dir: str) -> DataFram
         # used to re-shingle k+2 times) — the r9-opt shared-``hashed``
         # contract; every consumer materializes eagerly inside this
         # function, so the scoped unpersist is safe
-        hb = D._hashed_shingles(batch, "doc_id", "text", 3).persist()
+        hb = D._hashed_shingles(batch).persist()
         try:
             within = D.minhash_lsh_pairs(
-                batch, shingle_n=3, num_hashes=16, bands=4,
-                jaccard_threshold=0.5, hashed=hb,
+                batch, jaccard_threshold=0.5, hashed=hb
             ).select("id_a", "id_b")
             if batch_id == 0:
                 labels = D.connected_components(
-                    batch.select("doc_id"), within,
-                    id_col="doc_id", edge_a="id_a", edge_b="id_b",
+                    batch.select("doc_id"), within, id_col="doc_id"
                 )
             else:
                 cross = None
@@ -763,8 +761,7 @@ def streaming_neardup_ingest_equiv(spark: SparkSession, sf_dir: str) -> DataFram
             # publish this batch as a segment AFTER its labels commit — a
             # replay overwrites both (write_lsh_reference is overwrite-always)
             D.write_lsh_reference(
-                batch, f"{prefix}_seg{batch_id}",
-                shingle_n=3, num_hashes=16, bands=4, buckets=8,
+                batch, f"{prefix}_seg{batch_id}", buckets=8,
                 path=os.path.join(scratch, f"seg{batch_id}"), hashed=hb,
             )
         finally:

@@ -1263,9 +1263,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     core_edges = pairs.join(
         core.select(F.col("id").alias("id_a")), "id_a", "left_semi"
     ).join(core.select(F.col("id").alias("id_b")), "id_b", "left_semi")
-    labels = D.connected_components_star(
-        core, core_edges, id_col="id", edge_a="id_a", edge_b="id_b"
-    )
+    labels = D.connected_components_star(core, core_edges)
     border = (
         sym.join(core.select(F.col("id").alias("s")), "s", "left_anti")
         .join(

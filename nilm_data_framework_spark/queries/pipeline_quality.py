@@ -55,7 +55,7 @@ _TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
 
 # --- DSIR importance weights --------------------------------------------------
 
-_DSIR_B = 1024
+_DSIR_B = LM.DSIR_BUCKETS
 
 
 @query(
@@ -99,9 +99,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     Sampling ∝ w is the DSIR data-selection recipe; the score itself is the
     driver-checkable part. Operator: operators/lm.py::dsir_importance."""
     d = _docs(spark, sf_dir)
-    return LM.dsir_importance(
-        d, F.col("source") == "src0", n_buckets=_DSIR_B
-    )
+    return LM.dsir_importance(d, F.col("source") == "src0")
 
 
 # --- Bloom-filter decontamination ---------------------------------------------
@@ -676,7 +674,7 @@ def pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey") * 2).alias("src"),
         (F.col("l_partkey") * 2 + 1).alias("dst"),
     ).distinct().localCheckpoint(eager=True)
-    ranks = G.pagerank_iteration(edges, damping=0.85)
+    ranks = G.pagerank_iteration(edges)
     n = edges.select(F.col("src").alias("vertex")).unionByName(
         edges.select(F.col("dst").alias("vertex"))
     ).distinct().agg(F.count(F.lit(1)).alias("_n"))

@@ -792,7 +792,7 @@ def fuzzy_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("concat(substr(p_name,1,3),'x',substr(p_name,5))").alias("p_name")
     )
     base = p.select("p_name").unionByName(typod)
-    out = fuzzy_name_pairs(base, "p_name", max_dist=2)
+    out = fuzzy_name_pairs(base, "p_name")
     return out.select("nm_a", "nm_b", F.col("dist").cast("long").alias("dist"))
 
 

@@ -141,7 +141,7 @@ def bigram_surprisal_score(spark: SparkSession, sf_dir: str) -> DataFrame:
 def doc_chunks_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.operators.text import doc_chunks
 
-    out = doc_chunks(_docs(spark, sf_dir), size=16, stride=8)
+    out = doc_chunks(_docs(spark, sf_dir))
     return out.select(
         "doc_id",
         F.col("chunk_idx").cast("long").alias("chunk_idx"),

@@ -30,9 +30,10 @@ _FILE_ORDER = ("ts", "channel_id")
 _PARTITION_COLS = ("dataset", "house_id")
 
 
-def write_readings(readings: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """At 100 TB: partition pruning on (dataset, house_id) + min/max ts
-    statistics in the footer give the P3 time-slice near-free scans.
+def write_readings(readings: DataFrame, path: str) -> None:
+    """Overwrite the store at ``path``. At 100 TB: partition pruning on
+    (dataset, house_id) + min/max ts statistics in the footer give the P3
+    time-slice near-free scans.
     Rows inside each file are ordered by (ts, channel_id).
     Caveat: when ``dataset`` is one literal for the whole frame, Catalyst
     folds that sort key away and the planner re-sorts by ``house_id``
@@ -43,9 +44,8 @@ def write_readings(readings: DataFrame, path: str, mode: str = "overwrite") -> N
     that size.
     A successful write records the frame's schema as
     ``{path}/_schema.json`` (:func:`read_readings` reads it)."""
-    partitioned_writer(readings, _PARTITION_COLS, _FILE_ORDER).mode(mode).parquet(path)
-    if mode != "ignore":
-        write_schema_sidecar(readings.sparkSession, path, readings.schema)
+    partitioned_writer(readings, _PARTITION_COLS, _FILE_ORDER).mode("overwrite").parquet(path)
+    write_schema_sidecar(readings.sparkSession, path, readings.schema)
 
 
 def read_readings(spark: SparkSession, path: str) -> DataFrame:
@@ -55,16 +55,11 @@ def read_readings(spark: SparkSession, path: str) -> DataFrame:
     return read_parquet(spark, path)
 
 
-def write_dim(dim: DataFrame, path: str, mode: str = "overwrite") -> None:
-    dim.coalesce(1).write.mode(mode).parquet(path)
+def write_dim(dim: DataFrame, path: str) -> None:
+    dim.coalesce(1).write.mode("overwrite").parquet(path)
 
 
-def write_readings_bucketed(
-    readings: DataFrame,
-    table: str,
-    buckets: int = 64,
-    mode: str = "overwrite",
-) -> None:
+def write_readings_bucketed(readings: DataFrame, table: str, buckets: int = 64) -> None:
     """Bucketed canonical table: hash-bucket + sort by the series key.
 
     Two tables bucketed the same way join WITHOUT an exchange — the join key
@@ -75,7 +70,7 @@ def write_readings_bucketed(
     tests/test_bucketing.py asserts the exchange-free plan.
     """
     (
-        readings.write.mode(mode)
+        readings.write.mode("overwrite")
         .bucketBy(buckets, "house_id", "channel_id")
         .sortBy("house_id", "channel_id")
         .format("parquet")
@@ -83,18 +78,13 @@ def write_readings_bucketed(
     )
 
 
-def merge_upsert_partitioned(
-    spark: SparkSession,
-    changes: DataFrame,
-    path: str,
-    partition_cols: list[str] = _PARTITION_COLS,
-    key_cols: list[str] = ("dataset", "house_id", "channel_id", "ts"),
-) -> None:
+def merge_upsert_partitioned(spark: SparkSession, changes: DataFrame, path: str) -> None:
     """Warehouse-style MERGE (upsert) against the canonical store WITHOUT a
     table format: rewrite ONLY the partitions the changelog touches, via
     dynamic partition overwrite. For each touched (dataset, house_id)
     partition: current rows anti-joined on the PK ∪ incoming rows — i.e.
-    update-else-insert. Untouched partitions are never read or written.
+    update-else-insert, keyed on (dataset, house_id, channel_id, ts).
+    Untouched partitions are never read or written.
 
     This is the plain-Spark equivalent of Delta/Iceberg MERGE INTO: those
     formats add file-level (not partition-level) rewrite granularity and
@@ -108,8 +98,8 @@ def merge_upsert_partitioned(
     gives in Hive SQL. The schema sidecar is rewritten with the merged
     frame's schema after the write.
     """
-    part_cols = list(partition_cols)
-    keys = list(key_cols)
+    part_cols = list(_PARTITION_COLS)
+    keys = [*_PARTITION_COLS, "channel_id", "ts"]
     # Pin the changes frame BEFORE the duplicate-key guard: the guard is an
     # eager extra job, and without pinning, a nondeterministic changes frame
     # (sample(), rand() filter, shuffle-order-dependent pick) could pass the
@@ -149,16 +139,16 @@ def merge_upsert_partitioned(
     write_schema_sidecar(spark, path, merged.schema)
 
 
-def write_readings_orc(readings: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """Alternate columnar sink: same (dataset, house_id) partitioned layout
-    in ORC. Spark's native ORC writer gives the identical pruning +
+def write_readings_orc(readings: DataFrame, path: str) -> None:
+    """Alternate columnar sink (overwrites ``path``): same (dataset,
+    house_id) partitioned layout in ORC. Spark's native ORC writer gives the identical pruning +
     min/max-statistics story as Parquet (both formats are first-class in
     the DataSource V2 scan path — predicate pushdown, column pruning, and
     vectorized reads all apply); interop target for Hive/Trino-flavored
     lakes that standardized on ORC. Columnar semantics are
     format-symmetric, which `tests/test_sources.py` pins by round-tripping
     the same frame through both sinks and comparing exactly."""
-    partitioned_writer(readings, _PARTITION_COLS, _FILE_ORDER).mode(mode).orc(path)
+    partitioned_writer(readings, _PARTITION_COLS, _FILE_ORDER).mode("overwrite").orc(path)
 
 
 def read_readings_orc(spark: SparkSession, path: str) -> DataFrame:

@@ -41,12 +41,13 @@ def resampled_stream(
     )
 
 
-def session_windows(events: DataFrame, gap: str = "5 minutes", watermark: str = "10 minutes") -> DataFrame:
+def session_windows(events: DataFrame) -> DataFrame:
     """Session-window aggregation — the streaming twin of the W5 ON-segment
-    logic: activity separated by < gap merges into one session."""
+    logic: activity separated by < 5 minutes merges into one session
+    (10-minute watermark)."""
     return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("w"), "device")
+        events.withWatermark("ts", "10 minutes")
+        .groupBy(F.session_window("ts", "5 minutes").alias("w"), "device")
         .agg(F.count(F.lit(1)).alias("n_events"), F.avg("apower").alias("avg_power"))
         .select(
             F.col("w.start").alias("session_start"),

@@ -46,25 +46,23 @@ STATE_SCHEMA = StructType(
 )
 
 
-def track_runs(
-    events: DataFrame,
-    threshold: float,
-    device: str = "device",
-    ts: str = "ts",
-    value: str = "apower",
-    watermark: str = "10 minutes",
-    flush_pad_ms: int = 10_000,
-) -> DataFrame:
+# track_runs: event-time watermark delay, and how far past the watermark
+# an open run is flushed
+RUNS_WATERMARK = "10 minutes"
+RUNS_FLUSH_PAD_MS = 10_000
+
+
+def track_runs(events: DataFrame, threshold: float) -> DataFrame:
     """Emit completed ON/OFF runs per device as they close.
 
-    Input: a streaming DataFrame with (device, ts timestamp, value double).
+    Input: a streaming DataFrame with (device, ts timestamp, apower).
     Output: one row per completed run (device, state, start/end epoch
     seconds, n_samples). The open run stays in state until its state flips
-    (or the group times out ``flush_pad_ms`` past the watermark, which
+    (or the group times out RUNS_FLUSH_PAD_MS past the watermark, which
     flushes it — that trailing flush is what drains open runs at the end
     of an availableNow replay).
 
-    ``flush_pad_ms`` is a TRADE (r7 review): the batch twin (W5
+    The flush pad is a TRADE (r7 review): the batch twin (W5
     run_segments) never splits a run on a time gap, so a device whose
     files lag more than the pad behind the watermark gets its open run
     flushed and then RESTARTED — one physical run emitted as two. Size
@@ -100,17 +98,17 @@ def track_runs(
             n += 1
             last = int(epoch)
         state.update((cur, start, n, last))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + flush_pad_ms)
+        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + RUNS_FLUSH_PAD_MS)
         yield pd.DataFrame(
             out, columns=["device", "state", "start_epoch", "end_epoch", "n_samples"]
         )
 
     prepared = events.select(
-        events[device].alias("device"),
-        events[ts].alias("ts"),
-        events[ts].cast("long").alias("_epoch"),
-        events[value].cast("double").alias("_val"),
-    ).withWatermark("ts", watermark)
+        events["device"],
+        events["ts"],
+        events["ts"].cast("long").alias("_epoch"),
+        events["apower"].cast("double").alias("_val"),
+    ).withWatermark("ts", RUNS_WATERMARK)
 
     return prepared.groupBy("device").applyInPandasWithState(
         update,
@@ -137,9 +135,9 @@ RUNNING_SCHEMA = StructType(
 )
 
 
-def running_totals_v2(events: DataFrame, device: str = "device", value: str = "apower") -> DataFrame:
-    """Per-device cumulative (count, sum) maintained in a ValueState and
-    re-emitted every micro-batch — the incremental twin of
+def running_totals_v2(events: DataFrame) -> DataFrame:
+    """Per-device cumulative (count, sum of apower) maintained in a
+    ValueState and re-emitted every micro-batch — the incremental twin of
     ``groupBy(device).agg(count, sum)``. After a bounded stream drains, the
     LAST emission per device must equal the batch aggregate (pinned in
     tests/test_stateful_reflect.py).
@@ -179,14 +177,14 @@ def running_totals_v2(events: DataFrame, device: str = "device", value: str = "a
             n, total = (self._agg.get() or (0, 0.0)) if self._agg.exists() else (0, 0.0)
             for pdf in rows:
                 n += int(len(pdf))
-                total += float(pdf[value].sum())
+                total += float(pdf["apower"].sum())
             self._agg.update((n, total))
             yield pd.DataFrame({"device": [key[0]], "n": [n], "total": [total]})
 
         def close(self) -> None:
             pass
 
-    return events.groupBy(device).transformWithStateInPandas(
+    return events.groupBy("device").transformWithStateInPandas(
         statefulProcessor=RunningAgg(),
         outputStructType=RUNNING_SCHEMA,
         outputMode="Update",
@@ -212,16 +210,13 @@ DEBOUNCE_STATE_SCHEMA = StructType(
 )
 
 
-def debounce_stream(
-    events: DataFrame,
-    gap_us: int,
-    user: str = "user_id",
-    etype: str = "event_type",
-    ts: str = "ts",
-    event_id: str = "event_id",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of queries/attribution_trends.py::debounce_events:
+# event-time watermark delay of the event-stream operators below
+EVENTS_WATERMARK = "1 hour"
+
+
+def debounce_stream(events: DataFrame, gap_us: int) -> DataFrame:
+    """Streaming twin of queries/attribution_trends.py::debounce_events
+    over (user_id, event_type, ts, event_id) events:
     per (user, type), an event starts a NEW burst iff it arrives >= gap_us
     after its predecessor; otherwise it extends the open burst. Emits every
     event tagged with its burst_id (append-mode safe: the chain rule
@@ -283,12 +278,12 @@ def debounce_stream(
     from pyspark.sql import functions as F
 
     prepared = events.select(
-        events[user].alias("user_id"),
-        events[etype].alias("event_type"),
-        events[ts].alias("ts"),
-        F.unix_micros(events[ts]).alias("_tus"),
-        events[event_id].alias("_eid"),
-    ).withWatermark("ts", watermark)
+        events["user_id"],
+        events["event_type"],
+        events["ts"],
+        F.unix_micros(events["ts"]).alias("_tus"),
+        events["event_id"].alias("_eid"),
+    ).withWatermark("ts", EVENTS_WATERMARK)
 
     return prepared.groupBy("user_id", "event_type").applyInPandasWithState(
         update,
@@ -316,15 +311,9 @@ TRIGRAM_STATE_SCHEMA = StructType(
 )
 
 
-def trigram_stream(
-    events: DataFrame,
-    user: str = "user_id",
-    etype: str = "event_type",
-    ts: str = "ts",
-    event_id: str = "event_id",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming twin of queries/extra_ops.py::event_type_trigrams: every
+def trigram_stream(events: DataFrame) -> DataFrame:
+    """Streaming twin of queries/extra_ops.py::event_type_trigrams over
+    (user_id, event_type, ts, event_id) events: every
     event completes the 3-step pattern (prev2, prev1, current) from two
     carried strings of per-user state — the incremental form of the batch
     lead()×2 window. Emits one row per completed trigram (append-safe: the
@@ -360,12 +349,12 @@ def trigram_stream(
     from pyspark.sql import functions as F
 
     prepared = events.select(
-        events[user].alias("user_id"),
-        events[ts].alias("ts"),
-        F.unix_micros(events[ts]).alias("_tus"),
-        events[event_id].alias("_eid"),
-        events[etype].alias("_et"),
-    ).withWatermark("ts", watermark)
+        events["user_id"],
+        events["ts"],
+        F.unix_micros(events["ts"]).alias("_tus"),
+        events["event_id"].alias("_eid"),
+        events["event_type"].alias("_et"),
+    ).withWatermark("ts", EVENTS_WATERMARK)
 
     return prepared.groupBy("user_id").applyInPandasWithState(
         update,

@@ -14,8 +14,7 @@ Steps, in order, fail-fast:
      never-attested queries into the next round's 50-row driver window).
   2. scripts/gen_coverage.py         — regenerate COVERAGE.md from the live
      registry.
-  3. scripts/gen_plans.py            — regenerate PLANS.md.
-  4. pytest tests/test_registry_order.py — prove the generated set, the
+  3. pytest tests/test_registry_order.py — prove the generated set, the
      artifacts, and the live registry agree and the driver window contains
      only unattested queries.
 
@@ -34,7 +33,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 STEPS: list[list[str]] = [
     [sys.executable, os.path.join(REPO, "scripts", "gen_driver_recorded.py")],
     [sys.executable, os.path.join(REPO, "scripts", "gen_coverage.py")],
-    [sys.executable, os.path.join(REPO, "scripts", "gen_plans.py")],
     [
         sys.executable,
         "-m",

@@ -67,15 +67,11 @@ def workloads(docs: DataFrame) -> dict:
         "exact_dup_groups": lambda: D.exact_dup_groups(docs).count(),
         "minhash_lsh_pairs": lambda: D.minhash_lsh_pairs(docs).count(),
         "neardup_clusters": lambda: D.connected_components(
-            docs.select("doc_id"),
-            D.minhash_lsh_pairs(docs),
-            id_col="doc_id",
-            edge_a="id_a",
-            edge_b="id_b",
+            docs.select("doc_id"), D.minhash_lsh_pairs(docs), id_col="doc_id"
         ).count(),
         "bigram_surprisal": lambda: L.bigram_surprisal(docs).count(),
         "oov_rate": lambda: L.oov_rate(docs, vocab_size=20).count(),
-        "repetition_scores": lambda: T.repetition_scores(docs, n=2).count(),
+        "repetition_scores": lambda: T.repetition_scores(docs).count(),
         "dsir_importance": lambda: L.dsir_importance(
             docs, F.col("source") == "src0"
         ).count(),
@@ -814,7 +810,7 @@ def fact_workloads(li: DataFrame, orders: DataFrame) -> dict:
             (F.col("l_suppkey") * 2).alias("src"),
             (F.col("l_partkey") * 2 + 1).alias("dst"),
         ).distinct().localCheckpoint(eager=True)
-        return G.pagerank_iteration(edges, damping=0.85).count()
+        return G.pagerank_iteration(edges).count()
 
     def _assoc_rules():
         return _copurchase_edges(li, support_col="sup").count()

@@ -1,13 +1,14 @@
-"""Call shapes of the retrieval operators and layout writers in code the
-suite never runs.
+"""Call shapes of the operators and layout writers in code the suite never
+runs.
 
 ``bench.py``, ``scripts/*.py`` and ``nilmbench/*.py`` call the similarity,
-text/BM25, persisted-RAG, canonical-store and index-maintenance functions,
-but no test executes them: a keyword or positional slot that a signature
-dropped (a stale ``id_col=``/``centroid_method=``/``write_partitions=``/
-``n_lists=``) would surface only when someone runs the script or the
-benchmark. This walks their ASTs and binds every such call's
-positional count and keyword names against the live signature.
+text/BM25, dedup, LM, graph, persisted-RAG, canonical-store and
+index-maintenance functions, but no test executes them: a keyword or
+positional slot that a signature dropped (a stale ``id_col=``/
+``centroid_method=``/``write_partitions=``/``n_lists=``/``materialize=``)
+would surface only when someone runs the script or the benchmark. This
+walks their ASTs and binds every such call's positional count and keyword
+names against the live signature.
 """
 
 from __future__ import annotations
@@ -16,14 +17,29 @@ import ast
 import inspect
 from pathlib import Path
 
-from nilm_data_framework_spark.operators import index_maintenance, similarity, text
+from nilm_data_framework_spark.operators import (
+    dedup,
+    graph,
+    index_maintenance,
+    lm,
+    similarity,
+    text,
+)
 from nilm_data_framework_spark.queries import extra_ops_r7
 from nilm_data_framework_spark.sources import canonical
+from nilm_data_framework_spark.streaming import stateful
 
 ROOT = Path(__file__).resolve().parent.parent
 MODULES = {
-    m.__name__: m for m in (similarity, text, extra_ops_r7, canonical, index_maintenance)
+    m.__name__: m
+    for m in (
+        similarity, text, dedup, lm, graph, stateful, extra_ops_r7, canonical,
+        index_maintenance,
+    )
 }
+# modules no unexecuted file calls today; listed so that a future caller
+# is bound too
+NO_CALLER = {stateful.__name__}
 
 
 def _public(mod) -> dict:
@@ -89,4 +105,4 @@ def test_unexecuted_callers_match_operator_signatures():
                 bad.append(f"{path.relative_to(ROOT)}:{node.lineno} {fn.__name__}: {e}")
     assert not bad, "\n".join(bad)
     # the walk must reach every module (it cannot pass by matching nothing)
-    assert seen == set(MODULES), sorted(seen)
+    assert seen == set(MODULES) - NO_CALLER, sorted(seen)

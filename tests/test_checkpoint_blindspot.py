@@ -21,20 +21,10 @@ from __future__ import annotations
 import contextlib
 import io
 
-import pytest
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 SF_DIR = "/root/testdata/sf0.001"
-
-
-@pytest.fixture()
-def no_checkpoints(monkeypatch):
-    """localCheckpoint → identity: plans stay fully visible to explain."""
-    monkeypatch.setattr(
-        DataFrame, "localCheckpoint", lambda self, eager=True: self
-    )
-    yield
 
 
 def _plan_of(df: DataFrame) -> str:
@@ -70,14 +60,43 @@ def test_hashmin_cc_loop_plans_no_cartesian(spark, no_checkpoints):
 def test_star_cc_loop_plans_no_cartesian(spark, no_checkpoints):
     from nilm_data_framework_spark.operators import dedup as D
 
+    # an unrolled star round references the previous edge set ~24 times
+    # (large-star then small-star), so a graph needing r rounds plans
+    # ~24^r copies: a star forest converges in ONE round, which still
+    # plans every join of the loop (both star steps, the exceptAll
+    # convergence probe, the singleton anti-join)
     nodes = spark.range(0, 8).select(F.col("id"))
     edges = spark.createDataFrame(
-        [(0, 1), (1, 2), (2, 3), (5, 6)], "id_a long, id_b long"
+        [(0, 1), (0, 2), (0, 3), (5, 6)], "id_a long, id_b long"
     )
-    out = D.connected_components_star(nodes, edges, id_col="id")
+    plan = _plan_of(D.connected_components_star(nodes, edges))
+    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan
     _assert_no_quadratic_fallback(
-        _plan_of(out), "connected_components_star (unrolled loop)", allow_bnlj=False
+        plan, "connected_components_star (unrolled loop)", allow_bnlj=False
     )
+
+
+def test_triangle_kernels_plan_equi_joins_only(spark, no_checkpoints):
+    # every join of the degree-ordered triangle kernels is an equi-join on
+    # vertex ids (degree attach, wedge self-join, closure probe). The only
+    # nested loops allowed are triangle_count's by-design attachment of
+    # its 1-row count aggregates (crossJoin(broadcast(...)), planned as a
+    # condition-free Cross join).
+    import re
+
+    from nilm_data_framework_spark.operators import graph as G
+
+    e = spark.createDataFrame(
+        [(0, 1), (1, 2), (0, 2), (2, 3)], "src long, dst long"
+    )
+    per_vertex = _plan_of(G.triangles_per_vertex(e))
+    assert "SortMergeJoin" in per_vertex or "BroadcastHashJoin" in per_vertex
+    _assert_no_quadratic_fallback(per_vertex, "triangles_per_vertex", allow_bnlj=False)
+    count = _plan_of(G.triangle_count(e))
+    assert "SortMergeJoin" in count or "BroadcastHashJoin" in count
+    _assert_no_quadratic_fallback(count, "triangle_count", allow_bnlj=True)
+    nlj_kinds = set(re.findall(r"BroadcastNestedLoopJoin (\w+)", count))
+    assert nlj_kinds == {"Cross"}, f"triangle_count: non-equi nested loop {nlj_kinds}"
 
 
 def test_pagerank_loop_plans_no_cartesian(spark, no_checkpoints):

@@ -240,7 +240,7 @@ def test_minhash_shared_hashed_identical_and_caller_owned(spark):
         (r["id_a"], r["id_b"], round(r["jaccard"], 9))
         for r in D.minhash_lsh_pairs(df).collect()
     }
-    h = D._hashed_shingles(df, "doc_id", "text", 3).persist()
+    h = D._hashed_shingles(df).persist()
     try:
         shared = {
             (r["id_a"], r["id_b"], round(r["jaccard"], 9))
@@ -253,6 +253,30 @@ def test_minhash_shared_hashed_identical_and_caller_owned(spark):
     finally:
         h.unpersist()
     assert cm.isEmpty(), "shared-hashed call leaked a cached plan"
+
+
+def test_lsh_reference_rejects_other_minhash_settings(spark, tmp_path):
+    """A reference hashed with other MinHash settings shares almost no
+    buckets with a batch, so every batch would screen clean: the readers
+    raise on a meta row that differs from the module constants."""
+    df = _pdf(spark)
+    prefix = "t_lsh_meta_check"
+    D.write_lsh_reference(df, prefix, buckets=2, path=str(tmp_path / "ref"))
+    try:
+        assert D.read_lsh_reference(spark, prefix)[2]["seed"] == D.MINHASH_SEED
+        spark.createDataFrame(
+            [(D.SHINGLE_N, D.NUM_HASHES, D.BANDS, D.MINHASH_SEED + 1, 2)],
+            "shingle_n int, num_hashes int, bands int, seed int, buckets int",
+        ).write.mode("overwrite").option("path", str(tmp_path / "meta2")).format(
+            "parquet"
+        ).saveAsTable(f"{prefix}_meta")
+        with pytest.raises(ValueError, match="MinHash settings"):
+            D.minhash_lsh_join_reference(df, prefix)
+        with pytest.raises(ValueError, match="MinHash settings"):
+            D.append_lsh_reference(df, prefix)
+    finally:
+        for s in ("buckets", "hs", "meta"):
+            spark.sql(f"DROP TABLE IF EXISTS {prefix}_{s}")
 
 
 def test_connected_components_transitive_chain(spark):
@@ -301,7 +325,7 @@ def test_ngram_overlap_pairs_counts(spark):
         "text": ["quick brown fox jumps high over anything"],
     }))
     rows = {(r["train_id"], r["eval_id"]): r["n_shared"]
-            for r in ngram_overlap_pairs(train, ev, n=3, min_shared=2).collect()}
+            for r in ngram_overlap_pairs(train, ev).collect()}
     # shared 3-grams between doc1 and eval: "quick brown fox", "brown fox jumps"
     assert rows == {(1, 100): 2}
 
@@ -315,7 +339,7 @@ def test_repetition_scores_known_doc(spark):
         "doc_id": [1, 2],
         "text": ["spam spam spam spam eggs", "all words differ here"],
     }))
-    out = {r["doc_id"]: r for r in repetition_scores(df, n=2).collect()}
+    out = {r["doc_id"]: r for r in repetition_scores(df).collect()}
     # doc1 2-grams: [spam spam, spam spam, spam spam, spam eggs] → 4 total,
     # 2 distinct, top count 3
     assert out[1]["n_grams"] == 4
@@ -353,9 +377,7 @@ def test_length_bucket_boundary_pair_is_lossless(spark):
     df = spark.createDataFrame(
         [(1, wa, "en"), (2, wb, "en")], "doc_id long, text string, block string"
     )
-    out = ngram_jaccard_pairs(
-        df, id_col="doc_id", text="text", n=1, threshold=0.1, block_col="block"
-    ).collect()
+    out = ngram_jaccard_pairs(df, n=1, threshold=0.1, block_col="block").collect()
     assert len(out) == 1 and out[0]["jaccard"] == 0.1
 
 
@@ -364,21 +386,10 @@ def test_simhash_pigeonhole_precondition_enforced(spark):
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, text string")
     try:
-        simhash_near_pairs(df, max_hamming=5, bands=4)
+        simhash_near_pairs(df, max_hamming=5)
         raise AssertionError("max_hamming > bands-1 not rejected")
     except ValueError as e:
         assert "pigeonhole" in str(e)
-
-
-def test_banding_rejects_indivisible_num_hashes(spark):
-    from nilm_data_framework_spark.operators.dedup import minhash_lsh_pairs
-
-    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
-    try:
-        minhash_lsh_pairs(df, num_hashes=16, bands=5).collect()
-        raise AssertionError("num_hashes % bands != 0 not rejected")
-    except ValueError as e:
-        assert "never banded" in str(e)
 
 
 def test_connected_components_raises_on_nonconvergence(spark):

@@ -99,10 +99,10 @@ def test_boilerplate_detection_contract(spark):
         (3, "hi there"),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    freq = frequent_ngrams(df, n=3, min_docs=3)
+    freq = frequent_ngrams(df)
     assert freq.count() == 1  # only "the quick brown"
 
-    cov = {r["doc_id"]: r for r in boilerplate_coverage(df, freq, n=3).collect()}
+    cov = {r["doc_id"]: r for r in boilerplate_coverage(df, freq).collect()}
     assert 3 not in cov  # too short → no grams → absent
     assert cov[0]["n_grams"] == 3 and cov[0]["n_boiler"] == 1
     assert cov[2]["n_grams"] == 3 and cov[2]["n_boiler"] == 1

@@ -89,8 +89,7 @@ def test_append_lsh_reference_equals_one_shot(spark):
     )
     pid = os.getpid()
     D.write_lsh_reference(
-        a, f"t_lshapp_inc_{pid}", shingle_n=3, num_hashes=16, bands=4,
-        buckets=8, path=os.path.join(base, "inc"),
+        a, f"t_lshapp_inc_{pid}", buckets=8, path=os.path.join(base, "inc"),
     )
     D.append_lsh_reference(b, f"t_lshapp_inc_{pid}")
     got = sorted(
@@ -104,8 +103,7 @@ def test_append_lsh_reference_equals_one_shot(spark):
         )
     )
     D.write_lsh_reference(
-        ref, f"t_lshapp_full_{pid}", shingle_n=3, num_hashes=16, bands=4,
-        buckets=8, path=os.path.join(base, "full"),
+        ref, f"t_lshapp_full_{pid}", buckets=8, path=os.path.join(base, "full"),
     )
     want = sorted(
         map(

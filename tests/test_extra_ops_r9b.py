@@ -118,7 +118,7 @@ def test_star_cc_long_path_beyond_hashmin_horizon(spark):
     )
     with pytest.raises(RuntimeError, match="did not converge"):
         D.connected_components(nodes, edges, id_col="id")
-    got = D.connected_components_star(nodes, edges, id_col="id")
+    got = D.connected_components_star(nodes, edges)
     labels = {r["node"]: r["cluster_id"] for r in got.collect()}
     assert len(labels) == 300
     assert set(labels.values()) == {0}
@@ -140,7 +140,7 @@ def test_star_cc_matches_hashmin_on_shallow_graph(spark):
     a = {(r["node"], r["cluster_id"])
          for r in D.connected_components(nodes, e, id_col="id").collect()}
     b = {(r["node"], r["cluster_id"])
-         for r in D.connected_components_star(nodes, e, id_col="id").collect()}
+         for r in D.connected_components_star(nodes, e).collect()}
     assert a == b
 
 
@@ -152,7 +152,7 @@ def test_star_cc_two_components_and_singleton(spark):
         [(2, 1), (2, 3), (7, 8)], "id_a long, id_b long"
     )
     got = {r["node"]: r["cluster_id"]
-           for r in D.connected_components_star(nodes, edges, id_col="id").collect()}
+           for r in D.connected_components_star(nodes, edges).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 7: 7, 8: 7, 42: 42}
 
 
@@ -189,5 +189,5 @@ def test_star_cc_matches_union_find(spark, raw):
         edges or [(None, None)], "id_a long, id_b long"
     ).filter(F.col("id_a").isNotNull())
     got = {r["node"]: r["cluster_id"]
-           for r in D.connected_components_star(nodes, e, id_col="id").collect()}
+           for r in D.connected_components_star(nodes, e).collect()}
     assert got == want

@@ -23,7 +23,7 @@ def test_common_neighbors_path_graph(spark):
     # path 1-2-3-4: non-adjacent pairs (1,3), (2,4) share exactly one
     # neighbor; (1,4) shares none and must not appear.
     out = common_neighbors_topk(
-        _edges(spark, [(1, 2), (2, 3), (3, 4)]), k=10, materialize=False
+        _edges(spark, [(1, 2), (2, 3), (3, 4)]), k=10
     ).collect()
     got = {(r["v1"], r["v2"]): r["n_common"] for r in out}
     assert got == {(1, 3): 1, (2, 4): 1}
@@ -34,7 +34,7 @@ def test_common_neighbors_excludes_adjacent_pairs(spark):
     # excluded even though each pair shares a neighbor; (1,4) and (2,4)
     # share neighbor 3.
     out = common_neighbors_topk(
-        _edges(spark, [(1, 2), (1, 3), (2, 3), (3, 4)]), k=10, materialize=False
+        _edges(spark, [(1, 2), (1, 3), (2, 3), (3, 4)]), k=10
     ).collect()
     got = {(r["v1"], r["v2"]): r["n_common"] for r in out}
     assert got == {(1, 4): 1, (2, 4): 1}
@@ -46,7 +46,6 @@ def test_common_neighbors_count_and_topk_order(spark):
     out = common_neighbors_topk(
         _edges(spark, [(1, 2), (1, 3), (2, 3), (2, 4), (3, 4)]),
         k=1,
-        materialize=False,
     ).collect()
     assert [(r["v1"], r["v2"], r["n_common"]) for r in out] == [(1, 4, 2)]
 
@@ -62,7 +61,6 @@ def test_resource_allocation_weights_by_center_degree(spark):
     out = resource_allocation_topk(
         _edges(spark, [(0, 1), (0, 2), (0, 3), (1, 5), (2, 6)]),
         k=10,
-        materialize=False,
     ).collect()
     got = {(r["v1"], r["v2"]): (r["n_common"], r["ra_e6"]) for r in out}
     assert got[(0, 5)] == (1, 500000)  # through vertex 1, deg 2
@@ -83,7 +81,7 @@ def test_resource_allocation_excludes_adjacent_pairs(spark):
     from nilm_data_framework_spark.operators.graph import resource_allocation_topk
 
     out = resource_allocation_topk(
-        _edges(spark, [(1, 2), (1, 3), (2, 3), (3, 4)]), k=10, materialize=False
+        _edges(spark, [(1, 2), (1, 3), (2, 3), (3, 4)]), k=10
     ).collect()
     got = {(r["v1"], r["v2"]): r["ra_e6"] for r in out}
     assert got == {(1, 4): 333333, (2, 4): 333333}
@@ -183,7 +181,7 @@ def test_resource_allocation_matches_python_reference(spark, edge_set):
                     sum(1_000_000 // len(adj[z]) for z in common),
                 )
     out = resource_allocation_topk(
-        _edges(spark, edges), k=100, materialize=False
+        _edges(spark, edges), k=100
     ).collect()
     got = {(r["v1"], r["v2"]): (r["n_common"], r["ra_e6"]) for r in out}
     assert got == want

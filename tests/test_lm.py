@@ -112,7 +112,7 @@ def test_doc_chunks_semantics(spark):
     )
     rows = {
         (r["doc_id"], r["chunk_idx"]): r
-        for r in doc_chunks(df, size=16, stride=8).collect()
+        for r in doc_chunks(df).collect()
     }
     # doc 0: 20 tokens -> starts 1, 9, 17 -> lens 16, 12, 4 (tail kept)
     assert [(rows[(0, i)]["start_tok"], rows[(0, i)]["n_tok"]) for i in range(3)] == [

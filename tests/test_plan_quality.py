@@ -239,12 +239,12 @@ def test_oov_vocab_membership_join_broadcasts(spark):
     assert "BroadcastHashJoin" in plan, "vocab membership join is not broadcast"
 
 
-def test_incremental_lsh_join_is_equi(spark):
+def test_incremental_lsh_join_is_equi(spark, no_checkpoints):
     # Candidate generation must be the (band, bucket) equi-join — a nested
     # loop or cartesian here would be the N² the LSH exists to avoid. The
-    # registered query eager-checkpoints (its .explain is just a Scan
-    # ExistingRDD — no join node can appear), so assert on the operator's
-    # materialize=False lazy plan, which preserves the full Catalyst tree.
+    # operator eager-checkpoints its result (its .explain is just a Scan
+    # ExistingRDD — no join node can appear), so build it with
+    # localCheckpoint no-op'd, which preserves the full Catalyst tree.
     import contextlib
     import io
 
@@ -256,11 +256,7 @@ def test_incremental_lsh_join_is_equi(spark):
     out = D.minhash_lsh_join(
         docs.filter(F.col("doc_id") % 5 == 0),
         docs.filter(F.col("doc_id") % 5 != 0),
-        shingle_n=3,
-        num_hashes=16,
-        bands=4,
         jaccard_threshold=0.5,
-        materialize=False,
     )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -641,7 +637,7 @@ def test_lsh_reference_corpus_side_never_shuffles(spark, tmp_path):
     prefix = "t_lsh_ref_plan"
     D.write_lsh_reference(
         docs.filter(F.col("doc_id") % 5 != 0), prefix,
-        num_hashes=16, bands=4, buckets=4, path=str(tmp_path / "ref"),
+        buckets=4, path=str(tmp_path / "ref"),
     )
     old_thr = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
@@ -661,10 +657,7 @@ def test_lsh_reference_corpus_side_never_shuffles(spark, tmp_path):
         # candidate join: exactly ONE exchange — the new batch being
         # repartitioned into the reference's bucketing
         batch = docs.filter(F.col("doc_id") % 5 == 0)
-        hashed_new = D._hashed_shingles(batch, "doc_id", "text", 3)
-        banded_new = D._banded(
-            hashed_new, D._minhash_hash_params(16, 42), 4, 4
-        )
+        banded_new = D._banded(D._hashed_shingles(batch))
         cand = banded_new.withColumnRenamed("id", "new_id").join(
             ref_banded, ["band", "bucket"]
         )
@@ -683,8 +676,7 @@ def test_lsh_reference_corpus_side_never_shuffles(spark, tmp_path):
         # end-to-end: the reference-driven screen equals the on-the-fly one
         got = D.minhash_lsh_join_reference(batch, prefix).collect()
         want = D.minhash_lsh_join(
-            batch, docs.filter(F.col("doc_id") % 5 != 0),
-            num_hashes=16, bands=4,
+            batch, docs.filter(F.col("doc_id") % 5 != 0)
         ).collect()
         assert sorted(map(tuple, got)) == sorted(map(tuple, want))
     finally:

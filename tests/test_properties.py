@@ -64,7 +64,7 @@ def test_partitioning_invariance(spark, parts):
 
     for op in (
         lambda d: span_dedup(d, span=3),
-        lambda d: fuzzy_name_pairs(d.select(F.col("text").alias("nm")), "nm", 2),
+        lambda d: fuzzy_name_pairs(d.select(F.col("text").alias("nm")), "nm"),
         lambda d: stratified_sample(
             d, "text", {}, id_col="doc_id", default_rate=0.5
         ).select("doc_id"),

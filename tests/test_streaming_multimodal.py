@@ -140,7 +140,7 @@ def test_streaming_session_windows(spark, tmp_path):
     stream = read_mqtt_stream(spark, str(logs))
     from nilm_data_framework_spark.streaming.ingest import session_windows as sw
 
-    sess = sw(stream, gap="5 minutes", watermark="30 minutes")
+    sess = sw(stream)
     q = (
         sess.writeStream.format("memory")
         .queryName("sess_out")
