@@ -16,7 +16,7 @@ def aggregate_from_appliances(
     readings: DataFrame,
     keys: list[str],
     seconds: int | None = None,
-    ts: str = "ts",
+    *,
     value: str = "power",
     channel: str | None = None,
 ) -> DataFrame:
@@ -40,9 +40,9 @@ def aggregate_from_appliances(
     coincide in intent).
     """
     if seconds is None:
-        grp = readings.groupBy(*keys, F.col(ts).alias("bucket_ts"))
+        grp = readings.groupBy(*keys, F.col("ts").alias("bucket_ts"))
         return grp.agg(F.sum(value).alias("aggregate_computed"))
-    bucket = F.window(F.col(ts), f"{seconds} seconds")["start"].alias("bucket_ts")
+    bucket = F.window(F.col("ts"), f"{seconds} seconds")["start"].alias("bucket_ts")
     if channel is None:
         grp = readings.groupBy(*keys, bucket)
         return grp.agg(F.sum(value).alias("aggregate_computed"))
@@ -54,11 +54,9 @@ def aggregate_from_appliances(
     )
 
 
-def dedup_mean(
-    df: DataFrame, keys: list[str], value: str, out: str = "avg_value"
-) -> DataFrame:
-    """A3: groupby(keys).mean() (preprocess_shelly.py:63)."""
-    return df.groupBy(*keys).agg(F.avg(value).alias(out))
+def dedup_mean(df: DataFrame, keys: list[str], value: str) -> DataFrame:
+    """A3: groupby(keys).mean() as ``avg_value`` (preprocess_shelly.py:63)."""
+    return df.groupBy(*keys).agg(F.avg(value).alias("avg_value"))
 
 
 def pivot_wide(
@@ -82,14 +80,14 @@ def pivot_wide(
 
 
 def daily_activity(
-    readings: DataFrame, device: str, ts: str = "ts", value: str = "power"
+    readings: DataFrame, device: str, *, value: str = "power"
 ) -> DataFrame:
     """A5: per-day count of devices whose daily SUM of consumption is
     positive (insights_oladatasets.ipynb cell 1). Note this is the
     day-total test, not "any positive reading" — they differ only under
     signed values (e.g. PV export netting a day to ≤ 0)."""
     daily = readings.groupBy(
-        F.date_trunc("day", F.col(ts)).alias("day"), F.col(device)
+        F.date_trunc("day", F.col("ts")).alias("day"), F.col(device)
     ).agg(F.sum(value).alias("day_sum"))
     return daily.groupBy("day").agg(
         F.count(F.when(F.col("day_sum") > 0, 1)).alias("active_devices")
@@ -97,12 +95,12 @@ def daily_activity(
 
 
 def active_hours(
-    readings: DataFrame, device: str, ts: str = "ts", value: str = "power"
+    readings: DataFrame, device: str, *, value: str = "power"
 ) -> DataFrame:
     """A8: per-device count of hours whose mean consumption > 0
     (insights_oladatasets.ipynb cell 2)."""
     hourly = readings.groupBy(
-        F.col(device), F.date_trunc("hour", F.col(ts)).alias("hour")
+        F.col(device), F.date_trunc("hour", F.col("ts")).alias("hour")
     ).agg(F.avg(value).alias("hour_avg"))
     return hourly.groupBy(device).agg(
         F.count(F.when(F.col("hour_avg") > 0, 1)).alias("active_hours")
@@ -134,7 +132,7 @@ def exact_quantile(
 def pairwise_corr(
     readings: DataFrame,
     pair_col: str,
-    ts: str = "ts",
+    *,
     value: str = "power",
     seconds: int = 60,
 ) -> DataFrame:
@@ -148,7 +146,7 @@ def pairwise_corr(
     """
     b = (
         readings.groupBy(
-            F.col(pair_col), F.window(F.col(ts), f"{seconds} seconds")["start"].alias("bucket_ts")
+            F.col(pair_col), F.window(F.col("ts"), f"{seconds} seconds")["start"].alias("bucket_ts")
         )
         .agg(F.avg(value).alias("v"))
     )
@@ -167,7 +165,7 @@ def pairwise_corr_onepass(
     readings: DataFrame,
     pair_col: str,
     series_values: list[str],
-    ts: str = "ts",
+    *,
     value: str = "power",
     seconds: int = 60,
 ) -> DataFrame:
@@ -195,7 +193,7 @@ def pairwise_corr_onepass(
     cols = sorted(series_values)
     wide = (
         readings.groupBy(
-            F.window(F.col(ts), f"{seconds} seconds")["start"].alias("bucket_ts")
+            F.window(F.col("ts"), f"{seconds} seconds")["start"].alias("bucket_ts")
         )
         .pivot(pair_col, cols)
         .agg(F.avg(value))
@@ -259,10 +257,7 @@ def weighted_mean_udaf():
 
 
 def cohort_retention(
-    df: DataFrame,
-    entity: str,
-    ts: str = "ts",
-    period_s: int = 7 * 86400,
+    df: DataFrame, entity: str, *, period_s: int = 7 * 86400
 ) -> DataFrame:
     """Cohort retention matrix: assign each entity to the cohort of its
     FIRST activity period (epoch // period_s — fixed-width periods avoid
@@ -279,7 +274,7 @@ def cohort_retention(
     """
     from nilm_data_framework_spark.operators.exact_math import epoch_div
 
-    period = epoch_div(ts, period_s)
+    period = epoch_div("ts", period_s)
     active = df.select(F.col(entity), period.alias("_p")).distinct()
     first = active.groupBy(entity).agg(F.min("_p").alias("_cohort"))
     joined = active.join(first, entity)

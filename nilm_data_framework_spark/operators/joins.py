@@ -41,8 +41,6 @@ def common_channel_best_pick(
     group: list[str],
     label: str,
     required_labels: list[str],
-    var_col: str = "var_value",
-    len_col: str = "n",
 ) -> DataFrame:
     """J5: cross-dataset house intersection + best-channel pick
     (channel_utils.py:7-81).
@@ -53,8 +51,8 @@ def common_channel_best_pick(
        tie → longest (channel_utils.py:63-71) — row_number over
        (var desc, n desc).
 
-    ``channels_stats`` carries one row per channel with its variance/length
-    (from aggregates.channel_stats joined to the channels dim).
+    ``channels_stats`` carries one row per channel with its ``var_value``
+    and ``n`` (aggregates.channel_stats' columns).
     """
     req = F.array(*[F.lit(x) for x in required_labels])
     covered = (
@@ -70,7 +68,7 @@ def common_channel_best_pick(
         F.col(label).isin(required_labels)
     )
     w = Window.partitionBy(*group, label).orderBy(
-        F.col(var_col).desc_nulls_last(), F.col(len_col).desc(), F.col("channel_id")
+        F.col("var_value").desc_nulls_last(), F.col("n").desc(), F.col("channel_id")
     )
     return (
         eligible.withColumn("_rk", F.row_number().over(w))
@@ -79,98 +77,57 @@ def common_channel_best_pick(
     )
 
 
-def range_join(
-    fact: DataFrame,
-    intervals: DataFrame,
-    fact_ts: str,
-    start: str = "start_ts",
-    end: str = "end_ts",
-    extra_keys: list[str] | None = None,
-) -> DataFrame:
+def range_join(fact: DataFrame, intervals: DataFrame, fact_ts: str) -> DataFrame:
     """Engine extension: interval range join — each fact row matched to the
-    interval(s) containing its timestamp (half-open: start <= ts < end).
+    interval(s) containing its timestamp (half-open: start_ts <= ts < end_ts).
 
     Scale stance: the intervals side is a small dim → broadcast, so the plan
     is a BroadcastNestedLoopJoin with the range predicate evaluated stream-
     side (no shuffle of the fact). For fact-fact range joins at 100 TB,
-    bucket both sides by time epoch first so each bucket joins co-partitioned
-    (not needed for dim-sized interval sets).
+    :func:`range_join_bucketed` buckets both sides by time epoch so each
+    bucket joins co-partitioned (not needed for dim-sized interval sets).
     """
-    # rename the interval side's equi-keys before joining: an expression
-    # condition keeps BOTH same-named key columns in the output, and any
-    # later select/groupBy by name raises AMBIGUOUS_REFERENCE. The _iv_*
-    # names are RESERVED (the scale_windows reserved-column pattern): a
-    # fact column coincidentally named _iv_<key> would be silently dropped
-    # by the post-join drop-by-name, so reject it outright.
-    for k in extra_keys or []:
-        if f"_iv_{k}" in fact.columns:
-            raise ValueError(
-                f"range_join: fact frame carries reserved working column "
-                f"'_iv_{k}' — rename it before joining"
-            )
-    iv = intervals
-    for k in extra_keys or []:
-        iv = iv.withColumnRenamed(k, f"_iv_{k}")
-    cond = (F.col(fact_ts) >= F.col(start)) & (F.col(fact_ts) < F.col(end))
-    for k in extra_keys or []:
-        cond = cond & (fact[k] == iv[f"_iv_{k}"])
-    out = fact.join(F.broadcast(iv), on=cond)
-    for k in extra_keys or []:
-        out = out.drop(f"_iv_{k}")
-    return out
+    cond = (F.col(fact_ts) >= F.col("start_ts")) & (F.col(fact_ts) < F.col("end_ts"))
+    return fact.join(F.broadcast(intervals), on=cond)
 
 
 def asof_join(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_value: str = "power",
-    out: str = "asof_value",
-    tolerance_s: float | None = None,
+    left: DataFrame, right: DataFrame, keys: list[str], *, right_value: str = "power"
 ) -> DataFrame:
-    """Engine extension: as-of (nearest-previous) join — the natural
-    generalization of J4 time alignment for mismatched clocks.
+    """Engine extension: as-of (nearest-previous) join on ``ts`` — the
+    natural generalization of J4 time alignment for mismatched clocks.
+    Emits the left rows plus ``asof_value``, the ``right_value`` of the
+    key's last right row at-or-before the left ``ts`` (null when none).
 
     Implemented shuffle-lean: union both sides tagged, sort within each key
     partition, and carry the last right-side ROW forward as ONE struct with
     ``last(..., ignorenulls=True)`` — one shuffle on ``keys``, no range
-    cross-product. Left rows with no prior right row (or outside
-    ``tolerance_s``) get null.
+    cross-product.
 
     The struct carry (r7) is load-bearing twice: (a) a right row whose
     value is NULL is still the as-of row (matching pd.merge_asof and
     DuckDB ASOF JOIN) — carrying value and ts as SEPARATE
     last(ignorenulls) columns skipped the null-valued row's value but
-    kept its timestamp, returning a STALE value paired with the wrong ts
-    for the tolerance check; (b) the window orders by the struct as the
+    kept its timestamp; (b) the window orders by the struct as the
     final tiebreak, so duplicate (key, ts) right rows resolve
     deterministically instead of shuffle-order.
 
-    TIE POLICY (r8, uniform across both as-of variants): duplicate
-    (keys, right_ts) right rows resolve to the MAX value among ties
+    TIE POLICY (r8, uniform across the as-of family): duplicate
+    (keys, ts) right rows resolve to the MAX value among ties
     (NULL sorting first, so the max non-null wins; all-null ties yield
     null). pd.merge_asof's "last row in input order" rule is NOT a
     distributed semantics — input order does not survive a shuffle — so
-    :func:`asof_join_cogrouped` pre-collapses ties to the same max-value
-    policy before calling merge_asof, and the property oracle in
-    tests/test_properties.py applies the identical collapse.
+    the property oracle in tests/test_properties.py pre-collapses ties to
+    the same max-value policy before calling merge_asof.
     """
     payload = F.struct(
-        F.col(right_ts).cast("double").alias("rt"),
+        F.col("ts").cast("double").alias("rt"),
         F.col(right_value).cast("double").alias("rv"),
     )
     carried = _asof_carry(
-        left, right, keys, left_ts, right_ts, payload, "struct<rt:double,rv:double>"
+        left, right, keys, "ts", "ts", payload, "struct<rt:double,rv:double>"
     )
-    val = F.col("_last.rv")
-    if tolerance_s is not None:
-        val = F.when(
-            F.col("_t").cast("double") - F.col("_last.rt") <= tolerance_s,
-            F.col("_last.rv"),
-        )
-    return carried.select(*left.columns, val.alias(out))
+    return carried.select(*left.columns, F.col("_last.rv").alias("asof_value"))
 
 
 def _asof_carry(
@@ -223,84 +180,6 @@ def _asof_carry(
     ).filter(F.col("_is_left") == 1)
 
 
-def asof_join_cogrouped(
-    left: DataFrame,
-    right: DataFrame,
-    keys: list[str],
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    right_value: str = "power",
-    out: str = "asof_value",
-    tolerance_s: float | None = None,
-) -> DataFrame:
-    """As-of join via cogrouped applyInPandas (§2.8's cogroup surface):
-    both sides shuffle once on ``keys``, then each key's pair of Arrow
-    batches is merged with ``pd.merge_asof`` (backward, <=).
-
-    Same semantics as :func:`asof_join`, INCLUDING the tie policy:
-    duplicate (keys, right_ts) right rows are collapsed to the max value
-    per timestamp (nulls lose to non-nulls; all-null ties stay null)
-    BEFORE pd.merge_asof runs. Without the collapse, merge_asof's
-    last-row-in-input-order rule would make the result depend on Arrow
-    batch order — nondeterministic under a shuffle (found by the r7
-    judge's hypothesis run). pandas groupby().max() skips NaN, which is
-    exactly the struct-carry's NULL-sorts-first behaviour; literal NaN
-    (as opposed to null) is indistinguishable from null on this Arrow
-    path, so NaN-vs-null ordering cannot diverge here.
-
-    This variant is preferable when the per-key data is pandas-sized and
-    the carry-forward window trick would thrash (e.g. very wide left
-    rows), and it demonstrates the cogroup escape hatch for fact-fact
-    alignment kernels.
-    """
-    import pandas as pd
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    lcols = list(left.columns)
-    out_schema = StructType(list(left.schema.fields) + [StructField(out, DoubleType())])
-
-    def merge(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
-        if lpdf.empty:
-            return pd.DataFrame(columns=[*lcols, out])
-        lpdf = lpdf.sort_values(left_ts, kind="mergesort")
-        if rpdf.empty:
-            res = lpdf.copy()
-            res[out] = None
-            return res[[*lcols, out]]
-        rpdf = (
-            rpdf[[right_ts, right_value]]
-            .rename(columns={right_ts: "_rts", right_value: out})
-            # collapse duplicate timestamps to max value (skipna → the max
-            # non-null wins; all-null ties stay null) so the result matches
-            # asof_join's struct-carry tie policy instead of depending on
-            # Arrow batch order. groupby sorts by key, so the output is
-            # already _rts-ordered as merge_asof requires.
-            .groupby("_rts", as_index=False)[out]
-            .max()
-        )
-        # pd.merge_asof requires a Timedelta tolerance for datetime64 keys
-        # and a numeric tolerance for numeric keys — pick by the key dtype.
-        tol = None
-        if tolerance_s is not None:
-            if pd.api.types.is_datetime64_any_dtype(lpdf[left_ts]):
-                tol = pd.Timedelta(seconds=tolerance_s)
-            else:
-                tol = tolerance_s
-        merged = pd.merge_asof(
-            lpdf, rpdf, left_on=left_ts, right_on="_rts",
-            direction="backward", allow_exact_matches=True,
-            tolerance=tol,
-        )
-        return merged[[*lcols, out]]
-
-    return (
-        left.groupBy(*keys)
-        .cogroup(right.groupBy(*keys))
-        .applyInPandas(merge, schema=out_schema)
-    )
-
-
 def asof_join_nearest(
     left: DataFrame,
     right: DataFrame,
@@ -326,8 +205,8 @@ def asof_join_nearest(
     TIE POLICY (total, documented here and in TIES.md):
     - duplicate (keys, right_ts) right rows are COLLAPSED to the max
       value per timestamp first (nulls lose to non-nulls; all-null stays
-      null) — the uniform r8 family policy, applied by the same
-      groupBy/max as :func:`asof_join_cogrouped`;
+      null) — the uniform r8 family policy of :func:`asof_join`, applied
+      as a groupBy/max;
     - an EQUIDISTANT backward/forward pair resolves to the BACKWARD
       (earlier) row. After the collapse, (keys, right_ts) is unique, so
       (|diff|, direction) is a total order and the pick is deterministic.
@@ -357,8 +236,8 @@ def asof_join_nearest(
     reserved = {"_t", "_is_left", "_pay", "_b", "_f", "_rts", "_rv"}
     clash = reserved & set(left.columns) | reserved & set(right.columns)
     if clash:
-        # the range_join _iv_* lesson (ADVICE r7): colliding temp names
-        # silently drop or shadow caller columns — reject them instead
+        # colliding temp names would silently drop or shadow caller
+        # columns (ADVICE r7) — reject them instead
         raise ValueError(f"asof_join_nearest reserves column names {clash}")
     pay_t = "struct<rt:double,rv:double>"
     r2 = (
@@ -427,14 +306,9 @@ def asof_join_nearest(
     return got.select(*lcols, val.alias(out), *extra)
 
 
-def snapshot_diff(
-    old: DataFrame,
-    new: DataFrame,
-    keys: list[str],
-    hash_col: str = "_h",
-) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, keys: list[str]) -> DataFrame:
     """Snapshot differencing / CDC generation: given two snapshots that each
-    carry a precomputed row-content hash column ``hash_col`` (caller builds
+    carry a precomputed row-content hash column ``_h`` (caller builds
     it from the compared columns — integer-stable encodings, not raw double
     rendering), emit one row per key whose content differs:
     change_type ∈ {added, removed, changed}. The batch producer of the
@@ -447,8 +321,8 @@ def snapshot_diff(
     bucketed/partitioned layout, so the join co-locates and the exchange
     drops entirely (bucketed canonical tables, sources/canonical.py).
     """
-    o = old.select(*keys, F.col(hash_col).alias("_ha"))
-    n = new.select(*keys, F.col(hash_col).alias("_hb"))
+    o = old.select(*keys, F.col("_h").alias("_ha"))
+    n = new.select(*keys, F.col("_h").alias("_hb"))
     j = o.join(n, on=keys, how="full_outer")
     return j.filter(~F.col("_ha").eqNullSafe(F.col("_hb"))).select(
         *keys,
@@ -459,14 +333,11 @@ def snapshot_diff(
     )
 
 
-def range_join_bucketed(
-    fact: DataFrame,
-    intervals: DataFrame,
-    fact_ts: str,
-    start: str = "start_ts",
-    end: str = "end_ts",
-    grid_s: int = 86400,
-) -> DataFrame:
+# range_join_bucketed's grid cell: one day
+_RANGE_GRID_S = 86400
+
+
+def range_join_bucketed(fact: DataFrame, intervals: DataFrame, fact_ts: str) -> DataFrame:
     """Range join, fact-fact scale path: grid-bucket both sides and
     EQUI-join on the cell, with the range predicate as a residual filter —
     the shuffle-partitionable form of :func:`range_join` for interval sets
@@ -474,17 +345,18 @@ def range_join_bucketed(
     interval side outgrows executor memory; this form never materializes a
     nested loop).
 
-    Each interval explodes to the grid cells it covers (half-open
-    [start, end)); each fact row keys on its own cell, so every matching
-    (fact, interval) pair meets in EXACTLY one cell — no post-join dedup.
-    Cell width trades interval-replication (end-start)/grid_s against
-    per-cell fanout; pick it near the median interval length. Both sides
+    Each interval explodes to the one-day grid cells it covers (half-open
+    [start_ts, end_ts)); each fact row keys on its own cell, so every
+    matching (fact, interval) pair meets in EXACTLY one cell — no post-join
+    dedup. Cell width trades interval replication against per-cell fanout;
+    a day sits near the interval lengths of the registered callers. Both sides
     shuffle once on the cell key; AQE handles hot cells (a flash-sale day)
     via skew splitting, and the residual predicate runs codegen-side.
 
-    Intervals must be non-empty (start < end); callers validate upstream.
+    Intervals must be non-empty (start_ts < end_ts); callers validate
+    upstream.
     """
-    us = grid_s * 1_000_000
+    us = _RANGE_GRID_S * 1_000_000
     f = fact.withColumn(
         "_cell", F.floor(F.unix_micros(F.col(fact_ts)) / F.lit(us))
     )
@@ -492,13 +364,13 @@ def range_join_bucketed(
         "_cell",
         F.explode(
             F.sequence(
-                F.floor(F.unix_micros(F.col(start)) / F.lit(us)),
-                F.floor((F.unix_micros(F.col(end)) - 1) / F.lit(us)),
+                F.floor(F.unix_micros(F.col("start_ts")) / F.lit(us)),
+                F.floor((F.unix_micros(F.col("end_ts")) - 1) / F.lit(us)),
             )
         ),
     )
     joined = f.join(iv, on="_cell").filter(
-        (F.col(fact_ts) >= F.col(start)) & (F.col(fact_ts) < F.col(end))
+        (F.col(fact_ts) >= F.col("start_ts")) & (F.col(fact_ts) < F.col("end_ts"))
     )
     return joined.drop("_cell")
 
@@ -510,11 +382,10 @@ def asof_state_join(
     left_ts: str = "ts",
     right_ts: str = "ts",
     state_col: str = "state",
-    out: str = "state",
 ) -> DataFrame:
-    """Point-in-time (PIT) state lookup: for every left row, the value of
-    ``state_col`` from the key's most recent right row at-or-before the left
-    timestamp — i.e. the SCD2 question "which dimension version was valid at
+    """Point-in-time (PIT) state lookup: for every left row, ``state`` is the
+    value of ``state_col`` from the key's most recent right row at-or-before
+    the left timestamp — i.e. the SCD2 question "which dimension version was valid at
     event time" answered WITHOUT materializing validity intervals or running
     a range join: the SCD2 interval [valid_from, valid_to) containing t is,
     by construction, the last run START at-or-before t.
@@ -540,4 +411,4 @@ def asof_state_join(
         left, right, keys, left_ts, right_ts, payload,
         StructType([StructField("sv", state_t)]),
     )
-    return carried.select(*left.columns, F.col("_last.sv").alias(out))
+    return carried.select(*left.columns, F.col("_last.sv").alias("state"))

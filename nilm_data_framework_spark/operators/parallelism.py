@@ -22,10 +22,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 
 
-def pin_group_parallelism(
-    df: DataFrame, keys: list[str | Column], n: int | None = None
-) -> DataFrame:
-    """Hash-partition ``df`` on ``keys`` into ``n`` partitions (default:
-    ``sparkContext.defaultParallelism``) ahead of a groupBy-pandas op."""
-    n = n or df.sparkSession.sparkContext.defaultParallelism
+def pin_group_parallelism(df: DataFrame, keys: list[str | Column]) -> DataFrame:
+    """Hash-partition ``df`` on ``keys`` into
+    ``sparkContext.defaultParallelism`` partitions ahead of a groupBy-pandas
+    op."""
+    n = df.sparkSession.sparkContext.defaultParallelism
     return df.repartition(n, *keys)

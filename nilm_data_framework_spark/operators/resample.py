@@ -26,20 +26,16 @@ from pyspark.sql import functions as F
 from nilm_data_framework_spark.operators.exact_math import epoch_div
 
 
-def infer_sample_rate(
-    readings: DataFrame,
-    keys: list[str],
-    ts: str = "ts",
-) -> DataFrame:
-    """A6: per-key median of positive consecutive timestamp deltas (seconds).
+def infer_sample_rate(readings: DataFrame, keys: list[str]) -> DataFrame:
+    """A6: per-key median of positive consecutive ``ts`` deltas (seconds).
 
     Returns one row per key: ``keys..., rate_s double``. Uses exact
     ``median`` (not percentile_approx) so results are oracle-checkable; at
-    100 TB swap to ``percentile_approx`` via the ``approx`` arg of
-    :func:`infer_sample_rate_approx`.
+    100 TB ``percentile_approx`` is the mergeable-sketch swap (no full sort
+    of deltas per key).
     """
-    w = Window.partitionBy(*keys).orderBy(ts)
-    delta = F.col(ts).cast("double") - F.lag(F.col(ts).cast("double")).over(w)
+    w = Window.partitionBy(*keys).orderBy("ts")
+    delta = F.col("ts").cast("double") - F.lag(F.col("ts").cast("double")).over(w)
     return (
         readings.withColumn("_delta_s", delta)
         .filter(F.col("_delta_s") > 0)
@@ -48,37 +44,22 @@ def infer_sample_rate(
     )
 
 
-def infer_sample_rate_approx(
-    readings: DataFrame, keys: list[str], ts: str = "ts", accuracy: int = 10000
-) -> DataFrame:
-    """Scale path for A6: percentile_approx median (mergeable sketch, no
-    full sort of deltas per key)."""
-    w = Window.partitionBy(*keys).orderBy(ts)
-    delta = F.col(ts).cast("double") - F.lag(F.col(ts).cast("double")).over(w)
-    return (
-        readings.withColumn("_delta_s", delta)
-        .filter(F.col("_delta_s") > 0)
-        .groupBy(*keys)
-        .agg(F.percentile_approx("_delta_s", F.lit(0.5), F.lit(accuracy)).alias("rate_s"))
-    )
-
-
 def resample_mean(
     readings: DataFrame,
     keys: list[str],
     seconds: int,
-    ts: str = "ts",
+    *,
     value: str = "power",
     out_value: str = "power",
 ) -> DataFrame:
-    """A1: downsample to ``seconds``-wide tumbling buckets by mean.
+    """A1: downsample ``ts`` to ``seconds``-wide tumbling buckets by mean.
 
     Output: ``keys..., bucket_ts timestamp, <out_value> double`` — bucket_ts
     is the window start (epoch-aligned, matching pandas ``resample`` and
     DuckDB ``time_bucket``). Empty buckets are absent (long-format).
     """
     return (
-        readings.groupBy(*keys, F.window(F.col(ts), f"{seconds} seconds").alias("_w"))
+        readings.groupBy(*keys, F.window(F.col("ts"), f"{seconds} seconds").alias("_w"))
         .agg(F.avg(value).alias(out_value))
         .withColumn("bucket_ts", F.col("_w.start"))
         .drop("_w")
@@ -90,9 +71,8 @@ def resample_mean_guarded(
     readings: DataFrame,
     keys: list[str],
     seconds: int,
-    ts: str = "ts",
+    *,
     value: str = "power",
-    out_value: str = "power",
 ) -> DataFrame:
     """A1 with the reference's upsample guard (UnifiedNILM.py:118-120).
 
@@ -102,21 +82,19 @@ def resample_mean_guarded(
     metadata-driven plan step, not a Catalyst rule. The rate table scales
     with key count, so the join strategy is left to AQE (no forced hint).
 
-    ``out_value`` names the output value column in BOTH branches (r7: it
-    was hardcoded 'power', so value='energy' returned energy values under
-    a column literally named power).
+    Both branches emit ``value`` as ``power`` (bucket means or the
+    untouched readings), so the output schema does not depend on which
+    keys were resampled.
     """
     # `rates` has one row per key — key cardinality grows with data size, so
     # no forced broadcast; AQE converts to broadcast at runtime when small.
-    rates = infer_sample_rate(readings, keys, ts)
+    rates = infer_sample_rate(readings, keys)
     tagged = readings.join(rates, on=keys, how="left")
     fine = tagged.filter((F.col("rate_s").isNull()) | (F.col("rate_s") <= seconds))
     coarse = tagged.filter(F.col("rate_s") > seconds)
-    resampled = resample_mean(
-        fine.drop("rate_s"), keys, seconds, ts, value, out_value=out_value
-    )
+    resampled = resample_mean(fine.drop("rate_s"), keys, seconds, value=value)
     passthrough = coarse.select(
-        *keys, F.col(ts).alias("bucket_ts"), F.col(value).alias(out_value)
+        *keys, F.col("ts").alias("bucket_ts"), F.col(value).alias("power")
     )
     return resampled.unionByName(passthrough)
 
@@ -125,7 +103,7 @@ def resample_interpolate(
     readings: DataFrame,
     keys: list[str],
     seconds: int,
-    ts: str = "ts",
+    *,
     value: str = "power",
     mean_round_dp: int | None = None,
 ) -> DataFrame:
@@ -162,7 +140,7 @@ def resample_interpolate(
     The grid size is bounded by (span / seconds) per key — at 100 TB,
     partition count follows key cardinality, not raw readings.
     """
-    agg = resample_mean(readings, keys, seconds, ts, value, out_value="_v")
+    agg = resample_mean(readings, keys, seconds, value=value, out_value="_v")
     scale = None
     if mean_round_dp is not None:
         # Fixed-point ticks: round the mean to dp decimals, then scale to an
@@ -230,17 +208,13 @@ def resample_interpolate(
 
 
 def time_weighted_mean(
-    df: DataFrame,
-    keys: list[str],
-    ts: str = "ts",
-    value: str = "value",
-    order_extra: list[str] | None = None,
+    df: DataFrame, keys: list[str], *, order_extra: list[str] | None = None
 ) -> DataFrame:
-    """Time-weighted (LOCF) mean per key over an IRREGULAR series: each
-    reading holds until the next one, so its weight is the interval to its
-    successor — the physically-correct average power between samples, where
-    the plain `avg` the reference computes (UnifiedNILM.py:122) silently
-    over-weights bursts of fast sampling. The final reading of each key has
+    """Time-weighted (LOCF) mean of ``value`` per key over an IRREGULAR
+    ``ts`` series: each reading holds until the next one, so its weight is
+    the interval to its successor — the physically-correct average power
+    between samples, where the plain `avg` the reference computes
+    (UnifiedNILM.py:122) silently over-weights bursts of fast sampling. The final reading of each key has
     no successor and is excluded (standard for step-function integrals over
     a half-open observation window).
 
@@ -252,14 +226,14 @@ def time_weighted_mean(
     the same key — AQE coalesces the two stages onto one exchange. This is
     the continuous-aggregate kernel of a hypertable rollup.
     """
-    order_cols = [ts] + (order_extra or [])
+    order_cols = ["ts"] + (order_extra or [])
     w = Window.partitionBy(*keys).orderBy(*order_cols)
-    us = F.unix_micros(F.col(ts))
+    us = F.unix_micros(F.col("ts"))
     dt = (F.lead(us).over(w) - us).cast("double")
     d = df.withColumn("_dt_us", dt).filter(F.col("_dt_us").isNotNull())
     return d.groupBy(*keys).agg(
         F.round(
-            F.sum(F.col(value) * F.col("_dt_us")) / F.sum("_dt_us"), 4
+            F.sum(F.col("value") * F.col("_dt_us")) / F.sum("_dt_us"), 4
         ).alias("twa"),
         F.count(F.lit(1)).alias("n_intervals"),
         (F.sum("_dt_us").cast("long") / F.lit(1000000)).cast("long").alias("span_s"),
@@ -269,15 +243,15 @@ def time_weighted_mean(
 def m4_downsample(
     df: DataFrame,
     keys: list[str],
-    ts: str = "ts",
-    value: str = "value",
+    *,
     bucket_s: int = 3600,
     tiebreak: str | None = None,
 ) -> DataFrame:
-    """M4 visualization downsampling (Jugel et al., VLDB 2014): per (key,
-    time bucket) keep exactly the four value-extreme/boundary points — min,
-    max, first, last — which is provably sufficient to render the series'
-    line plot pixel-exactly at the bucket resolution. The width-bounded
+    """M4 visualization downsampling (Jugel et al., VLDB 2014) of a
+    (``ts``, ``value``) series: per (key, time bucket) keep exactly the four
+    value-extreme/boundary points — min, max, first, last — which is
+    provably sufficient to render the series' line plot pixel-exactly at
+    the bucket resolution. The width-bounded
     alternative to raw export when a dashboard asks for a year of 1 Hz data.
 
     Emitted long-form: (keys..., bucket [epoch div bucket_s ordinal],
@@ -294,15 +268,15 @@ def m4_downsample(
     Output is 4 rows per bucket regardless of input rate — a ~constant-size
     result per rendered pixel column, which is the whole point at 100 TB.
     """
-    bkt = epoch_div(ts, bucket_s)
+    bkt = epoch_div("ts", bucket_s)
     d = df.withColumn("_bkt", bkt)
     tb = [F.col(tiebreak)] if tiebreak else []
     part = [*keys, "_bkt"]
     roles = {
-        "first": [F.col(ts).asc(), *tb],
-        "last": [F.col(ts).desc(), *[c.desc() for c in tb]],
-        "min": [F.col(value).asc(), F.col(ts).asc(), *tb],
-        "max": [F.col(value).desc(), F.col(ts).asc(), *tb],
+        "first": [F.col("ts").asc(), *tb],
+        "last": [F.col("ts").desc(), *[c.desc() for c in tb]],
+        "min": [F.col("value").asc(), F.col("ts").asc(), *tb],
+        "max": [F.col("value").desc(), F.col("ts").asc(), *tb],
     }
     ranked = d
     for role, order in roles.items():
@@ -312,8 +286,8 @@ def m4_downsample(
     unpivoted = ranked.select(
         *keys,
         F.col("_bkt").alias("bucket"),
-        F.col(ts).alias("point_ts"),
-        F.col(value).alias("point_value"),
+        F.col("ts").alias("point_ts"),
+        F.col("value").alias("point_value"),
         F.expr(f"stack({len(roles)}, {stack_args})").alias("point_role", "_rk"),
     )
     return unpivoted.filter(F.col("_rk") == 1).select(
@@ -321,19 +295,17 @@ def m4_downsample(
     )
 
 
-def seasonal_naive_error(
-    df: DataFrame,
-    keys: list[str],
-    ts: str = "ts",
-    value: str = "value",
-    bucket_s: int = 3600,
-    season: int = 24,
-) -> DataFrame:
-    """Forecastability audit: bucket each series (mean per ``bucket_s``),
-    then compare the SEASONAL-naive forecast (value one season of buckets
-    ago) against the plain naive forecast (previous bucket) by mean absolute
-    error. ratio < 1 ⇒ the series has real seasonal structure worth a
-    seasonal model — the MASE-style denominator logic (Hyndman & Koehler
+# seasonal_naive_error's grid: hourly buckets, a daily season
+_SEASON_BUCKET_S = 3600
+_SEASON = 24
+
+
+def seasonal_naive_error(df: DataFrame, keys: list[str]) -> DataFrame:
+    """Forecastability audit: bucket each (``ts``, ``value``) series (hourly
+    mean), then compare the SEASONAL-naive forecast (value one day of
+    buckets ago) against the plain naive forecast (previous bucket) by mean
+    absolute error. ratio < 1 ⇒ the series has real seasonal structure
+    worth a seasonal model — the MASE-style denominator logic (Hyndman & Koehler
     2006) as a per-key screening aggregate.
 
     Errors only count buckets where BOTH forecasts exist (same support, fair
@@ -343,15 +315,15 @@ def seasonal_naive_error(
     float discipline. Returns (keys..., n_buckets, mae_naive,
     mae_seasonal, mase_ratio).
     """
-    bkt = epoch_div(ts, bucket_s)
+    bkt = epoch_div("ts", _SEASON_BUCKET_S)
     series = (
         df.withColumn("_bkt", bkt)
         .groupBy(*keys, "_bkt")
-        .agg(F.avg(value).alias("_v"))
+        .agg(F.avg("value").alias("_v"))
     )
     w = Window.partitionBy(*keys).orderBy("_bkt")
     scored = series.withColumn("_prev", F.lag("_v", 1).over(w)).withColumn(
-        "_seas", F.lag("_v", season).over(w)
+        "_seas", F.lag("_v", _SEASON).over(w)
     )
     both = scored.filter(F.col("_prev").isNotNull() & F.col("_seas").isNotNull())
     return both.groupBy(*keys).agg(

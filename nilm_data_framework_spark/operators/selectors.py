@@ -22,9 +22,9 @@ def time_range(
     return df
 
 
-def by_label(channels: DataFrame, label: str, col: str = "universal_label") -> DataFrame:
-    """P4: case-normalized label equality (UnifiedNILM.py:187-195)."""
-    return channels.filter(F.lower(F.col(col)) == label.strip().lower())
+def by_label(channels: DataFrame, label: str) -> DataFrame:
+    """P4: case-normalized ``universal_label`` equality (UnifiedNILM.py:187-195)."""
+    return channels.filter(F.lower(F.col("universal_label")) == label.strip().lower())
 
 
 def aggregate_channel(channels: DataFrame) -> DataFrame:
@@ -43,43 +43,6 @@ def by_power_type(
     return channels.filter(cond)
 
 
-def exclusion_predicate(
-    power_type: str = "active",
-    exclude_labels: tuple[str, ...] = (),
-    exclude_channels: tuple[str, ...] = (),
-    exclude_devices: tuple[str, ...] = (),
-) -> Column:
-    """P7: the multi-exclusion conjunction used by
-    compute_aggregate_from_appliances (UnifiedNILM.py:457-475):
-    not the aggregate channel, matching power type, NOT IN each exclusion set.
-
-    Each NOT-IN is null-safe: a NULL label/channel/device makes bare
-    ``~isin`` evaluate NULL and the filter DROP the row — excluding a
-    channel that matched nothing, where the reference only skips on an
-    actual membership hit. ``coalesce(isin, false)`` keeps NULL-attribute
-    rows in.
-    """
-
-    def not_in(col: Column, values: list) -> Column:
-        return ~F.coalesce(col.isin(values), F.lit(False))
-
-    cond = (F.lower(F.col("raw_label")) != "aggregate") & (
-        F.lower(F.col("data_type")) == power_type.lower()
-    )
-    if exclude_labels:
-        cond = cond & not_in(
-            F.lower(F.col("universal_label")), [x.lower() for x in exclude_labels]
-        )
-    if exclude_channels:
-        cond = cond & not_in(F.col("channel_id"), list(exclude_channels))
-    if exclude_devices:
-        cond = cond & not_in(
-            F.lower(F.col("acquisition_device")),
-            [x.lower() for x in exclude_devices],
-        )
-    return cond
-
-
 def dedup_keep_first(
     df: DataFrame, keys: list[str], order: list[str]
 ) -> DataFrame:
@@ -91,9 +54,9 @@ def dedup_keep_first(
     )
 
 
-def binarize(df: DataFrame, value: str, threshold: float, out: str = "state") -> DataFrame:
-    """P12: threshold binarization (postprocessing.py:32-42)."""
-    return df.withColumn(out, (F.col(value) >= F.lit(threshold)).cast("int"))
+def binarize(df: DataFrame, value: str, threshold: float) -> DataFrame:
+    """P12: threshold binarization (postprocessing.py:32-42) into ``state``."""
+    return df.withColumn("state", (F.col(value) >= F.lit(threshold)).cast("int"))
 
 
 def clip(col: Column, lo=None, hi=None) -> Column:

@@ -22,16 +22,6 @@ from pyspark.sql.types import (
 )
 
 
-def lag_delta(
-    df: DataFrame, keys: list[str], ts: str = "ts", out: str = "delta_s"
-) -> DataFrame:
-    """W1: consecutive timestamp deltas in seconds (A6/A7 building block)."""
-    w = Window.partitionBy(*keys).orderBy(ts)
-    return df.withColumn(
-        out, F.col(ts).cast("double") - F.lag(F.col(ts).cast("double")).over(w)
-    )
-
-
 def top_k(df: DataFrame, order_cols: list, k: int) -> DataFrame:
     """W3 extension: top-k = orderBy + limit (the reference only full-sorts).
     Spark plans this as TakeOrderedAndProject — no global sort at scale."""
@@ -134,11 +124,11 @@ def run_length_filter(
     ts: str | list[str],
     state: str,
     min_len: int,
-    out: str = "state_filtered",
 ) -> DataFrame:
     """W5: gaps-and-islands run-length ON filter (postprocessing.py:5-24).
 
-    Zero out ON-runs shorter than ``min_len`` samples. Classic two-window
+    ``state_filtered`` is ``state`` with ON-runs shorter than ``min_len``
+    samples zeroed. Classic two-window
     formulation: segment id = running count of state changes; then a
     per-segment count joined back via a second window (no self-join).
     Trailing open segments are handled identically (the count is the run's
@@ -152,7 +142,7 @@ def run_length_filter(
     wseg = Window.partitionBy(*keys, "_seg")
     df3 = df2.withColumn("_seglen", F.count(F.lit(1)).over(wseg))
     return df3.withColumn(
-        out,
+        "state_filtered",
         F.when((F.col(state) == 1) & (F.col("_seglen") < min_len), 0).otherwise(
             F.col(state)
         ),
@@ -188,67 +178,26 @@ def run_segments(
 def median_smooth(
     df: DataFrame,
     keys: list[str],
-    ts: str,
+    ts: str | list[str],
     value: str,
     half_width: int,
-    out: str = "smoothed",
 ) -> DataFrame:
-    """W6: sliding-window median smoothing (postprocessing.py:27-30).
+    """W6: sliding-window median smoothing into ``smoothed``
+    (postprocessing.py:27-30). ``ts`` may be a list of ordering columns
+    (tie-breaks keep the window contents deterministic).
 
     NOTE edge semantics: scipy.ndimage.median_filter reflect-pads; this
     declarative version shrinks the window at the edges (rowsBetween clips).
-    tests/test_kernels.py documents the divergence and checks interior
-    equality; use ``median_smooth_reflect`` for exact scipy parity.
+    Interior rows (full windows) equal scipy's; tests/test_kernels.py and
+    tests/test_stateful_reflect.py check that.
     """
-    w = Window.partitionBy(*keys).orderBy(ts).rowsBetween(-half_width, half_width)
-    return df.withColumn(out, F.expr(f"percentile({value}, 0.5)").over(w))
-
-
-def median_smooth_reflect(
-    df: DataFrame,
-    keys: list[str],
-    ts: str,
-    value: str,
-    half_width: int,
-    out: str = "smoothed",
-) -> DataFrame:
-    """W6 exact-parity variant: scipy.ndimage.median_filter semantics
-    (postprocessing.py:27-30), i.e. reflect padding at the series edges
-    (scipy mode='reflect' == numpy pad mode='symmetric').
-
-    One applyInPandas per series (single shuffle on keys); the pad+rolling
-    median is NumPy inside the group — same scale shape as the windowed
-    tensorization kernels. Carries the WHOLE row like median_smooth does
-    (r7: it previously dropped every column outside keys/ts/value, so
-    swapping the edge-semantics variants also changed the output schema).
-    """
-    import numpy as np
-    import pandas as pd
-
-    size = 2 * half_width + 1
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out, DoubleType())]
+    order_cols = [ts] if isinstance(ts, str) else list(ts)
+    w = (
+        Window.partitionBy(*keys)
+        .orderBy(*order_cols)
+        .rowsBetween(-half_width, half_width)
     )
-    cols = [*df.columns, out]
-
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(ts, kind="mergesort")
-        vals = pdf[value].to_numpy(dtype=np.float64)
-        if len(vals) == 0:
-            return pd.DataFrame(columns=cols)
-        padded = np.pad(vals, half_width, mode="symmetric")
-        windows = np.lib.stride_tricks.sliding_window_view(padded, size)
-        pdf = pdf.copy()
-        pdf[out] = np.median(windows, axis=1)
-        return pdf[cols]
-
-    from nilm_data_framework_spark.operators.parallelism import pin_group_parallelism
-
-    return (
-        pin_group_parallelism(df, keys)
-        .groupBy(*keys)
-        .applyInPandas(smooth, schema=out_schema)
-    )
+    return df.withColumn("smoothed", F.expr(f"percentile({value}, 0.5)").over(w))
 
 
 def truncate_to_min(
@@ -272,53 +221,6 @@ def truncate_to_min(
         .join(min_counts, on=group)
         .filter(F.col("_rn") <= F.col("_min_cnt"))
         .drop("_rn", "_min_cnt")
-    )
-
-
-def ewma(
-    df: DataFrame,
-    keys: list[str],
-    ts: str | list[str],
-    value: str,
-    alpha: float,
-    out: str = "ewma",
-) -> DataFrame:
-    """Exponential moving average per series (s_i = α·x_i + (1-α)·s_{i-1},
-    s_0 = x_0 — pandas ``ewm(adjust=False)`` semantics). Inherently
-    sequential per series → one applyInPandas per key group with a
-    per-element Python recursion inside the Arrow batch (NOT vectorized:
-    pandas' own ewm kernel evaluates the recurrence in a different IEEE
-    op order, and scipy's lfilter is absent here — the explicit loop is
-    what the DuckDB oracle replays op-for-op). Cost is O(len) interpreter
-    steps per series; at 100 TB the per-series length, not the series
-    count, is the knob (chunk long series by session/day upstream if one
-    key concentrates)."""
-    import numpy as np
-    import pandas as pd
-
-    order_cols = [ts] if isinstance(ts, str) else list(ts)
-    out_schema = StructType(
-        list(df.schema.fields) + [StructField(out, DoubleType())]
-    )
-    cols = [*df.columns, out]
-
-    def run(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(order_cols, kind="mergesort").copy()
-        vals = pdf[value].to_numpy(dtype=np.float64)
-        s = np.empty_like(vals)
-        acc = 0.0
-        for i, x in enumerate(vals):
-            acc = x if i == 0 else alpha * x + (1.0 - alpha) * acc
-            s[i] = acc
-        pdf[out] = s
-        return pdf[cols]
-
-    from nilm_data_framework_spark.operators.parallelism import pin_group_parallelism
-
-    return (
-        pin_group_parallelism(df, keys)
-        .groupBy(*keys)
-        .applyInPandas(run, schema=out_schema)
     )
 
 
@@ -457,15 +359,11 @@ def skyline_2d(
 
 
 def interval_coalesce(
-    df: DataFrame,
-    keys: list[str],
-    s: str = "s",
-    e: str = "e",
-    tiebreak: str = "event_id",
-    weight: str | None = None,
+    df: DataFrame, keys: list[str], *, weight: str | None = None
 ) -> DataFrame:
-    """Merge overlapping-or-touching intervals per key (interval
-    COALESCING — the union/gaps-and-islands kernel): a new island starts
+    """Merge overlapping-or-touching intervals [``s``, ``e``] per key
+    (interval COALESCING — the union/gaps-and-islands kernel), with
+    ``event_id`` as the tiebreak: a new island starts
     exactly where an interval's start exceeds the running max of all
     PRIOR ends. Returns one row per (keys, island) with
     ``island_s``/``island_e`` (exact min start / max end) and
@@ -473,7 +371,7 @@ def interval_coalesce(
     MERGE; strict gaps split.
 
     Both windows — the prior-end running max and the island-id running
-    sum — order by the SAME total key (s, tiebreak). Ordering the
+    sum — order by the SAME total key (s, event_id). Ordering the
     island-id sum by anything else (e.g. (s, e, new_island)) sorts the
     marked first-of-island row AFTER its equal-(s, e) peers, assigning
     those peers to the PREVIOUS island and silently bridging a genuine
@@ -490,7 +388,7 @@ def interval_coalesce(
     aggregation (Catalyst reuses the sort); nothing is unpartitioned.
     Reference analog: none (interval union is absent from the reference;
     its activity masks are per-sample booleans)."""
-    order = [F.col(s), F.col(tiebreak)]
+    order = [F.col("s"), F.col("event_id")]
     w_prev = (
         Window.partitionBy(*keys)
         .orderBy(*order)
@@ -499,14 +397,14 @@ def interval_coalesce(
     w_col = F.col(weight) if weight else F.lit(1)
     marked = df.select(
         *keys,
-        tiebreak,
-        s,
-        e,
+        "event_id",
+        "s",
+        "e",
         w_col.alias("_w"),
         F.when(
-            F.col(s)
+            F.col("s")
             > F.coalesce(
-                F.max(e).over(w_prev), F.lit(-(2 ** 63)).cast("long")
+                F.max("e").over(w_prev), F.lit(-(2 ** 63)).cast("long")
             ),
             1,
         )
@@ -519,10 +417,10 @@ def interval_coalesce(
         .rowsBetween(Window.unboundedPreceding, 0)
     )
     islands = marked.select(
-        *keys, s, e, "_w", F.sum("_new_island").over(w_isl).alias("island")
+        *keys, "s", "e", "_w", F.sum("_new_island").over(w_isl).alias("island")
     )
     return islands.groupBy(*keys, "island").agg(
-        F.min(s).cast("long").alias("island_s"),
-        F.max(e).cast("long").alias("island_e"),
+        F.min("s").cast("long").alias("island_s"),
+        F.max("e").cast("long").alias("island_e"),
         F.sum("_w").cast("long").alias("n_raw_in"),
     )

@@ -368,10 +368,7 @@ def time_weighted_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     irregular sampling, vs the plain avg of A1. Operator:
     operators/resample.py::time_weighted_mean."""
     ev = _events(spark, sf_dir)
-    return RS.time_weighted_mean(
-        ev, ["user_id", "event_type"], ts="ts", value="value",
-        order_extra=["event_id"],
-    )
+    return RS.time_weighted_mean(ev, ["user_id", "event_type"], order_extra=["event_id"])
 
 
 # --- MAD outliers -------------------------------------------------------------

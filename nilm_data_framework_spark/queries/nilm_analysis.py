@@ -58,7 +58,7 @@ def resample_hourly_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def resample_300s_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
-    res = rs.resample_mean(ev, ["user_id"], 300, ts="ts", value="value", out_value="v")
+    res = rs.resample_mean(ev, ["user_id"], 300, value="value", out_value="v")
     return res.select(
         "user_id",
         F.unix_timestamp("bucket_ts").alias("bucket_s"),
@@ -104,7 +104,7 @@ def resample_300s_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def resample_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
-    out = rs.resample_mean_guarded(ev, ["user_id"], 27000, ts="ts", value="value")
+    out = rs.resample_mean_guarded(ev, ["user_id"], 27000, value="value")
     return out.select(
         "user_id",
         F.unix_timestamp("bucket_ts").alias("bucket_s"),
@@ -129,7 +129,7 @@ def resample_guarded(spark: SparkSession, sf_dir: str) -> DataFrame:
 def aggregate_from_appliances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 'error' plays the non-appliance channel excluded by the P7 predicate.
     ev = _events(spark, sf_dir).filter(F.lower("event_type") != "error")
-    out = agg.aggregate_from_appliances(ev, ["user_id"], seconds=300, ts="ts", value="value")
+    out = agg.aggregate_from_appliances(ev, ["user_id"], seconds=300, value="value")
     return out.select(
         "user_id",
         F.unix_timestamp("bucket_ts").alias("bucket_s"),
@@ -150,7 +150,7 @@ def aggregate_from_appliances(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def dedup_mean_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir).withColumn("minute_ts", F.date_trunc("minute", "ts"))
-    out = agg.dedup_mean(ev, ["user_id", "event_type", "minute_ts"], "value", out="avg_value")
+    out = agg.dedup_mean(ev, ["user_id", "event_type", "minute_ts"], "value")
     return out.withColumn("avg_value", F.round("avg_value", 4))
 
 
@@ -169,7 +169,7 @@ def dedup_mean_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.4 A5 (insights_oladatasets.ipynb cell 1)",
 )
 def daily_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.daily_activity(_events(spark, sf_dir), device="event_type", ts="ts", value="value")
+    return agg.daily_activity(_events(spark, sf_dir), device="event_type", value="value")
 
 
 # --- A6 rate inference --------------------------------------------------------
@@ -279,7 +279,7 @@ def interval_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.4 A8 (insights_oladatasets.ipynb cell 2)",
 )
 def active_hours(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return agg.active_hours(_events(spark, sf_dir), device="event_type", ts="ts", value="value")
+    return agg.active_hours(_events(spark, sf_dir), device="event_type", value="value")
 
 
 # --- A9/A11 channel stats ------------------------------------------------------
@@ -346,7 +346,7 @@ def quantile_99(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def pairwise_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.pairwise_corr(
-        _events(spark, sf_dir), pair_col="event_type", ts="ts", value="value", seconds=3600
+        _events(spark, sf_dir), pair_col="event_type", value="value", seconds=3600
     )
     return out.withColumn("pearson", F.round("pearson", 4))
 
@@ -588,7 +588,7 @@ def power_type_device_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.2 P12/P13/P14 (postprocessing.py:32-42, train_bert_single.py:71-78)",
 )
 def binarize_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = sel.binarize(_events(spark, sf_dir), "value", 100.0, out="state")
+    ev = sel.binarize(_events(spark, sf_dir), "value", 100.0)
     # clip in integer 1e-4 space (value/1000 scaled by 1e4 == value*10,
     # floored): per-element truncation BEFORE the sum makes the clipped
     # total an exact integer — a float sum's accumulation order diverges
@@ -643,9 +643,7 @@ def nilm_end_to_end(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = _events(spark, sf_dir)
     sliced = sel.time_range(ev, ts="ts", start="2024-01-05", end="2024-01-25 23:59:59")
     kept = sliced.filter(~F.lower("event_type").isin("error", "signup"))
-    hourly = agg.aggregate_from_appliances(
-        kept, ["user_id"], seconds=3600, ts="ts", value="value"
-    )
+    hourly = agg.aggregate_from_appliances(kept, ["user_id"], seconds=3600, value="value")
     return hourly.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_buckets"),
         # a rounded TOTAL, not a mean: avg() can land exactly on a rounding
@@ -742,8 +740,7 @@ def _corr_onepass_oracle() -> str:
 )
 def pairwise_corr_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = agg.pairwise_corr_onepass(
-        _events(spark, sf_dir), "event_type", _ETYPES, ts="ts", value="value",
-        seconds=86400,
+        _events(spark, sf_dir), "event_type", _ETYPES, value="value", seconds=86400
     )
     return out.select("a", "b", F.round("pearson", 4).alias("pearson"))
 
@@ -798,8 +795,7 @@ def pairwise_corr_onepass(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def resample_interpolated(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = rs.resample_interpolate(
-        _events(spark, sf_dir), ["user_id"], 3600, ts="ts", value="value",
-        mean_round_dp=4,
+        _events(spark, sf_dir), ["user_id"], 3600, value="value", mean_round_dp=4
     )
     return out.select(
         "user_id",

@@ -239,10 +239,7 @@ def asof_join_last_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     purchases = ev.filter(F.col("event_type") == "purchase").select("user_id", "ts", "value")
-    return J.asof_join(
-        clicks, purchases, keys=["user_id"], left_ts="ts", right_ts="ts",
-        right_value="value", out="asof_value",
-    )
+    return J.asof_join(clicks, purchases, keys=["user_id"], right_value="value")
 
 
 # --- F10 scale path: VARIANT semi-structured extraction ----------------------------

@@ -116,10 +116,9 @@ def sliding_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.5 W5 (postprocessing.py:5-24)",
 )
 def run_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = sel.binarize(_events(spark, sf_dir), "value", 100.0, out="state")
+    ev = sel.binarize(_events(spark, sf_dir), "value", 100.0)
     out = W.run_length_filter(
-        ev, keys=["user_id"], ts=["ts", "event_id"], state="state", min_len=5,
-        out="state_filtered",
+        ev, keys=["user_id"], ts=["ts", "event_id"], state="state", min_len=5
     )
     return out.select("event_id", "user_id", "state", "state_filtered")
 
@@ -150,7 +149,7 @@ def run_length_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.5 W5 segment emission / §2.9 batch twin of track_runs (postprocessing.py:5-24)",
 )
 def run_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = sel.binarize(_events(spark, sf_dir), "value", 100.0, out="state")
+    ev = sel.binarize(_events(spark, sf_dir), "value", 100.0)
     out = W.run_segments(ev, keys=["user_id"], ts=["ts", "event_id"], state="state")
     return out.select(
         "user_id",
@@ -175,13 +174,10 @@ def run_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     survey_ref="§2.5 W6 (postprocessing.py:27-30; edge semantics documented in operator)",
 )
 def median_smooth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = _events(spark, sf_dir)
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(-2, 2)
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.expr("percentile(value, 0.5)").over(w), 4).alias("smoothed"),
+    out = W.median_smooth(
+        _events(spark, sf_dir), ["user_id"], ["ts", "event_id"], "value", half_width=2
     )
+    return out.select("event_id", "user_id", F.round("smoothed", 4).alias("smoothed"))
 
 
 # --- W7 truncate-to-min ---------------------------------------------------------------

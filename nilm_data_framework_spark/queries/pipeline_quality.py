@@ -315,9 +315,7 @@ def cohort_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     periods — no week-start/timezone semantics to disagree on). Offset-0
     rows double as cohort sizes. Operator:
     operators/aggregates.py::cohort_retention."""
-    return AG.cohort_retention(
-        _events(spark, sf_dir), "user_id", ts="ts", period_s=_WEEK_S
-    )
+    return AG.cohort_retention(_events(spark, sf_dir), "user_id", period_s=_WEEK_S)
 
 
 # --- sweep-line peak concurrency ----------------------------------------------
@@ -578,8 +576,7 @@ def m4_downsample(spark: SparkSession, sf_dir: str) -> DataFrame:
     result is bit-exact cross-engine unrounded. Operator:
     operators/resample.py::m4_downsample."""
     return RS.m4_downsample(
-        _events(spark, sf_dir), ["event_type"], ts="ts", value="value",
-        bucket_s=_M4_BUCKET, tiebreak="event_id",
+        _events(spark, sf_dir), ["event_type"], bucket_s=_M4_BUCKET, tiebreak="event_id"
     )
 
 
@@ -614,10 +611,7 @@ def seasonal_naive_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     \"previous hour\" as a forecast? mase_ratio < 1 ⇒ the series has real
     daily structure. Operator:
     operators/resample.py::seasonal_naive_error."""
-    return RS.seasonal_naive_error(
-        _events(spark, sf_dir), ["event_type"], ts="ts", value="value",
-        bucket_s=3600, season=24,
-    )
+    return RS.seasonal_naive_error(_events(spark, sf_dir), ["event_type"])
 
 
 # --- PageRank step ------------------------------------------------------------
@@ -748,7 +742,7 @@ def pit_state_lookup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = J.asof_state_join(
         grid, states, ["user_id"], left_ts="_gus", right_ts="_tus",
-        state_col="event_type", out="state",
+        state_col="event_type",
     )
     return out.select(
         "user_id", "day", F.coalesce(F.col("state"), F.lit("none")).alias("state")

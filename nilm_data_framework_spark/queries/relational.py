@@ -498,14 +498,7 @@ def common_channel_best_pick(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     stats = channel_stats(ev, ["user_id", "event_type", "channel_id"], value="value")
-    picked = j5(
-        stats,
-        group=["user_id"],
-        label="event_type",
-        required_labels=required,
-        var_col="var_value",
-        len_col="n",
-    )
+    picked = j5(stats, group=["user_id"], label="event_type", required_labels=required)
     return picked.select("user_id", "event_type", "channel_id", "n")
 
 
@@ -751,7 +744,7 @@ def range_join_campaigns_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
         F.col("start_ts").cast("timestamp").alias("start_ts"),
         F.col("end_ts").cast("timestamp").alias("end_ts"),
     )
-    joined = range_join_bucketed(ev, campaigns, fact_ts="ts", grid_s=86400)
+    joined = range_join_bucketed(ev, campaigns, fact_ts="ts")
     return joined.groupBy("campaign_id", "event_type").agg(
         F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value")
     )

@@ -28,6 +28,9 @@ from nilm_data_framework_spark.layouts import (
 # raw set
 _FILE_ORDER = ("ts", "channel_id")
 _PARTITION_COLS = ("dataset", "house_id")
+# bucket count of write_readings_bucketed; two tables join exchange-free
+# only when both carry the same count
+READINGS_BUCKETS = 64
 
 
 def write_readings(readings: DataFrame, path: str) -> None:
@@ -59,19 +62,20 @@ def write_dim(dim: DataFrame, path: str) -> None:
     dim.coalesce(1).write.mode("overwrite").parquet(path)
 
 
-def write_readings_bucketed(readings: DataFrame, table: str, buckets: int = 64) -> None:
-    """Bucketed canonical table: hash-bucket + sort by the series key.
+def write_readings_bucketed(readings: DataFrame, table: str) -> None:
+    """Bucketed canonical table: hash-bucket (``READINGS_BUCKETS``) + sort by
+    the series key.
 
     Two tables bucketed the same way join WITHOUT an exchange — the join key
     layout is pre-materialized, so fact-fact joins on (house_id, channel_id)
     (time-axis alignment J4, as-of variants) skip their shuffle entirely.
-    This is the 100 TB co-location strategy; bucket count is chosen per
-    deployment (≈ total data / healthy partition size).
-    tests/test_bucketing.py asserts the exchange-free plan.
+    This is the 100 TB co-location strategy; the bucket count is a
+    deployment constant (≈ total data / healthy partition size).
+    tests/test_bucketing_skew.py asserts the exchange-free plan.
     """
     (
         readings.write.mode("overwrite")
-        .bucketBy(buckets, "house_id", "channel_id")
+        .bucketBy(READINGS_BUCKETS, "house_id", "channel_id")
         .sortBy("house_id", "channel_id")
         .format("parquet")
         .saveAsTable(table)

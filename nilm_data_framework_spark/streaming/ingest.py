@@ -26,16 +26,15 @@ def read_mqtt_stream(spark: SparkSession, path: str) -> DataFrame:
     return parsed_mqtt_columns(raw)
 
 
-def resampled_stream(
-    events: DataFrame, seconds: int = 60, watermark: str = "2 minutes"
-) -> DataFrame:
-    """Watermarked dedup + tumbling mean per device. Output mode `append`
-    once the watermark passes a window — the streaming form of A1."""
-    deduped = events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+def resampled_stream(events: DataFrame) -> DataFrame:
+    """Watermarked dedup (2-minute watermark) + 60-second tumbling mean per
+    device. Output mode `append` once the watermark passes a window — the
+    streaming form of A1."""
+    deduped = events.withWatermark("ts", "2 minutes").dropDuplicatesWithinWatermark(
         ["ts", "device"]
     )
     return (
-        deduped.groupBy(F.window("ts", f"{seconds} seconds").alias("w"), "device")
+        deduped.groupBy(F.window("ts", "60 seconds").alias("w"), "device")
         .agg(F.avg("apower").alias("avg_power"))
         .select(F.col("w.start").alias("bucket_ts"), "device", "avg_power")
     )

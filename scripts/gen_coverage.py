@@ -63,7 +63,8 @@ FOOTER = """
 
 - W4 windows vs NumPy `sliding_window_view`: `test_kernels.py`
 - W5 trailing-segment semantics vs reference: `test_kernels.py`
-- W6 scipy reflect-padding parity: `test_stateful_reflect.py`
+- W6 interior rows vs the centered (scipy reflect-padded) median: `test_kernels.py`,
+  `test_stateful_reflect.py`
 - J3 label precedence vs reference tiers: `test_kernels.py`
 - Properties: resample-mean conservation, dedup idempotence, window-count
   formula: `test_resample_joins.py`, `test_dedup_kernels.py`,

@@ -25,12 +25,20 @@ def readings_pdf():
 def test_bucketed_join_has_no_exchange(spark, readings_pdf):
     # saveAsTable writes to the session warehouse (static conf); the DROP
     # TABLE in the finally deletes the managed tables' files.
-    from nilm_data_framework_spark.sources.canonical import write_readings_bucketed
+    from nilm_data_framework_spark.sources.canonical import (
+        READINGS_BUCKETS,
+        write_readings_bucketed,
+    )
 
     df = spark.createDataFrame(readings_pdf)
-    write_readings_bucketed(df, "t_left", buckets=4)
-    write_readings_bucketed(df.withColumn("power", F.col("power") * 2), "t_right", buckets=4)
+    write_readings_bucketed(df, "t_left")
+    write_readings_bucketed(df.withColumn("power", F.col("power") * 2), "t_right")
     try:
+        desc = {
+            r["col_name"]: r["data_type"]
+            for r in spark.sql("DESCRIBE TABLE EXTENDED t_left").collect()
+        }
+        assert desc["Num Buckets"] == str(READINGS_BUCKETS)
         # aggregate each side on the bucket keys (no exchange: the bucket
         # layout already clusters them), then join on exactly those keys
         left = (

@@ -1,14 +1,17 @@
 """Call shapes of the operators and layout writers in code the suite never
 runs.
 
-``bench.py``, ``scripts/*.py`` and ``nilmbench/*.py`` call the similarity,
+``bench.py``, ``scripts/*.py`` and ``nilmbench/*.py`` call the NILM core
+(selectors, resample, aggregates, joins, windows), similarity,
 text/BM25, dedup, LM, graph, persisted-RAG, canonical-store and
 index-maintenance functions, but no test executes them: a keyword or
 positional slot that a signature dropped (a stale ``id_col=``/
-``centroid_method=``/``write_partitions=``/``n_lists=``/``materialize=``)
-would surface only when someone runs the script or the benchmark. This
-walks their ASTs and binds every such call's positional count and keyword
-names against the live signature.
+``centroid_method=``/``write_partitions=``/``n_lists=``/``materialize=``/
+``ts=``) would surface only when someone runs the script or the benchmark.
+This walks their ASTs and binds every such call's positional count and
+keyword names against the live signature; options that follow a dropped
+slot are keyword-only, so a stale positional call fails to bind instead
+of landing in the wrong parameter.
 """
 
 from __future__ import annotations
@@ -18,28 +21,37 @@ import inspect
 from pathlib import Path
 
 from nilm_data_framework_spark.operators import (
+    aggregates,
     dedup,
     graph,
     index_maintenance,
+    joins,
     lm,
+    parallelism,
+    resample,
+    selectors,
     similarity,
     text,
+    windows,
 )
 from nilm_data_framework_spark.queries import extra_ops_r7
 from nilm_data_framework_spark.sources import canonical
-from nilm_data_framework_spark.streaming import stateful
+from nilm_data_framework_spark.streaming import ingest, stateful
 
 ROOT = Path(__file__).resolve().parent.parent
 MODULES = {
     m.__name__: m
     for m in (
         similarity, text, dedup, lm, graph, stateful, extra_ops_r7, canonical,
-        index_maintenance,
+        index_maintenance, selectors, resample, aggregates, joins, windows,
+        parallelism, ingest,
     )
 }
 # modules no unexecuted file calls today; listed so that a future caller
 # is bound too
-NO_CALLER = {stateful.__name__}
+NO_CALLER = {
+    m.__name__ for m in (stateful, joins, parallelism, ingest)
+}
 
 
 def _public(mod) -> dict:

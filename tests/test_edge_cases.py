@@ -5,7 +5,6 @@ partition/group is degenerate."""
 from __future__ import annotations
 
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from nilm_data_framework_spark.operators import windows as W
@@ -52,7 +51,7 @@ def test_tensorize_missing_target_label_zero_filled(spark):
 def test_asof_join_empty_right_side(spark):
     left = spark.createDataFrame(pd.DataFrame({"k": [1, 1], "ts": [10, 20], "x": [1, 2]}))
     right = spark.createDataFrame([], "k long, ts long, power double")
-    out = asof_join(left, right, keys=["k"], left_ts="ts", right_ts="ts").collect()
+    out = asof_join(left, right, keys=["k"]).collect()
     assert len(out) == 2
     assert all(r["asof_value"] is None for r in out)
 
@@ -63,25 +62,6 @@ def test_run_segments_single_row(spark):
     assert len(out) == 1
     assert (out[0]["state"], out[0]["n_samples"]) == (1, 1)
     assert out[0]["start_ts"] == out[0]["end_ts"] == 1
-
-
-def test_median_smooth_reflect_single_point(spark):
-    df = spark.createDataFrame(pd.DataFrame({"k": ["a"], "t": [0], "v": [7.0]}))
-    out = W.median_smooth_reflect(df, keys=["k"], ts="t", value="v", half_width=2).collect()
-    assert len(out) == 1 and out[0]["smoothed"] == 7.0
-
-
-def test_ewma_matches_pandas(spark):
-    vals = [10.0, 0.0, 5.0, 5.0, 20.0, 1.0]
-    pdf = pd.DataFrame({"k": ["a"] * len(vals), "t": range(len(vals)), "v": vals})
-    got = (
-        W.ewma(spark.createDataFrame(pdf), keys=["k"], ts="t", value="v", alpha=0.3)
-        .orderBy("t")
-        .toPandas()["ewma"]
-        .tolist()
-    )
-    expected = pdf["v"].ewm(alpha=0.3, adjust=False).mean().tolist()
-    assert got == pytest.approx(expected, abs=1e-12)
 
 
 def test_boilerplate_detection_contract(spark):

@@ -253,12 +253,10 @@ def test_aggregate_from_appliances_channel_mode_is_mean_then_sum(spark):
         rows, "house string, channel string, sec long, power double"
     ).withColumn("ts", F.timestamp_seconds(F.col("sec")))
     two_stage = aggregate_from_appliances(
-        df, ["house"], seconds=300, ts="ts", value="power", channel="channel"
+        df, ["house"], seconds=300, value="power", channel="channel"
     ).collect()
     assert len(two_stage) == 1 and two_stage[0]["aggregate_computed"] == 13.0
-    single = aggregate_from_appliances(
-        df, ["house"], seconds=300, ts="ts", value="power"
-    ).collect()
+    single = aggregate_from_appliances(df, ["house"], seconds=300, value="power").collect()
     assert single[0]["aggregate_computed"] == 3003.0  # the fidelity gap
 
 
@@ -276,27 +274,6 @@ def test_pairwise_corr_onepass_empty_complete_case(spark):
     out = pairwise_corr_onepass(df, "s", ["a", "ghost"], seconds=60).collect()
     assert len(out) == 1
     assert out[0]["pearson"] is None
-
-
-def test_exclusion_predicate_null_attributes_not_excluded(spark):
-    from nilm_data_framework_spark.operators.selectors import (
-        exclusion_predicate,
-    )
-
-    df = spark.createDataFrame(
-        [("c1", "kettle", "fridge", "active", "shelly"),
-         ("c2", "kettle", None, "active", None)],
-        "channel_id string, raw_label string, universal_label string, "
-        "data_type string, acquisition_device string",
-    )
-    kept = df.filter(
-        exclusion_predicate(
-            exclude_labels=("fridge",), exclude_devices=("mqtt",)
-        )
-    ).collect()
-    # c1 excluded (label hit); c2's NULL label/device matches nothing ->
-    # kept (the reference only skips on an actual membership hit)
-    assert [r["channel_id"] for r in kept] == ["c2"]
 
 
 def test_weighted_mean_udaf_zero_weight_is_null(spark):
@@ -319,14 +296,20 @@ def test_weighted_mean_udaf_zero_weight_is_null(spark):
 
 
 def test_resample_mean_guarded_out_value(spark):
+    """The resampled branch (1 s key) and the pass-through branch (120 s
+    key, coarser than the 60 s target) emit the same columns, with
+    ``value`` under ``power``."""
     from nilm_data_framework_spark.operators.resample import (
         resample_mean_guarded,
     )
 
+    rows = [("fast", i, 2.0) for i in range(10)] + [
+        ("slow", i * 120, 5.0) for i in range(3)
+    ]
     df = spark.createDataFrame(
-        [("k", i, 2.0) for i in range(10)], "key string, sec long, energy double"
+        rows, "key string, sec long, energy double"
     ).withColumn("ts", F.timestamp_seconds(F.col("sec")))
-    out = resample_mean_guarded(
-        df, ["key"], 60, ts="ts", value="energy", out_value="energy"
-    )
-    assert "energy" in out.columns and "power" not in out.columns
+    out = resample_mean_guarded(df, ["key"], 60, value="energy")
+    assert out.columns == ["key", "bucket_ts", "power"]
+    got = sorted((r["key"], r["power"]) for r in out.collect())
+    assert got == [("fast", 2.0), ("slow", 5.0), ("slow", 5.0), ("slow", 5.0)]

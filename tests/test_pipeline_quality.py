@@ -266,7 +266,7 @@ def test_m4_emits_bucket_extremes(spark):
     df = spark.createDataFrame(rows, "k long, sec long, value double").select(
         "k", F.timestamp_seconds("sec").alias("ts"), "value"
     )
-    out = RS.m4_downsample(df, ["k"], ts="ts", value="value", bucket_s=100)
+    out = RS.m4_downsample(df, ["k"], bucket_s=100)
     got = {r["point_role"]: r["point_value"] for r in out.collect()}
     assert got["min"] == 1.0 and got["max"] == 9.0
     assert got["first"] == 5.0 and got["last"] == 7.0
@@ -277,16 +277,14 @@ def test_m4_emits_bucket_extremes(spark):
 
 
 def test_seasonal_naive_detects_periodicity(spark):
-    """A strictly periodic series: seasonal forecast is perfect (MAE 0),
-    naive is not -> ratio 0."""
-    vals = [10.0, 20.0, 30.0] * 8  # period 3, hourly buckets
+    """A strictly daily-periodic series: seasonal forecast is perfect
+    (MAE 0), naive is not -> ratio 0."""
+    vals = [10.0 * (h % 24) for h in range(3 * 24)]  # period 24, hourly buckets
     rows = [(1, i * 3600, v) for i, v in enumerate(vals)]
     df = spark.createDataFrame(rows, "k long, sec long, value double").select(
         "k", F.timestamp_seconds("sec").alias("ts"), "value"
     )
-    out = RS.seasonal_naive_error(
-        df, ["k"], ts="ts", value="value", bucket_s=3600, season=3
-    ).collect()[0]
+    out = RS.seasonal_naive_error(df, ["k"]).collect()[0]
     assert out["mae_seasonal"] == 0.0
     assert out["mae_naive"] > 0
     assert out["mase_ratio"] == 0.0
@@ -355,10 +353,9 @@ def test_asof_state_join_carries_last_state(spark):
         [(1, 5), (1, 10), (1, 15), (1, 25), (2, 14), (2, 16)], "k long, t long"
     )
     out = {
-        (r["k"], r["t"]): r["st"]
+        (r["k"], r["t"]): r["state"]
         for r in J.asof_state_join(
-            left, right, ["k"], left_ts="t", right_ts="t",
-            state_col="s", out="st",
+            left, right, ["k"], left_ts="t", right_ts="t", state_col="s"
         ).collect()
     }
     assert out[(1, 5)] is None          # before first state

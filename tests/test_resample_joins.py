@@ -55,27 +55,17 @@ def test_asof_join_basic_and_tolerance(spark):
     )
     right = _readings(spark, [("k", 8, 100.0), ("k", 18, 200.0)])
     out = {
-        r["ts"].second: r["v"]
-        for r in J.asof_join(
-            left, right, keys=["ch"], right_value="power", out="v"
-        ).collect()
+        r["ts"].second: r["asof_value"]
+        for r in J.asof_join(left, right, keys=["ch"], right_value="power").collect()
     }
     assert out == {5: None, 10: 100.0, 20: 200.0}
-    # with tolerance 5s, ts=10 (delta 2) keeps 100, ts=20 (delta 2) keeps 200
-    out_tol = {
-        r["ts"].second: r["v"]
-        for r in J.asof_join(
-            left, right, keys=["ch"], right_value="power", out="v", tolerance_s=1.0
-        ).collect()
-    }
-    assert out_tol == {5: None, 10: None, 20: None}
 
 
 def test_asof_join_equal_timestamps_inclusive(spark):
     left = _readings(spark, [("k", 10, 0.0)]).select("ch", "ts")
     right = _readings(spark, [("k", 10, 123.0)])
-    out = J.asof_join(left, right, keys=["ch"], right_value="power", out="v").collect()
-    assert out[0]["v"] == 123.0
+    out = J.asof_join(left, right, keys=["ch"], right_value="power").collect()
+    assert out[0]["asof_value"] == 123.0
 
 
 @settings(max_examples=10, deadline=None)
@@ -97,12 +87,12 @@ def test_enrich_defaults(spark):
     assert out == {1: "x", 2: "unknown"}
 
 
-def test_asof_cogrouped_matches_window_variant(spark):
-    """The cogrouped-pandas as-of join must agree with the union+carry
-    forward implementation row for row."""
+def test_asof_join_pinned_rows(spark):
+    """Nearest-previous, equal-ts-inclusive and nothing-before rows of the
+    union+carry-forward as-of join, pinned."""
     import pandas as pd
 
-    from nilm_data_framework_spark.operators.joins import asof_join, asof_join_cogrouped
+    from nilm_data_framework_spark.operators.joins import asof_join
 
     left = spark.createDataFrame(
         pd.DataFrame({"k": [1, 1, 1, 2, 2], "ts": [5, 10, 20, 3, 9],
@@ -111,22 +101,18 @@ def test_asof_cogrouped_matches_window_variant(spark):
     right = spark.createDataFrame(
         pd.DataFrame({"k": [1, 1, 2], "ts": [4, 10, 100], "power": [40.0, 100.0, 7.0]})
     )
-    a = asof_join(left, right, keys=["k"], left_ts="ts", right_ts="ts")
-    b = asof_join_cogrouped(left, right, keys=["k"], left_ts="ts", right_ts="ts")
+    a = asof_join(left, right, keys=["k"])
     rows_a = sorted(map(tuple, a.select("k", "ts", "x", "asof_value").collect()))
-    rows_b = sorted(map(tuple, b.select("k", "ts", "x", "asof_value").collect()))
-    assert rows_a == rows_b
     assert rows_a[0] == (1, 5, 1.0, 40.0)   # nearest-previous
     assert rows_a[1] == (1, 10, 2.0, 100.0)  # equal ts inclusive
     assert rows_a[3] == (2, 3, 4.0, None)    # nothing before → null
 
 
-def test_asof_variants_agree_under_tied_right_timestamps(spark):
+def test_asof_join_tied_right_timestamps_take_max(spark):
     """Duplicate (key, right_ts) rows — the r7 judge's latent-nondeterminism
-    finding. BOTH variants must resolve ties to the documented max-value
-    policy (null loses to non-null; all-null ties stay null), so they agree
-    with each other AND with the pinned expected values."""
-    from nilm_data_framework_spark.operators.joins import asof_join, asof_join_cogrouped
+    finding. Ties resolve to the documented max-value policy (null loses to
+    non-null; all-null ties stay null), pinned row for row."""
+    from nilm_data_framework_spark.operators.joins import asof_join
 
     left = spark.createDataFrame(
         [(1, 0), (1, 7), (2, 5), (3, 5)], "k int, ts long"
@@ -141,10 +127,7 @@ def test_asof_variants_agree_under_tied_right_timestamps(spark):
         "k int, ts long, power double",
     )
     a = asof_join(left, right, keys=["k"], right_value="power")
-    b = asof_join_cogrouped(left, right, keys=["k"], right_value="power")
     rows_a = sorted(map(tuple, a.select("k", "ts", "asof_value").collect()))
-    rows_b = sorted(map(tuple, b.select("k", "ts", "asof_value").collect()))
-    assert rows_a == rows_b
     assert rows_a == [(1, 0, 1.0), (1, 7, 2.0), (2, 5, None), (3, 5, -3.0)]
 
 
@@ -186,41 +169,16 @@ def test_pairwise_corr_onepass_matches_per_pair(spark):
     )
     per_pair = {
         (r["a"], r["b"]): r["pearson"]
-        for r in pairwise_corr(df, "ch", ts="ts", value="v", seconds=60).collect()
+        for r in pairwise_corr(df, "ch", value="v", seconds=60).collect()
     }
     one_pass = {
         (r["a"], r["b"]): r["pearson"]
-        for r in pairwise_corr_onepass(
-            df, "ch", ["x", "y", "z"], ts="ts", value="v", seconds=60
-        ).collect()
+        for r in pairwise_corr_onepass(df, "ch", ["x", "y", "z"], value="v", seconds=60).collect()
     }
     assert set(per_pair) == set(one_pass)
     for k in per_pair:
         assert math.isclose(per_pair[k], one_pass[k], rel_tol=1e-9), k
     assert math.isclose(per_pair[("x", "y")], 1.0, rel_tol=1e-9)
-
-
-def test_asof_cogrouped_tolerance_on_datetime_keys(spark):
-    """ADVICE r1: the tolerance path must work when the join key is a real
-    timestamp column (pd.merge_asof needs a Timedelta there, not a float)."""
-    import pandas as pd
-
-    from nilm_data_framework_spark.operators.joins import asof_join_cogrouped
-
-    left = spark.createDataFrame(
-        pd.DataFrame({"k": [1, 1, 1], "epoch": [100, 200, 400]})
-    ).select("k", F.timestamp_seconds("epoch").alias("ts"))
-    right = spark.createDataFrame(
-        pd.DataFrame({"k": [1, 1], "epoch": [95, 180], "power": [10.0, 20.0]})
-    ).select("k", F.timestamp_seconds("epoch").alias("ts"), "power")
-    out = {
-        int(r["ts"].timestamp()): r["asof_value"]
-        for r in asof_join_cogrouped(
-            left, right, keys=["k"], left_ts="ts", right_ts="ts", tolerance_s=30.0
-        ).collect()
-    }
-    # 100←95 (Δ5s ok), 200←180 (Δ20s ok), 400←180 (Δ220s > 30s → NULL)
-    assert out == {100: 10.0, 200: 20.0, 400: None}
 
 
 def test_salted_join_rejects_right_outer(spark):
@@ -242,8 +200,7 @@ def test_asof_join_null_valued_row_is_the_asof_row(spark):
     """pd.merge_asof / DuckDB ASOF semantics: the as-of row is the latest
     right ROW at-or-before t, even when its value is NULL — the r7 review
     showed separate last(ignorenulls) carries returned a STALE value
-    paired with the null row's timestamp (mis-passing the tolerance
-    check)."""
+    paired with the null row's timestamp."""
     from nilm_data_framework_spark.operators.joins import asof_join
 
     left = spark.createDataFrame([("k", 210)], "key string, ts long")
@@ -251,48 +208,11 @@ def test_asof_join_null_valued_row_is_the_asof_row(spark):
         [("k", 100, 5.0), ("k", 200, None)], "key string, ts long, power double"
     )
     assert asof_join(left, right, ["key"]).collect()[0]["asof_value"] is None
-    assert (
-        asof_join(left, right, ["key"], tolerance_s=50).collect()[0]["asof_value"]
-        is None
-    )
     # and duplicate (key, ts) right rows resolve deterministically (max)
     r2 = spark.createDataFrame(
         [("k", 100, 1.0), ("k", 100, 2.0)], "key string, ts long, power double"
     )
     assert asof_join(left, r2, ["key"]).collect()[0]["asof_value"] == 2.0
-
-
-def test_range_join_extra_keys_no_ambiguous_column(spark):
-    from pyspark.sql import functions as F
-
-    from nilm_data_framework_spark.operators.joins import range_join
-
-    f = spark.createDataFrame([(1, 5, "h1")], "id long, ts long, house_id string")
-    iv = spark.createDataFrame(
-        [(0, 10, "h1", "c1")],
-        "start_ts long, end_ts long, house_id string, camp string",
-    )
-    out = range_join(f, iv, "ts", extra_keys=["house_id"])
-    assert out.columns.count("house_id") == 1
-    assert out.select(F.col("house_id")).collect()[0][0] == "h1"
-
-
-def test_range_join_rejects_reserved_iv_column(spark):
-    """A fact column named _iv_<key> would be silently dropped by the
-    post-join drop-by-name (r7 advice) — the operator must refuse it."""
-    import pytest as _pytest
-
-    from nilm_data_framework_spark.operators.joins import range_join
-
-    f = spark.createDataFrame(
-        [(1, 5, "h1", "x")], "id long, ts long, house_id string, _iv_house_id string"
-    )
-    iv = spark.createDataFrame(
-        [(0, 10, "h1", "c1")],
-        "start_ts long, end_ts long, house_id string, camp string",
-    )
-    with _pytest.raises(ValueError, match="reserved"):
-        range_join(f, iv, "ts", extra_keys=["house_id"])
 
 
 def test_skyline_2d_fractional_x_strict_dominance(spark):

@@ -445,39 +445,3 @@ def test_orc_roundtrip_matches_parquet(spark, tmp_path):
         (F.col("dataset") == "ukdale") & (F.col("house_id") == 2)
     )
     assert pruned.count() == 1
-
-
-def test_ukdale_datasource_parity(spark, fixture_dir):
-    """Spark-4 Python DataSource surface (sources/ukdale_datasource.py)
-    returns byte-identical rows to the CSV-scan reader, and plans one
-    partition per eligible file (button_press dropped at planning time)."""
-    from nilm_data_framework_spark.sources.ukdale_datasource import (
-        HAVE_DATASOURCE_API,
-        UKDaleDataSource,
-        _iter_dat_files,
-    )
-
-    if not HAVE_DATASOURCE_API:
-        pytest.skip("pyspark<4: no Python DataSource API")
-
-    # planning-time listing: the decoy never becomes a partition
-    parts = _iter_dat_files(f"{fixture_dir}/ukdale")
-    assert {p[2] for p in parts} == {"channel_1", "channel_2"}
-
-    spark.dataSource.register(UKDaleDataSource)
-    via_ds = (
-        spark.read.format("ukdale")
-        .option("path", f"{fixture_dir}/ukdale")
-        .option("house_id", 1)
-        .load()
-    )
-    via_csv = read_ukdale(spark, f"{fixture_dir}/ukdale/channel_*.dat", house_id=1)
-    key = lambda r: (r["channel_id"], r["ts"])  # noqa: E731
-    a = sorted(via_ds.collect(), key=key)
-    b = sorted(via_csv.collect(), key=key)
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-    # nullability differs (lit() columns are non-null in the CSV path);
-    # names and types must match exactly
-    assert [(f.name, f.dataType) for f in via_ds.schema] == [
-        (f.name, f.dataType) for f in via_csv.schema
-    ]

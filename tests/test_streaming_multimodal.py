@@ -32,7 +32,7 @@ def test_streaming_mqtt_resample(spark, tmp_path):
             )
     stream = read_mqtt_stream(spark, str(logs))
     assert stream.isStreaming
-    agg = resampled_stream(stream, seconds=60, watermark="2 minutes")
+    agg = resampled_stream(stream)
     q = (
         agg.writeStream.format("memory")
         .queryName("mqtt_agg")
@@ -62,7 +62,7 @@ def test_streaming_dedup_within_watermark(spark, tmp_path):
         f.write(json.dumps(rec) + "\n")
         f.write(json.dumps(rec) + "\n")  # exact duplicate (ts, device)
     stream = read_mqtt_stream(spark, str(logs))
-    agg = resampled_stream(stream, seconds=60)
+    agg = resampled_stream(stream)
     q = (
         agg.writeStream.format("memory")
         .queryName("mqtt_dedup")
