@@ -1213,9 +1213,8 @@ def _copurchase_edges(
     HOF pair explosion (the same kernel triangle_count_parts documents;
     measured ~20% faster than the (order, part) self-join at sf0.1 because
     the fact table is scanned and shuffled once, not twice). The single
-    implementation is shared by triangle counting, link prediction, and
-    scripts/stress_scaling.py's graph workloads — the slice arithmetic
-    lives here once. ``support_col`` keeps the distinct-order support
+    implementation is shared by the triangle, k-core, link-prediction and
+    association-rule queries — the slice arithmetic lives here once. ``support_col`` keeps the distinct-order support
     count in the output (association-rules callers)."""
     parts = baskets if baskets is not None else _order_baskets(li)
     pairs = parts.select(

@@ -55,20 +55,16 @@ def embedding_gram_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- recursive hierarchy: closure + BOM-style rollup -------------------------
 
 
-def part_edges(part: DataFrame) -> DataFrame:
+def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Synthetic part containment forest: parent(p) = p div 10 (nodes 1-9
     are roots). Deterministic in both engines (nonnegative div). The ONE
-    grain definition — shared by the closure/rollup queries here and by
-    scripts/stress_scaling.py's replicated-forest workload (repo rule:
-    grain definitions live once)."""
+    grain definition — shared by the closure, rollup and centrality
+    queries (repo rule: grain definitions live once)."""
+    part = load_table(spark, sf_dir, "part")
     return part.where(F.col("p_partkey") >= 10).select(
         F.col("p_partkey").alias("child"),
         F.expr("p_partkey div 10").alias("parent"),
     )
-
-
-def _part_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return part_edges(load_table(spark, sf_dir, "part"))
 
 
 _CLOSURE_CTES = """

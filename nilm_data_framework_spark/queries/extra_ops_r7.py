@@ -126,7 +126,7 @@ def rag_persisted_pipeline(
     layouts :func:`build_rag_indexes` wrote: the pruned probes, the id-only
     zero-fill, the layout rels pass and fusion/MMR — no corpus gate, no
     index write, no centroid pick. Index writes amortize across serves
-    (the mode scripts/stress_scaling.py sweeps as rag_persisted_serve).
+    (the mode the rag_retrieval_pipeline_serve gate times).
     Returns the ``result`` frame plus the two pre-checkpoint probe frames
     ``bm25_hits`` and ``ivf_probe``."""
     from nilm_data_framework_spark.operators import similarity as S

@@ -82,12 +82,11 @@ def _pagerank_oracle(iters: int = _PR_ITERS) -> str:
 def pagerank_power(e: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     """Frame-level kernel: (src, dst) edge frame → (vertex, r) after
     ``iters`` rounds of the exact integer recurrence (docstring of the
-    registered query). Exposed separately so scripts/stress_scaling.py can
-    sweep it over replicated edge sets. Each round is one edge-join
-    shuffle + one vertex agg, lineage cut per round with localCheckpoint
-    (the connected_components discipline in operators/dedup.py — without
-    the cut the plan doubles per round and round k replays rounds
-    0..k-1)."""
+    registered query). Exposed separately so tests can run it on small
+    edge sets. Each round is one edge-join shuffle + one vertex agg,
+    lineage cut per round with localCheckpoint (the connected_components
+    discipline in operators/dedup.py — without the cut the plan doubles
+    per round and round k replays rounds 0..k-1)."""
     e = e.localCheckpoint(eager=True)  # feeds deg + vertices + every round
     # out-degrees reused by EVERY round's contrib join: checkpoint once
     # (was a groupBy over the full edge set re-executed per round)
@@ -259,28 +258,6 @@ def _entity_clusters_oracle() -> str:
     """
 
 
-def entity_clusters_from_pairs(pairs: DataFrame) -> DataFrame:
-    """Frame-level kernel behind entity_resolution_clusters: (id_a, id_b)
-    match pairs → per-cluster membership stats via hash-min connected
-    components. Exposed for scripts/stress_scaling.py's sweep over
-    replicated pair sets."""
-    from nilm_data_framework_spark.operators.dedup import connected_components
-
-    nodes = (
-        pairs.select(F.col("id_a").alias("id"))
-        .union(pairs.select(F.col("id_b").alias("id")))
-        .distinct()
-    )
-    cc = connected_components(nodes, pairs, id_col="id")
-    return cc.groupBy("cluster_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_members"),
-        F.sum(F.when(F.col("node") >= 3_000_000, 1).otherwise(0))
-        .cast("long")
-        .alias("n_synth"),
-        F.max("node").cast("long").alias("max_member"),
-    )
-
-
 @query(
     "entity_resolution_clusters",
     oracle=_entity_clusters_oracle(),
@@ -299,61 +276,29 @@ def entity_resolution_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     not just counts. Scale: pair generation is the blocked linkage join
     (bounded blocks), CC iterates over the tiny linked subgraph only —
     rounds cost O(pairs), never O(corpus)."""
+    from nilm_data_framework_spark.operators.dedup import connected_components
     from nilm_data_framework_spark.queries.extra_ops import record_linkage_pairs
 
     pairs = record_linkage_pairs(spark, sf_dir).select("id_a", "id_b")
-    return entity_clusters_from_pairs(pairs)
+    nodes = (
+        pairs.select(F.col("id_a").alias("id"))
+        .union(pairs.select(F.col("id_b").alias("id")))
+        .distinct()
+    )
+    cc = connected_components(nodes, pairs, id_col="id")
+    return cc.groupBy("cluster_id").agg(
+        F.count(F.lit(1)).cast("long").alias("n_members"),
+        F.sum(F.when(F.col("node") >= 3_000_000, 1).otherwise(0))
+        .cast("long")
+        .alias("n_synth"),
+        F.max("node").cast("long").alias("max_member"),
+    )
 
 
 # --- exact stratified split without per-stratum sorts ---------------------------
 
 _SPLIT_MIX = 2654435761  # Knuth multiplicative hash constant (public)
 _SPLIT_MOD = 1000003
-
-
-def stratified_split_frame(docs: DataFrame) -> DataFrame:
-    """Frame-level kernel behind stratified_split_exact: a (doc_id, lang)
-    frame → per-(lang, split) exact counts + membership checksums.
-    Exposed for scripts/stress_scaling.py's sweep over replicated docs."""
-    from nilm_data_framework_spark.operators.scale_windows import (
-        bucketed_global_rank,
-    )
-
-    d = docs.select(
-        "doc_id",
-        "lang",
-        ((F.col("doc_id") * F.lit(_SPLIT_MIX)) % F.lit(_SPLIT_MOD)).alias("h"),
-    ).localCheckpoint(eager=True)
-    ranked = bucketed_global_rank(
-        d,
-        F.struct(F.col("lang"), F.expr("h div 16384").alias("hb")),
-        [F.col("h"), F.col("doc_id")],
-        out="_gr",
-    )
-    cnt = d.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n_s"))
-    # cumulative offsets over the bounded language support (a dim-sized
-    # frame, not a raw scan — the window guard's sanctioned shape)
-    woff = Window.orderBy("lang").rowsBetween(Window.unboundedPreceding, -1)
-    off = cnt.select(
-        "lang",
-        "n_s",
-        F.coalesce(F.sum("n_s").over(woff), F.lit(0)).cast("long").alias("_off"),
-    )
-    j = ranked.join(off, "lang")
-    rk = F.col("_gr") - F.col("_off")
-    split = (
-        F.when(rk <= F.expr("(8 * n_s) div 10"), F.lit("train"))
-        .when(rk <= F.expr("(9 * n_s) div 10"), F.lit("val"))
-        .otherwise(F.lit("test"))
-    )
-    return (
-        j.select("lang", split.alias("split"), "doc_id")
-        .groupBy("lang", "split")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_rows"),
-            F.sum("doc_id").cast("long").alias("sum_doc_id"),
-        )
-    )
 
 
 @query(
@@ -401,9 +346,46 @@ def stratified_split_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number DuckDB can afford at gate scale — equality of the two
     formulations is what the gate checks. Input pruned to (doc_id, lang,
     h) and localCheckpointed once: bucketed_global_rank references its
-    input three times (rows, support, total). Kernel:
-    stratified_split_frame."""
-    return stratified_split_frame(load_table(spark, sf_dir, "documents"))
+    input three times (rows, support, total)."""
+    from nilm_data_framework_spark.operators.scale_windows import (
+        bucketed_global_rank,
+    )
+
+    d = load_table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        ((F.col("doc_id") * F.lit(_SPLIT_MIX)) % F.lit(_SPLIT_MOD)).alias("h"),
+    ).localCheckpoint(eager=True)
+    ranked = bucketed_global_rank(
+        d,
+        F.struct(F.col("lang"), F.expr("h div 16384").alias("hb")),
+        [F.col("h"), F.col("doc_id")],
+        out="_gr",
+    )
+    cnt = d.groupBy("lang").agg(F.count(F.lit(1)).cast("long").alias("n_s"))
+    # cumulative offsets over the bounded language support (a dim-sized
+    # frame, not a raw scan — the window guard's sanctioned shape)
+    woff = Window.orderBy("lang").rowsBetween(Window.unboundedPreceding, -1)
+    off = cnt.select(
+        "lang",
+        "n_s",
+        F.coalesce(F.sum("n_s").over(woff), F.lit(0)).cast("long").alias("_off"),
+    )
+    j = ranked.join(off, "lang")
+    rk = F.col("_gr") - F.col("_off")
+    split = (
+        F.when(rk <= F.expr("(8 * n_s) div 10"), F.lit("train"))
+        .when(rk <= F.expr("(9 * n_s) div 10"), F.lit("val"))
+        .otherwise(F.lit("test"))
+    )
+    return (
+        j.select("lang", split.alias("split"), "doc_id")
+        .groupBy("lang", "split")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum("doc_id").cast("long").alias("sum_doc_id"),
+        )
+    )
 
 
 # --- incremental SCD2 maintenance == full-history recompute --------------------

@@ -564,50 +564,6 @@ def _gram_power_oracle(iters: int = _GPI_ITERS) -> str:
     )
 
 
-def gram_power_direction(emb: DataFrame) -> DataFrame:
-    """Frame-level kernel behind gram_power_iteration (exposed for
-    scripts/stress_scaling.py): embeddings frame → (pos, v_q10), the
-    dominant Gram direction at max-|component| = 1024 fixed point after
-    _GPI_ITERS exact-integer power-iteration rounds. See the registered
-    query's docstring for the overflow algebra and division semantics."""
-    from nilm_data_framework_spark.operators import embed_stats as ES
-
-    gu = ES.gram_matrix_u6(emb, "embedding").select("i", "j", "g")
-    gf = gu.unionByName(
-        gu.filter(F.col("j") > F.col("i")).select(
-            F.col("j").alias("i"), F.col("i").alias("j"), "g"
-        )
-    )
-    nrm = gf.agg(
-        F.expr(
-            f"greatest(CAST(1 AS BIGINT), max(abs(g)) div {_GPI_GCAP})"
-        ).alias("dd")
-    )
-    gs = (
-        gf.crossJoin(F.broadcast(nrm))
-        .select("i", "j", F.expr("g div dd").cast("long").alias("gq"))
-        .localCheckpoint(eager=True)  # feeds every round
-    )
-    spark = emb.sparkSession
-    x = spark.range(64).select(
-        F.col("id").cast("int").alias("i"),
-        F.lit(_GPI_XS).cast("long").alias("x"),
-    )
-    for _ in range(_GPI_ITERS):
-        y = (
-            gs.join(x.select(F.col("i").alias("j"), "x"), "j")
-            .groupBy("i")
-            .agg(F.sum(F.col("gq") * F.col("x")).cast("long").alias("y"))
-        )
-        m = y.agg(F.max(F.abs(F.col("y"))).cast("long").alias("m"))
-        x = (
-            y.crossJoin(F.broadcast(m))
-            .select("i", F.expr(f"(y * {_GPI_XS}) div m").cast("long").alias("x"))
-            .localCheckpoint(eager=True)
-        )
-    return x.select(F.col("i").alias("pos"), F.col("x").alias("v_q10"))
-
-
 @query(
     "gram_power_iteration",
     oracle=_gram_power_oracle(),
@@ -634,8 +590,42 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the direction at max-|component| = 1024 fixed-point — for Gram
     (PSD) matrices with a non-degenerate spectral gap this converges to
     the top eigenvector; 4 rounds is the gated horizon, not a
-    convergence claim. Kernel: gram_power_direction."""
-    return gram_power_direction(_emb(spark, sf_dir))
+    convergence claim."""
+    from nilm_data_framework_spark.operators import embed_stats as ES
+
+    gu = ES.gram_matrix_u6(_emb(spark, sf_dir), "embedding").select("i", "j", "g")
+    gf = gu.unionByName(
+        gu.filter(F.col("j") > F.col("i")).select(
+            F.col("j").alias("i"), F.col("i").alias("j"), "g"
+        )
+    )
+    nrm = gf.agg(
+        F.expr(
+            f"greatest(CAST(1 AS BIGINT), max(abs(g)) div {_GPI_GCAP})"
+        ).alias("dd")
+    )
+    gs = (
+        gf.crossJoin(F.broadcast(nrm))
+        .select("i", "j", F.expr("g div dd").cast("long").alias("gq"))
+        .localCheckpoint(eager=True)  # feeds every round
+    )
+    x = spark.range(64).select(
+        F.col("id").cast("int").alias("i"),
+        F.lit(_GPI_XS).cast("long").alias("x"),
+    )
+    for _ in range(_GPI_ITERS):
+        y = (
+            gs.join(x.select(F.col("i").alias("j"), "x"), "j")
+            .groupBy("i")
+            .agg(F.sum(F.col("gq") * F.col("x")).cast("long").alias("y"))
+        )
+        m = y.agg(F.max(F.abs(F.col("y"))).cast("long").alias("m"))
+        x = (
+            y.crossJoin(F.broadcast(m))
+            .select("i", F.expr(f"(y * {_GPI_XS}) div m").cast("long").alias("x"))
+            .localCheckpoint(eager=True)
+        )
+    return x.select(F.col("i").alias("pos"), F.col("x").alias("v_q10"))
 
 
 # --- streaming twin of the incremental near-dup ingest (§2.9 closure) -------------

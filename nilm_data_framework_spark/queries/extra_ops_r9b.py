@@ -395,12 +395,7 @@ def best_passage_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     start)), global TakeOrderedAndProject. The oracle recounts every
     start with a quadratic list slice — the equivalence is the check.
     All-integer scores ⇒ deterministic cut."""
-    return _passage_kernel(load_table(spark, sf_dir, "documents"))
-
-
-def _passage_kernel(docs: DataFrame) -> DataFrame:
-    """Frame-level best-passage kernel (shared with the stress sweep)."""
-    pos = docs.select(
+    pos = load_table(spark, sf_dir, "documents").select(
         "doc_id", F.posexplode(T.tokens(F.col("text"))).alias("p0", "tok")
     ).select(
         "doc_id",
@@ -520,7 +515,8 @@ def kcenter_coreset_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _kcenter_kernel(emb: DataFrame) -> DataFrame:
-    """Frame-level farthest-first kernel (shared with the stress sweep)."""
+    """Frame-level farthest-first kernel (its unrolled plan is checked in
+    tests/test_checkpoint_blindspot.py)."""
     from nilm_data_framework_spark.operators.embed_stats import u6_components
 
     q = emb.select("vec_id", u6_components("embedding").alias("q6"))
@@ -655,7 +651,8 @@ def _bpe_train(
 def _bpe_train_frames(
     docs: DataFrame, rounds: int = _BPE_ROUNDS
 ) -> tuple[list[DataFrame], DataFrame]:
-    """Frame-level BPE training loop (shared with the stress sweep)."""
+    """Frame-level BPE training loop (its unrolled plan is checked in
+    tests/test_checkpoint_blindspot.py)."""
     w = (
         docs.select(F.explode(T.tokens(F.col("text"))).alias("word"))
         .filter(F.col("word").rlike("^[a-z]+$"))
@@ -873,12 +870,7 @@ def holt_forecast_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the r9 sign-magnitude discipline); the gate is bit-exact over ~2.4k
     chained divisions. Smoothing weights are the rational dial: any a/10,
     b/10 pair works unchanged."""
-    return _holt_kernel(load_table(spark, sf_dir, "orders"))
-
-
-def _holt_kernel(orders: DataFrame) -> DataFrame:
-    """Frame-level Holt kernel (shared with the stress sweep)."""
-    daily = orders.groupBy("o_orderdate").agg(
+    daily = load_table(spark, sf_dir, "orders").groupBy("o_orderdate").agg(
         F.sum(F.floor(F.col("o_totalprice") * 100).cast("long")).alias("y")
     )
     arr = daily.agg(

@@ -736,7 +736,7 @@ def test_rag_persisted_serve_mode_matches_gate_mode(spark):
     with the kept ids and trained centroids passed in) must reproduce the
     ORIGINAL exact pipeline on every serve — the superset-inertness proof
     exercised end-to-end at fixture scale, and the index-reuse contract
-    scripts/stress_scaling.py's rag_persisted_serve sweep relies on."""
+    the rag_retrieval_pipeline_serve gate relies on."""
     from nilm_data_framework_spark.plans.registry import all_queries
     from nilm_data_framework_spark.queries.extra_ops_r7 import (
         build_rag_indexes,
