@@ -14,10 +14,12 @@ Document operators read a ``(doc_id, text)`` frame; edge lists are
 from __future__ import annotations
 
 import random
+from contextlib import nullcontext
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint, pinned
 from nilm_data_framework_spark.operators.text import word_ngrams
 
 # 31-bit Mersenne prime for the universal-hash family h_i(x) = (a_i*x+b_i) mod p.
@@ -97,6 +99,14 @@ def _hashed_shingles(df: DataFrame) -> DataFrame:
     return sh.select("id", F.array_distinct(F.transform("sh", _md5_64)).alias("hs"))
 
 
+def _pinned_unless_shared(hashed: DataFrame | None, df: DataFrame):
+    """A caller-shared hashed frame as it is, else ``df``'s
+    :func:`_hashed_shingles` pinned for the ``with`` block."""
+    if hashed is not None:
+        return nullcontext(hashed)
+    return pinned(_hashed_shingles(df))
+
+
 def _banded(hashed: DataFrame) -> DataFrame:
     """(id, band, bucket) — LSH band buckets from the minhash signature.
     Single nested HOF over a one-call params literal: sig[i] = min over
@@ -168,8 +178,8 @@ def minhash_lsh_pairs(
     several LSH operators over one corpus slice (write-reference +
     within-batch pairs, the incremental-ingest gate) shingle each slice
     ONCE and pass it here instead of paying the shingle+md5 scan per
-    operator call. The caller owns its lifecycle (persist/unpersist);
-    this function then neither persists nor unpersists it.
+    operator call. The caller pins it (:func:`materialize.pinned`); this
+    function then leaves it alone.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and jaccard ≥ threshold,
     eagerly checkpointed, so a caller may feed it to several consumers
@@ -186,18 +196,13 @@ def minhash_lsh_pairs(
     collisions (~n²/2^61 per doc — negligible at any realistic shingle
     count).
     """
-    # hashed feeds the banded branch and both verify sides; persist so the
+    # hashed feeds the banded branch and both verify sides; pin it so the
     # shingle+hash computation isn't re-run per branch — Spark only reuses
-    # identical exchange subtrees, not arbitrary common subplans. Persisting
+    # identical exchange subtrees, not arbitrary common subplans. Pinning
     # the HASHED form (array<long>) instead of the raw shingle strings keeps
-    # the cache footprint at 8 B/shingle. The persist is scoped: the result
-    # is materialized eagerly below (localCheckpoint) and hashed is
-    # unpersisted before returning, so no cached blocks outlive the call in
-    # a shared session.
-    own_hashed = hashed is None
-    if own_hashed:
-        hashed = _hashed_shingles(df).persist()
-    try:
+    # the cache footprint at 8 B/shingle. The result is checkpointed inside
+    # the block, so the pin is released before returning.
+    with _pinned_unless_shared(hashed, df) as hashed:
         banded = _banded(hashed)
         a = banded.alias("a")
         b = banded.alias("b")
@@ -208,13 +213,7 @@ def minhash_lsh_pairs(
             .dropDuplicates(["id_a", "id_b"])
         )
         result = _verify_pairs(cand, hashed, hashed, jaccard_threshold)
-        # Materialize now (blocks are owned by the returned plan's RDD and
-        # reclaimed by the ContextCleaner when it is GC'd), so hashed's cache
-        # can be released immediately instead of leaking into the session.
-        return result.localCheckpoint(eager=True)
-    finally:
-        if own_hashed:
-            hashed.unpersist()
+        return checkpoint(result)
 
 
 def minhash_lsh_join(
@@ -253,19 +252,17 @@ def minhash_lsh_join(
     df_new (same contract as minhash_lsh_pairs' ``hashed``).
     """
     # each side's hashed shingles feed its banded branch AND its verify
-    # side — scoped persist (same discipline as minhash_lsh_pairs: eager
-    # localCheckpoint of the result, then unpersist) halves the shingling
-    # work per side. A persisted reference side is NEVER re-persisted or
+    # side — pinning them (as in minhash_lsh_pairs) halves the shingling
+    # work per side. A persisted reference side is NEVER re-pinned or
     # re-derived — it is already a bucketed scan.
     use_persisted_ref = ref_banded is not None and ref_hashed is not None
     if not use_persisted_ref and df_ref is None:
         raise ValueError("need df_ref or both ref_banded and ref_hashed")
-    own_new = new_hashed is None
-    hashed_new = _hashed_shingles(df_new).persist() if own_new else new_hashed
-    hashed_ref = (
-        ref_hashed if use_persisted_ref else _hashed_shingles(df_ref).persist()
-    )
-    try:
+    shared_ref = ref_hashed if use_persisted_ref else None
+    with (
+        _pinned_unless_shared(new_hashed, df_new) as hashed_new,
+        _pinned_unless_shared(shared_ref, df_ref) as hashed_ref,
+    ):
         banded_new = _banded(hashed_new).alias("a")
         banded_ref = (ref_banded if use_persisted_ref else _banded(hashed_ref)).alias("b")
         cand = (
@@ -281,12 +278,7 @@ def minhash_lsh_join(
         out = out.select(
             F.col("id_a").alias("new_id"), F.col("id_b").alias("ref_id"), "jaccard"
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        if own_new:
-            hashed_new.unpersist()
-        if not use_persisted_ref:
-            hashed_ref.unpersist()
+        return checkpoint(out)
 
 
 def _write_lsh_tables(
@@ -358,10 +350,7 @@ def write_lsh_reference(
     # read_lsh_reference fails LOUDLY instead of silently screening every
     # batch against a half-written layout.
     spark.sql(f"DROP TABLE IF EXISTS {table_prefix}_meta")
-    own_hashed = hashed is None
-    if own_hashed:
-        hashed = _hashed_shingles(df_ref).persist()
-    try:
+    with _pinned_unless_shared(hashed, df_ref) as hashed:
         _write_lsh_tables(hashed, table_prefix, buckets, "overwrite", path)
         meta = spark.createDataFrame(
             [(SHINGLE_N, NUM_HASHES, BANDS, MINHASH_SEED, buckets)],
@@ -371,9 +360,6 @@ def write_lsh_reference(
         if path is not None:
             w = w.option("path", f"{path}/meta")
         w.format("parquet").saveAsTable(f"{table_prefix}_meta")
-    finally:
-        if own_hashed:
-            hashed.unpersist()
 
 
 def _reference_meta(spark, table_prefix: str) -> dict:
@@ -427,11 +413,8 @@ def append_lsh_reference(batch: DataFrame, table_prefix: str) -> None:
     the next batch's candidates cover (old ∪ this) — the endpoint
     decomposition stays exact (see streaming_neardup_ingest_equiv)."""
     meta = _reference_meta(batch.sparkSession, table_prefix)
-    hashed = _hashed_shingles(batch).persist()
-    try:
+    with pinned(_hashed_shingles(batch)) as hashed:
         _write_lsh_tables(hashed, table_prefix, meta["buckets"], "append", None)
-    finally:
-        hashed.unpersist()
 
 
 def minhash_lsh_join_reference(
@@ -556,7 +539,7 @@ def _df_ranked_prefix(
         # materialization is one tokenize pass' output (id, gram set,
         # size), the same order of storage the downstream shuffles carry
         # anyway.
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     dg = g.select("id", "s", F.explode("g").alias("gram"))
     dfreq = dg.groupBy("gram").agg(F.count(F.lit(1)).cast("long").alias("gdf"))
@@ -735,7 +718,7 @@ def winnowing_shared_pairs(df: DataFrame) -> DataFrame:
     Emits (id_a, id_b, n_shared, n_fp_a, n_fp_b) with id_a < id_b."""
     min_shared, max_df = 2, 50
     fps = winnowing_fingerprints(df)
-    fps = fps.localCheckpoint(eager=True)  # feeds df-cap, sizes, and pairing
+    fps = checkpoint(fps)  # feeds df-cap, sizes, and pairing
     kept = fps.join(
         fps.groupBy("fp")
         .agg(F.count(F.lit(1)).alias("_df"))
@@ -879,7 +862,7 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
         )
         .filter(F.col("_a") != F.col("_b"))
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
     def _sym(ed: DataFrame) -> DataFrame:
@@ -929,11 +912,11 @@ def connected_components_star(nodes: DataFrame, edges: DataFrame) -> DataFrame:
     for _ in range(max_iter):
         # the published alternation: E ← small-star(large-star(E)); the
         # mid frame is checkpointed too (small-star reads it twice)
-        e_mid = _large_star(e).localCheckpoint(eager=True)
+        e_mid = checkpoint(_large_star(e))
         # lazy checkpoint: the count below materializes e_new and yields
         # n_new in one job (was eager-checkpoint + count = two jobs per
         # round; e_mid stays eager because _small_star reads it twice)
-        e_new = _small_star(e_mid).localCheckpoint(eager=False)
+        e_new = checkpoint(_small_star(e_mid), eager=False)
         # convergence = set equality; counts are distinct-deduped, so
         # equal counts + one-sided empty difference ⟺ equal sets. The
         # count-first guard skips the exceptAll join entirely while the
@@ -989,8 +972,7 @@ def connected_components(
     similar), so diameter is small (≤ ~4 observed) and rounds stay few at
     any corpus size — the 100 TB cost model is rounds × (one edge-join
     shuffle + one aggregate), with the label frame 2 longs per node.
-    Lineage is cut per round with localCheckpoint (NOT CacheManager-
-    registered, so nothing leaks into a shared session); the edge list is
+    Lineage is cut per round with a checkpoint; the edge list is
     checkpointed once so pair generation (the expensive part) runs exactly
     once, not per round. For adversarially chainy graphs the alternating
     large-star/small-star algorithm (Kiveris et al., "Connected Components
@@ -1006,12 +988,12 @@ def connected_components(
     sym = (
         edges.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .union(edges.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     touched = sym.select("src").distinct().withColumnRenamed("src", "node")
     labels = touched.select(
         "node", F.col("node").alias("comp")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
 
     def with_singletons(looped: DataFrame) -> DataFrame:
         singles = (
@@ -1039,7 +1021,7 @@ def connected_components(
         # checkpoint-then-probe form paid two job dispatches per round for
         # the identical work (r9 optimization round, guide §1.2/§5: the
         # per-round constant is job-count, not data, at every scale)
-        stepped = stepped.localCheckpoint(eager=False)
+        stepped = checkpoint(stepped, eager=False)
         if stepped.filter(F.col("comp_new") < F.col("comp")).count() == 0:
             return with_singletons(
                 stepped.select("node", F.col("comp").alias("cluster_id"))
@@ -1178,10 +1160,10 @@ def lsh_recall_audit(df: DataFrame) -> DataFrame:
     Output: ONE row (n_true_pairs, n_found_pairs, n_missed) — exact
     integers; the caller derives recall ratios. The hashed-shingle table
     feeds FIVE branches (truth candidates, banding, both verify sides ×2)
-    → localCheckpoint once (repo lineage rule).
+    → checkpoint once (repo lineage rule).
     """
     jaccard_threshold = 0.5
-    hashed = _hashed_shingles(df).localCheckpoint(eager=True)
+    hashed = checkpoint(_hashed_shingles(df))
     ex = hashed.select("id", F.explode("hs").alias("h"))
     a, b = ex.alias("a"), ex.alias("b")
     tcand = (

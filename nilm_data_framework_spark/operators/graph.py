@@ -14,19 +14,21 @@ vector is O(|V|) and joins by key (AQE-decided strategy — the vertex table
 grows with data, so no forced broadcast, per the repo's sf-scaled-relation
 rule). Hub vertices (Zipf in-degree) are absorbed by partial aggs; hot
 SOURCE vertices in the join are AQE-skew-split. A full power iteration loops
-this step with lineage cuts (same localCheckpoint discipline as
+this step with lineage cuts (same checkpoint discipline as
 connected_components); convergence typically needs O(10) rounds independent
 of |V|, so the 100 TB cost is ~10 linear passes.
 
 Edge lists are ``(src, dst)``; :func:`transitive_closure` reads
 ``(child, parent)``. Kernels whose edge list feeds several branches
-localCheckpoint it once.
+checkpoint it once.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from nilm_data_framework_spark.materialize import checkpoint
 
 
 # PageRank damping factor
@@ -133,7 +135,7 @@ def _degree_oriented_wedges(e: DataFrame):
 
 
 def _checkpointed_edges(edges: DataFrame) -> DataFrame:
-    """(_u, _v) of a (src, dst) edge list, localCheckpointed: the kernels
+    """(_u, _v) of a (src, dst) edge list, checkpointed: the kernels
     below read it from many branches (symmetrization, degrees, both wedge
     sides, the closure or anti-join set), and an expensive upstream edge
     BUILD (e.g. the per-order co-occurrence self-join) must run once, not
@@ -142,7 +144,7 @@ def _checkpointed_edges(edges: DataFrame) -> DataFrame:
     connected_components/pagerank)."""
     return edges.select(
         F.col("src").alias("_u"), F.col("dst").alias("_v")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
 
 
 def triangles_per_vertex(edges: DataFrame) -> DataFrame:
@@ -314,7 +316,7 @@ def transitive_closure(edges: DataFrame, rounds: int | None = 3) -> DataFrame:
     1000. Each round: one equi-join (closure.anc = closure.node) + one hash
     agg keeping min depth per (node, anc) (doubling re-derives a path from
     several split points; in a forest the min IS the unique depth). The
-    closure feeds BOTH sides of the next join, so it is localCheckpoint'ed
+    closure feeds BOTH sides of the next join, so it is checkpointed
     per round (the repo's many-branch lineage rule).
 
     ``rounds`` bounds the covered depth at 2^rounds; callers own picking it
@@ -328,7 +330,7 @@ def transitive_closure(edges: DataFrame, rounds: int | None = 3) -> DataFrame:
         F.col("child").alias("node"),
         F.col("parent").alias("anc"),
         F.lit(1).cast("long").alias("depth"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     if rounds is None:
         prev = closure.count()
         while True:
@@ -355,7 +357,7 @@ def _double_closure(closure: DataFrame) -> DataFrame:
         closure.unionByName(doubled)
         .groupBy("node", "anc")
         .agg(F.min("depth").alias("depth"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
 
@@ -370,7 +372,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     stronger than a raw degree cut, which round 1 equals). Each round is
     one hash agg (degrees, map-side combined) + two semi-joins filtering
     the symmetrized edge list; the edge list feeds the next round's agg
-    AND both semi-joins, so it is localCheckpoint'ed per round. Exact
+    AND both semi-joins, so it is checkpointed per round. Exact
     convergence loops until no vertex drops (the connected_components
     discipline); a fixed ``rounds`` ships because the DuckDB oracle
     unrolls the same number of passes — both engines compute the
@@ -379,7 +381,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
     sym = edges.select(F.col("src").alias("_u"), F.col("dst").alias("_v"))
     sym = sym.unionByName(
         sym.select(F.col("_v").alias("_u"), F.col("_u").alias("_v"))
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     for _ in range(rounds - 1):
         keep = (
             sym.groupBy("_u")
@@ -390,7 +392,7 @@ def kcore_peel(edges: DataFrame, k: int = 3, rounds: int = 3) -> DataFrame:
         sym = (
             sym.join(keep, "_u", "left_semi")
             .join(keep.withColumnRenamed("_u", "_v"), "_v", "left_semi")
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
     return (
         sym.groupBy("_u")

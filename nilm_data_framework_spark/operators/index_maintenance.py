@@ -10,15 +10,15 @@ one scan to locate affected files, rewrite only those, leave the rest
 untouched) applied at PARTITION granularity, plus the Lucene-style
 segment-merge compaction that undoes append fragmentation:
 
-- **delete = one map-only scan + rewrite of affected partitions.** The
-  victim rows are found with a broadcast semi-join against the deleted-id
-  set (no shuffle of the index); only the partitions that actually hold a
-  victim are rewritten, via Spark's dynamic partition overwrite. Dynamic
-  overwrite only replaces partitions PRESENT in the written data, so a
-  partition whose every row is deleted would silently keep its stale
-  files — those directories are removed explicitly through the Hadoop
-  FileSystem API (exactly what a lakehouse DELETE's commit does to
-  dead files).
+- **delete = one scan + rewrite of affected partitions.** The victim
+  rows are found with a semi-join against the deleted-id set (broadcast
+  when the set is small, so the index is not shuffled); only the
+  partitions that actually hold a victim are rewritten, via Spark's
+  dynamic partition overwrite. Dynamic overwrite only replaces
+  partitions PRESENT in the written data, so a partition whose every
+  row is deleted would silently keep its stale files — those
+  directories are removed explicitly through the Hadoop FileSystem API
+  (exactly what a lakehouse DELETE's commit does to dead files).
 - **compaction = rewrite-new-then-swap.** Appends leave one file per
   batch per partition directory (the small-file problem); compaction
   rewrites the dataset, one file per partition directory, into a sibling
@@ -47,6 +47,7 @@ from nilm_data_framework_spark.layouts import (
     read_parquet,
     write_schema_sidecar,
 )
+from nilm_data_framework_spark.materialize import checkpoint
 from nilm_data_framework_spark.operators.text import BM25_POSTINGS_SCHEMA, BM25_STATS_SCHEMA
 
 
@@ -152,12 +153,12 @@ def delete_bm25_docs(
     index, completing the CREATE/APPEND lifecycle). ``deleted`` carries
     a ``doc_id`` column:
 
-    1. ONE map-only scan of the postings locates victim rows via a
-       broadcast semi-join on the (distinct) deleted ids — the inverted
-       index is keyed by term, so finding a document's postings
+    1. ONE scan of the postings locates victim rows via a semi-join
+       on the (distinct) deleted ids — the inverted index is keyed by
+       term, so finding a document's postings
        inherently reads the postings once (the same full-scan cost a
        Delta/Iceberg copy-on-write DELETE without a locating index pays).
-       The victim set is localCheckpointed: it is small (the deleted
+       The victim set is checkpointed: it is small (the deleted
        docs' postings) and feeds three consumers (affected terms, the
        stats delta, the emptied-term check).
     2. Only AFFECTED term partitions are rewritten (survivor rows of
@@ -174,22 +175,23 @@ def delete_bm25_docs(
 
     Deleted ids ABSENT from the postings are treated as never-ingested
     (no-op, which also makes the delete idempotent). The deleted-id set
-    is broadcast: erasure batches are bounded by contract (they arrive
-    as requests, not as a corpus slice) — a delete large enough to break
-    a broadcast is cheaper served as a filtered REBUILD, the same
-    crossover every lakehouse DELETE has. CAVEAT: a document
-    ingested with ZERO tokens has no postings and therefore cannot be
-    located in a postings-only layout — its n_docs contribution would
-    survive an attempted delete. Corpora admitting empty documents need
-    a (doc_id, dl) sidecar; the gate corpus has none (every document
-    tokenizes to >= 1 term), and the limitation is inherent to inverted
-    postings, not this implementation (Lucene tracks live-docs bitmaps
-    for the same reason)."""
+    carries no broadcast hint: erasure batches are small in practice
+    (they arrive as requests, not as a corpus slice), so the planner
+    broadcasts them by size, and a delete too large for that is planned
+    as a shuffle join instead of failing — though it is cheaper served as
+    a filtered REBUILD, the same crossover every lakehouse DELETE has.
+    CAVEAT: a document ingested with ZERO tokens has no postings and
+    therefore cannot be located in a postings-only layout — its n_docs
+    contribution would survive an attempted delete. Corpora admitting
+    empty documents need a (doc_id, dl) sidecar; the gate corpus has
+    none (every document tokenizes to >= 1 term), and the limitation is
+    inherent to inverted postings, not this implementation (Lucene
+    tracks live-docs bitmaps for the same reason)."""
     del_ids = deleted.select("doc_id").distinct()
     post = spark.read.schema(BM25_POSTINGS_SCHEMA).parquet(f"{path}/postings")
-    victims = post.join(F.broadcast(del_ids), "doc_id", "semi").localCheckpoint()
+    victims = checkpoint(post.join(del_ids, "doc_id", "semi"))
 
-    aff_terms = victims.select("term").distinct().localCheckpoint()
+    aff_terms = victims.select("term").distinct().transform(checkpoint)
     # peek one past the isin crossover instead of collecting the full set:
     # the affected-term LIST only ever reaches the driver when it is small
     # enough to splice as a partition-pruning literal
@@ -217,16 +219,13 @@ def delete_bm25_docs(
         # element isin literal bloats the plan and the driver); costs one
         # unpruned re-scan, still ≪ a rebuild which re-tokenizes the corpus
         affected_posts = post.join(aff_terms, "term", "semi")
-    # localCheckpoint before the rewrite: (a) Spark refuses to overwrite a
+    # checkpoint before the rewrite: (a) Spark refuses to overwrite a
     # path its plan still reads from — the checkpoint cuts that lineage
     # (the rewrite materializes exactly this data anyway; at 100 TB a
     # too-large affected set would write-new-then-swap instead, as the
     # compactor does); (b) the frame feeds two consumers (surviving-term
     # set + the write)
-    surv = (
-        affected_posts.join(F.broadcast(del_ids), "doc_id", "anti")
-        .localCheckpoint()
-    )
+    surv = checkpoint(affected_posts.join(del_ids, "doc_id", "anti"))
     # a term dir left with zero survivors gets NO rows in the dynamic
     # overwrite — those dirs must be dropped explicitly; the emptied set
     # is computed DISTRIBUTED (affected anti surviving) and only it is
@@ -278,7 +277,7 @@ def compact_bm25_postings(spark: SparkSession, path: str) -> None:
 def delete_ivf_vecs(spark: SparkSession, path: str, deleted: DataFrame) -> None:
     """Copy-on-write DELETE of ``deleted``'s ``vec_id``s from a
     ``write_ivf_corpus`` layout: one scan locates the victims' centroid
-    lists (broadcast semi-join — the IVF corpus is keyed by cid, so the
+    lists (a semi-join — the IVF corpus is keyed by cid, so the
     deleted ids' lists are not known up front), then ONLY the affected cid directories are rewritten
     without the victims (dynamic partition overwrite); lists emptied
     entirely are dropped through the filesystem. Centroids are NOT
@@ -290,7 +289,7 @@ def delete_ivf_vecs(spark: SparkSession, path: str, deleted: DataFrame) -> None:
     surviving corpus with the SAME centroids."""
     del_ids = deleted.select("vec_id").distinct()
     corpus = read_parquet(spark, path)
-    victims = corpus.join(F.broadcast(del_ids), "vec_id", "semi")
+    victims = corpus.join(del_ids, "vec_id", "semi")
     affected = {r["cid"] for r in victims.select("cid").distinct().collect()}
     if not affected:
         return
@@ -299,8 +298,8 @@ def delete_ivf_vecs(spark: SparkSession, path: str, deleted: DataFrame) -> None:
     # surviving-cid probe + the write from one materialization
     surv = (
         corpus.filter(F.col("cid").isin(list(affected)))
-        .join(F.broadcast(del_ids), "vec_id", "anti")
-        .localCheckpoint()
+        .join(del_ids, "vec_id", "anti")
+        .transform(checkpoint)
     )
     surviving = {r["cid"] for r in surv.select("cid").distinct().collect()}
     partitioned_writer(surv, ["cid"]).mode("overwrite").option(

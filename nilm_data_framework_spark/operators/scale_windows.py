@@ -57,7 +57,7 @@ def bucketed_global_rank(
 
     The input subtree is referenced TWICE here (per-row window + support)
     and a third time by bucketed_ntile's total count — callers with a
-    scan-heavy input should localCheckpoint it once (the r6 rfm lesson:
+    scan-heavy input should checkpoint it once (the r6 rfm lesson:
     2.2 s chained vs 1.2 s checkpointed at sf0.1). ``_sw*`` names are
     reserved working columns; colliding caller columns would be silently
     overwritten and dropped, so they are rejected outright.

@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint
+
 
 def split_bucket(id_col: Column, n_buckets: int = 100) -> Column:
     """md5-derived bucket in [0, n_buckets): stable content hash of the id
@@ -164,7 +166,7 @@ def temporal_embargo_split(
         .where(F.expr(f"_us div {bucket_us}") == F.col("_bstar"))
         .groupBy("_us")
         .agg(F.count(F.lit(1)).alias("_c"))
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     w_in = Window.orderBy("_us").rowsBetween(Window.unboundedPreceding, 0)
     cutoff = (

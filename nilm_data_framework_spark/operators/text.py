@@ -13,6 +13,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from nilm_data_framework_spark.layouts import partitioned_writer
+from nilm_data_framework_spark.materialize import pinned
 from nilm_data_framework_spark.operators.exact_math import ratio_e4
 
 # The two fixed schemas of the write_bm25_index layout (doc_id is an integer
@@ -774,14 +775,13 @@ def append_bm25_batch(df: DataFrame, path: str) -> None:
     dedup keyed on doc_id is a single linear pass) or rebuild via
     :func:`write_bm25_index`."""
     # one tokenize pass per batch (r9 optimization round): the postings
-    # write and the stats aggregate both consume toks — persist it across
+    # write and the stats aggregate both consume toks — pin it across
     # the two actions (bounded by the BATCH, not the corpus, so the cache
     # footprint is the ingest increment; write_bm25_index handles the
     # corpus-sized case differently — count + sum over the written
-    # postings — because persisting a full corpus of token arrays is not
+    # postings — because pinning a full corpus of token arrays is not
     # scale-safe)
-    toks = _doc_tokens(df).persist()
-    try:
+    with pinned(_doc_tokens(df)) as toks:
         _write_postings(toks, path, "append")
         spark = df.sparkSession
         old = spark.read.schema(BM25_STATS_SCHEMA).parquet(f"{path}/stats").collect()[0]
@@ -792,10 +792,6 @@ def append_bm25_batch(df: DataFrame, path: str) -> None:
             F.count(F.lit(1)).cast("long").alias("n_docs"),
             F.coalesce(F.sum("dl"), F.lit(0)).cast("long").alias("sum_dl"),
         ).collect()[0]
-    finally:
-        # a failed write/merge must not leak the cached batch into a shared
-        # session (VERDICT r9 item 5)
-        toks.unpersist()
     spark.createDataFrame(
         [(old["n_docs"] + new["n_docs"], old["sum_dl"] + new["sum_dl"])],
         BM25_STATS_SCHEMA,

@@ -87,4 +87,7 @@ REATTEST: frozenset[str] = frozenset({
     # the W6 query calls windows.median_smooth instead of inlining the
     # same rows-frame percentile (window column order and name changed)
     "median_smooth",
+    # uniform PageRank runs the personalized kernel with every vertex
+    # seeded (one kernel instead of two)
+    "pagerank_power_iterations",
 })

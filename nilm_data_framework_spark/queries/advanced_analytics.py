@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint
 from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
 from nilm_data_framework_spark.operators import graph as G
 from nilm_data_framework_spark.operators import robust as RB
@@ -256,7 +257,7 @@ def kmv_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     singles = (
         SK.kmv_sketch(du, ["event_type"], "uid", _KMV_K)
         .select("event_type", "hv")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     pairs = _pairs_df(spark)
     member = pairs.select("set_name", F.col("ta").alias("event_type")).unionByName(

@@ -257,7 +257,7 @@ def label_propagation_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     equal vertex ids, so a neighbor's label IS its id and the step needs no
     label join: one symmetric edge union, one (v, label) count agg, one
     rank-1 window per vertex, then an O(1)-row summary. Iterating = feeding
-    new_label back through the same plan with localCheckpoint per round
+    new_label back through the same plan with checkpoint per round
     (the connected_components discipline). All shuffles are on vertex
     ids — AQE-skew-splittable; the vote frame is O(edges)."""
     li = load_table(spark, sf_dir, "lineitem")

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint
 from nilm_data_framework_spark.operators import embed_stats as ES
 from nilm_data_framework_spark.operators import splits as SP
 from nilm_data_framework_spark.operators import text as T
@@ -1084,11 +1085,11 @@ def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both rank reconstructions (narrow 3-long-column frame)
     base = docs.select(
         "doc_id", "n_chars", token_count(F.col("text")).cast("long").alias("n_tok")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     cand_c = base.orderBy(F.col("n_chars").desc(), F.col("doc_id")).limit(128)
     cand_t = base.orderBy(F.col("n_tok").desc(), F.col("doc_id")).limit(128)
     cands = (
-        cand_c.unionByName(cand_t).distinct().coalesce(1).localCheckpoint(eager=True)
+        cand_c.unionByName(cand_t).distinct().coalesce(1).transform(checkpoint)
     )
     rc = exact_ranks_for_candidates(base, cands, "n_chars", "doc_id", out="rank_chars")
     rt = exact_ranks_for_candidates(base, cands, "n_tok", "doc_id", out="rank_tokens")
@@ -1845,7 +1846,7 @@ def neardup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from nilm_data_framework_spark.operators import dedup as D
 
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
-    hashed = D._hashed_shingles(docs).localCheckpoint(eager=True)
+    hashed = checkpoint(D._hashed_shingles(docs))
     banded = D._banded(hashed)
     a, b = banded.alias("a"), banded.alias("b")
     cand = (
@@ -2021,7 +2022,7 @@ def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-evaluates the customer agg 3^3 times (measured 2.2 s at sf0.1 vs
     # 1.2 s for this form): checkpoint `per` once, build the three tile
     # columns independently from it, join them back on the customer key.
-    per = per.localCheckpoint(eager=True)
+    per = checkpoint(per)
     scored = per
     for bucket, order, desc, out in [
         (F.col("recency_d"), [F.col("o_custkey")], False, "r_q"),
@@ -2219,7 +2220,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") <= _MMR_SHORTLIST)
         .select("query_id", "match_id", "rel", "c6")
-        .localCheckpoint(eager=True)  # feeds pairs + every greedy stage
+        .transform(checkpoint)  # feeds pairs + every greedy stage
     )
     s_i = short.select(
         "query_id", F.col("match_id").alias("id_i"), F.col("c6").alias("v_i")
@@ -2237,7 +2238,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("id_i") != F.col("id_j"))
         .withColumn("sim", dot_ij)
         .select("query_id", "id_i", "id_j", "sim")
-        .localCheckpoint(eager=True)  # reused by K-1 stages
+        .transform(checkpoint)  # reused by K-1 stages
     )
     sel = (
         short.withColumn("rk", F.row_number().over(w))
@@ -2282,7 +2283,7 @@ def mmr_diversified_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 (F.col("rel") - F.col("msim")).cast("long").alias("mmr2"),
             )
         )
-        sel = sel.unionByName(pick).localCheckpoint(eager=False)
+        sel = sel.unionByName(pick).transform(checkpoint, eager=False)
     return sel.select(
         "query_id", "match_id", F.col("step").cast("long"), "rel",
         F.col("mmr2").cast("long"),
@@ -2370,7 +2371,7 @@ def sax_motifs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # thrice (rows, support, total — the r6 rfm lesson).
     means = seg.select(
         "user_id", "seg", u6_mean_e4("s6", "cnt").alias("mean_e4")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     sym = bucketed_ntile(
         means,
         F.col("mean_e4"),
@@ -2808,7 +2809,7 @@ def rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     bmscored = (
         bm25_scores(kept_docs, _BM25_TERMS)
         .select("doc_id", "bm25_raw")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     qv = emb.where(F.col("vec_id") == _RAG_QVEC).select(
         u6_components("embedding").alias("qv6")
@@ -2823,9 +2824,10 @@ def rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("vec_id").alias("rdoc_id"), u6_components("embedding").alias("c6")
         )
-        .crossJoin(F.broadcast(qv))
+        # vec_id is the key: the limit only makes the 1-row bound visible
+        .crossJoin(F.broadcast(qv.limit(1)))
         .select(F.col("rdoc_id").alias("doc_id"), dot_q.alias("rel"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     cand_ids = (
         bmscored.orderBy(F.col("bm25_raw").desc(), "doc_id")
@@ -2838,7 +2840,7 @@ def rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .distinct()
         .coalesce(1)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     cvec = emb.select(
         F.col("vec_id").alias("match_id"), u6_components("embedding").alias("c6")
@@ -4791,7 +4793,7 @@ def degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the HOF basket build feeds both degree derivation and the moment join
     # — checkpoint the (tiny) thresholded edge list once, the
     # triangle_count/common_neighbors materialize discipline (r10)
-    e = _copurchase_edges(li).localCheckpoint(eager=True)
+    e = checkpoint(_copurchase_edges(li))
     sym = e.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionByName(
         e.select(F.col("dst").alias("u"), F.col("src").alias("v"))
     )
@@ -5486,7 +5488,7 @@ def weighted_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "gram")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     tot = dg.groupBy("doc_id").agg(F.sum("cnt").cast("long").alias("t"))
     a = dg.select(
@@ -5683,7 +5685,7 @@ def item_cf_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         _order_baskets,
     )
 
-    baskets = _order_baskets(li).localCheckpoint(eager=True)
+    baskets = checkpoint(_order_baskets(li))
     co = _copurchase_edges(
         li, min_support=2, support_col="co", baskets=baskets
     ).select(
@@ -6961,7 +6963,7 @@ def greedy_set_cover_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source", F.explode(word_ngrams(F.col("text"), 3)).alias("g")
         )
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
 
     def argmax(cands: DataFrame) -> DataFrame:
@@ -7098,7 +7100,7 @@ def sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranked = bucketed_global_rank(
         src, F.substring("c_name", 1, 15), [F.col("c_name"), F.col("id")],
         out="r",
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     band = ((F.col("r") - 1) / 256).cast("long")
     a = ranked.select(
         F.col("id").alias("id_a"), F.col("c_name").alias("name_a"),
@@ -7542,7 +7544,7 @@ def padding_waste_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents", parallelize=True)
     t = docs.select(
         "doc_id", token_count(F.col("text")).cast("long").alias("n_toks")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
 
     def per_batch(bucket, order, name: str) -> DataFrame:
         ranked = bucketed_global_rank(t, bucket, order, out="r")

@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nilm_data_framework_spark.layouts import read_parquet
+from nilm_data_framework_spark.materialize import checkpoint
 from nilm_data_framework_spark.plans.registry import query
 from nilm_data_framework_spark.queries.extra_ops import _rag_oracle
 from nilm_data_framework_spark.sources.testdata import load_table
@@ -96,7 +97,7 @@ def build_rag_indexes(spark: SparkSession, docs: DataFrame, emb: DataFrame) -> d
         quality_classifier_score(docs)
         .where(F.col("keep") & (F.col("doc_id") != _RAG_QVEC))
         .select("doc_id")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     bm_path = pid_scratch_dir(
         os.path.join(tempfile.gettempdir(), "nilm_spark_rag_bm25"), "idx_"
@@ -145,7 +146,7 @@ def rag_persisted_pipeline(
     zero = kept_ids.join(hits, "doc_id", "left_anti").select(
         "doc_id", F.lit(0.0).alias("bm25_raw")
     )
-    bmscored = hits.unionByName(zero).localCheckpoint(eager=True)
+    bmscored = hits.unionByName(zero).transform(checkpoint)
 
     qdf = emb.where(F.col("vec_id") == _RAG_QVEC)
     ivf_probe = S.ivf_topk_partitioned(
@@ -163,9 +164,10 @@ def rag_persisted_pipeline(
         lay.select(
             F.col("vec_id").alias("rdoc_id"), u6_components("embedding").alias("c6")
         )
-        .crossJoin(F.broadcast(qv))
+        # vec_id is the key: the limit only makes the 1-row bound visible
+        .crossJoin(F.broadcast(qv.limit(1)))
         .select(F.col("rdoc_id").alias("doc_id"), dot_q.alias("rel"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     cand_ids = (
         bmscored.orderBy(F.col("bm25_raw").desc(), "doc_id")
@@ -179,7 +181,7 @@ def rag_persisted_pipeline(
         .unionByName(ivf_probe.select(F.col("match_id").alias("doc_id")))
         .distinct()
         .coalesce(1)
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     cvec = lay.select(
         F.col("vec_id").alias("match_id"), u6_components("embedding").alias("c6")

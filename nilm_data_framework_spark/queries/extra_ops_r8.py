@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint, pinned
 from nilm_data_framework_spark.plans.registry import query, registry as _registry
 from nilm_data_framework_spark.sources.testdata import load_table
 
@@ -79,85 +80,6 @@ def _pagerank_oracle(iters: int = _PR_ITERS) -> str:
     )
 
 
-def pagerank_power(e: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
-    """Frame-level kernel: (src, dst) edge frame → (vertex, r) after
-    ``iters`` rounds of the exact integer recurrence (docstring of the
-    registered query). Exposed separately so tests can run it on small
-    edge sets. Each round is one edge-join shuffle + one vertex agg,
-    lineage cut per round with localCheckpoint (the connected_components
-    discipline in operators/dedup.py — without the cut the plan doubles
-    per round and round k replays rounds 0..k-1)."""
-    e = e.localCheckpoint(eager=True)  # feeds deg + vertices + every round
-    # out-degrees reused by EVERY round's contrib join: checkpoint once
-    # (was a groupBy over the full edge set re-executed per round)
-    deg = (
-        e.groupBy("src")
-        .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .localCheckpoint(eager=True)
-    )
-    v = (
-        e.select(F.col("src").alias("vertex"))
-        .union(e.select(F.col("dst").alias("vertex")))
-        .distinct()
-    )
-    # r9 optimization round (guide §1.2 step 1 + §2.4): dangling-ness is a
-    # STATIC vertex property — resolve it ONCE into a boolean riding the
-    # rank frame instead of re-deriving it per round as a pr ⋈ deg
-    # left-anti shuffle; and the vertex count is a query CONSTANT, so the
-    # teleport term is a literal, not a per-round broadcast of a re-run
-    # 1-row aggregate. Lazy checkpoint + count = one job that both
-    # materializes the (vertex, is_dang) frame and yields n. Python `//`
-    # on non-negative ints equals Spark `div`, so the precomputed r0/tp
-    # literals are bit-identical to the old in-plan expressions.
-    vf = (
-        v.join(
-            deg.select(F.col("src").alias("vertex"), F.lit(True).alias("_out")),
-            "vertex",
-            "left",
-        )
-        .select("vertex", F.col("_out").isNull().alias("is_dang"))
-        .localCheckpoint(eager=False)
-    )
-    n = vf.count()
-    r0 = _PR_SCALE // n
-    tp = (150 * r0) // 1000
-    pr = vf.select("vertex", "is_dang", F.lit(r0).cast("long").alias("r"))
-    for _ in range(iters):
-        dang = pr.filter("is_dang").agg(
-            F.coalesce(F.sum("r"), F.lit(0)).cast("long").alias("dang")
-        )
-        contrib = (
-            e.join(
-                pr.select(F.col("vertex").alias("src"), "r"), "src"
-            )
-            .join(deg, "src")
-            .groupBy("dst")
-            .agg(
-                F.sum(F.expr("(r * 850) div (1000 * deg)"))
-                .cast("long")
-                .alias("cin")
-            )
-            .withColumnRenamed("dst", "vertex")
-        )
-        pr = (
-            pr.crossJoin(F.broadcast(dang))
-            .join(contrib, "vertex", "left")
-            .select(
-                "vertex",
-                "is_dang",
-                (
-                    F.lit(tp)
-                    + F.expr(f"(850 * dang) div (1000 * {n})")
-                    + F.coalesce(F.col("cin"), F.lit(0))
-                )
-                .cast("long")
-                .alias("r"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return pr.select("vertex", "r")
-
-
 @query(
     "pagerank_power_iterations",
     oracle=_pagerank_oracle(),
@@ -169,8 +91,11 @@ def pagerank_power(e: DataFrame, iters: int = _PR_ITERS) -> DataFrame:
     "(queries/pipeline_quality.py), gated bit-exact instead of rounded",
 )
 def pagerank_power_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative numeric fixpoint, the Spark way (kernel: pagerank_power).
-    The recurrence, all BIGINT:
+    """Iterative numeric fixpoint, the Spark way. Uniform PageRank is
+    personalized PageRank with every vertex seeded (same scale, same
+    recurrence), so this runs that kernel
+    (queries/extra_ops_r9.py::personalized_pagerank_power). The
+    recurrence, all BIGINT:
 
         r0(v)    = S div N
         dang_t   = sum of r_t over dangling vertices (no out-edges)
@@ -187,7 +112,7 @@ def pagerank_power_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     rule) and reads it off a static is_dang flag instead of a per-round
     anti-join; the per-round joins shuffle on vertex ids —
     AQE-skew-splittable, edges and degrees scanned from one
-    localCheckpoint each. 100 TB: cost = iters x O(edges), the canonical
+    checkpoint each. 100 TB: cost = iters x O(edges), the canonical
     power-iteration shape.
 
     Vertex keys are TAGGED LONGS through all 4 iterations (supplier
@@ -197,6 +122,10 @@ def pagerank_power_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection; the recurrence itself is name-blind, so the oracle is
     unchanged (judge r8: the iterated query is exactly where wider keys
     cost 4x more)."""
+    from nilm_data_framework_spark.queries.extra_ops_r9 import (
+        personalized_pagerank_power,
+    )
+
     li = load_table(spark, sf_dir, "lineitem")
     e = li.select(
         (F.col("l_suppkey").cast("long") * 2).alias("src"),
@@ -211,7 +140,7 @@ def pagerank_power_iterations(spark: SparkSession, sf_dir: str) -> DataFrame:
     # top-20 cut BEFORE relabeling would need the string tiebreak the
     # oracle uses (ORDER BY r DESC, vertex) — so relabel first, then rank
     return (
-        pagerank_power(e)
+        personalized_pagerank_power(e, lambda v: F.lit(True), _PR_ITERS)
         .select(label.alias("vertex"), F.col("r"))
         .orderBy(F.col("r").desc(), "vertex")
         .limit(20)
@@ -345,7 +274,7 @@ def stratified_split_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     support. The oracle states the SAME split with the plain per-stratum
     row_number DuckDB can afford at gate scale — equality of the two
     formulations is what the gate checks. Input pruned to (doc_id, lang,
-    h) and localCheckpointed once: bucketed_global_rank references its
+    h) and checkpointed once: bucketed_global_rank references its
     input three times (rows, support, total)."""
     from nilm_data_framework_spark.operators.scale_windows import (
         bucketed_global_rank,
@@ -355,7 +284,7 @@ def stratified_split_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "lang",
         ((F.col("doc_id") * F.lit(_SPLIT_MIX)) % F.lit(_SPLIT_MOD)).alias("h"),
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     ranked = bucketed_global_rank(
         d,
         F.struct(F.col("lang"), F.expr("h div 16384").alias("hb")),
@@ -649,7 +578,7 @@ def entity_clusters_incremental_equiv(spark: SparkSession, sf_dir: str) -> DataF
     pairs = (
         record_linkage_pairs(spark, sf_dir)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)  # feeds both batches + the agg
+        .transform(checkpoint)  # feeds both batches + the agg
     )
     b1 = pairs.filter((F.col("id_a") + F.col("id_b")) % 2 == 0)
     b2 = pairs.filter((F.col("id_a") + F.col("id_b")) % 2 == 1)
@@ -724,11 +653,12 @@ def incremental_neardup_clusters_equiv(spark: SparkSession, sf_dir: str) -> Data
     # screen AND the within-b2 pairs), and each call used to re-run the
     # shingle+md5 scan. Hash each slice ONCE and pass the frame through
     # the operators' shared-``hashed`` kwarg. The operator calls all
-    # materialize eagerly inside this function, so unpersisting on exit
+    # materialize eagerly inside the block, so releasing the pins on exit
     # is safe — the returned plan references only checkpointed frames.
-    h1 = D._hashed_shingles(c1).persist()
-    h2 = D._hashed_shingles(b2).persist()
-    try:
+    with (
+        pinned(D._hashed_shingles(c1)) as h1,
+        pinned(D._hashed_shingles(b2)) as h2,
+    ):
         D.write_lsh_reference(c1, prefix, buckets=8, path=path, hashed=h1)
         pairs1 = D.minhash_lsh_pairs(c1, jaccard_threshold=0.5, hashed=h1)
         labels1 = D.connected_components(
@@ -743,9 +673,6 @@ def incremental_neardup_clusters_equiv(spark: SparkSession, sf_dir: str) -> Data
         inc = D.connected_components_incremental(
             labels1, cross.unionByName(within)
         )
-    finally:
-        h1.unpersist()
-        h2.unpersist()
     singles = (
         b2.select("doc_id")
         .join(inc.select(F.col("node").alias("doc_id")), "doc_id", "left_anti")

@@ -49,6 +49,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint
 from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
 from nilm_data_framework_spark.plans.registry import query
 from nilm_data_framework_spark.sources.testdata import load_table
@@ -104,7 +105,7 @@ def spearman_rho_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     built with operators/scale_windows.py::bucketed_global_rank (acctbal
     bucketed by floor(dollar), spend by $1,000 bands — both bounded
     supports), so no stage sorts the sf-scaled customer table in one
-    task. The joined base is localCheckpointed once: each bucketed rank
+    task. The joined base is checkpointed once: each bucketed rank
     references its input twice, and the two ranks + final join would
     otherwise re-run the spend agg four times (the r6 rfm lesson).
 
@@ -130,7 +131,7 @@ def spearman_rho_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
         spend, cust["c_custkey"] == spend["o_custkey"]
     ).select("c_custkey", "c_acctbal", "spend")
     # feeds two bucketed ranks (2 references each) — materialize once
-    base = base.localCheckpoint(eager=True)
+    base = checkpoint(base)
     rx = bucketed_global_rank(
         base,
         bucket=F.floor("c_acctbal").cast("long"),
@@ -419,7 +420,7 @@ def disparate_impact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_total"),
         F.sum(keep.cast("int")).cast("long").alias("n_keep"),
     )
-    per = per.localCheckpoint(eager=True)  # feeds the ref pick + the output
+    per = checkpoint(per)  # feeds the ref pick + the output
     ref = (
         per.orderBy(
             (F.col("n_keep").cast("double") / F.col("n_total")).desc(),
@@ -1011,7 +1012,7 @@ def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .select("bk", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     parts = op.groupBy("bk").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("ps")
@@ -1030,7 +1031,7 @@ def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("s", "t")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
         # feeds the Apriori prune + three confidence joins — materialize
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     # Triple counting via two codegen'd equi-joins on the basket key, NOT
     # the nested HOF (measured at sf0.1: join 6.7-7.2 s vs nested HOF

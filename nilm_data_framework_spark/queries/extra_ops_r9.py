@@ -62,6 +62,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nilm_data_framework_spark.layouts import read_parquet
+from nilm_data_framework_spark.materialize import checkpoint, pinned
 from nilm_data_framework_spark.plans.registry import query, registry as _registry
 from nilm_data_framework_spark.sources.testdata import load_table
 
@@ -580,7 +581,7 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-phase shape that scales independently of corpus size: ONE
     linear pass builds the d×d Gram (operators/embed_stats.py::
     gram_matrix_u6 — d²-bounded shuffle), then the iteration runs
-    entirely on d²/d-row frames (4096/64 rows at d=64; localCheckpoint
+    entirely on d²/d-row frames (4096/64 rows at d=64; checkpoint
     per round keeps the plan flat, the pagerank discipline at toy frame
     sizes). Overflow algebra: |gq| ≤ 2^36 (the one-time cap), |x| ≤ 2^10
     (per-round renorm) ⇒ |Σ_j gq·x| ≤ 64·2^46 = 2^52 and the renorm
@@ -607,7 +608,7 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     gs = (
         gf.crossJoin(F.broadcast(nrm))
         .select("i", "j", F.expr("g div dd").cast("long").alias("gq"))
-        .localCheckpoint(eager=True)  # feeds every round
+        .transform(checkpoint)  # feeds every round
     )
     x = spark.range(64).select(
         F.col("id").cast("int").alias("i"),
@@ -623,7 +624,7 @@ def gram_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
         x = (
             y.crossJoin(F.broadcast(m))
             .select("i", F.expr(f"(y * {_GPI_XS}) div m").cast("long").alias("x"))
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
     return x.select(F.col("i").alias("pos"), F.col("x").alias("v_q10"))
 
@@ -700,14 +701,13 @@ def streaming_neardup_ingest_equiv(spark: SparkSession, sf_dir: str) -> DataFram
     seen: set[int] = set()
 
     def ingest(batch: DataFrame, batch_id: int) -> None:
-        batch = batch.localCheckpoint(eager=True)  # feeds pairs + segment + singles
+        batch = checkpoint(batch)  # feeds pairs + segment + singles
         # one shingle+md5 scan per micro-batch, shared by the within-batch
         # pairs, every per-segment screen AND the segment publish (batch k
         # used to re-shingle k+2 times) — the r9-opt shared-``hashed``
-        # contract; every consumer materializes eagerly inside this
-        # function, so the scoped unpersist is safe
-        hb = D._hashed_shingles(batch).persist()
-        try:
+        # contract; every consumer materializes eagerly inside the block,
+        # so releasing the pin on exit is safe
+        with pinned(D._hashed_shingles(batch)) as hb:
             within = D.minhash_lsh_pairs(
                 batch, jaccard_threshold=0.5, hashed=hb
             ).select("id_a", "id_b")
@@ -754,8 +754,6 @@ def streaming_neardup_ingest_equiv(spark: SparkSession, sf_dir: str) -> DataFram
                 batch, f"{prefix}_seg{batch_id}", buckets=8,
                 path=os.path.join(scratch, f"seg{batch_id}"), hashed=hb,
             )
-        finally:
-            hb.unpersist()
         seen.add(batch_id)
 
     schema = spark.read.parquet(os.path.join(d, "b0.parquet")).schema
@@ -1319,7 +1317,7 @@ def scd2_late_arrivals_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     main = ev.filter(F.col("event_id") % 16 != 0)
     late = ev.filter(F.col("event_id") % 16 == 0)
-    main = main.localCheckpoint(eager=True)  # feeds iv1 + the affected re-collapse
+    main = checkpoint(main)  # feeds iv1 + the affected re-collapse
     iv1 = scd2_intervals(
         main, key="user_id", ts="ts", attr="event_type", tiebreak=["event_id"]
     )
@@ -1566,12 +1564,13 @@ def personalized_pagerank_power(
     i.e. PageRank whose teleport (and dangling redistribution — same
     vector, standard PPR) lands ONLY on the seed set: rank mass measures
     proximity to the seeds, the recommendation/expansion primitive
-    (Jeh & Widom 2003; GraphX's personalized variant). Same per-round
-    shape as pagerank_power — one edge-join shuffle + one vertex agg,
-    lineage cut per round — with the seed test a per-row predicate, so
-    100 TB cost is unchanged: iters × O(edges)."""
-    e = e.localCheckpoint(eager=True)
-    # same r9-opt restructure as pagerank_power (queries/extra_ops_r8.py):
+    (Jeh & Widom 2003; GraphX's personalized variant). Uniform PageRank
+    (queries/extra_ops_r8.py::pagerank_power_iterations) is this kernel
+    with every vertex seeded. Each round is one edge-join shuffle + one
+    vertex agg, lineage cut per round (without the cut the plan doubles
+    per round and round k replays rounds 0..k-1); the seed test is a
+    per-row predicate, so 100 TB cost is iters × O(edges)."""
+    e = checkpoint(e)  # feeds deg + vertices + every round
     # out-degrees checkpointed once (reused by every round's contrib
     # join); dangling-ness and seed membership are STATIC vertex
     # properties resolved ONCE into booleans riding the rank frame (the
@@ -1583,7 +1582,7 @@ def personalized_pagerank_power(
     deg = (
         e.groupBy("src")
         .agg(F.count(F.lit(1)).cast("long").alias("deg"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     v = (
         e.select(F.col("src").alias("vertex"))
@@ -1601,7 +1600,7 @@ def personalized_pagerank_power(
             F.col("_out").isNull().alias("is_dang"),
             seed_pred(F.col("vertex")).alias("is_seed"),
         )
-        .localCheckpoint(eager=False)
+        .transform(checkpoint, eager=False)
     )
     n = vf.filter("is_seed").count()  # materializes vf + counts in one job
     r0 = _PPR_SCALE // n
@@ -1644,7 +1643,7 @@ def personalized_pagerank_power(
                 .cast("long")
                 .alias("r"),
             )
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
     return pr.select("vertex", "r")
 

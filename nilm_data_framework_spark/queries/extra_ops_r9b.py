@@ -55,6 +55,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint
 from nilm_data_framework_spark.operators import graph as G
 from nilm_data_framework_spark.operators import text as T
 from nilm_data_framework_spark.plans.registry import query
@@ -503,7 +504,7 @@ def kcenter_coreset_seeds(spark: SparkSession, sf_dir: str) -> DataFrame:
     inside int64), argmax with vec_id tiebreaks ⇒ deterministic
     cross-engine. Plan shape per round: ONE broadcast of the LIMIT-1
     selected center (guard-exempt reference frame), one linear min-dist
-    fold, localCheckpoint of the O(n) state vector — the canonical
+    fold, checkpoint of the O(n) state vector — the canonical
     distributed k-center: k linear passes, no pairwise matrix. The state
     checkpoint is REQUIRED, not optional: each round references the prior
     state twice (argmax + fold base), so the lazy chain re-evaluates
@@ -534,7 +535,7 @@ def _kcenter_kernel(emb: DataFrame) -> DataFrame:
     state = (
         q.crossJoin(F.broadcast(c1.select(F.col("q6").alias("c6"))))
         .select("vec_id", "q6", F.expr(_KC_D2).alias("mind"))
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     for r in range(2, _KC_K + 1):
         best = state.orderBy(F.desc("mind"), F.asc("vec_id")).limit(1)
@@ -552,7 +553,7 @@ def _kcenter_kernel(emb: DataFrame) -> DataFrame:
                 "q6",
                 F.least(F.col("mind"), F.expr(_KC_D2)).alias("mind"),
             )
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
     rad = state.agg(F.max("mind").alias("radius2"))
     out = sels[0]
@@ -662,7 +663,7 @@ def _bpe_train_frames(
             "syms",
             F.expr("transform(sequence(1, length(word)), i -> substring(word, i, 1))"),
         )
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     rows = []
     for r in range(1, rounds + 1):
@@ -694,7 +695,7 @@ def _bpe_train_frames(
                 "cnt",
                 F.expr(_BPE_MERGE).alias("syms"),
             )
-            .localCheckpoint(eager=True)
+            .transform(checkpoint)
         )
         after = w.agg(
             F.sum(F.col("cnt") * F.size("syms")).alias("corpus_tokens_after")
@@ -730,7 +731,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     every subsequent round is vocabulary-sized work; the corpus is never
     rescanned. Per round the plan is: bounded pair explode + hash agg,
     LIMIT-1 argmax broadcast (guard-exempt), one aggregate() HOF rewrite
-    pass, localCheckpoint of the vocab-bounded word table (each round
+    pass, checkpoint of the vocab-bounded word table (each round
     references it twice — argmax + rewrite — so the lazy chain would
     re-fold 2^rounds times). corpus_tokens_after pins each REWRITE
     exactly (not just the argmax): it is the post-merge corpus token
@@ -942,7 +943,7 @@ def holt_incremental_equiv(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("r.b").alias("pb"),
             F.col("r.sae").alias("psae"),
             F.col("r.n").alias("pn"),
-        ).localCheckpoint(eager=True)
+        ).transform(checkpoint)
     return st.select(
         F.col("pn").cast("long").alias("n_days"),
         F.col("pl").alias("l_final"),
@@ -1224,7 +1225,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic function — TIES.md row). Output = per-cluster
     (n_core, n_border) census; noise = everything else, derivable as
     n_points − Σ(core+border). The pair frame feeds THREE branches
-    (degrees, core edges, border attach) — localCheckpointed once per
+    (degrees, core edges, border attach) — checkpointed once per
     the fan-out rule. Scale: every stage is the audited kernel's shape;
     the quadratic closure exists only in the oracle."""
     from nilm_data_framework_spark.operators import dedup as D
@@ -1245,7 +1246,7 @@ def dbscan_grid_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         _radius_pairs_frame(_hash_points(cust), cell, r2=r2)
         .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     sym = pairs.select(
         F.col("id_a").alias("s"), F.col("id_b").alias("t")

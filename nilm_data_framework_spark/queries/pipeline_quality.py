@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint
 from nilm_data_framework_spark.operators.exact_math import (
     ratio_e4,
     ratio_e4_sql,
@@ -178,7 +179,7 @@ def bloom_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     # branch from it.
     base = d.select(
         "doc_id", "lang", T.word_ngrams(F.col("text"), 3).alias("_gs")
-    ).localCheckpoint(eager=True)
+    ).transform(checkpoint)
     grams = base.filter(F.col("doc_id") % 40 != 0).select(
         "doc_id", "lang", F.explode("_gs").alias("g")
     )
@@ -667,7 +668,7 @@ def pagerank_step(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = li.select(
         (F.col("l_suppkey") * 2).alias("src"),
         (F.col("l_partkey") * 2 + 1).alias("dst"),
-    ).distinct().localCheckpoint(eager=True)
+    ).distinct().transform(checkpoint)
     ranks = G.pagerank_iteration(edges)
     n = edges.select(F.col("src").alias("vertex")).unionByName(
         edges.select(F.col("dst").alias("vertex"))

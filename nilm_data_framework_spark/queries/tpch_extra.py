@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import checkpoint
 from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
 from nilm_data_framework_spark.plans.registry import query
 from nilm_data_framework_spark.sources.testdata import load_table
@@ -384,7 +385,7 @@ def promotion_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per branch — the CLAUDE.md many-branch rule (measured: halves
         # the fact-side work; sub-second either way at sf0.1 because the
         # 'small%' filter is selective, dominant at 100 TB)
-        .localCheckpoint(eager=True)
+        .transform(checkpoint)
     )
     pt = sp.groupBy("l_partkey").agg(F.sum("q").alias("qt"))
     qual = sp.join(pt, "l_partkey").filter(10 * F.col("q") > 3 * F.col("qt"))

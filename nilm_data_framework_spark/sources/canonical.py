@@ -20,6 +20,7 @@ from nilm_data_framework_spark.layouts import (
     read_parquet,
     write_schema_sidecar,
 )
+from nilm_data_framework_spark.materialize import checkpoint
 
 
 # in-file order after the partition columns: ts-major (not channel-major)
@@ -108,9 +109,9 @@ def merge_upsert_partitioned(spark: SparkSession, changes: DataFrame, path: str)
     # eager extra job, and without pinning, a nondeterministic changes frame
     # (sample(), rand() filter, shuffle-order-dependent pick) could pass the
     # check yet merge DIFFERENT rows when re-evaluated below (r7 advice).
-    # localCheckpoint materializes one version that both the check and the
+    # checkpoint materializes one version that both the check and the
     # merge read. Changelog batches are churn-sized, not table-sized.
-    changes = changes.localCheckpoint(eager=True)
+    changes = checkpoint(changes)
     # real MERGE INTO errors when the source matches one target row twice;
     # silently unioning a multi-row-per-PK changes batch would INSERT
     # duplicate PK rows and double-count downstream (r7 review). Fail fast.

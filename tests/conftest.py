@@ -2,7 +2,6 @@ from __future__ import annotations
 
 import pytest
 from hypothesis import settings as hyp_settings
-from pyspark.sql.classic.dataframe import DataFrame
 
 from nilm_data_framework_spark.session import get_session
 
@@ -27,18 +26,6 @@ def spark():
     # part of the VERDICT item-1 driver-budget work.
     s = get_session(app_name="nilm-spark-tests", master="local[6]", shuffle_partitions=3)
     yield s
-
-
-@pytest.fixture()
-def no_checkpoints(monkeypatch):
-    """localCheckpoint → identity: plans stay fully visible to explain.
-    Patched on the classic DataFrame, the class sessions return: it
-    overrides localCheckpoint, so a patch on pyspark.sql.DataFrame never
-    reaches it."""
-    monkeypatch.setattr(
-        DataFrame, "localCheckpoint", lambda self, eager=True: self
-    )
-    yield
 
 
 @pytest.fixture(scope="session")

@@ -12,6 +12,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from nilm_data_framework_spark.materialize import pinned
 from nilm_data_framework_spark.operators import dedup as D
 
 DOCS = [
@@ -218,7 +219,7 @@ def test_minhash_leaves_no_cached_plans(spark):
     """VERDICT r1 item 6: the shingle persist must not outlive the call in a
     shared session. persist() registers the plan in Catalyst's CacheManager,
     which never auto-evicts — an un-unpersisted cache would sit there
-    forever. (The localCheckpoint blocks of the returned result are owned by
+    forever. (The checkpoint blocks of the returned result are owned by
     its RDD and reclaimed by the ContextCleaner, not the CacheManager.)"""
     cm = spark._jsparkSession.sharedState().cacheManager()
     assert cm.isEmpty(), "test precondition: cache manager not empty"
@@ -240,18 +241,15 @@ def test_minhash_shared_hashed_identical_and_caller_owned(spark):
         (r["id_a"], r["id_b"], round(r["jaccard"], 9))
         for r in D.minhash_lsh_pairs(df).collect()
     }
-    h = D._hashed_shingles(df).persist()
-    try:
+    with pinned(D._hashed_shingles(df)) as h:
         shared = {
             (r["id_a"], r["id_b"], round(r["jaccard"], 9))
             for r in D.minhash_lsh_pairs(df, hashed=h).collect()
         }
         assert shared == base
-        # caller's cache must survive the call (the operator would
+        # caller's pin must survive the call (the operator would
         # previously have unpersisted its own hashed frame here)
         assert not cm.isEmpty(), "operator unpersisted the caller's frame"
-    finally:
-        h.unpersist()
     assert cm.isEmpty(), "shared-hashed call leaked a cached plan"
 
 

@@ -120,18 +120,30 @@ def test_append_lsh_reference_equals_one_shot(spark):
 
 def test_ppr_with_all_vertices_seeded_equals_uniform_pagerank(spark):
     # seed set = every vertex collapses the seeded recurrence to the
-    # uniform one (|seeds| = N, teleport/dangling land everywhere), so the
-    # two kernels must agree bit-for-bit.
-    from nilm_data_framework_spark.queries.extra_ops_r8 import pagerank_power
+    # uniform one (|seeds| = N, teleport/dangling land everywhere), which
+    # pagerank_power_iterations relies on: the kernel must agree
+    # bit-for-bit with the uniform recurrence of its docstring, replayed
+    # here in Python (// equals Spark div on non-negative ints).
+    from nilm_data_framework_spark.queries.extra_ops_r8 import _PR_SCALE
     from nilm_data_framework_spark.queries.extra_ops_r9 import (
         personalized_pagerank_power,
     )
 
-    e = spark.createDataFrame(
-        [(0, 1), (0, 2), (1, 2), (2, 3), (4, 2), (5, 5)],
-        "src long, dst long",
-    )
-    uni = {r["vertex"]: r["r"] for r in pagerank_power(e, iters=3).collect()}
+    edges = [(0, 1), (0, 2), (1, 2), (2, 3), (4, 2), (5, 5)]
+    e = spark.createDataFrame(edges, "src long, dst long")
+    verts = {v for edge in edges for v in edge}
+    deg = {v: sum(1 for s, _ in edges if s == v) for v in verts}
+    n = len(verts)
+    uni = {v: _PR_SCALE // n for v in verts}
+    for _ in range(3):
+        dang = sum(uni[v] for v in verts if deg[v] == 0)
+        cin = {v: 0 for v in verts}
+        for s, d in edges:
+            cin[d] += (uni[s] * 850) // (1000 * deg[s])
+        uni = {
+            v: (150 * (_PR_SCALE // n)) // 1000 + (850 * dang) // (1000 * n) + cin[v]
+            for v in verts
+        }
     ppr = {
         r["vertex"]: r["r"]
         for r in personalized_pagerank_power(

@@ -8,7 +8,6 @@ idempotence, and the partition-name unescape round-trip."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import functions as F
 
@@ -64,8 +63,8 @@ def _parquet_files_per_dir(path):
     return out
 
 
-def test_bm25_delete_matches_fresh_rebuild(spark):
-    base = tempfile.mkdtemp(prefix="bm25_del_")
+def test_bm25_delete_matches_fresh_rebuild(spark, tmp_path):
+    base = str(tmp_path)
     p_del, p_ref = f"{base}/maintained", f"{base}/rebuilt"
     df = _docs_df(spark)
     write_bm25_index(df, p_del)
@@ -85,12 +84,12 @@ def test_bm25_delete_matches_fresh_rebuild(spark):
     assert a == b  # bit-equal scores: same stats, same op order
 
 
-def test_bm25_delete_semi_join_branch_matches_isin_branch(spark):
+def test_bm25_delete_semi_join_branch_matches_isin_branch(spark, tmp_path):
     """isin_max_terms=0 forces the huge-erasure-vocabulary path (term
     semi-join instead of the partition-pruned isin literal); it must
     produce the identical layout, including the emptied-directory drop
     (doc 5 is the only holder of 'onlyinfive'/'zeta')."""
-    base = tempfile.mkdtemp(prefix="bm25_del_semi_")
+    base = str(tmp_path)
     p_a, p_b = f"{base}/isin", f"{base}/semi"
     df = _docs_df(spark)
     deleted = spark.createDataFrame([(1,), (5,)], "doc_id long")
@@ -103,8 +102,8 @@ def test_bm25_delete_semi_join_branch_matches_isin_branch(spark):
     assert "onlyinfive" not in list_partition_values(spark, f"{p_b}/postings", "term")
 
 
-def test_bm25_delete_empties_term_directory(spark):
-    p = tempfile.mkdtemp(prefix="bm25_del_empty_") + "/idx"
+def test_bm25_delete_empties_term_directory(spark, tmp_path):
+    p = str(tmp_path / "idx")
     df = _docs_df(spark)
     write_bm25_index(df, p)
     # doc 5 is the ONLY holder of 'onlyinfive' — deleting it must drop the
@@ -120,8 +119,8 @@ def test_bm25_delete_empties_term_directory(spark):
     )
 
 
-def test_bm25_delete_unknown_ids_is_noop_and_idempotent(spark):
-    p = tempfile.mkdtemp(prefix="bm25_del_noop_") + "/idx"
+def test_bm25_delete_unknown_ids_is_noop_and_idempotent(spark, tmp_path):
+    p = str(tmp_path / "idx")
     df = _docs_df(spark)
     write_bm25_index(df, p)
     before_post, before_stats = _postings_set(spark, p), _stats(spark, p)
@@ -137,8 +136,8 @@ def test_bm25_delete_unknown_ids_is_noop_and_idempotent(spark):
     assert _stats(spark, p) == mid_stats
 
 
-def test_bm25_delete_duplicate_request_rows_counted_once(spark):
-    p = tempfile.mkdtemp(prefix="bm25_del_dup_") + "/idx"
+def test_bm25_delete_duplicate_request_rows_counted_once(spark, tmp_path):
+    p = str(tmp_path / "idx")
     df = _docs_df(spark)
     write_bm25_index(df, p)
     n0, dl0 = _stats(spark, p)
@@ -149,8 +148,8 @@ def test_bm25_delete_duplicate_request_rows_counted_once(spark):
     assert dl1 == dl0 - 2  # doc 3 = "stream delta", dl 2
 
 
-def test_bm25_compact_restores_one_file_per_term_and_preserves_rows(spark):
-    p = tempfile.mkdtemp(prefix="bm25_cmp_") + "/idx"
+def test_bm25_compact_restores_one_file_per_term_and_preserves_rows(spark, tmp_path):
+    p = str(tmp_path / "idx")
     df = _docs_df(spark)
     write_bm25_index(df.filter(F.col("doc_id") <= 3), p)
     append_bm25_batch(df.filter(F.col("doc_id").isin([4, 5])), p)
@@ -180,13 +179,13 @@ def _file_identity(root, skip_prefixes=()):
     return out
 
 
-def test_bm25_delete_leaves_unaffected_term_files_untouched(spark):
+def test_bm25_delete_leaves_unaffected_term_files_untouched(spark, tmp_path):
     """The copy-on-write I/O claim STRESS.md cites, pinned structurally:
     deleting doc 3 ("stream delta") may rewrite only term=stream and
     term=delta — every other term directory's files keep their exact
     (name, size, mtime) identity, proving the rewrite touched nothing
     else (toy wall-clock cannot show this; file identity can)."""
-    p = tempfile.mkdtemp(prefix="bm25_del_touch_") + "/idx"
+    p = str(tmp_path / "idx")
     write_bm25_index(_docs_df(spark), p)
     post_root = f"{p}/postings"
     affected = {"term=stream", "term=delta"}
@@ -196,10 +195,10 @@ def test_bm25_delete_leaves_unaffected_term_files_untouched(spark):
     assert before == after
 
 
-def test_ivf_delete_leaves_unaffected_list_files_untouched(spark):
+def test_ivf_delete_leaves_unaffected_list_files_untouched(spark, tmp_path):
     from nilm_data_framework_spark.operators.similarity import write_ivf_corpus
 
-    p = tempfile.mkdtemp(prefix="ivf_del_touch_") + "/corpus"
+    p = str(tmp_path / "corpus")
     write_ivf_corpus(_vec_df(spark), p, CENTS)
     # delete one vector of list cid=1: only that directory may change
     before = _file_identity(p, skip_prefixes=("cid=1",))
@@ -208,11 +207,11 @@ def test_ivf_delete_leaves_unaffected_list_files_untouched(spark):
     assert before == after
 
 
-def test_partition_value_unescape_roundtrip(spark):
+def test_partition_value_unescape_roundtrip(spark, tmp_path):
     # a term containing a path-reserved char: Spark escapes it in the
     # directory name; list_partition_values must map the dir back to the
     # raw value (the emptied-dir delete keys on it)
-    p = tempfile.mkdtemp(prefix="esc_") + "/t"
+    p = str(tmp_path / "t")
     spark.createDataFrame(
         [("a:b", 1), ("plain", 2)], "term string, x long"
     ).write.partitionBy("term").parquet(p)
@@ -243,10 +242,10 @@ def _corpus_set(spark, path):
     }
 
 
-def test_ivf_delete_matches_fresh_rebuild_and_drops_empty_list(spark):
+def test_ivf_delete_matches_fresh_rebuild_and_drops_empty_list(spark, tmp_path):
     from nilm_data_framework_spark.operators.similarity import write_ivf_corpus
 
-    base = tempfile.mkdtemp(prefix="ivf_del_")
+    base = str(tmp_path)
     p_del, p_ref = f"{base}/maintained", f"{base}/rebuilt"
     df = _vec_df(spark)
     write_ivf_corpus(df, p_del, CENTS)
@@ -263,13 +262,13 @@ def test_ivf_delete_matches_fresh_rebuild_and_drops_empty_list(spark):
     assert _corpus_set(spark, p_del) == before
 
 
-def test_ivf_compact_restores_one_file_per_list(spark):
+def test_ivf_compact_restores_one_file_per_list(spark, tmp_path):
     from nilm_data_framework_spark.operators.similarity import (
         append_ivf_batch,
         write_ivf_corpus,
     )
 
-    p = tempfile.mkdtemp(prefix="ivf_cmp_") + "/corpus"
+    p = str(tmp_path / "corpus")
     df = _vec_df(spark)
     write_ivf_corpus(df.filter(F.col("vec_id") < 8), p, CENTS)
     append_ivf_batch(df.filter(F.col("vec_id").between(8, 11)), p, CENTS)

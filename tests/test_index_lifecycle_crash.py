@@ -7,7 +7,6 @@ files and the swap commits the fresh rewrite."""
 from __future__ import annotations
 
 import os
-import tempfile
 
 from nilm_data_framework_spark.operators.index_maintenance import (
     compact_bm25_postings,
@@ -28,8 +27,8 @@ def _postings_set(spark, path):
     }
 
 
-def test_compact_recovers_from_stale_tmp_dir(spark):
-    p = tempfile.mkdtemp(prefix="bm25_crash_") + "/idx"
+def test_compact_recovers_from_stale_tmp_dir(spark, tmp_path):
+    p = str(tmp_path / "idx")
     df = spark.createDataFrame(DOCS, "doc_id long, text string")
     write_bm25_index(df, p)
     before = _postings_set(spark, p)

@@ -11,6 +11,7 @@ import io
 
 import pytest
 
+from nilm_data_framework_spark.materialize import recording
 from nilm_data_framework_spark.plans.registry import all_queries
 from tests.conftest import SF_DIR
 
@@ -25,26 +26,43 @@ def _plan(spark, name: str) -> str:
     return buf.getvalue()
 
 
+def _segment_plans(df, cuts) -> list[tuple[str, str, str, list[str]]]:
+    """(label, formatted physical plan, analyzed logical string,
+    window-walk hits) for a frame and for every frame a checkpoint or pin
+    cut while it was built (``cuts``, from ``materialize.recording``): the
+    final plan stops at each cut's ``Scan ExistingRDD``, so the guards
+    read the segments behind the cuts too."""
+    out = []
+    for label, seg in [("final", df)] + [(f"segment {i}", c) for i, c in enumerate(cuts)]:
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            seg.explain("formatted")
+        qe = seg._jdf.queryExecution()
+        out.append(
+            (
+                label,
+                buf.getvalue(),
+                qe.analyzed().toString(),
+                _unbounded_global_windows(qe.sparkPlan()),
+            )
+        )
+    return out
+
+
 @pytest.fixture(scope="module")
 def plan_corpus(spark):
     """ONE build of every registered query, shared by the three all-registry
     guards (cartesian, broadcast-hint, unpartitioned-window). Building a
     query is the expensive part — checkpointing queries run real jobs — and
     the guards used to pay it three times over (r10: 760 s of the driver's
-    pytest budget, the VERDICT item-1 tests_ok breach). Each entry:
-    (formatted physical plan, analyzed logical string, window-walk hits)."""
+    pytest budget, the VERDICT item-1 tests_ok breach). Each entry is the
+    :func:`_segment_plans` list of the query's final frame and of every
+    segment its checkpoints hide."""
     corpus = {}
     for name in SPECS:
-        df = SPECS[name].spark(spark, SF_DIR)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            df.explain("formatted")
-        qe = df._jdf.queryExecution()
-        corpus[name] = (
-            buf.getvalue(),
-            qe.analyzed().toString(),
-            _unbounded_global_windows(qe.sparkPlan()),
-        )
+        with recording() as cuts:
+            df = SPECS[name].spark(spark, SF_DIR)
+        corpus[name] = _segment_plans(df, cuts)
     return corpus
 
 
@@ -99,61 +117,72 @@ _SF_SCALED_MARKERS = (
 )
 
 
-def test_no_broadcast_hint_over_sf_scaled_relation(spark, plan_corpus):
-    # Global guard (VERDICT r1 item 1): walk every registered query's
-    # analyzed logical plan; for each broadcast ResolvedHint, the hinted
-    # subtree's leftmost leaf relation must not be an sf-scaled table or a
-    # derivation of one. Fixed-size dims (nation, region, literal dims,
-    # centroids) are the only legitimate hint targets.
+def _limit_bounds_subtree(prefix: str) -> bool:
+    """A GlobalLimit bounds the hinted side to a query constant (e.g. the
+    top-V vocab in oov_rate) — equally scale-safe, but ONLY if every node
+    between the hint and the limit is a row-non-increasing unary op: a
+    Join/Union/Generate above the limit could re-inflate the hinted side
+    past the bound."""
     import re
 
-    for name in SPECS:
-        analyzed = plan_corpus[name][1]
-        chunks = analyzed.split("ResolvedHint")[1:]
-        for chunk in chunks:
-            if "strategy=broadcast" not in chunk.split("\n", 1)[0]:
-                continue
-            # leftmost leaf of the hinted subtree = first relation mention
-            m = re.search(r"(Relation|LocalRelation|LogicalRDD)[^\n]*", chunk)
-            leaf = m.group(0) if m else ""
-            # A global (groupless) aggregate between hint and leaf bounds the
-            # hinted side to one row — safe to broadcast at any scale.
-            # (global aggregates print a single expression list — no
-            # "], [" grouping/aggregate separator)
-            prefix = chunk[: m.start()] if m else ""
-            if re.search(r"Aggregate \[(?![^\n]*\], \[)", prefix):
-                continue
-            # A GlobalLimit bounds the hinted side to a query constant
-            # (e.g. the top-V vocab in oov_rate) — equally scale-safe, but
-            # ONLY if every node between the hint and the limit is a
-            # row-non-increasing unary op: a Join/Union/Generate above the
-            # limit could re-inflate the hinted side past the bound.
-            def _limit_bounds_subtree(pfx: str) -> bool:
-                for ln in pfx.splitlines():
-                    mm = re.search(r"\+- (\w+)", ln)
-                    if not mm:
-                        continue
-                    node = mm.group(1)
-                    if node == "GlobalLimit":
-                        return True
-                    if node not in ("Project", "Filter", "Sort", "LocalLimit"):
-                        return False
-                return False
+    for ln in prefix.splitlines():
+        mm = re.search(r"\+- (\w+)", ln)
+        if not mm:
+            continue
+        node = mm.group(1)
+        if node == "GlobalLimit":
+            return True
+        if node not in ("Project", "Filter", "Sort", "LocalLimit"):
+            return False
+    return False
 
-            if _limit_bounds_subtree(prefix):
-                continue
-            # A literal primary-key slice (vec_id < 8 — the ANN query-probe
-            # pattern) bounds the hinted side to a query constant: dense
-            # synthetic ids make `pk < N` an N-row cap. Only the comparison-
-            # to-literal form qualifies; joins/ranges over sf-scaled keys
-            # don't.
-            if re.search(
-                r"Filter \(vec_id#\d+L? < (\d+|cast\(\d+ as bigint\))\)", prefix
-            ):
-                continue
-            hit = [mk for mk in _SF_SCALED_MARKERS if mk in leaf]
+
+def _sf_scaled_broadcast_hints(analyzed: str) -> list[str]:
+    """Leaves of broadcast-hinted subtrees over an sf-scaled relation in an
+    analyzed logical plan. For each broadcast ResolvedHint, the hinted
+    subtree's leftmost leaf relation must not be an sf-scaled table or a
+    derivation of one. Fixed-size dims (nation, region, literal dims,
+    centroids) are the only legitimate hint targets."""
+    import re
+
+    hits = []
+    for chunk in analyzed.split("ResolvedHint")[1:]:
+        if "strategy=broadcast" not in chunk.split("\n", 1)[0]:
+            continue
+        # leftmost leaf of the hinted subtree = first relation mention
+        m = re.search(r"(Relation|LocalRelation|LogicalRDD)[^\n]*", chunk)
+        leaf = m.group(0) if m else ""
+        # A global (groupless) aggregate between hint and leaf bounds the
+        # hinted side to one row — safe to broadcast at any scale.
+        # (global aggregates print a single expression list — no
+        # "], [" grouping/aggregate separator)
+        prefix = chunk[: m.start()] if m else ""
+        if re.search(r"Aggregate \[(?![^\n]*\], \[)", prefix):
+            continue
+        if _limit_bounds_subtree(prefix):
+            continue
+        # A literal primary-key slice (vec_id < 8 — the ANN query-probe
+        # pattern) bounds the hinted side to a query constant: dense
+        # synthetic ids make `pk < N` an N-row cap. Only the comparison-
+        # to-literal form qualifies; joins/ranges over sf-scaled keys
+        # don't.
+        if re.search(
+            r"Filter \(vec_id#\d+L? < (\d+|cast\(\d+ as bigint\))\)", prefix
+        ):
+            continue
+        if any(mk in leaf for mk in _SF_SCALED_MARKERS):
+            hits.append(leaf[:200])
+    return hits
+
+
+def test_no_broadcast_hint_over_sf_scaled_relation(spark, plan_corpus):
+    # Global guard (VERDICT r1 item 1): walk the analyzed logical plan of
+    # every registered query and of every segment behind its checkpoints.
+    for name in SPECS:
+        for label, _, analyzed, _ in plan_corpus[name]:
+            hit = _sf_scaled_broadcast_hints(analyzed)
             assert not hit, (
-                f"{name}: broadcast hint over sf-scaled relation ({hit}): {leaf[:200]}"
+                f"{name} ({label}): broadcast hint over sf-scaled relation: {hit[0]}"
             )
 
 
@@ -225,10 +254,13 @@ def test_asof_join_single_shuffle(spark):
 
 
 def test_no_query_plans_cartesian(spark, plan_corpus):
-    # global guard: no registered query may plan a cartesian product
+    # global guard: no registered query may plan a cartesian product, in
+    # its final plan or in any segment behind its checkpoints
     for name in SPECS:
-        plan = plan_corpus[name][0]
-        assert "CartesianProduct" not in plan, f"{name} plans a cartesian product"
+        for label, plan, _, _ in plan_corpus[name]:
+            assert "CartesianProduct" not in plan, (
+                f"{name} ({label}) plans a cartesian product"
+            )
 
 
 def test_oov_vocab_membership_join_broadcasts(spark):
@@ -239,36 +271,70 @@ def test_oov_vocab_membership_join_broadcasts(spark):
     assert "BroadcastHashJoin" in plan, "vocab membership join is not broadcast"
 
 
-def test_incremental_lsh_join_is_equi(spark, no_checkpoints):
+def test_incremental_lsh_join_is_equi(spark):
     # Candidate generation must be the (band, bucket) equi-join — a nested
     # loop or cartesian here would be the N² the LSH exists to avoid. The
-    # operator eager-checkpoints its result (its .explain is just a Scan
-    # ExistingRDD — no join node can appear), so build it with
-    # localCheckpoint no-op'd, which preserves the full Catalyst tree.
-    import contextlib
-    import io
-
+    # operator checkpoints its result (its .explain is just a Scan
+    # ExistingRDD — no join node can appear), so the assertions read every
+    # segment the build cut.
     from pyspark.sql import functions as F
 
     from nilm_data_framework_spark.operators import dedup as D
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    out = D.minhash_lsh_join(
-        docs.filter(F.col("doc_id") % 5 == 0),
-        docs.filter(F.col("doc_id") % 5 != 0),
-        jaccard_threshold=0.5,
-    )
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    # the lazy plan must actually contain hash-joinable equi-joins...
-    assert "SortMergeJoin" in plan or "BroadcastHashJoin" in plan, (
-        "lazy LSH-join plan shows no equi-join node — checkpoint leak?"
+    with recording() as cuts:
+        out = D.minhash_lsh_join(
+            docs.filter(F.col("doc_id") % 5 == 0),
+            docs.filter(F.col("doc_id") % 5 != 0),
+            jaccard_threshold=0.5,
+        )
+    plans = [plan for _, plan, _, _ in _segment_plans(out, cuts)]
+    # the segments must actually contain hash-joinable equi-joins...
+    assert any("SortMergeJoin" in p or "BroadcastHashJoin" in p for p in plans), (
+        "no LSH-join segment shows an equi-join node — recording missed a cut?"
     )
     # ...and never a quadratic fallback
-    assert "BroadcastNestedLoopJoin" not in plan, "incremental LSH join fell back to NLJ"
-    assert "CartesianProduct" not in plan, "incremental LSH join plans a cartesian"
+    for plan in plans:
+        assert "BroadcastNestedLoopJoin" not in plan, "incremental LSH join fell back to NLJ"
+        assert "CartesianProduct" not in plan, "incremental LSH join plans a cartesian"
+
+
+def test_segment_guards_catch_a_cartesian_behind_a_checkpoint(spark):
+    # the cut hides the cartesian from the final plan; the segment the
+    # recording keeps still shows it
+    from nilm_data_framework_spark.materialize import checkpoint
+
+    with recording() as cuts:
+        out = checkpoint(
+            spark.range(3).hint("shuffle_replicate_nl").crossJoin(
+                spark.range(3).withColumnRenamed("id", "id2")
+            )
+        )
+    (_, final, _, _), *segments = _segment_plans(out, cuts)
+    assert "CartesianProduct" not in final
+    assert [label for label, plan, _, _ in segments if "CartesianProduct" in plan] == [
+        "segment 0"
+    ]
+
+
+def test_segment_guards_catch_a_broadcast_hint_behind_a_checkpoint(spark):
+    from pyspark.sql import functions as F
+
+    from nilm_data_framework_spark.materialize import checkpoint
+    from nilm_data_framework_spark.sources.testdata import load_table
+
+    docs = load_table(spark, SF_DIR, "documents", parallelize=True)
+    with recording() as cuts:
+        out = checkpoint(
+            spark.range(3)
+            .withColumnRenamed("id", "doc_id")
+            .join(F.broadcast(docs), "doc_id")
+        )
+    (_, _, final, _), *segments = _segment_plans(out, cuts)
+    assert not _sf_scaled_broadcast_hints(final)
+    assert [label for label, _, analyzed, _ in segments if _sf_scaled_broadcast_hints(analyzed)] == [
+        "segment 0"
+    ]
 
 
 def test_registry_contract():
@@ -738,7 +804,7 @@ def test_returned_items_topk_no_global_sort(spark):
 
 def test_promotion_suppliers_reuses_partkey_exchange(spark):
     # Q20 shape decorrelated: sp (supp,part) aggregate -> per-part total ->
-    # join back on partkey. sp is localCheckpointed (it feeds both
+    # join back on partkey. sp is checkpointed (it feeds both
     # branches), so the lineitem⋈part subtree must appear as checkpoint
     # scans, NOT as re-derived parquet scans — only supplier reads parquet.
     import re
@@ -890,7 +956,7 @@ _ROW_SCALED_KEYS = {
     # row count on high-resolution streams — the exact class the r7
     # temporal_embargo_split rewrite removed. A BOUNDED per-timestamp
     # support (one bucket's worth, like splits.py's refinement stage) must
-    # make its boundedness explicit via a localCheckpoint boundary.
+    # make its boundedness explicit via a checkpoint boundary.
     "us", "_us", "ts", "_ts",
 }
 
@@ -980,9 +1046,9 @@ def test_window_guard_rejects_row_unique_agg(spark):
 def test_no_unpartitioned_window_over_raw_scan(spark, plan_corpus):
     bad = {}
     for name in SPECS:
-        hits = plan_corpus[name][2]
-        if hits:
-            bad[name] = hits[0]
+        for label, _, _, hits in plan_corpus[name]:
+            if hits:
+                bad[f"{name} ({label})"] = hits[0]
     assert not bad, (
         f"unpartitioned window sorts raw sf-scaled rows in one task — use "
         f"operators/scale_windows.py (bucketed_global_rank / bucketed_ntile / "

@@ -169,15 +169,13 @@ def test_bm25_zero_tf_scores_zero(spark):
     assert rows[1]["bm25_raw"] > 0.0
 
 
-def test_bm25_indexed_absent_query_terms(spark):
+def test_bm25_indexed_absent_query_terms(spark, tmp_path):
     """Production probes carry out-of-vocabulary terms: an absent term has
     no partition directory, df derives as 0 from the pruned postings, and
     the shared score expression must still replay the full scan bit-for-
     bit on the hit docs (the absent term contributes its df=0 idf only
     through tf=0 → exactly +0.0). An all-absent probe returns empty, not
     an error."""
-    import tempfile
-
     from nilm_data_framework_spark.operators.text import (
         bm25_hits_indexed,
         bm25_topk_indexed,
@@ -193,7 +191,7 @@ def test_bm25_indexed_absent_query_terms(spark):
         ],
         "doc_id long, text string",
     )
-    p = tempfile.mkdtemp(prefix="bm25_absent_")
+    p = str(tmp_path)
     write_bm25_index(df, p)
     terms = ["vector", "zzzmissing"]
     hits = {
@@ -207,12 +205,10 @@ def test_bm25_indexed_absent_query_terms(spark):
     assert bm25_topk_indexed(spark, p, ["zzzmissing"], 5).count() == 0
 
 
-def test_bm25_append_empty_batch_is_noop(spark):
+def test_bm25_append_empty_batch_is_noop(spark, tmp_path):
     """Incremental pipelines see empty ingest batches; appending one must
     leave the index and its stats byte-identical (sum() over an empty
     frame is NULL — previously a TypeError on the stats merge)."""
-    import tempfile
-
     from nilm_data_framework_spark.operators.text import (
         append_bm25_batch,
         bm25_topk_indexed,
@@ -222,7 +218,7 @@ def test_bm25_append_empty_batch_is_noop(spark):
     df = spark.createDataFrame(
         [(0, "vector join"), (1, "join table")], "doc_id long, text string"
     )
-    p = tempfile.mkdtemp(prefix="bm25_empty_")
+    p = str(tmp_path)
     write_bm25_index(df, p)
     before = sorted(
         tuple(r) for r in bm25_topk_indexed(spark, p, ["join"], 5).collect()
