@@ -346,18 +346,6 @@ HEADLINE = [
 # see the HEADLINE-SET CONTRACT in the module docstring. Names quoted in
 # single quotes inside a reason must exist in the registry (tested).
 EXCLUDED: dict[str, str] = {
-    # --- extra_ops_r9b ---
-    "capped_topk_per_source": "same WindowGroupLimit per-group-limit plan as benched 'topk_per_group_limit' plus a k-row global cut",
-    "clustering_coefficient_parts": "same degree-ordered wedge kernel as benched 'triangle_count_parts' (inner close + bounded 3x explode instead of the semi-join tail)",
-    "chi2_term_selection": "same distinct-explode contingency agg as benched 'mutual_information_lang_source' with a chi-squared scorer",
-    "score_auc_exact": "distinct-score histogram agg + O(|domain|) window; subsecond flat, rank family benched via 'rank_calibration'",
-    "bpe_segment_corpus": "same training loop as benched 'bpe_train_merges' (shared _bpe_train) plus a vocab-sized projection",
-    "holt_incremental_equiv": "same fold kernel as benched 'holt_forecast_exact' run over 3 date slices (the resume-state equivalence gate)",
-    "knn_map_exact": "rides benched 'cosine_topk_bruteforce' + two label joins and a bounded window (retrieval-eval metric gate, same family as 'knn_mrr_exact')",
-    "rendezvous_rebalance_audit": "shuffle-free per-row hash HOF + one global agg (subsecond scan microshape, same family as 'shard_layout_audit')",
-    "streaming_holt_ingest_equiv": "streaming micro-batch equivalence gate; family represented by the three benched streaming gates",
-    "spatial_nn_join": "same grid-blocked kernel as benched 'spatial_radius_pairs' plus one grouped integer argmin",
-    "dbscan_grid_clusters": "composition of benched kernels ('spatial_radius_pairs' grid join + the CC family benched via 'neardup_clusters'); wall cost at toy scale is star-contraction round dispatch (~tens of jobs over sub-5k-row frames — the r8 job-count lesson), not data work",
     # --- advanced_analytics ---
     "kmv_jaccard_pairs": "same KMV sketch kernel as benched 'kmv_distinct_ops'",
     "trimmed_mean_price": "same order-statistic trim kernel as benched 'winsorized_mean_value'",
@@ -368,22 +356,26 @@ EXCLUDED: dict[str, str] = {
     "ab_test_zstat": "closed-form z over one agg; stats family benched via 'classifier_agreement_kappa'",
     "entropy_by_source": "token-explode + agg; text-kernel family benched via 'unigram_surprisal_score'",
     "vocab_growth_stats": "token-explode + agg; text-kernel family benched via 'unigram_surprisal_score'",
+    "common_neighbors_linkpred": "same wedge-enumeration kernel as benched 'resource_allocation_linkpred' minus its degree join",
+    "event_type_trigrams": "same trigram kernel as benched 'gap_constrained_trigrams'",
     # --- attribution_trends ---
     "ols_trend_daily": "closed-form OLS on the bounded day grid; trend family benched via 'theil_sen_daily_trend'",
-    "common_neighbors_linkpred": "same wedge-enumeration kernel as benched 'resource_allocation_linkpred' minus its degree join",
-    "kendall_tau_daily": "year-bucketed pair join on the calendar-bounded day grid; same grain as benched 'theil_sen_daily_trend'",
-    "disparate_impact_audit": "20-row governance agg over 'quality_filter' features; feature kernel benched via 'text_quality'",
     "session_bounce_rate": "rides benched 'sessionize' session ids + one agg",
     "salted_join_hot_keys": "salting demo on a constant key list; join family benched via 'runtime_filter_pruned_join'",
     "compaction_audit": "bounded file-manifest audit; layout family benched via 'zorder_layout_stats'",
     "grouping_sets_mix": "same Expand-based plan family as benched 'rollup_returns'",
     "null_safe_join_rates": "eqNullSafe join microshape; join family benched via 'asof_join_last_purchase'",
     # --- curation_lakehouse ---
+    "capped_topk_per_source": "same WindowGroupLimit per-group-limit plan as benched 'topk_per_group_limit' plus a k-row global cut",
+    "rendezvous_rebalance_audit": "shuffle-free per-row hash HOF + one global agg (subsecond scan microshape, same family as 'shard_layout_audit')",
     "weighted_sample_sps": "hash-threshold sampling scan; sampling family benched via 'token_budget_curation'",
     "shard_layout_audit": "bounded-manifest audit; layout family benched via 'zorder_layout_stats'",
     "gdpr_erasure_audit": "anti-join audit; lakehouse family benched via 'merge_upsert_orders'",
     "mad_outlier_summary": "same MAD kernel as benched 'mad_outlier_audit'",
     "cusum_drift_summary": "per-key running sums; drift family benched via 'psi_value_drift'",
+    "kfold_assignment": "hash-mod projection; split family benched via 'temporal_embargo_split'",
+    "rolling_origin_cv_splits": "calendar-bounded daily grid + 4-row fold dim; split family benched via 'temporal_embargo_split'",
+    "leave_one_out_influence": "algebraic LOO on bounded groups; eval family benched via 'knn_label_accuracy'",
     # --- dedup_text ---
     "dedup_exact_survivors": "same hash-groupBy dedup kernel as benched 'exact_dup_groups'",
     "doc_fingerprint": "rolling-hash projection; text family benched via 'text_quality'",
@@ -401,33 +393,16 @@ EXCLUDED: dict[str, str] = {
     "boilerplate_doc_ratio": "shares the boilerplate CTE; text family benched via 'span_dedup_summary'",
     "quality_classifier": "linear scoring projection over benched 'text_quality' features",
     "classifier_selection_audit": "threshold sweep over benched 'quality_classifier' scores; audit, not a throughput shape",
-    # --- extra_ops ---
-    "transitive_closure_paths": "bounded-iteration closure on the small co-purchase graph; graph family benched via 'pagerank_step'",
-    "event_type_trigrams": "same trigram kernel as benched 'gap_constrained_trigrams'",
-    "kfold_assignment": "hash-mod projection; split family benched via 'temporal_embargo_split'",
-    "conformal_split_threshold": "value-histogram order statistic, same exact-quantile pattern as benched 'temporal_embargo_split'",
-    "rolling_origin_cv_splits": "calendar-bounded daily grid + 4-row fold dim; split family benched via 'temporal_embargo_split'",
-    "join_size_from_histograms": "estimate over bounded histograms; benched via 'cbo_column_stats'",
-    "streaming_trigram_equiv": "streaming equivalence gate; family represented by the three benched streaming gates",
-    "multiset_except_views": "EXCEPT ALL plan shape over two subsecond scans; set-op microshape",
-    "multiset_intersect_views": "INTERSECT ALL plan shape over two subsecond scans; set-op microshape",
-    "coverage_gaps": "bounded-grid gap scan; subsecond flat at sf0.1",
-    "label_centroid_stats": "embedding agg family benched via 'embedding_gram_matrix'",
-    "poisson_bootstrap_ci": "replicate-weighted aggs; weighting family benched via 'weight_ess_by_source'",
-    "leave_one_out_influence": "algebraic LOO on bounded groups; eval family benched via 'knn_label_accuracy'",
-    "knn_reliability_bins": "≤5-row calibration rollup over benched 'knn_label_accuracy' predictions",
-    "harmonic_centrality": "one extra hash agg over the same path-doubling closure as benched 'closeness_centrality'",
-    "mcnemar_gate_comparison": "one global agg over 'quality_filter'-style features; feature kernel benched via 'text_quality'",
-    "cuped_moments": "two hash aggs of integer moments; stats family benched via 'classifier_agreement_kappa'",
-    "interval_coalesce_coverage": "single-exchange gaps-and-islands window shape; W5 family benched via 'run_length_filter'",
-    "interval_coalesce_incremental_equiv": "incremental fold twin of 'interval_coalesce_coverage' — same kernel over (islands ∪ batch)",
-    "benford_digit_audit": "digit-histogram agg; audit family benched via 'constraint_suite_report'",
-    "gini_key_skew": "same ranked-share kernel as benched 'lorenz_curve_deciles'",
     "dedup_quality_impact": "reruns the full LSH clustering inside the gate (r5, documented); deliberately not bench-listed",
+    # --- graph ---
+    "clustering_coefficient_parts": "same degree-ordered wedge kernel as benched 'triangle_count_parts' (inner close + bounded 3x explode instead of the semi-join tail)",
+    "transitive_closure_paths": "bounded-iteration closure on the small co-purchase graph; graph family benched via 'pagerank_step'",
+    "harmonic_centrality": "one extra hash agg over the same path-doubling closure as benched 'closeness_centrality'",
     # --- multimodal_assets ---
     "multimodal_features": "decode is env-stubbed (no codecs in container); timing would measure the deterministic fake",
     "multimodal_frame_sample": "decode is env-stubbed (no codecs in container); timing would measure the deterministic fake",
     # --- nilm_analysis ---
+    "coverage_gaps": "bounded-grid gap scan; subsecond flat at sf0.1",
     "resample_hourly_mean": "lighter variant of benched 'resample_300s_mean'",
     "resample_guarded": "guarded variant of benched 'resample_300s_mean'",
     "resample_interpolated": "rides the benched resample kernel + bounded grid carry",
@@ -458,6 +433,7 @@ EXCLUDED: dict[str, str] = {
     "json_extract_props": "JSON-path projection scan; subsecond microshape",
     "variant_extract_props": "VARIANT twin of 'json_extract_props'; subsecond microshape",
     "dedup_keep_first": "row_number pick; window family benched via 'topk_per_group_limit'",
+    "asof_forward_next_purchase": "same single-sort kernel as benched 'asof_nearest_purchase' (direction dial only)",
     # --- nilm_windows ---
     "lag_delta": "single window pass; window family benched via 'rolling_hour_sum'",
     "topk_by_value": "global top-k; benched via 'topk_per_group_limit'",
@@ -468,6 +444,10 @@ EXCLUDED: dict[str, str] = {
     "scd2_user_intervals": "run-collapse kernel consumed by benched 'pit_state_lookup'",
     "funnel_conversion": "same chained conditional windows as benched 'three_step_funnel'",
     # --- pipeline_quality ---
+    "score_auc_exact": "distinct-score histogram agg + O(|domain|) window; subsecond flat, rank family benched via 'rank_calibration'",
+    "disparate_impact_audit": "20-row governance agg over 'quality_filter' features; feature kernel benched via 'text_quality'",
+    "conformal_split_threshold": "value-histogram order statistic, same exact-quantile pattern as benched 'temporal_embargo_split'",
+    "mcnemar_gate_comparison": "one global agg over 'quality_filter'-style features; feature kernel benched via 'text_quality'",
     "cohort_retention": "entity-period distinct + join; cohort family benched via 'rfm_segmentation'",
     "concurrency_peaks": "sweep-line prefix sums; interval family benched via 'pairwise_coactivation'",
     "leakage_safe_split": "hash-split anti-join; split family benched via 'temporal_embargo_split'",
@@ -492,6 +472,17 @@ EXCLUDED: dict[str, str] = {
     "snapshot_diff_orders": "keys+hash full-outer diff; CDC family benched via 'merge_upsert_orders'",
     "fuzzy_part_names": "bounded-blocking edit-distance pairs; linkage family benched via 'record_linkage_pairs'",
     "important_stock": "TPC-H join/agg microshape; deep-join family benched via 'promotion_suppliers'",
+    # --- retrieval ---
+    "ivf_compact_probe_equiv": "write+2-append+compact gate; the swap compactor is benched inside 'bm25_index_lifecycle' and the probe via 'ivf_topk_persisted'",
+    "bm25_delete_probe_equiv": "copy-on-write delete benched inside composed 'bm25_index_lifecycle' (same kernel, same layout)",
+    "bm25_compact_probe_equiv": "swap compaction benched inside composed 'bm25_index_lifecycle' (same kernel, same layout)",
+    "bm25_delete_then_append_equiv": "ordering twin of benched 'bm25_index_lifecycle' (same ops, reversed order; algebra gate, not a new kernel)",
+    "cosine_topk_filtered_exact": "selectivity-scaled twin of benched 'cosine_topk_bruteforce' (same broadcast-NL join topology; the pushed filter only shrinks the corpus side)",
+    "ivf_filtered_recall_at_k": "recall attestation gate over the benched 'cosine_topk_ivf_filtered' probe",
+    "bm25_upsert_probe_equiv": "delete∘append composition of kernels benched inside 'bm25_index_lifecycle' (same layout; algebra gate, not a new kernel)",
+    "bm25_topk_filtered": "pruned probe + one AQE-decided doc-dim semi-join over the layout benched via 'bm25_topk_indexed' (write-in-gate twin)",
+    "ivf_upsert_probe_equiv": "delete∘append composition of kernels benched via 'ivf_topk_persisted' and 'ivf_delete_probe_equiv' (algebra gate, not a new kernel)",
+    "rag_retrieval_pipeline_serve": "serve-mode twin of 'rag_retrieval_pipeline_persisted'; timed as the extra bench row of the same name, with its index layouts built outside the timed window",
     # --- sampling_packing ---
     "mixture_sample": "hash-threshold sampling scan; sampling family benched via 'token_budget_curation'",
     "mixture_summary": "agg over 'mixture_sample' output; subsecond",
@@ -506,6 +497,9 @@ EXCLUDED: dict[str, str] = {
     "source_mixture_drift": "distribution drift agg; benched via 'psi_value_drift'",
     "mixture_temperature_weights": "same allocation kernel as benched 'temperature_budget_allocation'",
     # --- similarity ---
+    "knn_map_exact": "rides benched 'cosine_topk_bruteforce' + two label joins and a bounded window (retrieval-eval metric gate, same family as 'knn_mrr_exact')",
+    "label_centroid_stats": "embedding agg family benched via 'embedding_gram_matrix'",
+    "knn_reliability_bins": "≤5-row calibration rollup over benched 'knn_label_accuracy' predictions",
     "truncated_rerank_topk": "matryoshka prefix rerank; ANN family benched via 'pq_topk_rerank'",
     "embedding_neardup_pairs": "LSH-bucketed cosine pairs; benched via 'cosine_topk_lsh'",
     "cosine_topk_ivf": "in-query IVF probe; persisted form benched via 'ivf_topk_persisted'",
@@ -517,26 +511,25 @@ EXCLUDED: dict[str, str] = {
     "contrastive_triplets": "rides benched 'cosine_topk_bruteforce' + bounded joins",
     "ivf_recall_at_k": "recall attestation gate over the benched IVF probe",
     "ivf_append_probe_equiv": "append-invariance gate (writes the layout twice by design); probe benched via 'ivf_topk_persisted'",
-    "ivf_compact_probe_equiv": "write+2-append+compact gate; the swap compactor is benched inside 'bm25_index_lifecycle' and the probe via 'ivf_topk_persisted'",
-    "bm25_delete_probe_equiv": "copy-on-write delete benched inside composed 'bm25_index_lifecycle' (same kernel, same layout)",
-    "bm25_compact_probe_equiv": "swap compaction benched inside composed 'bm25_index_lifecycle' (same kernel, same layout)",
-    "bm25_delete_then_append_equiv": "ordering twin of benched 'bm25_index_lifecycle' (same ops, reversed order; algebra gate, not a new kernel)",
-    "asof_forward_next_purchase": "same single-sort kernel as benched 'asof_nearest_purchase' (direction dial only)",
-    # --- extra_ops_r9 ---
-    "cosine_topk_filtered_exact": "selectivity-scaled twin of benched 'cosine_topk_bruteforce' (same broadcast-NL join topology; the pushed filter only shrinks the corpus side)",
-    "ivf_filtered_recall_at_k": "recall attestation gate over the benched 'cosine_topk_ivf_filtered' probe",
-    "bm25_upsert_probe_equiv": "delete∘append composition of kernels benched inside 'bm25_index_lifecycle' (same layout; algebra gate, not a new kernel)",
-    "streaming_neardup_ingest_equiv": "streaming micro-batch equivalence gate; batch twin 'incremental_neardup_clusters_equiv' is benched and the family is represented by the three benched streaming gates",
-    "bm25_topk_filtered": "pruned probe + one AQE-decided doc-dim semi-join over the layout benched via 'bm25_topk_indexed' (write-in-gate twin)",
-    "ivf_upsert_probe_equiv": "delete∘append composition of kernels benched via 'ivf_topk_persisted' and 'ivf_delete_probe_equiv' (algebra gate, not a new kernel)",
     "gram_power_iteration": "rides benched 'embedding_gram_matrix' (the corpus pass) + a 64-row iteration loop — the iteration cost is frame-count, not data",
-    "streaming_scd2_ingest_equiv": "streaming micro-batch equivalence gate; batch twin 'scd2_incremental_equiv' is benched and the family is represented by the three benched streaming gates",
-    "scd2_late_arrivals_equiv": "same scd2_intervals kernel as benched 'scd2_incremental_equiv' (affected-keys slice + interval passthrough)",
     "gram_incremental_equiv": "two half-corpus runs of benched 'embedding_gram_matrix' + one d²-bounded merge agg (algebra gate)",
     "knn_mrr_exact": "rides benched 'cosine_topk_bruteforce' + two label joins and a 1-row agg (retrieval-eval metric gate)",
+    # --- stats ---
+    "kendall_tau_daily": "year-bucketed pair join on the calendar-bounded day grid; same grain as benched 'theil_sen_daily_trend'",
+    "poisson_bootstrap_ci": "replicate-weighted aggs; weighting family benched via 'weight_ess_by_source'",
+    "cuped_moments": "two hash aggs of integer moments; stats family benched via 'classifier_agreement_kappa'",
+    "benford_digit_audit": "digit-histogram agg; audit family benched via 'constraint_suite_report'",
+    "gini_key_skew": "same ranked-share kernel as benched 'lorenz_curve_deciles'",
     # --- streaming_equiv (the three heaviest streaming gates ARE benched:
     #     'streaming_paa_equiv', 'streaming_session_window_equiv',
     #     'streaming_bitmask_equiv') ---
+    "holt_incremental_equiv": "same fold kernel as benched 'holt_forecast_exact' run over 3 date slices (the resume-state equivalence gate)",
+    "streaming_holt_ingest_equiv": "streaming micro-batch equivalence gate; family represented by the three benched streaming gates",
+    "streaming_trigram_equiv": "streaming equivalence gate; family represented by the three benched streaming gates",
+    "interval_coalesce_incremental_equiv": "incremental fold twin of 'interval_coalesce_coverage' — same kernel over (islands ∪ batch)",
+    "streaming_neardup_ingest_equiv": "streaming micro-batch equivalence gate; batch twin 'incremental_neardup_clusters_equiv' is benched and the family is represented by the three benched streaming gates",
+    "streaming_scd2_ingest_equiv": "streaming micro-batch equivalence gate; batch twin 'scd2_incremental_equiv' is benched and the family is represented by the three benched streaming gates",
+    "scd2_late_arrivals_equiv": "same scd2_intervals kernel as benched 'scd2_incremental_equiv' (affected-keys slice + interval passthrough)",
     "streaming_resample_equiv": "streaming micro-batch equivalence gate at toy scale; family represented by the three benched streaming gates",
     "streaming_sessionize_equiv": "streaming micro-batch equivalence gate; family represented by the three benched streaming gates",
     "streaming_late_data_drop": "streaming micro-batch equivalence gate; family represented by the three benched streaming gates",
@@ -551,12 +544,19 @@ EXCLUDED: dict[str, str] = {
     "tensor_export": "same Arrow assembly kernel as benched 'tensor_export_flat'",
     "unpivot_metrics": "stack projection microshape; subsecond",
     # --- tpch_extra ---
+    "spatial_nn_join": "same grid-blocked kernel as benched 'spatial_radius_pairs' plus one grouped integer argmin",
+    "dbscan_grid_clusters": "composition of benched kernels ('spatial_radius_pairs' grid join + the CC family benched via 'neardup_clusters'); wall cost at toy scale is star-contraction round dispatch (~tens of jobs over sub-5k-row frames — the r8 job-count lesson), not data work",
+    "join_size_from_histograms": "estimate over bounded histograms; benched via 'cbo_column_stats'",
+    "multiset_except_views": "EXCEPT ALL plan shape over two subsecond scans; set-op microshape",
+    "multiset_intersect_views": "INTERSECT ALL plan shape over two subsecond scans; set-op microshape",
+    "interval_coalesce_coverage": "single-exchange gaps-and-islands window shape; W5 family benched via 'run_length_filter'",
     "product_profit": "TPC-H Q9-shaped join; deep-join family benched via 'market_share'",
     # --- vocab_lm ---
+    "chi2_term_selection": "same distinct-explode contingency agg as benched 'mutual_information_lang_source' with a chi-squared scorer",
+    "bpe_segment_corpus": "same training loop as benched 'bpe_train_merges' (shared _bpe_train) plus a vocab-sized projection",
     "vocab_top_tokens": "token-explode count; benched via 'bpe_pair_counts'",
     "doc_chunks_inventory": "chunk-grid projection; packing audit benched via 'padding_waste_audit'",
     "source_quality_gate": "quality-gate scan timed inside benched 'rag_retrieval_pipeline_persisted'",
-    "rag_retrieval_pipeline_serve": "serve-mode twin of 'rag_retrieval_pipeline_persisted'; timed as the extra bench row of the same name, with its index layouts built outside the timed window",
 }
 
 
@@ -657,7 +657,7 @@ def main() -> None:
     # serve path (pruned probes + zero-fill + layout rels + fusion/MMR)
     # with the trained centroids passed (zero per-query centroid cost).
     if only is None or "rag_retrieval_pipeline_serve" in (only or set()):
-        from nilm_data_framework_spark.queries.extra_ops_r7 import (
+        from nilm_data_framework_spark.queries.retrieval import (
             build_rag_indexes,
             rag_persisted_pipeline,
         )

@@ -71,8 +71,9 @@ def trunc_div_sql(num: str, den: str) -> str:
     (the reason ratio_scaled requires num >= 0). When a SIGNED quantity
     must pass through a division INSIDE a recurrence (so emitting num/den
     isn't possible — e.g. the power-iteration renormalization in
-    queries/extra_ops_r9.py), the oracle uses this sign-magnitude form,
-    which equals Spark's ``div`` bit-for-bit: ``den`` must be > 0."""
+    queries/similarity.py::gram_power_iteration), the oracle uses this
+    sign-magnitude form, which equals Spark's ``div`` bit-for-bit: ``den``
+    must be > 0."""
     return (
         f"CAST(CASE WHEN ({num}) < 0"
         f" THEN -((-({num})) // ({den}))"

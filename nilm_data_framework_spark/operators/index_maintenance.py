@@ -29,7 +29,7 @@ segment-merge compaction that undoes append fragmentation:
 
 Every operation here is gated by a probe-equivalence query: probing the
 maintained layout must hash-match a from-scratch index built on the
-surviving corpus (queries/extra_ops_r8b.py).
+surviving corpus (the lifecycle gates in queries/retrieval.py).
 
 Reference analog: none — the reference (pandas/HDF5, single machine)
 has no persisted index layouts; this is pure retrieval-infrastructure

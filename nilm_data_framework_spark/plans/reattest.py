@@ -6,8 +6,8 @@ backlog emptied in r9), the window's slots now go to RE-attestation of the
 queries whose PHYSICAL EXECUTION was rewritten since their last driver
 record — so the driver, not only the builder's own driver_sim runs, attests
 the rewritten paths. all_queries() sorts: never-recorded first (none today,
-but the rule survives new queries), then REATTEST in registration order,
-then the rest.
+but the rule survives new queries), then REATTEST, then the rest, by name
+within each block.
 
 Hand-maintained each optimization round: add every query whose plan/operator
 internals changed this round, drop names once a later CORRECTNESS file
@@ -90,4 +90,9 @@ REATTEST: frozenset[str] = frozenset({
     # uniform PageRank runs the personalized kernel with every vertex
     # seeded (one kernel instead of two)
     "pagerank_power_iterations",
+    # the typo'd duplicate customers take ids from 2^40 up instead of
+    # c_custkey + 3,000,000 (real keys collided with them at sf >= 20)
+    "record_linkage_pairs",
+    "sorted_neighborhood_pairs",
+    "entity_resolution_clusters",
 })

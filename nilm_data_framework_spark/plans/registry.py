@@ -9,6 +9,8 @@ sync — the driver hash-compares values after sorting columns by name.
 
 from __future__ import annotations
 
+import importlib
+import pkgutil
 from collections.abc import Callable
 from dataclasses import dataclass, field
 
@@ -64,46 +66,18 @@ from nilm_data_framework_spark.plans.reattest import (  # noqa: E402
 
 
 def all_queries() -> dict[str, QuerySpec]:
-    """Import all query modules and return the populated registry, unrecorded
-    queries first (see _DRIVER_RECORDED)."""
+    """Import every module under ``queries/`` and return the populated
+    registry in the driver's order: never-recorded queries first (first
+    attestation beats re-attestation), then the REATTEST front-load (paths
+    rewritten since their last driver record — plans/reattest.py), then the
+    recorded rest; by name within each block, so no import history can
+    move the window."""
     # Imports are deferred so `import nilm_data_framework_spark` stays cheap.
-    from nilm_data_framework_spark.queries import (  # noqa: F401
-        advanced_analytics,
-        attribution_trends,
-        curation_lakehouse,
-        dedup_text,
-        nilm_analysis,
-        nilm_ingest,
-        multimodal_assets,
-        nilm_windows,
-        pipeline_quality,
-        relational,
-        sampling_packing,
-        similarity,
-        streaming_equiv,
-        tensor_pipeline,
-        tpch_extra,
-        vocab_lm,
-        # extra_ops / extra_ops_r6 are imported LAST on purpose: their
-        # queries are driver-unrecorded and must sort AFTER earlier
-        # unattested queries in the unrecorded block (the round driver
-        # records only the first 50 registry entries) — and each round's
-        # NEW module goes after the previous round's backlog. See
-        # tests/test_registry_order.py.
-        extra_ops,
-        extra_ops_r6,
-        extra_ops_r7,
-        extra_ops_r8,
-        extra_ops_r8b,
-        extra_ops_r8c,
-        extra_ops_r9,
-        extra_ops_r9b,
-    )
+    from nilm_data_framework_spark import queries
 
-    # never-recorded first (first attestation beats re-attestation), then
-    # the REATTEST front-load (paths rewritten since their last driver
-    # record — plans/reattest.py), then the long-stable recorded block.
+    for mod in pkgutil.iter_modules(queries.__path__):
+        importlib.import_module(f"{queries.__name__}.{mod.name}")
     ordered = sorted(
-        registry, key=lambda n: (n in _DRIVER_RECORDED, n not in _REATTEST)
+        registry, key=lambda n: (n in _DRIVER_RECORDED, n not in _REATTEST, n)
     )
     return {name: registry[name] for name in ordered}

@@ -1,4 +1,4 @@
-"""Round-4 surface, batch 4: advanced analytics extensions (§2 extensions).
+"""Advanced analytics extensions (§2 extensions).
 
 Sketch set algebra (KMV distinct/union/Jaccard — the mergeable summary
 family's set-operation member, next to HLL++/CMS/Bloom/freqItems), robust
@@ -7,7 +7,10 @@ selection (2-D Pareto skyline, window form vs the quadratic NOT-EXISTS
 oracle), graph structure (degree-oriented triangle counting vs the naive
 3-way-join oracle), corpus diversity (token Shannon entropy per source),
 and two more TPC-H join/agg shapes (Q14 promotion share, Q15 top supplier
-via exact integer-cents argmax).
+via exact integer-cents argmax). Pattern mining: ordered and
+gap-constrained event-type trigrams, a-priori itemset support and frequent
+3-itemsets; plus RFM segmentation, a 2-D box-filter hotspot scan, sparse
+COO transition products, and feature scaling / imputation audits.
 
 Float discipline follows the repo convention: grouped float sums/avgs
 rounded at the query edge; orderings and argmax picks only over
@@ -22,27 +25,20 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nilm_data_framework_spark.materialize import checkpoint
-from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
 from nilm_data_framework_spark.operators import graph as G
 from nilm_data_framework_spark.operators import robust as RB
 from nilm_data_framework_spark.operators import sketches as SK
 from nilm_data_framework_spark.operators import text as T
 from nilm_data_framework_spark.operators import windows as W
+from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
+from nilm_data_framework_spark.operators.scale_windows import bucketed_ntile
 from nilm_data_framework_spark.plans.registry import query
+from nilm_data_framework_spark.queries.common import _TOKS, EVENT_TYPES, _docs, _events
 from nilm_data_framework_spark.sources.testdata import load_table
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents", parallelize=True)
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
 
 
 # Identical token definition to operators/text.py::tokens (see
 # pipeline_quality._TOKS — kept verbatim so oracles share one vocabulary).
-_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
 
 # Same 60-bit md5-prefix hash family as operators/sketches.py (cms/kmv).
 _HV = "CAST(('0x' || substr(md5(uid), 1, 15)) AS BIGINT)"
@@ -59,11 +55,10 @@ _KMV_K = 64
 # broadcast-safe BY CONSTRUCTION — no hint over anything sf-scaled, which
 # tests/test_plan_quality.py::test_no_broadcast_hint_over_sf_scaled_relation
 # enforces globally.
-_EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
 _TYPE_PAIRS = [
     (f"{a}|{b}", a, b)
-    for i, a in enumerate(_EVENT_TYPES)
-    for b in _EVENT_TYPES[i + 1:]
+    for i, a in enumerate(EVENT_TYPES)
+    for b in EVENT_TYPES[i + 1:]
 ]
 _PAIRS_SQL = "(VALUES " + ", ".join(
     f"('{s}', '{a}', '{b}')" for s, a, b in _TYPE_PAIRS
@@ -1270,4 +1265,740 @@ def common_neighbors_linkpred(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     return G.common_neighbors_topk(_copurchase_edges(li), k=15).select(
         F.col("v1"), F.col("v2"), F.col("n_common")
+    )
+
+
+# --- sequential pattern mining: event-type trigrams --------------------------
+
+
+@query(
+    "event_type_trigrams",
+    oracle="""
+    WITH seq AS (
+      SELECT user_id, event_type,
+             lead(event_type, 1) OVER w AS t2,
+             lead(event_type, 2) OVER w AS t3
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+    )
+    SELECT event_type || '>' || t2 || '>' || t3 AS trigram,
+           CAST(count(*) AS BIGINT) AS n
+    FROM seq WHERE t3 IS NOT NULL
+    GROUP BY 1 ORDER BY n DESC, trigram ASC LIMIT 20
+    """,
+    survey_ref="§2 extension: sequential pattern mining — per-user ordered "
+    "event-type trigrams, top-20 by support (the 3-step generalization of "
+    "markov_transitions' bigrams; one user-keyed window + one hash agg)",
+)
+def event_type_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Most frequent 3-step behavior sequences: lead()×2 over the
+    user-keyed exact event order (micros, event_id tiebreak), then one
+    map-side-combined count. One shuffle on user_id (the window) + the
+    agg; top-20 is TakeOrdered. 100 TB shape: both passes are user-local
+    until the final 5³-key count."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.unix_micros("ts").alias("us"), "event_id"
+    )
+    w = Window.partitionBy("user_id").orderBy("us", "event_id")
+    seq = ev.select(
+        "event_type",
+        F.lead("event_type", 1).over(w).alias("t2"),
+        F.lead("event_type", 2).over(w).alias("t3"),
+    ).where(F.col("t3").isNotNull())
+    return (
+        seq.groupBy(
+            F.concat_ws(">", "event_type", "t2", "t3").alias("trigram")
+        )
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .orderBy(F.col("n").desc(), "trigram")
+        .limit(20)
+    )
+
+
+# --- RFM customer segmentation -----------------------------------------------
+
+
+@query(
+    "rfm_segmentation",
+    oracle="""
+    WITH bound AS (SELECT max(epoch_us(o_orderdate)) AS end_us FROM orders),
+    per AS (
+      SELECT o_custkey,
+             CAST((min(end_us - epoch_us(o_orderdate))) // 86400000000
+                  AS BIGINT) AS recency_d,
+             CAST(count(*) AS BIGINT) AS freq,
+             CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT)) AS BIGINT)
+               AS monetary_c
+      FROM orders, bound GROUP BY o_custkey
+    ),
+    scored AS (
+      SELECT o_custkey, recency_d, freq, monetary_c,
+             CAST(ntile(5) OVER (ORDER BY recency_d, o_custkey) AS BIGINT)
+               AS r_q,
+             CAST(ntile(5) OVER (ORDER BY freq DESC, o_custkey) AS BIGINT)
+               AS f_q,
+             CAST(ntile(5) OVER (ORDER BY monetary_c DESC, o_custkey)
+                  AS BIGINT) AS m_q
+      FROM per
+    )
+    SELECT r_q, f_q, m_q,
+           CAST(count(*) AS BIGINT) AS n_customers,
+           CAST(sum(monetary_c) AS BIGINT) AS total_monetary_c,
+           CAST(sum(freq) AS BIGINT) AS total_orders
+    FROM scored GROUP BY r_q, f_q, m_q
+    """,
+    survey_ref="§2.10 analytics extension: RFM (recency/frequency/"
+    "monetary) customer segmentation — the classic marketing cube as "
+    "exact integers: recency in whole days, monetary in cents, quintiles "
+    "via ntile with full (metric, key) tiebreaks so bucket boundaries "
+    "replay bit-identically",
+)
+def rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One customer agg (exact integer R/F/M) → three quintile assignments
+    → segment-cell rollup. The quintiles are the scale-safe bucketed-ntile
+    build (operators/scale_windows.py — the swap the r5 verdict asked for,
+    previously only documented): recency and frequency partition on the
+    value itself (small support), monetary on a $10k range bucket; each
+    assignment is per-value/bucket counts + one cumulative window over the
+    bucket SUPPORT + a bucket-partitioned row_number — no |customers|-sized
+    single-partition sort anywhere. The oracle keeps native ntile with the
+    same (metric, custkey) total order, so hash equality proves the swap
+    exact."""
+    orders = load_table(spark, sf_dir, "orders").withColumn(
+        # parquet reads the date column as TIMESTAMP_NTZ; the session is
+        # pinned UTC so the cast is an identity relabel, never a shift
+        "od_us", F.unix_micros(F.col("o_orderdate").cast("timestamp"))
+    )
+    bound = orders.agg(F.max("od_us").alias("end_us"))
+    per = orders.crossJoin(F.broadcast(bound)).groupBy("o_custkey").agg(
+        F.expr("min(end_us - od_us) div 86400000000")
+        .cast("long")
+        .alias("recency_d"),
+        F.count(F.lit(1)).cast("long").alias("freq"),
+        F.sum(F.floor(F.col("o_totalprice") * 100).cast("long"))
+        .cast("long")
+        .alias("monetary_c"),
+    )
+    # bucketed_ntile references its input from three branches (per-row
+    # window, bucket support, total count), so CHAINING the three calls
+    # re-evaluates the customer agg 3^3 times (measured 2.2 s at sf0.1 vs
+    # 1.2 s for this form): checkpoint `per` once, build the three tile
+    # columns independently from it, join them back on the customer key.
+    per = checkpoint(per)
+    scored = per
+    for bucket, order, desc, out in [
+        (F.col("recency_d"), [F.col("o_custkey")], False, "r_q"),
+        (F.col("freq"), [F.col("freq").desc(), F.col("o_custkey")], True, "f_q"),
+        (
+            (F.col("monetary_c") / 1000000).cast("long"),
+            [F.col("monetary_c").desc(), F.col("o_custkey")],
+            True,
+            "m_q",
+        ),
+    ]:
+        tile = bucketed_ntile(per, bucket, order, 5, descending=desc, out=out)
+        scored = scored.join(tile.select("o_custkey", out), "o_custkey")
+    return scored.groupBy("r_q", "f_q", "m_q").agg(
+        F.count(F.lit(1)).cast("long").alias("n_customers"),
+        F.sum("monetary_c").cast("long").alias("total_monetary_c"),
+        F.sum("freq").cast("long").alias("total_orders"),
+    )
+
+
+# --- itemset support histogram (a-priori census) --------------------------------
+
+
+@query(
+    "itemset_support_histogram",
+    oracle="""
+    WITH op AS (SELECT DISTINCT l_orderkey, l_partkey FROM lineitem),
+    pairs AS (
+      SELECT a.l_partkey AS x, b.l_partkey AS y, count(*) AS sup
+      FROM op a JOIN op b ON b.l_orderkey = a.l_orderkey
+                         AND b.l_partkey > a.l_partkey
+      GROUP BY 1, 2
+    ),
+    triples AS (
+      SELECT a.l_partkey AS x, b.l_partkey AS y, c.l_partkey AS z,
+             count(*) AS sup
+      FROM op a
+      JOIN op b ON b.l_orderkey = a.l_orderkey AND b.l_partkey > a.l_partkey
+      JOIN op c ON c.l_orderkey = a.l_orderkey AND c.l_partkey > b.l_partkey
+      GROUP BY 1, 2, 3
+    ),
+    u AS (
+      SELECT 2 AS sz, sup FROM pairs
+      UNION ALL
+      SELECT 3 AS sz, sup FROM triples
+    )
+    SELECT CAST(sz AS BIGINT) AS itemset_size, CAST(sup AS BIGINT) AS support,
+           CAST(count(*) AS BIGINT) AS n_itemsets
+    FROM u GROUP BY 1, 2
+    """,
+    survey_ref="§2 extension: a-priori itemset support census — how many "
+    "distinct part 2- and 3-itemsets exist at each co-purchase support "
+    "level (the candidate-explosion sizing step BEFORE running "
+    "association_rules; shows support-≥2 triples vanish as cardinality "
+    "grows, the same thinning kcore_parts documents)",
+)
+def itemset_support_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Support distribution of basket 2-/3-itemsets, join-free: one
+    groupBy(order) → sorted distinct part array, then JVM-side HOF pair
+    AND triple explosions of the SAME basket array (the
+    _copurchase_edges kernel one combinatorial level deeper — the
+    basket scan and shuffle happen once, not three times as in the
+    oracle's self-join form). Baskets are small (≤7 parts ⇒ ≤35
+    triples), so the explosion is bounded per row; the census output is
+    a handful of (size, support) cells."""
+    li = load_table(spark, sf_dir, "lineitem")
+    parts = (
+        li.select("l_orderkey", "l_partkey")
+        .groupBy("l_orderkey")
+        .agg(F.array_sort(F.collect_set("l_partkey")).alias("ps"))
+    )
+    pairs = parts.select(
+        F.explode(
+            F.expr(
+                "flatten(transform(ps, (x, i) -> transform("
+                "slice(ps, i + 2, size(ps) - i - 1), "
+                "y -> struct(x AS a, y AS b))))"
+            )
+        ).alias("p")
+    ).select("p.a", "p.b")
+    triples = parts.select(
+        F.explode(
+            F.expr(
+                "flatten(flatten(transform(ps, (x, i) -> transform("
+                "slice(ps, i + 2, size(ps) - i - 1), (y, j) -> transform("
+                "slice(ps, i + j + 3, size(ps) - i - j - 2), "
+                "z -> struct(x AS a, y AS b, z AS c))))))"
+            )
+        ).alias("t")
+    ).select("t.a", "t.b", "t.c")
+    sup2 = (
+        pairs.groupBy("a", "b")
+        .agg(F.count(F.lit(1)).cast("long").alias("sup"))
+        .select(F.lit(2).cast("long").alias("itemset_size"), "sup")
+    )
+    sup3 = (
+        triples.groupBy("a", "b", "c")
+        .agg(F.count(F.lit(1)).cast("long").alias("sup"))
+        .select(F.lit(3).cast("long").alias("itemset_size"), "sup")
+    )
+    return (
+        sup2.unionByName(sup3)
+        .groupBy("itemset_size", F.col("sup").alias("support"))
+        .agg(F.count(F.lit(1)).cast("long").alias("n_itemsets"))
+    )
+
+
+# --- separable 2-D box filter: grid hotspots ------------------------------------
+
+
+@query(
+    "grid_hotspots_topk",
+    oracle="""
+    WITH cells AS (
+      SELECT user_id % 32 AS x, (epoch_us(ts) // 3600000000) % 168 AS y,
+             CAST(count(*) AS BIGINT) AS c
+      FROM events GROUP BY 1, 2
+    ),
+    xs AS (SELECT unnest(range(0, 32)) AS x),
+    ys AS (SELECT unnest(range(0, 168)) AS y),
+    grid AS (
+      SELECT xs.x, ys.y, coalesce(cl.c, 0) AS c
+      FROM xs CROSS JOIN ys
+      LEFT JOIN cells cl ON cl.x = xs.x AND cl.y = ys.y
+    ),
+    px AS (
+      SELECT x, y, c,
+             CAST(sum(c) OVER (PARTITION BY y ORDER BY x
+               RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS BIGINT) AS sx
+      FROM grid
+    ),
+    box AS (
+      SELECT x, y, c,
+             CAST(sum(sx) OVER (PARTITION BY x ORDER BY y
+               RANGE BETWEEN 1 PRECEDING AND 1 FOLLOWING) AS BIGINT)
+               AS box_sum
+      FROM px
+    )
+    SELECT CAST(x AS BIGINT) AS x, CAST(y AS BIGINT) AS y, c, box_sum
+    FROM box ORDER BY box_sum DESC, x, y LIMIT 20
+    """,
+    survey_ref="§2.7 extension: separable 2-D box filter — 3×3 "
+    "neighborhood sums over the (user-bucket × hour-of-week) activity "
+    "grid computed as TWO cascaded 1-D RANGE-frame windows (row pass "
+    "then column pass), the classic separable-kernel decomposition; "
+    "borders clip (zero padding), grid densified from two Range dims "
+    "so sparse cells contribute exact zeros",
+)
+def grid_hotspots_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Top-20 activity hotspots: 9-cell neighborhood sums via the
+    separable trick — O(2·cells) window work instead of a 9-way
+    self-join, and each pass is one exchange (partition by the OTHER
+    axis). The 32×168 grid is a query constant (two crossed Ranges),
+    so the dense build never scales with the fact table; only the
+    first cell-count agg touches events."""
+    ev = load_table(spark, sf_dir, "events")
+    cells = ev.select(
+        (F.col("user_id") % 32).alias("x"),
+        F.expr("(unix_micros(ts) div 3600000000) % 168").alias("y"),
+    ).groupBy("x", "y").agg(F.count(F.lit(1)).cast("long").alias("c"))
+    xs = spark.range(0, 32).select(F.col("id").alias("x"))
+    ys = spark.range(0, 168).select(F.col("id").alias("y"))
+    grid = (
+        xs.crossJoin(ys)
+        .join(cells, ["x", "y"], "left")
+        .withColumn("c", F.coalesce(F.col("c"), F.lit(0).cast("long")))
+    )
+    w_row = Window.partitionBy("y").orderBy("x").rangeBetween(-1, 1)
+    w_col = Window.partitionBy("x").orderBy("y").rangeBetween(-1, 1)
+    box = grid.withColumn("sx", F.sum("c").over(w_row)).withColumn(
+        "box_sum", F.sum("sx").over(w_col).cast("long")
+    )
+    return (
+        box.select("x", "y", "c", "box_sum")
+        .orderBy(F.col("box_sum").desc(), "x", "y")
+        .limit(20)
+    )
+
+
+# --- gap-constrained sequential patterns ------------------------------------------
+
+
+@query(
+    "gap_constrained_trigrams",
+    oracle="""
+    WITH seq AS (
+      SELECT user_id, event_type, epoch_us(ts) AS us,
+             lead(event_type, 1) OVER w AS t2,
+             lead(event_type, 2) OVER w AS t3,
+             lead(epoch_us(ts), 1) OVER w AS us2,
+             lead(epoch_us(ts), 2) OVER w AS us3
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+    )
+    SELECT event_type || '>' || t2 || '>' || t3 AS trigram,
+           CAST(count(*) AS BIGINT) AS n
+    FROM seq
+    WHERE t3 IS NOT NULL
+      AND us2 - us <= 3600000000 AND us3 - us2 <= 3600000000
+    GROUP BY 1 ORDER BY n DESC, trigram LIMIT 20
+    """,
+    survey_ref="§2 extension: GAP-CONSTRAINED sequential patterns (cSPADE-"
+    "style maxgap) — event-type trigrams whose consecutive steps are "
+    "≤ 1 h apart, top-20 by support; the temporal-constraint variant of "
+    "event_type_trigrams (unconstrained counts conflate a 3-step flow "
+    "with three visits a week apart)",
+)
+def gap_constrained_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Behavioral 3-step flows that actually happen as flows: the same
+    one user-keyed window as the unconstrained trigram query, plus two
+    lead(us) columns and an integer-micros gap predicate — the maxgap
+    constraint costs zero extra shuffles."""
+    ev = load_table(spark, sf_dir, "events").select(
+        "user_id", "event_type", F.unix_micros("ts").alias("us"), "event_id"
+    )
+    w = Window.partitionBy("user_id").orderBy("us", "event_id")
+    seq = ev.select(
+        "event_type",
+        "us",
+        F.lead("event_type", 1).over(w).alias("t2"),
+        F.lead("event_type", 2).over(w).alias("t3"),
+        F.lead("us", 1).over(w).alias("us2"),
+        F.lead("us", 2).over(w).alias("us3"),
+    )
+    return (
+        seq.where(
+            F.col("t3").isNotNull()
+            & (F.col("us2") - F.col("us") <= 3600000000)
+            & (F.col("us3") - F.col("us2") <= 3600000000)
+        )
+        .select(
+            F.concat_ws(">", "event_type", "t2", "t3").alias("trigram")
+        )
+        .groupBy("trigram")
+        .agg(F.count(F.lit(1)).cast("long").alias("n"))
+        .orderBy(F.col("n").desc(), "trigram")
+        .limit(20)
+    )
+
+
+# --- sparse COO matrix multiplication --------------------------------------------------
+
+
+@query(
+    "coo_matmul_expected_transitions",
+    oracle="""
+    WITH seq AS (
+      SELECT user_id, event_type AS t1,
+             lead(event_type) OVER (PARTITION BY user_id
+                                    ORDER BY epoch_us(ts), event_id) AS t2
+      FROM events
+    ),
+    trans AS (
+      SELECT t1, t2, CAST(count(*) AS BIGINT) AS tc
+      FROM seq WHERE t2 IS NOT NULL GROUP BY 1, 2
+    ),
+    um AS (
+      SELECT user_id, event_type AS t1, CAST(count(*) AS BIGINT) AS uc
+      FROM events GROUP BY 1, 2
+    ),
+    prod AS (
+      SELECT um.user_id, trans.t2,
+             CAST(sum(um.uc * trans.tc) AS BIGINT) AS expected_mass
+      FROM um JOIN trans ON trans.t1 = um.t1
+      GROUP BY 1, 2
+    )
+    SELECT t2 AS next_type,
+           CAST(count(*) AS BIGINT) AS n_users,
+           CAST(sum(expected_mass) AS BIGINT) AS total_mass,
+           CAST(max(expected_mass) AS BIGINT) AS max_user_mass
+    FROM prod GROUP BY 1
+    """,
+    survey_ref="§2.3/§2.4 extension: sparse COO matrix multiplication — "
+    "the (user × type) count matrix times the (type × type) transition-"
+    "count matrix as the canonical join-on-inner-dimension + group-agg "
+    "plan (C = A·B with A, B, C all in coordinate form); every mass is "
+    "an exact integer because both factors stay counts",
+)
+def coo_matmul_expected_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distributed sparse matmul in its native Spark form: join A's
+    columns to B's rows on the inner dimension, multiply, sum per (i,
+    j). The inner dimension here is the 5-type vocabulary so B is
+    broadcast-sized by construction; at 100 TB any COO matmul with a
+    bounded inner dimension keeps this exact plan (A never shuffles —
+    output rolls up per i-partition)."""
+    ev = load_table(spark, sf_dir, "events")
+    w = Window.partitionBy("user_id").orderBy(
+        F.unix_micros("ts"), "event_id"
+    )
+    seq = ev.select(
+        F.col("event_type").alias("t1"),
+        F.lead("event_type").over(w).alias("t2"),
+    ).where(F.col("t2").isNotNull())
+    trans = seq.groupBy("t1", "t2").agg(
+        F.count(F.lit(1)).cast("long").alias("tc")
+    )
+    um = ev.groupBy("user_id", F.col("event_type").alias("t1")).agg(
+        F.count(F.lit(1)).cast("long").alias("uc")
+    )
+    prod = (
+        um.join(trans, "t1")
+        .groupBy("user_id", "t2")
+        .agg(F.sum(F.col("uc") * F.col("tc")).cast("long").alias("expected_mass"))
+    )
+    return prod.groupBy(F.col("t2").alias("next_type")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_users"),
+        F.sum("expected_mass").cast("long").alias("total_mass"),
+        F.max("expected_mass").cast("long").alias("max_user_mass"),
+    )
+
+
+# --- group-median imputation audit -------------------------------------------------------
+# The synthetic events have no nulls, so both engines null out every 20th
+# value (event_id % 20 = 0) and impute with the per-type exact rank median
+# of the REMAINING values — the standard data-prep op, made auditable.
+
+
+@query(
+    "median_impute_audit",
+    oracle="""
+    WITH v AS (
+      SELECT event_type, event_id,
+             CASE WHEN event_id % 20 = 0 THEN NULL
+                  ELSE CAST(floor(value * 1000000) AS BIGINT) END AS v6
+      FROM events
+    ),
+    ranked AS (
+      SELECT event_type, v6,
+             row_number() OVER (PARTITION BY event_type
+                                ORDER BY v6, event_id) AS rk,
+             count(v6) OVER (PARTITION BY event_type) AS n
+      FROM v WHERE v6 IS NOT NULL
+    ),
+    med AS (
+      SELECT event_type, CAST(max(CASE WHEN rk = (n + 1) // 2 THEN v6 END)
+                              AS BIGINT) AS median_v6
+      FROM ranked GROUP BY 1
+    )
+    SELECT v.event_type,
+           CAST(count(*) AS BIGINT) AS n_rows,
+           CAST(sum(CASE WHEN v.v6 IS NULL THEN 1 ELSE 0 END) AS BIGINT)
+             AS n_imputed,
+           m.median_v6,
+           CAST(sum(coalesce(v.v6, m.median_v6)) AS BIGINT)
+             AS sum_after_impute
+    FROM v JOIN med m ON m.event_type = v.event_type
+    GROUP BY 1, 4
+    """,
+    survey_ref="§2.2/§2.4 extension: group-median imputation (P11's null "
+    "fill lifted from constants to a per-group EXACT rank median of the "
+    "non-null values, lower median, fully tiebroken); the audit emits "
+    "null counts and the post-impute checksum so the fill is verifiable",
+)
+def median_impute_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fill nulls with the group median, exactly: rank median over
+    non-nulls (one type-keyed window), broadcast back by the 5-key dim
+    join, coalesce, checksum. The fixture nulls every 20th value so the
+    op is non-vacuous in both engines."""
+    ev = load_table(spark, sf_dir, "events")
+    v = ev.select(
+        "event_type",
+        "event_id",
+        F.when(F.col("event_id") % 20 == 0, F.lit(None).cast("long"))
+        .otherwise(F.floor(F.col("value") * 1000000).cast("long"))
+        .alias("v6"),
+    )
+    nn = v.where(F.col("v6").isNotNull())
+    w_rk = Window.partitionBy("event_type").orderBy("v6", "event_id")
+    w_n = Window.partitionBy("event_type")
+    ranked = nn.select(
+        "event_type",
+        "v6",
+        F.row_number().over(w_rk).alias("rk"),
+        F.count(F.lit(1)).over(w_n).alias("n"),
+    )
+    med = ranked.groupBy("event_type").agg(
+        F.max(F.when(F.col("rk") == F.expr("(n + 1) div 2"), F.col("v6")))
+        .cast("long")
+        .alias("median_v6")
+    )
+    return (
+        v.join(med, "event_type")
+        .groupBy("event_type", "median_v6")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_rows"),
+            F.sum(F.col("v6").isNull().cast("long")).cast("long").alias("n_imputed"),
+            F.sum(F.coalesce(F.col("v6"), F.col("median_v6")))
+            .cast("long")
+            .alias("sum_after_impute"),
+        )
+        .select(
+            "event_type", "n_rows", "n_imputed", "median_v6", "sum_after_impute"
+        )
+    )
+
+
+# --- min-max scaling audit -----------------------------------------------------------------
+
+
+@query(
+    "minmax_scale_audit",
+    oracle="""
+    WITH v AS (
+      SELECT event_type, CAST(floor(value * 1000000) AS BIGINT) AS v6
+      FROM events
+    ),
+    b AS (
+      SELECT event_type, CAST(min(v6) AS BIGINT) AS lo,
+             CAST(max(v6) AS BIGINT) AS hi
+      FROM v GROUP BY 1
+    )
+    SELECT v.event_type,
+           CAST(count(*) AS BIGINT) AS n,
+           b.lo AS min_v6, b.hi AS max_v6,
+           CAST(sum((v.v6 - b.lo) * 10000 // (b.hi - b.lo)) AS BIGINT)
+             AS sum_scaled_e4
+    FROM v JOIN b ON b.event_type = v.event_type
+    GROUP BY 1, 3, 4
+    """,
+    survey_ref="§2.7/§2.10 extension: min-max feature scaling audit — "
+    "per-group (v−min)·1e4 div (max−min) floor-scaled to exact integers "
+    "(numerator nonnegative, so div == floor in both engines); the "
+    "normalization layer of every feature pipeline, checksummed",
+)
+def minmax_scale_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Feature scaling without float drift: group bounds from one agg,
+    broadcast back by the 5-key dim join, the scaled value an exact
+    integer quotient. The checksum (sum of scaled values) is what a
+    regression test pins after any refactor of the scaling layer."""
+    ev = load_table(spark, sf_dir, "events")
+    v = ev.select(
+        "event_type", F.floor(F.col("value") * 1000000).cast("long").alias("v6")
+    )
+    b = v.groupBy("event_type").agg(
+        F.min("v6").cast("long").alias("lo"), F.max("v6").cast("long").alias("hi")
+    )
+    return (
+        v.join(b, "event_type")
+        .groupBy("event_type", "lo", "hi")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum(F.expr("(v6 - lo) * 10000 div (hi - lo)"))
+            .cast("long")
+            .alias("sum_scaled_e4"),
+        )
+        .select(
+            "event_type",
+            "n",
+            F.col("lo").alias("min_v6"),
+            F.col("hi").alias("max_v6"),
+            "sum_scaled_e4",
+        )
+    )
+
+
+# --- Apriori 3-itemsets ---------------------------------------------------------
+
+
+@query(
+    "apriori_triples",
+    oracle="""
+    WITH op AS (
+      SELECT DISTINCT
+             o.o_custkey * 100 + (epoch_us(o.o_orderdate) // 86400000000)
+               // 730 AS bk,
+             l.l_partkey
+      FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+    ),
+    tri AS (
+      SELECT a.l_partkey AS p1, b.l_partkey AS p2, c.l_partkey AS p3,
+             CAST(count(*) AS BIGINT) AS c_abc
+      FROM op a
+      JOIN op b ON b.bk = a.bk AND a.l_partkey < b.l_partkey
+      JOIN op c ON c.bk = a.bk AND b.l_partkey < c.l_partkey
+      GROUP BY 1, 2, 3 HAVING count(*) >= 2
+    ),
+    pair AS (
+      SELECT a.l_partkey AS s, b.l_partkey AS t, CAST(count(*) AS BIGINT) AS c
+      FROM op a JOIN op b ON b.bk = a.bk AND a.l_partkey < b.l_partkey
+      GROUP BY 1, 2
+    )
+    SELECT t.p1, t.p2, t.p3, t.c_abc,
+           ab.c AS c_ab, ac.c AS c_ac, bc.c AS c_bc,
+           CAST((t.c_abc * 20000 + ab.c) // (2 * ab.c) AS BIGINT)
+             AS conf_ab_c_e4
+    FROM tri t
+    JOIN pair ab ON ab.s = t.p1 AND ab.t = t.p2
+    JOIN pair ac ON ac.s = t.p1 AND ac.t = t.p3
+    JOIN pair bc ON bc.s = t.p2 AND bc.t = t.p3
+    ORDER BY t.c_abc DESC, t.p1, t.p2, t.p3
+    LIMIT 25
+    """,
+    survey_ref="§2 extension: frequent 3-itemsets (Apriori level 3, "
+    "Agrawal & Srikant VLDB'94) over (customer, 2-year) baskets — top-25 "
+    "triples with support ≥ 2 plus their three sub-pair supports and the "
+    "ab→c confidence as an exact e4 ratio; extends the pairwise "
+    "association_rules mining one lattice level up",
+)
+def apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Frequent part triples over (customer, 2-year-window) baskets —
+    the grain choice is load-bearing twice: the order grain is too
+    sparse (random 4-item orders over an sf-scaled part universe produce
+    ZERO support-2 triples at sf0.1, the vacuous-gate trap) and the
+    lifetime-customer grain too dense (B≈40-part baskets explode to
+    ~10k triples each — measured 32 s at the gate scale); the windowed
+    basket keeps B bounded by per-window order volume (~10 parts) at
+    every sf. bk = custkey·100 + epoch-day div 730 is collision-free
+    (the day bucket is < 100 for any realistic calendar).
+
+    Shape: one (basket, part) membership frame (checkpointed — it feeds
+    the pair-stage baskets and the three triple-join legs) → pairs via
+    the single-level HOF explosion (the _copurchase_edges kernel, its
+    measured-fastest depth) → wedges via one codegen'd basket-key
+    equi-join → THE Apriori candidate prune (semi-join the wedge stream
+    against frequent pairs — exact by downward closure: an infrequent
+    (p1, p2) cannot extend to a frequent triple, and every wedge of a
+    frequent pair survives, so counts are untouched; measured 16.9 s →
+    6.6 s warm at sf0.1, wedge stream ~2.9M → ~45k) → the second
+    basket-key join → hash count → support filter → three equi-joins
+    back to the pair supports for the rule confidences → deterministic
+    top-25 (c_abc DESC, triple). The ORACLE counts triples over the
+    UNPRUNED self-joins, so the gate's hash equality PROVES the prune
+    drops nothing. Confidence is the exact e4 integer ratio."""
+    li = load_table(spark, sf_dir, "lineitem")
+    orders = load_table(spark, sf_dir, "orders").select(
+        "o_orderkey",
+        F.expr(
+            "o_custkey * 100 + (unix_micros(CAST(o_orderdate AS TIMESTAMP))"
+            " div 86400000000) div 730"
+        ).alias("bk"),
+    )
+    # (basket, part) membership feeds the pair stage AND the pruned
+    # triple rebuild — materialize the join once
+    op = (
+        li.select("l_orderkey", "l_partkey")
+        .join(orders, li["l_orderkey"] == orders["o_orderkey"])
+        .select("bk", "l_partkey")
+        .distinct()
+        .transform(checkpoint)
+    )
+    parts = op.groupBy("bk").agg(
+        F.array_sort(F.collect_set("l_partkey")).alias("ps")
+    )
+    pair = (
+        parts.select(
+            F.explode(
+                F.expr(
+                    "flatten(transform(ps, (x, i) -> transform("
+                    "slice(ps, i + 2, size(ps) - i - 1), "
+                    "y -> struct(x AS s, y AS t))))"
+                )
+            ).alias("p")
+        )
+        .select("p.s", "p.t")
+        .groupBy("s", "t")
+        .agg(F.count(F.lit(1)).cast("long").alias("c"))
+        # feeds the Apriori prune + three confidence joins — materialize
+        .transform(checkpoint)
+    )
+    # Triple counting via two codegen'd equi-joins on the basket key, NOT
+    # the nested HOF (measured at sf0.1: join 6.7-7.2 s vs nested HOF
+    # 8-11 s — depth-3 interpreted lambdas building structs lose to
+    # whole-stage-codegen joins, the opposite of the PAIR stage where the
+    # single-level HOF wins ~20%; both measured, both kept at their
+    # winning depth). Between the two joins sits the REAL Apriori
+    # candidate prune, at the PAIR level: a wedge whose (p1, p2) is not
+    # frequent cannot extend to a frequent triple (downward closure), and
+    # every wedge of a frequent pair IS kept, so triple counts are exact.
+    # Measured at sf0.1: the semi-join cuts the wedge stream ~2.9M → ~45k
+    # instances and the candidate agg 8.6M → ~0.5M groups — 16.9 s → 6.6 s
+    # warm, byte-identical output (the PART-level variant of this prune
+    # measured useless — frequent-pair parts cover the whole catalog —
+    # and was discarded; pruning must bite at the pair grain).
+    a = op.select("bk", F.col("l_partkey").alias("p1"))
+    b2 = op.select(F.col("bk").alias("_bk2"), F.col("l_partkey").alias("p2"))
+    c3 = op.select(F.col("bk").alias("_bk3"), F.col("l_partkey").alias("p3"))
+    fp2 = pair.where(F.col("c") >= 2).select(
+        F.col("s").alias("p1"), F.col("t").alias("p2")
+    )
+    tri = (
+        a.join(b2, (F.col("bk") == F.col("_bk2")) & (F.col("p1") < F.col("p2")))
+        .join(fp2, ["p1", "p2"], "left_semi")
+        .join(c3, (F.col("bk") == F.col("_bk3")) & (F.col("p2") < F.col("p3")))
+        .groupBy("p1", "p2", "p3")
+        .agg(F.count(F.lit(1)).cast("long").alias("c_abc"))
+        .where(F.col("c_abc") >= 2)
+    )
+    ab = pair.select(
+        F.col("s").alias("p1"), F.col("t").alias("p2"), F.col("c").alias("c_ab")
+    )
+    ac = pair.select(
+        F.col("s").alias("_a1"), F.col("t").alias("_a3"), F.col("c").alias("c_ac")
+    )
+    bc = pair.select(
+        F.col("s").alias("_b2"), F.col("t").alias("_b3"), F.col("c").alias("c_bc")
+    )
+    out = (
+        tri.join(ab, ["p1", "p2"])
+        .join(ac, (F.col("_a1") == F.col("p1")) & (F.col("_a3") == F.col("p3")))
+        .drop("_a1", "_a3")
+        .join(bc, (F.col("_b2") == F.col("p2")) & (F.col("_b3") == F.col("p3")))
+        .drop("_b2", "_b3")
+    )
+    return (
+        out.select(
+            "p1",
+            "p2",
+            "p3",
+            "c_abc",
+            "c_ab",
+            "c_ac",
+            "c_bc",
+            ratio_e4("c_abc", "c_ab").alias("conf_ab_c_e4"),
+        )
+        .orderBy(F.col("c_abc").desc(), "p1", "p2", "p3")
+        .limit(25)
     )

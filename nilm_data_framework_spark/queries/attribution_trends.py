@@ -1,9 +1,9 @@
-"""Round-5 analytics extensions: multi-touch attribution, outer-join count
+"""Analytics extensions: multi-touch attribution, outer-join count
 distributions (TPC-H Q13 shape), exact-moment OLS trend screening, one
 label-propagation step, and tokenizer fertility.
 
 Every ratio reported here is either an exact integer or an exact scaled
-integer via operators/exact_math.py — the r4/r5 typed-hash discipline. All
+integer via operators/exact_math.py (the typed-hash discipline). All
 window families ride a single entity-key exchange; all joins are equi-joins
 with AQE-decided sides.
 """
@@ -13,22 +13,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
 from nilm_data_framework_spark.operators import text as T
+from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
 from nilm_data_framework_spark.plans.registry import query
-from nilm_data_framework_spark.queries.nilm_windows import (
-    SESSION_IDS_CTES,
-    session_ids,
-)
+from nilm_data_framework_spark.queries.common import _docs, _events
+from nilm_data_framework_spark.queries.nilm_windows import SESSION_IDS_CTES, session_ids
 from nilm_data_framework_spark.sources.testdata import load_table
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents", parallelize=True)
 
 
 # --- multi-touch attribution --------------------------------------------------

@@ -1,6 +1,6 @@
 """Ingest-parity queries (SURVEY.md §2.1 sources / §2.3 joins / §2.7 scalar
 functions): metadata enrichment, taxonomy label mapping, JSON extraction,
-keep-first dedup, pivot, as-of alignment.
+keep-first dedup, pivot, as-of alignment (backward, nearest and forward).
 """
 
 from __future__ import annotations
@@ -12,11 +12,15 @@ from nilm_data_framework_spark.operators import aggregates as agg
 from nilm_data_framework_spark.operators import joins as J
 from nilm_data_framework_spark.operators import selectors as sel
 from nilm_data_framework_spark.operators.exact_math import u6_mean_e4, u6_mean_e4_sql
+from nilm_data_framework_spark.operators.joins import asof_join_nearest
 from nilm_data_framework_spark.plans.registry import query
+from nilm_data_framework_spark.queries.common import EVENT_TYPES
 from nilm_data_framework_spark.sources.testdata import load_table
-from nilm_data_framework_spark.taxonomy import UNIVERSAL_LABELS, keywords_df, map_universal_label
-
-EVENT_TYPES = ["click", "error", "purchase", "signup", "view"]
+from nilm_data_framework_spark.taxonomy import (
+    UNIVERSAL_LABELS,
+    keywords_df,
+    map_universal_label,
+)
 
 
 # --- J1 metadata enrichment (broadcast left outer + defaulting) -----------------
@@ -275,4 +279,170 @@ def variant_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n"),
         F.sum(k).alias("sum_k"),
         F.countDistinct("user_id").alias("n_users"),
+    )
+
+
+# --- nearest-direction as-of join (completes the as-of family) -----------------
+
+_NEAREST_TOL_US = 3_600_000_000  # 1 hour
+
+
+@query(
+    "asof_nearest_purchase",
+    oracle=f"""
+    WITH l AS (
+      SELECT user_id, event_id, epoch_us(ts) AS lus
+      FROM events WHERE event_type = 'click'
+    ),
+    r0 AS (
+      SELECT user_id, epoch_us(ts) AS rus,
+             CAST(floor(value * 1000000) AS BIGINT) AS v6
+      FROM events WHERE event_type = 'purchase'
+    ),
+    r AS (SELECT user_id, rus, max(v6) AS v6 FROM r0 GROUP BY 1, 2),
+    cand AS (
+      SELECT l.user_id, l.event_id,
+             abs(l.lus - r.rus) AS adiff,
+             CASE WHEN r.rus <= l.lus THEN 0 ELSE 1 END AS fwd,
+             r.v6
+      FROM l JOIN r ON l.user_id = r.user_id
+      WHERE abs(l.lus - r.rus) <= {_NEAREST_TOL_US}
+    ),
+    pick AS (
+      SELECT user_id, event_id, v6, adiff FROM (
+        SELECT *, row_number() OVER (PARTITION BY user_id, event_id
+                                     ORDER BY adiff, fwd) AS rn
+        FROM cand
+      ) WHERE rn = 1
+    )
+    SELECT l.user_id, l.event_id,
+           p.v6 AS nearest_v6,
+           p.adiff AS nearest_diff_us
+    FROM l LEFT JOIN pick p
+      ON l.user_id = p.user_id AND l.event_id = p.event_id
+    """,
+    survey_ref="§2.5 J-ext as-of family: NEAREST-direction as-of join "
+    "(pd.merge_asof direction='nearest' semantics with the family's "
+    "max-value tie collapse and a backward-on-equidistant rule) — one "
+    "shuffle, both directions from one sorted union, never a range "
+    "cross-product; the oracle replays the pick as a total-order "
+    "row_number over in-tolerance candidates",
+)
+def asof_nearest_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For every click, the NEAREST purchase value of the same user
+    within ±1 h — either side of the click (the both-sided alignment
+    backward as-of cannot express; operators/joins.py::asof_join_nearest).
+    All arithmetic rides exact integers: microsecond epochs and
+    e6-floored values pass through the kernel's double payload losslessly
+    (≪ 2^53), and the returned diff is re-derived as an exact BIGINT.
+    Ties: duplicate (user, ts) purchases collapse to max-v6; equidistant
+    pairs resolve backward — both replayed by the oracle's
+    (adiff, fwd) total order."""
+    ev = load_table(spark, sf_dir, "events", parallelize=True)
+    base = ev.select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+        F.floor(F.col("value") * 1000000).cast("long").alias("v6"),
+    )
+    left = base.filter(F.col("event_type") == "click").select(
+        "user_id", "event_id", "us"
+    )
+    right = base.filter(F.col("event_type") == "purchase").select(
+        "user_id", "us", "v6"
+    )
+    out = asof_join_nearest(
+        left,
+        right,
+        keys=["user_id"],
+        left_ts="us",
+        right_ts="us",
+        right_value="v6",
+        out="_nv",
+        out_ts="_nts",
+        tolerance=_NEAREST_TOL_US,
+    )
+    return out.select(
+        "user_id",
+        "event_id",
+        F.col("_nv").cast("long").alias("nearest_v6"),
+        F.abs(F.col("us") - F.col("_nts")).cast("long").alias("nearest_diff_us"),
+    )
+
+
+@query(
+    "asof_forward_next_purchase",
+    oracle=f"""
+    WITH l AS (
+      SELECT user_id, event_id, epoch_us(ts) AS lus
+      FROM events WHERE event_type = 'click'
+    ),
+    r0 AS (
+      SELECT user_id, epoch_us(ts) AS rus,
+             CAST(floor(value * 1000000) AS BIGINT) AS v6
+      FROM events WHERE event_type = 'purchase'
+    ),
+    r AS (SELECT user_id, rus, max(v6) AS v6 FROM r0 GROUP BY 1, 2),
+    cand AS (
+      SELECT l.user_id, l.event_id, r.rus - l.lus AS wait_us, r.v6
+      FROM l JOIN r ON l.user_id = r.user_id
+      WHERE r.rus >= l.lus AND r.rus - l.lus <= {_NEAREST_TOL_US}
+    ),
+    pick AS (
+      SELECT user_id, event_id, v6, wait_us FROM (
+        SELECT *, row_number() OVER (PARTITION BY user_id, event_id
+                                     ORDER BY wait_us) AS rn
+        FROM cand
+      ) WHERE rn = 1
+    )
+    SELECT l.user_id, l.event_id,
+           p.v6 AS next_v6,
+           p.wait_us AS wait_us
+    FROM l LEFT JOIN pick p
+      ON l.user_id = p.user_id AND l.event_id = p.event_id
+    """,
+    survey_ref="§2.5 J-ext as-of family: FORWARD as-of (>= semantics, "
+    "pd.merge_asof direction='forward') — time-to-next-event lookup via "
+    "the same single-sort kernel (exact-ts match = the backward carry at "
+    "diff 0, no third window); wait_us exact BIGINT",
+)
+def asof_forward_next_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """For every click, the NEXT purchase value of the same user within
+    +1 h and the exact wait in microseconds — the time-to-convert lookup
+    (operators/joins.py::asof_join_nearest, direction='forward').
+    Collapsed duplicate purchase timestamps make the pick total: wait_us
+    is unique per candidate, so the oracle's single-column ORDER BY
+    replays it."""
+    ev = load_table(spark, sf_dir, "events", parallelize=True)
+    base = ev.select(
+        "user_id",
+        "event_id",
+        "event_type",
+        F.unix_micros(F.col("ts").cast("timestamp")).alias("us"),
+        F.floor(F.col("value") * 1000000).cast("long").alias("v6"),
+    )
+    left = base.filter(F.col("event_type") == "click").select(
+        "user_id", "event_id", "us"
+    )
+    right = base.filter(F.col("event_type") == "purchase").select(
+        "user_id", "us", "v6"
+    )
+    out = asof_join_nearest(
+        left,
+        right,
+        keys=["user_id"],
+        left_ts="us",
+        right_ts="us",
+        right_value="v6",
+        out="_nv",
+        out_ts="_nts",
+        tolerance=_NEAREST_TOL_US,
+        direction="forward",
+    )
+    return out.select(
+        "user_id",
+        "event_id",
+        F.col("_nv").cast("long").alias("next_v6"),
+        (F.col("_nts") - F.col("us")).cast("long").alias("wait_us"),
     )

@@ -1,4 +1,5 @@
-"""Window-function queries (SURVEY.md §2.5 W1-W7 + sessionization).
+"""Window-function queries (SURVEY.md §2.5 W1-W7 + sessionization,
+including the engine-native ``session_window``).
 
 Ordering inside every window is (ts, event_id) — the explicit tie-break keeps
 the hash-oracle deterministic even with duplicate timestamps.
@@ -9,15 +10,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
 from nilm_data_framework_spark.operators import selectors as sel
 from nilm_data_framework_spark.operators import windows as W
+from nilm_data_framework_spark.operators.exact_math import ratio_e4, ratio_e4_sql
 from nilm_data_framework_spark.plans.registry import query
+from nilm_data_framework_spark.queries.common import _events
 from nilm_data_framework_spark.sources.testdata import load_table
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
 
 
 # --- W1 lag delta -----------------------------------------------------------
@@ -314,9 +312,7 @@ def running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- SCD2 validity intervals (changelog → dimension history; W1/W2/P10 family) ------
 
-@query(
-    "scd2_user_intervals",
-    oracle="""
+_SCD2_INTERVALS_SQL = """
     WITH ordered AS (
       SELECT user_id, event_type, ts, event_id,
              lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_type
@@ -329,7 +325,12 @@ def running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
            epoch_us(ts) AS valid_from_us,
            lead(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to_us
     FROM starts
-    """,
+    """
+
+
+@query(
+    "scd2_user_intervals",
+    oracle=_SCD2_INTERVALS_SQL,
     survey_ref="§2.5 extension: SCD2 run-collapse intervals (changelog→history)",
 )
 def scd2_user_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -411,4 +412,60 @@ def funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "d", "n_views", "n_converted",
         ratio_e4("n_converted", "n_views").alias("conversion_rate_e4"),
+    )
+
+
+# --- native session windows ---------------------------------------------------------
+
+
+@query(
+    "session_window_native",
+    oracle="""
+    WITH gaps AS (
+      SELECT user_id, epoch_us(ts) AS us,
+             CASE WHEN lag(epoch_us(ts)) OVER w IS NULL
+                    OR epoch_us(ts) - lag(epoch_us(ts)) OVER w >= 1800000000
+                  THEN 1 ELSE 0 END AS new_s
+      FROM events
+      WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+    ),
+    sess AS (
+      SELECT user_id, us,
+             CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY us
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+               AS sid
+      FROM gaps
+    )
+    SELECT user_id,
+           CAST(min(us) AS BIGINT) AS start_us,
+           CAST(max(us) + 1800000000 AS BIGINT) AS end_us,
+           CAST(count(*) AS BIGINT) AS n_events
+    FROM sess GROUP BY user_id, sid
+    """,
+    survey_ref="§2.7/§2.9 native operator: Spark's built-in "
+    "session_window() (dynamic-gap session aggregation inside the "
+    "engine, usable identically in batch and Structured Streaming) — "
+    "the oracle replays the merge rule as gaps-and-islands with the "
+    "session_window boundary convention (ts − prev ≥ gap starts a new "
+    "session; window end = last event + gap), proving the built-in's "
+    "semantics equal the manual islands form",
+)
+def session_window_native(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The engine-native sessionizer: groupBy(user, session_window(ts,
+    '30 minutes')) merges overlapping [ts, ts+gap) intervals inside the
+    aggregation operator — one exchange, no window-function pass, and
+    the SAME expression works under readStream with watermark-driven
+    state eviction (the manual islands form does not stream). NOTE the
+    boundary differs from the repo's SESSION_IDS_CTES grain: the
+    built-in starts a new session at diff ≥ gap, sessionize at
+    diff > gap — both conventions are kept, each oracle-pinned."""
+    ev = load_table(spark, sf_dir, "events")
+    sw = ev.groupBy(
+        "user_id", F.session_window("ts", "30 minutes").alias("w")
+    ).agg(F.count(F.lit(1)).cast("long").alias("n_events"))
+    return sw.select(
+        "user_id",
+        F.unix_micros(F.col("w.start")).alias("start_us"),
+        F.unix_micros(F.col("w.end")).alias("end_us"),
+        "n_events",
     )

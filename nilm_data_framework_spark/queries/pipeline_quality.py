@@ -1,4 +1,4 @@
-"""Round-4 surface: pipeline quality & governance operators (§2 extensions).
+"""Pipeline quality & governance operators (§2 extensions).
 
 Data-side selection (DSIR importance weighting, curriculum stages,
 leakage-safe group splits), sketch-accelerated decontamination (a
@@ -7,6 +7,10 @@ data-quality validation (Deequ-style constraint suite), graph score
 propagation (PageRank step), binary-quantized ANN (sign bits + Hamming
 re-rank), and three time-series service ops (cohort retention, sweep-line
 peak concurrency, M4 downsampling, seasonal-naive forecastability).
+Evaluation and audits: label-noise screen, Cohen's kappa, McNemar, exact
+ROC-AUC, split-conformal thresholds, disparate impact, mutual information,
+drift statistics (Mann-Whitney, earth mover's), functional-dependency
+violations, and a tamper-evident hash-chain ledger.
 
 Float discipline follows the repo convention (module docstring of
 nilm_analysis.py): grouped float sums/avgs rounded, log-based scores
@@ -20,38 +24,36 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from nilm_data_framework_spark.materialize import checkpoint
-from nilm_data_framework_spark.operators.exact_math import (
-    ratio_e4,
-    ratio_e4_sql,
-    ratio_scaled_sql,
-)
 from nilm_data_framework_spark.operators import aggregates as AG
 from nilm_data_framework_spark.operators import graph as G
 from nilm_data_framework_spark.operators import joins as J
 from nilm_data_framework_spark.operators import lm as LM
-from nilm_data_framework_spark.operators import robust as RB
 from nilm_data_framework_spark.operators import quality_checks as QC
 from nilm_data_framework_spark.operators import resample as RS
+from nilm_data_framework_spark.operators import robust as RB
 from nilm_data_framework_spark.operators import sampling as SM
 from nilm_data_framework_spark.operators import similarity as S
 from nilm_data_framework_spark.operators import sketches as SK
 from nilm_data_framework_spark.operators import splits as SP
 from nilm_data_framework_spark.operators import text as T
 from nilm_data_framework_spark.operators import windows as W
+from nilm_data_framework_spark.operators.embed_stats import u6_components
+from nilm_data_framework_spark.operators.exact_math import (
+    ratio_e4,
+    ratio_e4_sql,
+    ratio_scaled,
+    ratio_scaled_sql,
+)
+from nilm_data_framework_spark.operators.text import (
+    quality_classifier_score,
+    token_count,
+)
 from nilm_data_framework_spark.plans.registry import query
+from nilm_data_framework_spark.queries.common import _TOKS, _docs, _events
 from nilm_data_framework_spark.sources.testdata import load_table
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "documents", parallelize=True)
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load_table(spark, sf_dir, "events")
-
-
 # Shared DuckDB fragments (identical token definitions to operators/text.py).
-_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')"
 
 
 # --- DSIR importance weights --------------------------------------------------
@@ -1089,4 +1091,1007 @@ def k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "n_combos", "n_unsafe_combos", "n_rows", "n_unsafe_rows",
         "min_l_diversity",
         ratio_e4("n_unsafe_rows", "n_rows").alias("unsafe_row_share_e4"),
+    )
+
+
+# --- label-noise screen (neighbor disagreement) ------------------------------
+
+_NOISE_K = 5
+
+
+@query(
+    "label_noise_screen",
+    oracle=f"""
+    WITH u AS (
+      SELECT vec_id, label, CAST(i AS INT) AS i,
+             CAST(floor(CAST(embedding[CAST(i AS INT) + 1] AS DOUBLE)
+                        * 1000000) AS BIGINT) AS q6
+      FROM embeddings CROSS JOIN range(0, 64) t(i)
+    ),
+    d AS (
+      SELECT a.vec_id AS query_id, a.label AS own_label,
+             b.vec_id AS match_id, b.label AS c_label,
+             CAST(sum(a.q6 * b.q6) AS BIGINT) AS dot
+      FROM u a JOIN u b ON a.i = b.i AND b.vec_id <> a.vec_id
+      GROUP BY 1, 2, 3, 4
+    ),
+    top AS (
+      SELECT query_id, own_label,
+             CASE WHEN c_label <> own_label THEN 1 ELSE 0 END AS dis
+      FROM (
+        SELECT *, row_number() OVER (PARTITION BY query_id
+                                     ORDER BY dot DESC, match_id) AS rk
+        FROM d) WHERE rk <= {_NOISE_K}
+    ),
+    per AS (
+      SELECT query_id, own_label, CAST(sum(dis) AS BIGINT) AS n_dis
+      FROM top GROUP BY 1, 2
+    )
+    SELECT own_label AS label,
+           CAST(count(*) AS BIGINT) AS n_vectors,
+           CAST(sum(n_dis) AS BIGINT) AS total_disagree,
+           CAST(sum(CASE WHEN 2 * n_dis > {_NOISE_K} THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_flagged,
+           CAST((sum(n_dis) * 20000 + count(*) * {_NOISE_K})
+                // (2 * count(*) * {_NOISE_K}) AS BIGINT) AS disagree_e4
+    FROM per GROUP BY own_label
+    """,
+    survey_ref="§2.10 label quality: confident-learning-lite noise screen "
+    "— per label, how often a vector's {_k} nearest neighbors carry a "
+    "DIFFERENT label (majority-disagree flags the likely mislabels, "
+    "Northcutt et al.'s cleanlab intuition without the model); exact "
+    "integer dots and counts end to end".replace("{_k}", str(_NOISE_K)),
+)
+def label_noise_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every vector looks at its 5 exact-dot neighbors and counts label
+    disagreements; per-label rollup of total/majority-disagree/e4 rate.
+    The all-pairs scan is the correctness baseline (corpus × corpus
+    streamed, never shuffled by pair); at 100 TB the neighbor stage is
+    any bucketed ANN path — the disagreement rollup is k·N-sized."""
+    emb = load_table(spark, sf_dir, "embeddings", parallelize=True)
+    c = emb.select(
+        F.col("vec_id").alias("match_id"),
+        u6_components("embedding").alias("c6"),
+        F.col("label").alias("c_label"),
+    )
+    q = emb.select(
+        F.col("vec_id").alias("query_id"),
+        u6_components("embedding").alias("q6"),
+        F.col("label").alias("own_label"),
+    )
+    dot = F.aggregate(
+        F.zip_with("q6", "c6", lambda a, b: a * b),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("match_id"))
+    # NO broadcast hint: the probe side here is the FULL corpus (unlike the
+    # ANN queries' constant-bounded vec_id slices), so the planner must
+    # decide from measured size — BNLJ under the auto threshold at gate
+    # scale; a 100 TB deployment swaps the neighbor stage to a bucketed
+    # ANN path rather than ever forcing a corpus broadcast.
+    top = (
+        c.join(q, F.col("match_id") != F.col("query_id"))
+        .withColumn("dot", dot)
+        .withColumn("rk", F.row_number().over(w))
+        .filter(F.col("rk") <= _NOISE_K)
+        .select(
+            "query_id",
+            "own_label",
+            (F.col("c_label") != F.col("own_label")).cast("long").alias("dis"),
+        )
+    )
+    per = top.groupBy("query_id", "own_label").agg(
+        F.sum("dis").cast("long").alias("n_dis")
+    )
+    return per.groupBy(F.col("own_label").alias("label")).agg(
+        F.count(F.lit(1)).cast("long").alias("n_vectors"),
+        F.sum("n_dis").cast("long").alias("total_disagree"),
+        F.sum((F.lit(2) * F.col("n_dis") > F.lit(_NOISE_K)).cast("long"))
+        .cast("long")
+        .alias("n_flagged"),
+        ratio_e4("sum(n_dis)", f"count(1) * {_NOISE_K}").alias("disagree_e4"),
+    )
+
+
+# --- mutual information between two categoricals -----------------------------
+
+
+@query(
+    "mutual_information_lang_source",
+    oracle="""
+    WITH cells AS (
+      SELECT lang, source, CAST(count(*) AS BIGINT) AS n_xy
+      FROM documents GROUP BY 1, 2
+    ),
+    mx AS (SELECT lang, CAST(sum(n_xy) AS BIGINT) AS n_x FROM cells GROUP BY 1),
+    my AS (SELECT source, CAST(sum(n_xy) AS BIGINT) AS n_y FROM cells GROUP BY 1),
+    tot AS (SELECT CAST(sum(n_xy) AS BIGINT) AS n FROM cells),
+    terms AS (
+      SELECT c.lang, c.source, c.n_xy, x.n_x, y.n_y, t.n,
+             (CAST(c.n_xy AS DOUBLE) / CAST(t.n AS DOUBLE))
+               * ln((CAST(c.n_xy AS DOUBLE) * CAST(t.n AS DOUBLE))
+                    / (CAST(x.n_x AS DOUBLE) * CAST(y.n_y AS DOUBLE))) AS term
+      FROM cells c
+      JOIN mx x ON x.lang = c.lang
+      JOIN my y ON y.source = c.source
+      CROSS JOIN tot t
+    )
+    SELECT CAST(count(*) AS BIGINT) AS n_cells,
+           CAST(min(n_xy) AS BIGINT) AS min_cell,
+           CAST(max(n_xy) AS BIGINT) AS max_cell,
+           round(sum(term), 4) AS mi_nats
+    FROM terms
+    """,
+    survey_ref="§2.10 feature diagnostics: exact-count mutual information "
+    "I(lang; source) — the dependence screen beside χ² independence "
+    "(chi_square_independence); every count exact, only the final "
+    "Σ p·ln(p/(pq)) display value is float (4dp, the surprisal rule — "
+    "summed via a deterministic single-partition ordered reduction)",
+)
+def mutual_information_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Observed-cell MI: one (x, y) hash agg + broadcast margins; empty
+    cells contribute 0 so only observed cells are materialized (the
+    chi_square sparse-grid discipline). The float sum is made
+    deterministic by sorting terms on (lang, source) into a single
+    ordered reduction — same order DuckDB's aggregate sees at this
+    cell count (one group, sequential)."""
+    docs = load_table(spark, sf_dir, "documents")
+    cells = docs.groupBy("lang", "source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_xy")
+    )
+    mx = cells.groupBy("lang").agg(F.sum("n_xy").cast("long").alias("n_x"))
+    my = cells.groupBy("source").agg(F.sum("n_xy").cast("long").alias("n_y"))
+    tot = cells.agg(F.sum("n_xy").cast("long").alias("n"))
+    terms = (
+        cells.join(mx, "lang")
+        .join(my, "source")
+        .crossJoin(F.broadcast(tot))
+        .select(
+            "lang",
+            "source",
+            "n_xy",
+            (
+                (F.col("n_xy").cast("double") / F.col("n").cast("double"))
+                * F.log(
+                    (F.col("n_xy").cast("double") * F.col("n").cast("double"))
+                    / (F.col("n_x").cast("double") * F.col("n_y").cast("double"))
+                )
+            ).alias("term"),
+        )
+    )
+    # deterministic float accumulation: one partition, (lang, source) order
+    ordered = terms.coalesce(1).sortWithinPartitions("lang", "source")
+    return ordered.agg(
+        F.count(F.lit(1)).cast("long").alias("n_cells"),
+        F.min("n_xy").cast("long").alias("min_cell"),
+        F.max("n_xy").cast("long").alias("max_cell"),
+        F.round(F.sum("term"), 4).alias("mi_nats"),
+    )
+
+
+# --- Cohen's kappa between two keep-classifiers ------------------------------
+
+
+@query(
+    "classifier_agreement_kappa",
+    oracle="""
+    WITH toks AS (
+      SELECT doc_id, text,
+             list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '')
+               AS t
+      FROM documents
+    ),
+    feats AS (
+      SELECT doc_id,
+             CASE WHEN len(t) > 0
+                  THEN length(text)::DOUBLE / len(t) ELSE 0.0 END AS mean_tok,
+             CASE WHEN length(text) > 0
+                  THEN length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE
+                       / length(text) ELSE 0.0 END AS punct,
+             CASE WHEN length(text) > 0
+                  THEN length(regexp_replace(text, '[^A-Z]', '', 'g'))::DOUBLE
+                       / length(text) ELSE 0.0 END AS upper_r,
+             CASE WHEN len(t) > 0
+                  THEN len(list_filter(t, x -> x IN ('the','a','of','and','to',
+                       'in','is','that','it','for')))::DOUBLE / len(t)
+                  ELSE 0.0 END AS stop_r,
+             CASE WHEN len(t) > 0
+                  THEN len(list_distinct(t))::DOUBLE / len(t)
+                  ELSE 0.0 END AS dtr,
+             CASE WHEN len(t) >= 30 THEN 1 ELSE 0 END AS keep_len
+      FROM toks
+    ),
+    both_k AS (
+      SELECT CASE WHEN (1.0 / (1.0 + exp(-(0.5 + 4.0*stop_r + 2.0*dtr
+                   + (-6.0)*punct + (-2.0)*upper_r + (-0.25)*mean_tok))))
+                  >= 0.5 THEN 1 ELSE 0 END AS keep_clf,
+             keep_len
+      FROM feats
+    ),
+    cells AS (
+      SELECT CAST(count(*) AS BIGINT) AS n,
+             CAST(sum(CASE WHEN keep_clf = 1 AND keep_len = 1
+                           THEN 1 ELSE 0 END) AS BIGINT) AS n11,
+             CAST(sum(CASE WHEN keep_clf = 1 AND keep_len = 0
+                           THEN 1 ELSE 0 END) AS BIGINT) AS n10,
+             CAST(sum(CASE WHEN keep_clf = 0 AND keep_len = 1
+                           THEN 1 ELSE 0 END) AS BIGINT) AS n01,
+             CAST(sum(CASE WHEN keep_clf = 0 AND keep_len = 0
+                           THEN 1 ELSE 0 END) AS BIGINT) AS n00
+      FROM both_k
+    )
+    SELECT n, n11, n10, n01, n00,
+           CAST(n * (n11 + n00)
+                - ((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00))
+                AS BIGINT) AS kappa_num,
+           CAST(n * n
+                - ((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00))
+                AS BIGINT) AS kappa_den
+    FROM cells
+    """,
+    survey_ref="§2.10 label quality: Cohen's κ agreement between the "
+    "model-based quality gate and a length-rule gate — exact 2×2 counts "
+    "and κ as the exact SIGNED rational kappa_num/kappa_den (num/den "
+    "columns per the signed-ratio rule; κ = (n·agree − Σrow·col)/(n² − "
+    "Σrow·col))",
+)
+def classifier_agreement_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Do two cheap keep-gates agree beyond chance? κ from one 2×2 cell
+    aggregate — a single corpus pass; the chance-corrected numerator can
+    be NEGATIVE, so it ships as exact num/den integers (Spark div vs
+    DuckDB // diverge on negatives — CLAUDE.md signed-ratio rule)."""
+    docs = load_table(spark, sf_dir, "documents", parallelize=True)
+    clf = quality_classifier_score(docs).select(
+        "doc_id", F.col("keep").cast("int").alias("keep_clf")
+    )
+    lens = docs.select(
+        "doc_id",
+        (token_count(F.col("text")) >= 30).cast("int").alias("keep_len"),
+    )
+    b = clf.join(lens, "doc_id")
+    cells = b.agg(
+        F.count(F.lit(1)).cast("long").alias("n"),
+        F.sum(((F.col("keep_clf") == 1) & (F.col("keep_len") == 1)).cast("long"))
+        .cast("long")
+        .alias("n11"),
+        F.sum(((F.col("keep_clf") == 1) & (F.col("keep_len") == 0)).cast("long"))
+        .cast("long")
+        .alias("n10"),
+        F.sum(((F.col("keep_clf") == 0) & (F.col("keep_len") == 1)).cast("long"))
+        .cast("long")
+        .alias("n01"),
+        F.sum(((F.col("keep_clf") == 0) & (F.col("keep_len") == 0)).cast("long"))
+        .cast("long")
+        .alias("n00"),
+    )
+    chance = "((n11 + n10) * (n11 + n01) + (n01 + n00) * (n10 + n00))"
+    return cells.select(
+        "n",
+        "n11",
+        "n10",
+        "n01",
+        "n00",
+        F.expr(f"n * (n11 + n00) - {chance}").cast("long").alias("kappa_num"),
+        F.expr(f"n * n - {chance}").cast("long").alias("kappa_den"),
+    )
+
+
+# --- Mann-Whitney rank-sum drift (exact integer 2U) ---------------------------
+
+
+def _mwu_oracle() -> str:
+    return f"""
+    WITH tagged AS (
+      SELECT event_type, value AS v,
+             CASE WHEN epoch_us(ts) < {_PSI_SPLIT_US} THEN 1 ELSE 0 END AS ref
+      FROM events
+    ),
+    pv AS (
+      SELECT event_type, v,
+             CAST(sum(ref) AS BIGINT) AS ca,
+             CAST(sum(1 - ref) AS BIGINT) AS cb
+      FROM tagged GROUP BY 1, 2
+    ),
+    cum AS (
+      SELECT event_type, ca, cb,
+             CAST(sum(cb) OVER (PARTITION BY event_type ORDER BY v
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+               AS cumb
+      FROM pv
+    )
+    SELECT event_type,
+           CAST(sum(ca) AS BIGINT) AS n_ref,
+           CAST(sum(cb) AS BIGINT) AS n_cmp,
+           CAST(sum(ca * (2 * cumb - cb)) AS BIGINT) AS u2,
+           CAST(sum(ca * (2 * cumb - cb)) - sum(ca) * sum(cb) AS BIGINT)
+             AS u2_shift
+    FROM cum GROUP BY 1
+    """
+
+
+@query(
+    "mwu_drift_stat",
+    oracle=_mwu_oracle(),
+    survey_ref="§2.4 extension: exact two-sample Mann-Whitney rank-sum "
+    "drift statistic — tie-corrected 2U = Σ_v ca·(2·cumb(<=v) − cb(v)) "
+    "counts (ref beats cmp) pairs twice plus ties once, pure BIGINT "
+    "(≤ 2·n·m, overflow-safe where the Cramér-von-Mises n³ form is not); "
+    "the location-shift monitor beside KS (max gap) and PSI (binned)",
+)
+def mwu_drift_stat(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Did the value distribution SHIFT between the first and second half
+    -month, per event type? 2U in exact integers from one value-grouped
+    agg + one cumulative window (the KS query's exact plan shape);
+    u2_shift = 2U − nm is the signed exact distance from the no-shift
+    null (2U/2nm = P(ref > cmp) + P(tie)/2). No sqrt, no float, no
+    midrank halves — ties enter as +1 per pair."""
+
+    ev = load_table(spark, sf_dir, "events")
+    tagged = ev.select(
+        "event_type",
+        F.col("value").alias("v"),
+        (F.unix_micros("ts") < _PSI_SPLIT_US).cast("long").alias("ref"),
+    )
+    pv = tagged.groupBy("event_type", "v").agg(
+        F.sum("ref").cast("long").alias("ca"),
+        F.sum(F.lit(1) - F.col("ref")).cast("long").alias("cb"),
+    )
+    w_cum = (
+        Window.partitionBy("event_type")
+        .orderBy("v")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    cum = pv.withColumn("cumb", F.sum("cb").over(w_cum).cast("long"))
+    return cum.groupBy("event_type").agg(
+        F.sum("ca").cast("long").alias("n_ref"),
+        F.sum("cb").cast("long").alias("n_cmp"),
+        F.sum(F.col("ca") * (2 * F.col("cumb") - F.col("cb")))
+        .cast("long")
+        .alias("u2"),
+        (
+            F.sum(F.col("ca") * (2 * F.col("cumb") - F.col("cb")))
+            - F.sum("ca") * F.sum("cb")
+        )
+        .cast("long")
+        .alias("u2_shift"),
+    )
+
+
+# --- 1-D earth mover's distance between length distributions ------------------
+
+
+def _emd_oracle() -> str:
+    return f"""
+    WITH binned AS (
+      SELECT source, n_chars // 100 AS bin FROM documents
+    ),
+    tot AS (
+      SELECT bin, CAST(count(*) AS BIGINT) AS c_all FROM binned GROUP BY 1
+    ),
+    tot2 AS (
+      SELECT bin, c_all,
+             CAST(sum(c_all) OVER (ORDER BY bin
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+               AS cum_all,
+             CAST(sum(c_all) OVER () AS BIGINT) AS n_total
+      FROM tot
+    ),
+    srcn AS (
+      SELECT source, CAST(count(*) AS BIGINT) AS ns FROM binned GROUP BY 1
+    ),
+    per AS (
+      SELECT source, bin, CAST(count(*) AS BIGINT) AS c
+      FROM binned GROUP BY 1, 2
+    ),
+    grid AS (
+      SELECT s.source, s.ns, t.bin, t.cum_all, t.n_total,
+             coalesce(p.c, 0) AS c
+      FROM srcn s CROSS JOIN tot2 t
+      LEFT JOIN per p ON p.source = s.source AND p.bin = t.bin
+    ),
+    cums AS (
+      SELECT source, ns, bin, cum_all, n_total,
+             CAST(sum(c) OVER (PARTITION BY source ORDER BY bin
+               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT)
+               AS cum_s,
+             lead(bin) OVER (PARTITION BY source ORDER BY bin) AS nxt
+      FROM grid
+    )
+    SELECT source, CAST(max(ns) AS BIGINT) AS n_docs,
+           CAST(sum(abs(cum_s * n_total - cum_all * ns)
+                    * coalesce(nxt - bin, 0)) AS BIGINT) AS emd_num,
+           CAST(max(ns) * max(n_total) AS BIGINT) AS emd_den,
+           {ratio_scaled_sql(
+               'sum(abs(cum_s * n_total - cum_all * ns) * coalesce(nxt - bin, 0))',
+               '(max(ns) * max(n_total))')} AS emd_bins_e4
+    FROM cums GROUP BY 1
+    """
+
+
+@query(
+    "emd_length_drift",
+    oracle=_emd_oracle(),
+    survey_ref="§2.10 extension: exact 1-D earth mover's distance "
+    "(Wasserstein-1) between each source's doc-length histogram and the "
+    "corpus histogram — EMD = Σ_bins |ECDF gap|·bin_gap, kept exact by "
+    "cross-multiplying the two ECDFs over a common denominator ns·N; "
+    "the distribution-shape complement of PSI (binned KL-ish) and KS",
+)
+def emd_length_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """How far is each source's length distribution from the corpus mix,
+    in expected bins-to-move-per-doc? Cumulative histograms per source
+    vs overall on a 100-char grid; gaps between non-adjacent observed
+    bins weight the |cum difference| by the empty-bin span, so the sum
+    is the true integral. The (source × bin) grid is |sources|·|bins| —
+    tiny relative to the scan — and every term is BIGINT; emd_bins_e4 =
+    1e4·EMD/(ns·N) in bin units via the shared integer rounding."""
+
+    docs = load_table(spark, sf_dir, "documents")
+    binned = docs.select("source", F.expr("n_chars div 100").alias("bin"))
+    tot = binned.groupBy("bin").agg(F.count(F.lit(1)).cast("long").alias("c_all"))
+    w_all = Window.orderBy("bin").rowsBetween(Window.unboundedPreceding, 0)
+    w_tot = Window.partitionBy()
+    tot2 = tot.select(
+        "bin",
+        F.sum("c_all").over(w_all).cast("long").alias("cum_all"),
+        F.sum("c_all").over(w_tot).cast("long").alias("n_total"),
+    )
+    srcn = binned.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("ns"))
+    per = binned.groupBy("source", "bin").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+    # no broadcast hint: tot2 is a GROUPED aggregate over an sf-scaled scan
+    # (bins ~ max n_chars/100 — small, but not a query constant); the planner
+    # sees the post-agg stats and picks broadcast on its own.
+    grid = (
+        srcn.crossJoin(tot2)
+        .join(per, ["source", "bin"], "left")
+        .withColumn("c", F.coalesce(F.col("c"), F.lit(0)))
+    )
+    w_src = (
+        Window.partitionBy("source")
+        .orderBy("bin")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    w_lead = Window.partitionBy("source").orderBy("bin")
+    cums = grid.select(
+        "source",
+        "ns",
+        "bin",
+        "cum_all",
+        "n_total",
+        F.sum("c").over(w_src).cast("long").alias("cum_s"),
+        F.lead("bin").over(w_lead).alias("nxt"),
+    )
+    term = F.abs(
+        F.col("cum_s") * F.col("n_total") - F.col("cum_all") * F.col("ns")
+    ) * F.coalesce(F.col("nxt") - F.col("bin"), F.lit(0))
+    return cums.groupBy("source").agg(
+        F.max("ns").cast("long").alias("n_docs"),
+        F.sum(term).cast("long").alias("emd_num"),
+        (F.max("ns") * F.max("n_total")).cast("long").alias("emd_den"),
+        ratio_scaled(
+            "sum(abs(cum_s * n_total - cum_all * ns)"
+            " * coalesce(nxt - bin, 0))",
+            "(max(ns) * max(n_total))",
+        ).alias("emd_bins_e4"),
+    )
+
+
+# --- functional-dependency profiling ---------------------------------------------------
+
+
+@query(
+    "fd_violation_audit",
+    oracle="""
+    WITH fd1 AS (
+      SELECT 'o_orderkey->o_custkey' AS fd,
+             CAST(count(*) AS BIGINT) AS n_groups,
+             CAST(sum(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS BIGINT)
+               AS n_violating,
+             CAST(max(d) AS BIGINT) AS max_distinct_rhs
+      FROM (SELECT o_orderkey, count(DISTINCT o_custkey) AS d
+            FROM orders GROUP BY 1)
+    ),
+    fd2 AS (
+      SELECT 'o_custkey->o_orderpriority',
+             CAST(count(*) AS BIGINT),
+             CAST(sum(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS BIGINT),
+             CAST(max(d) AS BIGINT)
+      FROM (SELECT o_custkey, count(DISTINCT o_orderpriority) AS d
+            FROM orders GROUP BY 1)
+    ),
+    fd3 AS (
+      SELECT 'l_orderkey->l_suppkey',
+             CAST(count(*) AS BIGINT),
+             CAST(sum(CASE WHEN d > 1 THEN 1 ELSE 0 END) AS BIGINT),
+             CAST(max(d) AS BIGINT)
+      FROM (SELECT l_orderkey, count(DISTINCT l_suppkey) AS d
+            FROM lineitem GROUP BY 1)
+    )
+    SELECT * FROM fd1 UNION ALL SELECT * FROM fd2 UNION ALL SELECT * FROM fd3
+    """,
+    survey_ref="§2.4 extension: functional-dependency profiling (the "
+    "X→Y discovery/validation step of schema inference and data-quality "
+    "suites) — per-candidate-FD group counts, violating-group counts, "
+    "and worst fan-out, all exact; one holds (PK), two violated",
+)
+def fd_violation_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Does X determine Y in this data? Three candidate FDs audited by
+    groupBy(lhs) + countDistinct(rhs): the PK dependency holds
+    (n_violating = 0 is the assertion a constraint suite would pin),
+    the two non-key candidates quantify HOW broken they are
+    (max_distinct_rhs = the fan-out a denormalizer must handle). Each
+    audit is one hash agg + one 3-column rollup."""
+    orders = load_table(spark, sf_dir, "orders")
+    li = load_table(spark, sf_dir, "lineitem")
+
+    def audit(df: DataFrame, lhs: str, rhs: str) -> DataFrame:
+        per = df.groupBy(lhs).agg(
+            F.countDistinct(rhs).cast("long").alias("d")
+        )
+        return per.agg(
+            F.lit(f"{lhs}->{rhs}").alias("fd"),
+            F.count(F.lit(1)).cast("long").alias("n_groups"),
+            F.sum((F.col("d") > 1).cast("long")).cast("long").alias("n_violating"),
+            F.max("d").cast("long").alias("max_distinct_rhs"),
+        )
+
+    return (
+        audit(orders, "o_orderkey", "o_custkey")
+        .unionByName(audit(orders, "o_custkey", "o_orderpriority"))
+        .unionByName(audit(li, "l_orderkey", "l_suppkey"))
+    )
+
+
+# --- disparate-impact (four-fifths rule) audit of the quality gate ---------------
+
+
+@query(
+    "disparate_impact_audit",
+    oracle=f"""
+    WITH t AS (
+      SELECT doc_id, source, text,
+             list_filter(string_split_regex(lower(text), '\\s+'),
+                         x -> x <> '') AS toks
+      FROM documents
+    ),
+    q AS (
+      SELECT source,
+             CASE WHEN len(toks) BETWEEN 10 AND 1000
+                   AND (CASE WHEN len(toks) > 0
+                        THEN len(list_distinct(toks))::DOUBLE / len(toks)
+                        ELSE 0.0 END) > 0.3
+                   AND (CASE WHEN length(text) > 0
+                        THEN length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE
+                             / length(text)
+                        ELSE 0.0 END) < 0.2
+                  THEN 1 ELSE 0 END AS keep
+      FROM t
+    ),
+    per AS (
+      SELECT source, CAST(count(*) AS BIGINT) AS n_total,
+             CAST(sum(keep) AS BIGINT) AS n_keep
+      FROM q GROUP BY source
+    ),
+    ref AS (
+      SELECT n_total AS ref_total, n_keep AS ref_keep
+      FROM per
+      ORDER BY CAST(n_keep AS DOUBLE) / n_total DESC, source
+      LIMIT 1
+    )
+    SELECT p.source, p.n_total, p.n_keep,
+           {ratio_e4_sql('p.n_keep', 'p.n_total')} AS sel_rate_e4,
+           CASE WHEN r.ref_keep > 0 THEN
+             {ratio_e4_sql('p.n_keep * r.ref_total', 'p.n_total * r.ref_keep')}
+           END AS di_e4,
+           CAST(CASE WHEN r.ref_keep > 0
+                      AND {ratio_e4_sql('p.n_keep * r.ref_total',
+                                        'p.n_total * r.ref_keep')} < 8000
+                THEN 1 ELSE 0 END AS INT) AS below_four_fifths
+    FROM per p CROSS JOIN ref r
+    """,
+    survey_ref="§2.10 governance extension: disparate-impact audit of the "
+    "Gopher/C4 quality gate by source — per-group selection rates and the "
+    "four-fifths-rule ratio vs the highest-rate group, as exact "
+    "cross-multiplied integer ratios (rate_g/rate_ref = keep_g·tot_ref / "
+    "(tot_g·keep_ref), no float division in the verdict)",
+)
+def disparate_impact_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Fairness audit of the quality filter (quality_filter's exact keep
+    predicate): per-source selection rate, the disparate-impact ratio
+    vs the highest-rate source, and the classic 80%-rule flag — the
+    pre-training-data analog of the EEOC screen: a 'neutral' quality
+    gate that silently drops one source's documents at <0.8× the best
+    group's rate is a curation bias bug.
+
+    Exactness: the DI ratio is the e4-scaled integer of the CROSS-
+    MULTIPLIED counts (keep_g·tot_ref)/(tot_g·keep_ref) — int64-safe
+    while keep·tot < 4.6e14 (decompose per exact_math past that). The
+    reference group is the max-rate source; rates are compared as one
+    IEEE double division each (identical op order cross-engine) with a
+    source-name tiebreak, and the pick's tie policy is in TIES.md. The
+    per-source frame is a 20-row agg; the reference row attaches via a
+    broadcast LIMIT 1 (exempt from the sf-scaled-hint guard), so the
+    plan is two hash aggs + one broadcast NL join — no window, no sort
+    of row-scaled data."""
+    docs = load_table(spark, sf_dir, "documents")
+    q = T.quality_features(docs)
+    keep = (
+        F.col("q_tokens").between(10, 1000)
+        & (F.col("q_distinct_token_ratio") > 0.3)
+        & (F.col("q_punct_ratio") < 0.2)
+    )
+    per = q.groupBy("source").agg(
+        F.count(F.lit(1)).cast("long").alias("n_total"),
+        F.sum(keep.cast("int")).cast("long").alias("n_keep"),
+    )
+    per = checkpoint(per)  # feeds the ref pick + the output
+    ref = (
+        per.orderBy(
+            (F.col("n_keep").cast("double") / F.col("n_total")).desc(),
+            "source",
+        )
+        .limit(1)
+        .select(
+            F.col("n_total").alias("ref_total"),
+            F.col("n_keep").alias("ref_keep"),
+        )
+    )
+    out = per.crossJoin(F.broadcast(ref))
+    # guard the degenerate all-rejected reference (ref_keep = 0): DI is
+    # undefined there — emit NULL. The two engines differ on UNGUARDED
+    # integer div-by-zero in the pinned configs (verified r9): Spark 4.1
+    # runs ANSI mode by default so `div 0` RAISES — this WHEN's lazy
+    # branch evaluation is genuine crash protection — while DuckDB `//0`
+    # yields NULL, which is why the oracle's below_four_fifths is safe
+    # even with the ratio inside a non-short-circuiting AND (false AND
+    # NULL → false → ELSE 0, matching this side's NULL→0 otherwise).
+    # The r8 advice note claimed both engines yield NULL; that is true
+    # only for DuckDB — don't relax the Spark-side CASE.
+    di = F.when(
+        F.col("ref_keep") > 0, ratio_e4("n_keep * ref_total", "n_total * ref_keep")
+    )
+    return out.select(
+        "source",
+        "n_total",
+        "n_keep",
+        ratio_e4("n_keep", "n_total").alias("sel_rate_e4"),
+        di.alias("di_e4"),
+        F.when(di < 8000, 1).otherwise(0).cast("int").alias(
+            "below_four_fifths"
+        ),
+    )
+
+
+# --- split-conformal calibration ------------------------------------------------
+
+
+@query(
+    "conformal_split_threshold",
+    oracle=f"""
+    WITH cal AS (
+      SELECT lang, n_chars AS s FROM documents WHERE doc_id % 2 = 0
+    ),
+    tst AS (
+      SELECT lang, n_chars AS s FROM documents WHERE doc_id % 2 = 1
+    ),
+    kf AS (
+      SELECT lang, CAST(count(*) AS BIGINT) AS n_cal,
+             CAST((9 * (count(*) + 1) + 9) // 10 AS BIGINT) AS k
+      FROM cal GROUP BY lang
+    ),
+    hist AS (
+      SELECT lang, s, CAST(count(*) AS BIGINT) AS c FROM cal GROUP BY 1, 2
+    ),
+    cum AS (
+      SELECT lang, s,
+             CAST(sum(c) OVER (PARTITION BY lang ORDER BY s) AS BIGINT)
+               AS cum
+      FROM hist
+    ),
+    thr AS (
+      SELECT c.lang, kf.n_cal, kf.k,
+             CAST(min(c.s) AS BIGINT) AS threshold
+      FROM cum c JOIN kf ON kf.lang = c.lang
+      WHERE c.cum >= kf.k
+      GROUP BY 1, 2, 3
+    )
+    SELECT t.lang, t.n_cal, t.k, t.threshold,
+           CAST(count(*) AS BIGINT) AS n_test,
+           CAST(sum(CASE WHEN tst.s <= t.threshold THEN 1 ELSE 0 END)
+                AS BIGINT) AS n_covered,
+           {ratio_e4_sql(
+               'sum(CASE WHEN tst.s <= t.threshold THEN 1 ELSE 0 END)',
+               'count(*)')} AS coverage_e4
+    FROM thr t JOIN tst ON tst.lang = t.lang
+    GROUP BY 1, 2, 3, 4
+    """,
+    survey_ref="§2.10 ML-eval extension: split-conformal calibration — "
+    "per-language 90% upper bound for document length from an even/odd "
+    "hash split (threshold = exact ⌈0.9(n+1)⌉-th order statistic via the "
+    "value-histogram cumulative, never a row sort), plus the held-out "
+    "coverage it achieves",
+)
+def conformal_split_threshold(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Split-conformal prediction (Vovk; Papadopoulos et al. 2002) for a
+    per-language document-length bound: calibration docs (doc_id even)
+    yield the exact k = ⌈(n_cal+1)·0.9⌉-th smallest nonconformity score
+    (s = n_chars), and the test half reports the empirical coverage of
+    'length ≤ threshold' — the distribution-free ≥90% guarantee every
+    inference-time length budget wants.
+
+    Exactness: the order statistic is read off the (lang, s) VALUE
+    histogram's cumulative — s has a value-bounded support (document
+    char-lengths), so the window runs over per-lang supports of at most
+    max-doc-length distinct rows, never the sf-scaled doc table (the
+    temporal_embargo_split discipline; at 100 TB the histogram is still
+    ≤ ~1e4 rows per language). k itself is exact integer arithmetic:
+    ⌈9(n+1)/10⌉ = (9(n+1)+9) div 10. Coverage is an e4 exact ratio."""
+    docs = load_table(spark, sf_dir, "documents").select(
+        "doc_id", "lang", F.col("n_chars").alias("s")
+    )
+    cal = docs.where(F.col("doc_id") % 2 == 0)
+    tst = docs.where(F.col("doc_id") % 2 == 1)
+    kf = cal.groupBy("lang").agg(
+        F.count(F.lit(1)).cast("long").alias("n_cal"),
+        F.expr("(9 * (count(1) + 1) + 9) div 10").cast("long").alias("k"),
+    )
+    hist = cal.groupBy("lang", "s").agg(
+        F.count(F.lit(1)).cast("long").alias("c")
+    )
+    w = Window.partitionBy("lang").orderBy("s")
+    cum = hist.select("lang", "s", F.sum("c").over(w).cast("long").alias("cum"))
+    thr = (
+        cum.join(kf, "lang")
+        .where(F.col("cum") >= F.col("k"))
+        .groupBy("lang", "n_cal", "k")
+        .agg(F.min("s").cast("long").alias("threshold"))
+    )
+    joined = tst.join(thr, "lang")
+    covered = F.sum(
+        F.when(F.col("s") <= F.col("threshold"), 1).otherwise(0)
+    ).cast("long")
+    return (
+        joined.groupBy("lang", "n_cal", "k", "threshold")
+        .agg(
+            F.count(F.lit(1)).cast("long").alias("n_test"),
+            covered.alias("n_covered"),
+            ratio_e4(
+                "sum(CASE WHEN s <= threshold THEN 1 ELSE 0 END)", "count(1)"
+            ).alias("coverage_e4"),
+        )
+    )
+
+
+# --- McNemar paired-classifier test ------------------------------------------------
+
+
+@query(
+    "mcnemar_gate_comparison",
+    oracle="""
+    WITH t AS (
+      SELECT doc_id, text,
+             list_filter(string_split_regex(lower(text), '\\s+'),
+                         x -> x <> '') AS toks
+      FROM documents
+    ),
+    q AS (
+      SELECT
+        CASE WHEN len(toks) BETWEEN 10 AND 1000
+              AND (CASE WHEN len(toks) > 0
+                   THEN len(list_distinct(toks))::DOUBLE / len(toks)
+                   ELSE 0.0 END) > 0.3
+              AND (CASE WHEN length(text) > 0
+                   THEN length(regexp_replace(text, '[^.,;:!?]', '', 'g'))::DOUBLE
+                        / length(text)
+                   ELSE 0.0 END) < 0.2
+             THEN 1 ELSE 0 END AS a,
+        CASE WHEN len(toks) BETWEEN 10 AND 1000
+              AND (CASE WHEN len(toks) > 0
+                   THEN len(list_filter(toks, x -> x IN
+                       ('the','a','of','and','to','in','is','that','it','for')))::DOUBLE
+                        / len(toks)
+                   ELSE 0.0 END) > 0.05
+             THEN 1 ELSE 0 END AS b
+      FROM t
+    )
+    SELECT CAST(sum(CASE WHEN a = 1 AND b = 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n11,
+           CAST(sum(CASE WHEN a = 0 AND b = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n00,
+           CAST(sum(CASE WHEN a = 0 AND b = 1 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n01,
+           CAST(sum(CASE WHEN a = 1 AND b = 0 THEN 1 ELSE 0 END) AS BIGINT)
+             AS n10,
+           CAST((sum(CASE WHEN a = 0 AND b = 1 THEN 1 ELSE 0 END)
+                 - sum(CASE WHEN a = 1 AND b = 0 THEN 1 ELSE 0 END))
+                * (sum(CASE WHEN a = 0 AND b = 1 THEN 1 ELSE 0 END)
+                   - sum(CASE WHEN a = 1 AND b = 0 THEN 1 ELSE 0 END))
+                AS BIGINT) AS chi2_num,
+           CAST(sum(CASE WHEN a <> b THEN 1 ELSE 0 END) AS BIGINT)
+             AS chi2_den
+    FROM q
+    """,
+    survey_ref="§2.10 ML-eval extension: McNemar paired test (McNemar "
+    "1947) between two quality gates over the SAME documents — the "
+    "discordant-cell contingency with the χ² statistic as the exact "
+    "rational (n01−n10)²/(n01+n10); the statistically correct way to "
+    "compare paired classifiers (marginal accuracy comparisons ignore "
+    "the pairing)",
+)
+def mcnemar_gate_comparison(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Paired comparison of two curation gates: A = the Gopher-style
+    token/distinct/punct filter (quality_filter's predicate), B = a
+    stopword-density filter (tokens 10..1000, stopword ratio > 0.05).
+    McNemar's test looks ONLY at the discordant cells n01/n10 — documents
+    the gates disagree on — which is the correct paired design; the
+    concordant diagonal carries no information about which gate is
+    stricter. χ² = (n01−n10)²/(n01+n10) ships as exact num/den (no
+    division, sign-free because squared). Ratios inside the predicates
+    are single IEEE double divisions of exact integers, identical op
+    order cross-engine (the quality_filter precedent). One scan, one
+    global agg."""
+    docs = load_table(spark, sf_dir, "documents", parallelize=True)
+    q = T.quality_features(docs)
+    a = (
+        F.col("q_tokens").between(10, 1000)
+        & (F.col("q_distinct_token_ratio") > 0.3)
+        & (F.col("q_punct_ratio") < 0.2)
+    ).cast("int")
+    b = (
+        F.col("q_tokens").between(10, 1000)
+        & (F.col("q_stopword_ratio") > 0.05)
+    ).cast("int")
+    cells = q.select(a.alias("a"), b.alias("b"))
+    n01 = F.sum(F.when((F.col("a") == 0) & (F.col("b") == 1), 1).otherwise(0))
+    n10 = F.sum(F.when((F.col("a") == 1) & (F.col("b") == 0), 1).otherwise(0))
+    return cells.agg(
+        F.sum(F.when((F.col("a") == 1) & (F.col("b") == 1), 1).otherwise(0))
+        .cast("long")
+        .alias("n11"),
+        F.sum(F.when((F.col("a") == 0) & (F.col("b") == 0), 1).otherwise(0))
+        .cast("long")
+        .alias("n00"),
+        n01.cast("long").alias("n01"),
+        n10.cast("long").alias("n10"),
+        ((n01 - n10) * (n01 - n10)).cast("long").alias("chi2_num"),
+        F.sum(F.when(F.col("a") != F.col("b"), 1).otherwise(0))
+        .cast("long")
+        .alias("chi2_den"),
+    )
+
+
+# --- exact ROC-AUC --------------------------------------------------------------
+
+
+@query(
+    "score_auc_exact",
+    oracle="""
+    WITH per_score AS (
+      SELECT n_chars AS s,
+             CAST(sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS BIGINT) AS p,
+             CAST(sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS BIGINT) AS n
+      FROM documents GROUP BY n_chars
+    ),
+    cum AS (
+      SELECT s, p, n,
+             CAST(sum(n) OVER (ORDER BY s) AS BIGINT) - n AS neg_below
+      FROM per_score
+    )
+    SELECT CAST(sum(p) AS BIGINT) AS n_pos,
+           CAST(sum(n) AS BIGINT) AS n_neg,
+           CAST(sum(p * (2 * neg_below + n)) AS BIGINT) AS auc_num,
+           2 * CAST(sum(p) AS BIGINT) * CAST(sum(n) AS BIGINT) AS auc_den,
+           CAST((sum(p * (2 * neg_below + n)) * 1000000)
+                // (2 * sum(p) * sum(n)) AS BIGINT) AS auc_e6
+    FROM cum
+    """,
+    survey_ref="§2.10 eval extension: exact ROC-AUC via the Mann-Whitney "
+    "U histogram identity with midrank ties (Hanley-McNeil) — the "
+    "classifier-quality gate next to knn_label_accuracy/rank_calibration; "
+    "reference analog: BASELINE.md's ML-quality metric framing",
+)
+def score_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact AUC of 'n_chars predicts lang=en' — the histogram form: group
+    to the DISTINCT-SCORE grain (bounded: document length is capped, so
+    the support is a value-domain histogram, not a row-scaled sort — the
+    guard-recognized HashAggregate boundary), one cumulative window over
+    that histogram, one global sum. 2U = Σ_s p_s·(2·negBelow_s + n_s)
+    counts each pos>neg pair twice and each tie once — exactly the
+    midrank convention — so AUC = auc_num/auc_den as an undivided exact
+    rational (the ols_trend discipline) plus a `div`-scaled e6 display
+    (bound: 2·P·N·1e6 < 2^63 ⇒ P·N < 4.6e12 — past ~2M×2M docs drop the
+    scaled column and divide consumer-side). No per-row ranks, no global
+    sort: at 100 TB this is one linear agg + an O(|score domain|)
+    window."""
+    docs = load_table(spark, sf_dir, "documents")
+    per_score = docs.groupBy(F.col("n_chars").alias("s")).agg(
+        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0)).cast("long").alias("p"),
+        F.sum(F.when(F.col("lang") == "en", 0).otherwise(1)).cast("long").alias("n"),
+    )
+    w = Window.orderBy("s").rowsBetween(Window.unboundedPreceding, 0)
+    cum = per_score.withColumn("neg_below", F.sum("n").over(w) - F.col("n"))
+    return cum.agg(
+        F.sum("p").cast("long").alias("n_pos"),
+        F.sum("n").cast("long").alias("n_neg"),
+        F.sum(F.col("p") * (2 * F.col("neg_below") + F.col("n")))
+        .cast("long")
+        .alias("auc_num"),
+        (2 * F.sum("p") * F.sum("n")).cast("long").alias("auc_den"),
+        F.expr(
+            "CAST((sum(p * (2 * neg_below + n)) * 1000000)"
+            " div (2 * sum(p) * sum(n)) AS BIGINT)"
+        ).alias("auc_e6"),
+    )
+
+
+# --- tamper-evident per-user hash chain -----------------------------------------
+
+_CHAIN_SEED = "genesis"
+
+
+@query(
+    "ledger_hash_chain",
+    oracle=f"""
+    WITH e AS (
+      SELECT user_id, epoch_us(ts) AS us, event_id,
+             CAST(event_id AS VARCHAR) || '|' || event_type || '|'
+               || CAST(CAST(floor(value * 1000000) AS BIGINT) AS VARCHAR)
+               AS x
+      FROM events
+    ),
+    arr AS (
+      SELECT user_id, list(x ORDER BY us, event_id) AS lx
+      FROM e GROUP BY user_id
+    )
+    SELECT user_id, CAST(len(lx) AS BIGINT) AS n_events,
+           list_reduce(list_prepend('{_CHAIN_SEED}', lx),
+                       (a, b) -> md5(a || b)) AS chain
+    FROM arr
+    """,
+    survey_ref="§2 governance extension: per-key tamper-evident hash "
+    "chain (blockchain-style ledger head: h_i = md5(h_{{i-1}} || "
+    "serialized event_i)) — the audit-log integrity / dataset-lineage-"
+    "receipt primitive; oracle = DuckDB list_reduce over the identically "
+    "ordered, identically serialized event list",
+)
+def ledger_hash_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every user's event history reduced to a chain head: any
+    re-ordering, mutation, insertion or deletion of a past event changes
+    the head — the receipt a pipeline publishes so a consumer can verify
+    the exact event sequence that produced a dataset (audit-log
+    integrity; also the dataset-provenance 'content hash' for training
+    runs). Determinism is total: serialization is exact integers + the
+    type string, order is the (event-time, event_id) total key (collected
+    as sorted structs — Spark's collect_list has no ORDER BY; the oracle
+    uses DuckDB's ordered list() instead, two independent orderings that
+    must agree), and md5 is byte-identical cross-engine. The chain is
+    inherently sequential PER KEY (that's the tamper-evidence), but keys
+    parallelize: one hash agg + one per-row fold, per-user history
+    bounded by retention. u6 value quantization keeps the serialized
+    payload float-free."""
+    ev = load_table(spark, sf_dir, "events")
+    e = ev.select(
+        "user_id",
+        F.expr("unix_micros(CAST(ts AS TIMESTAMP))").alias("us"),
+        "event_id",
+        F.concat_ws(
+            "|",
+            F.col("event_id").cast("string"),
+            F.col("event_type"),
+            F.floor(F.col("value") * 1000000).cast("long").cast("string"),
+        ).alias("x"),
+    )
+    arr = e.groupBy("user_id").agg(
+        F.array_sort(F.collect_list(F.struct("us", "event_id", "x"))).alias("a")
+    )
+    return arr.select(
+        "user_id",
+        F.size("a").cast("long").alias("n_events"),
+        F.expr(
+            f"aggregate(transform(a, e -> e.x), '{_CHAIN_SEED}',"
+            f" (acc, s) -> md5(concat(acc, s)))"
+        ).alias("chain"),
     )

@@ -312,7 +312,7 @@ TRIGRAM_STATE_SCHEMA = StructType(
 
 
 def trigram_stream(events: DataFrame) -> DataFrame:
-    """Streaming twin of queries/extra_ops.py::event_type_trigrams over
+    """Streaming twin of queries/advanced_analytics.py::event_type_trigrams over
     (user_id, event_type, ts, event_id) events: every
     event completes the 3-step pattern (prev2, prev1, current) from two
     carried strings of per-user state — the incremental form of the batch

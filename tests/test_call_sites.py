@@ -33,7 +33,7 @@ from nilm_data_framework_spark.operators import (
     text,
     windows,
 )
-from nilm_data_framework_spark.queries import extra_ops_r7
+from nilm_data_framework_spark.queries import retrieval
 from nilm_data_framework_spark.sources import canonical
 from nilm_data_framework_spark.streaming import ingest, stateful
 
@@ -41,7 +41,7 @@ ROOT = Path(__file__).resolve().parent.parent
 MODULES = {
     m.__name__: m
     for m in (
-        similarity, text, dedup, lm, graph, stateful, extra_ops_r7, canonical,
+        similarity, text, dedup, lm, graph, stateful, retrieval, canonical,
         index_maintenance, selectors, resample, aggregates, joins, windows,
         parallelism, ingest,
     )

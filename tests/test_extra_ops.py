@@ -1,5 +1,6 @@
-"""Kernel tests for the post-freeze extension operators (queries/extra_ops.py):
-transitive closure, Gram matrix, inverted index, temporal embargo split."""
+"""Kernel tests for extension operators behind graph, similarity, retrieval
+and curation queries: transitive closure, Gram matrix, inverted index,
+temporal embargo split."""
 
 from __future__ import annotations
 

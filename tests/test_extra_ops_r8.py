@@ -1,7 +1,9 @@
-"""Round-8 query invariants (the DuckDB gate checks cross-engine equality;
-these pin the SEMANTIC claims the docstrings make)."""
+"""Query invariants (the DuckDB gate checks cross-engine equality; these
+pin the SEMANTIC claims the docstrings make)."""
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import functions as F
 
@@ -12,9 +14,7 @@ def test_stratified_split_proportions_are_floor_exact(spark):
     """Per stratum: n_train == floor(n*8/10), n_val == floor(n*9/10) -
     floor(n*8/10), n_test == the rest — the EXACT proportions the docstring
     claims hash thresholds can't give."""
-    from nilm_data_framework_spark.queries.extra_ops_r8 import (
-        stratified_split_exact,
-    )
+    from nilm_data_framework_spark.queries.curation_lakehouse import stratified_split_exact
 
     rows = stratified_split_exact(spark, SF_DIR).collect()
     by_lang: dict[str, dict[str, int]] = {}
@@ -33,9 +33,7 @@ def test_stratified_split_proportions_are_floor_exact(spark):
 def test_stratified_split_is_partitioning(spark):
     """Every doc lands in exactly one split: split row counts sum to the
     table count and doc_id checksums sum to the table checksum."""
-    from nilm_data_framework_spark.queries.extra_ops_r8 import (
-        stratified_split_exact,
-    )
+    from nilm_data_framework_spark.queries.curation_lakehouse import stratified_split_exact
     from nilm_data_framework_spark.sources.testdata import load_table
 
     rows = stratified_split_exact(spark, SF_DIR).collect()
@@ -52,10 +50,7 @@ def test_pagerank_mass_is_conserved_up_to_truncation(spark):
     truncation deficits: the final ranks must sum to (almost exactly) the
     initial mass N*(S div N) — a sanity bound that catches a dropped
     dangling term or a mis-scaled teleport immediately."""
-    from nilm_data_framework_spark.queries.extra_ops_r8 import (
-        _PR_SCALE,
-        pagerank_power_iterations,
-    )
+    from nilm_data_framework_spark.queries.graph import _PR_SCALE, pagerank_power_iterations
 
     # the registered query returns top-20 only; recompute the full frame's
     # sum by running the same builder internals is overkill — the top-20's
@@ -77,9 +72,9 @@ def test_entity_clusters_cover_all_linkage_pairs(spark):
     """Both endpoints of every linkage pair fall in the SAME cluster, and
     every cluster has >= 2 members (nodes frame is pair-derived)."""
     from nilm_data_framework_spark.operators.dedup import connected_components
-    from nilm_data_framework_spark.queries.extra_ops import record_linkage_pairs
-    from nilm_data_framework_spark.queries.extra_ops_r8 import (
+    from nilm_data_framework_spark.queries.dedup_text import (
         entity_resolution_clusters,
+        record_linkage_pairs,
     )
 
     clusters = entity_resolution_clusters(spark, SF_DIR).collect()
@@ -99,13 +94,36 @@ def test_entity_clusters_cover_all_linkage_pairs(spark):
         assert assign[p["id_a"]] == assign[p["id_b"]]
 
 
+def test_entity_clusters_count_synthetic_ids_above_every_real_key(spark, tmp_path):
+    """Real customer keys from 10^8 up (a k× replica's stride, or any
+    sf >= 20) are not synthetic: n_synth sums to exactly the typo'd copies,
+    one per 25th customer, in both entity-cluster gates."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+
+    from nilm_data_framework_spark.queries.dedup_text import (
+        entity_clusters_incremental_equiv,
+        entity_resolution_clusters,
+    )
+
+    cust = pq.read_table(os.path.join(SF_DIR, "customer.parquet"))
+    keys = pc.add(cust["c_custkey"], 100_000_000)
+    i = cust.schema.get_field_index("c_custkey")
+    pq.write_table(cust.set_column(i, "c_custkey", keys), tmp_path / "customer.parquet")
+    n_copies = sum(1 for k in keys.to_pylist() if k % 25 == 0)
+    assert n_copies > 0
+    for build in (entity_resolution_clusters, entity_clusters_incremental_equiv):
+        rows = build(spark, str(tmp_path)).collect()
+        assert sum(r["n_synth"] for r in rows) == n_copies, build.__name__
+
+
 def test_scd2_incremental_equals_full_recompute_on_boundary_cases(spark):
     """Hand-built boundary cases: a run spanning the cut with the SAME attr
     must merge (original valid_from survives), a different attr must close
     the open run at the new row's ts, and keys present in only one batch
     pass through — all equal to the one-shot recompute."""
     from nilm_data_framework_spark.operators.windows import scd2_intervals
-    from nilm_data_framework_spark.queries.extra_ops_r8 import scd2_incremental
+    from nilm_data_framework_spark.queries.streaming_equiv import scd2_incremental
 
     rows1 = [
         (1, 1, "A", 101), (1, 2, "A", 102), (1, 3, "B", 103),  # open run B

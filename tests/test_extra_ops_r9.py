@@ -1,5 +1,5 @@
 """Round-9 kernel contracts: filtered vector search, LSH reference append,
-personalized PageRank. The DuckDB gates in queries/extra_ops_r9.py prove
+personalized PageRank. The DuckDB gates in queries/graph.py prove
 cross-engine exactness; these tests pin the OPERATOR-level equivalences the
 gates rely on."""
 
@@ -124,10 +124,7 @@ def test_ppr_with_all_vertices_seeded_equals_uniform_pagerank(spark):
     # pagerank_power_iterations relies on: the kernel must agree
     # bit-for-bit with the uniform recurrence of its docstring, replayed
     # here in Python (// equals Spark div on non-negative ints).
-    from nilm_data_framework_spark.queries.extra_ops_r8 import _PR_SCALE
-    from nilm_data_framework_spark.queries.extra_ops_r9 import (
-        personalized_pagerank_power,
-    )
+    from nilm_data_framework_spark.queries.graph import _PR_SCALE, personalized_pagerank_power
 
     edges = [(0, 1), (0, 2), (1, 2), (2, 3), (4, 2), (5, 5)]
     e = spark.createDataFrame(edges, "src long, dst long")
@@ -156,9 +153,7 @@ def test_ppr_with_all_vertices_seeded_equals_uniform_pagerank(spark):
 def test_ppr_nonseed_sources_hold_zero_mass(spark):
     # on a bipartite src→dst graph a non-seed SOURCE vertex has no
     # in-edges and no teleport — its rank must be exactly 0 every round.
-    from nilm_data_framework_spark.queries.extra_ops_r9 import (
-        personalized_pagerank_power,
-    )
+    from nilm_data_framework_spark.queries.graph import personalized_pagerank_power
 
     e = spark.createDataFrame(
         [(0, 101), (2, 101), (2, 103), (4, 105), (6, 105)],
@@ -185,7 +180,7 @@ def test_scd2_fold_chain_equals_full_recompute(spark):
     import datetime as dt
 
     from nilm_data_framework_spark.operators.windows import scd2_intervals
-    from nilm_data_framework_spark.queries.extra_ops_r8 import scd2_fold
+    from nilm_data_framework_spark.queries.streaming_equiv import scd2_fold
 
     base = dt.datetime(2024, 1, 1)
     rows = []

@@ -1,4 +1,4 @@
-"""Kernel tests for the round-9 second batch (extra_ops_r9b).
+"""Kernel tests for the triangle, AUC and capped-shortlist queries.
 
 Driver-gate coverage (oracle hash equality at sf0.01) lives in
 scripts/driver_sim.py; these tests pin the pieces the gate can't see:
@@ -66,7 +66,7 @@ def test_auc_histogram_identity_matches_pairwise(rows):
     # histogram identity 2U = Σ_s p_s·(2·negBelow_s + n_s). Check it equals
     # the definition: Σ over (pos, neg) pairs of 2·[sp>sn] + 1·[sp==sn].
     assume(any(en for _, en in rows) and any(not en for _, en in rows))
-    import nilm_data_framework_spark.queries.extra_ops_r9b  # noqa: F401
+    import nilm_data_framework_spark.queries.pipeline_quality  # noqa: F401
     from nilm_data_framework_spark.plans.registry import registry
 
     oracle = registry["score_auc_exact"].oracle
@@ -92,9 +92,9 @@ def test_auc_histogram_identity_matches_pairwise(rows):
 
 
 def test_capped_topk_plan_uses_window_group_limit(spark):
-    import nilm_data_framework_spark.queries.extra_ops_r9b as r9b
+    from nilm_data_framework_spark.queries.curation_lakehouse import capped_topk_per_source
 
-    df = r9b.capped_topk_per_source(spark, "/root/testdata/sf0.001")
+    df = capped_topk_per_source(spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "WindowGroupLimit" in plan, (
         "per-source rank filter should compile to WindowGroupLimit "

@@ -1,7 +1,7 @@
 """Persisted-index lifecycle maintenance (operators/index_maintenance.py):
 copy-on-write DELETE and write-new-then-swap COMPACTION against the BM25
 and IVF layouts. The probe-equivalence gates live in
-queries/extra_ops_r8b.py; these tests pin the parts a value-hash cannot
+queries/retrieval.py; these tests pin the parts a value-hash cannot
 see — file counts, emptied-directory cleanup, exact stats decrements,
 idempotence, and the partition-name unescape round-trip."""
 

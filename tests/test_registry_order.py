@@ -9,6 +9,8 @@ likeliest source of a displaced re-attestation window). These tests pin
   1. the generated file is in sync with the artifacts + the live registry,
   2. the driver's 50-row window contains only unattested queries,
   3. the unrecorded/recorded blocks never interleave,
+  4. the order is the explicit (recorded, not REATTEST, name) key, so no
+     import history can move the window,
 
 so adding a query module or regenerating after a new round cannot silently
 push a never-attested query out of the driver's sample.
@@ -18,6 +20,8 @@ from __future__ import annotations
 
 import importlib.util
 import os
+import subprocess
+import sys
 
 from nilm_data_framework_spark.plans.driver_recorded import DRIVER_RECORDED
 from nilm_data_framework_spark.plans.registry import _DRIVER_RECORDED, all_queries
@@ -84,16 +88,35 @@ def test_unrecorded_sort_before_recorded():
 
 
 def test_window_is_stable_registration_order():
-    """Within the unrecorded block the stable sort preserves module import
-    order, so new query modules MUST be imported after extra_ops in
-    all_queries() — otherwise their brand-new queries displace the leftover
-    r5 extra_ops backlog (93 queries > 50 slots) from the r6/r7 windows."""
-    names = list(all_queries())
-    from nilm_data_framework_spark.plans.registry import registry
+    """The order is the explicit key — never-recorded first, then REATTEST,
+    then the rest, by name within each block — not registration order."""
+    from nilm_data_framework_spark.plans.reattest import REATTEST
 
-    reg_order = {n: i for i, n in enumerate(registry)}
-    unrecorded = [n for n in names if n not in DRIVER_RECORDED]
-    assert unrecorded == sorted(unrecorded, key=reg_order.__getitem__)
+    names = list(all_queries())
+    assert names == sorted(
+        names, key=lambda n: (n in DRIVER_RECORDED, n not in REATTEST, n)
+    )
+
+
+def _order_in_fresh_interpreter(pre_import: str | None = None) -> list[str]:
+    code = "from nilm_data_framework_spark.plans.registry import all_queries\n"
+    if pre_import:
+        code = f"import {pre_import}\n" + code
+    code += "print('\\n'.join(all_queries()))\n"
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=_REPO, capture_output=True,
+        text=True, check=True,
+    )
+    return out.stdout.split()
+
+
+def test_order_ignores_import_history():
+    """Importing a query module before all_queries() registers its queries
+    first; the driver's window must not depend on that."""
+    clean = _order_in_fresh_interpreter()
+    for mod in ("similarity", "retrieval"):
+        pre = f"nilm_data_framework_spark.queries.{mod}"
+        assert _order_in_fresh_interpreter(pre) == clean, pre
 
 
 def test_reattest_names_front_load_the_window():

@@ -234,7 +234,7 @@ def test_bm25_append_empty_batch_is_noop(spark, tmp_path):
 
 def test_bm25_hits_zero_fill_reconstructs_full_scan(spark):
     """The exactness claim the persisted RAG twin's superset proof rests
-    on (queries/extra_ops_r7.py): indexed hit-doc scores UNION a
+    on (queries/retrieval.py): indexed hit-doc scores UNION a
     0.0-filled complement must equal bm25_scores over the whole corpus
     BIT-FOR-BIT — raw float == comparison, no tolerance. Covers both
     regimes: docs holding query terms (shared-expression op order) and
@@ -278,13 +278,8 @@ def test_bm25_hits_zero_fill_reconstructs_full_scan(spark):
 def test_gini_matches_numpy(spark):
     import numpy as np
 
-    # via all_queries() so module registration keeps its canonical order
-    # (a direct queries.extra_ops import here would register extra_ops
-    # FIRST and displace the driver's 50-row window — the registry-order
-    # contract in CLAUDE.md)
-    from nilm_data_framework_spark.plans.registry import all_queries
+    from nilm_data_framework_spark.queries.stats import gini_key_skew
 
-    gini_key_skew = all_queries()["gini_key_skew"].spark
     out = {r["priority"]: r for r in gini_key_skew(spark, "/root/testdata/sf0.001").collect()}
     import duckdb
 
@@ -306,11 +301,7 @@ def test_gini_matches_numpy(spark):
 
 
 def test_benford_constants():
-    # canonical-order registration first (see registry-order note above)
-    from nilm_data_framework_spark.plans.registry import all_queries
-
-    all_queries()
-    from nilm_data_framework_spark.queries.extra_ops import _BENFORD_E4
+    from nilm_data_framework_spark.queries.stats import _BENFORD_E4
 
     assert _BENFORD_E4[1] == 3010 and _BENFORD_E4[9] == 458
     # shares sum to ~1 (within e4 rounding of the nine terms)
@@ -734,7 +725,7 @@ def test_rag_persisted_serve_mode_matches_gate_mode(spark):
     exercised end-to-end at fixture scale, and the index-reuse contract
     the rag_retrieval_pipeline_serve gate relies on."""
     from nilm_data_framework_spark.plans.registry import all_queries
-    from nilm_data_framework_spark.queries.extra_ops_r7 import (
+    from nilm_data_framework_spark.queries.retrieval import (
         build_rag_indexes,
         rag_persisted_pipeline,
     )
