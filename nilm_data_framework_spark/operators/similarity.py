@@ -14,8 +14,11 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from nilm_data_framework_spark.layouts import (
     partitioned_writer,
@@ -31,48 +34,53 @@ LSH_SEED = 42
 WORD_BITS = 32
 
 
-def dot(a: Column, b: Column) -> Column:
-    """Dot product of two array columns, computed in double (JVM-side)."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def dot(a: str, b: str) -> str:
+    """Dot product of two array columns, computed in double (JVM-side), as
+    SQL text over the SQL operands ``a`` and ``b``: a left fold from 0D in
+    component order."""
+    return (
+        f"aggregate(zip_with({a}, {b}, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
+        " 0D, (acc, v) -> acc + v)"
     )
 
 
-def l2_norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double") * v.cast("double"))
-    )
+def l2_norm(a: str) -> str:
+    """L2 norm of an array column as SQL text (the same left fold as :func:`dot`)."""
+    return f"sqrt(aggregate({a}, 0D, (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
 
 
-def cosine(a: Column, b: Column) -> Column:
-    """PRECONDITION: non-zero-magnitude vectors. A zero vector divides by
-    zero, where the engines DIVERGE: Spark double division yields NULL
-    (sorts LAST under DESC), DuckDB yields NaN/inf (NaN sorts FIRST) — so
-    a zero-padded/failed embedding would rank opposite ways across every
-    cosine top-k here. Filter or impute zero vectors upstream; pinning a
-    semantic in one engine alone cannot make the oracles agree."""
-    return dot(a, b) / (l2_norm(a) * l2_norm(b))
+def cosine(a: str, b: str) -> str:
+    """Cosine of two array columns as SQL text; callers wrap it once
+    (``F.expr``/``selectExpr``), so building it costs one Py4J call.
+
+    PRECONDITION: non-zero-magnitude vectors. A zero vector divides by
+    zero, where the engines DIVERGE: under the session's ANSI mode (the
+    Spark 4 default) Spark raises ``[DIVIDE_BY_ZERO]``, while DuckDB yields
+    NaN/inf (NaN sorts FIRST), so no oracle can replay a zero vector. Filter
+    or impute zero vectors upstream; pinning a semantic in one engine alone
+    cannot make the oracles agree."""
+    return f"{dot(a, b)} / ({l2_norm(a)} * {l2_norm(b)})"
 
 
-def _corpus(df: DataFrame, *extra) -> DataFrame:
-    """Corpus side of a similarity join: ``(match_id, cv, *extra)``."""
-    return df.select(F.col("vec_id").alias("match_id"), F.col("embedding").alias("cv"), *extra)
+def _corpus(df: DataFrame, *extra: str) -> DataFrame:
+    """Corpus side of a similarity join: ``(match_id, cv, *extra)``, the
+    extras as SQL text."""
+    return df.selectExpr("vec_id AS match_id", "embedding AS cv", *extra)
 
 
-def _queries(df: DataFrame, *extra) -> DataFrame:
-    """Query side of a similarity join: ``(query_id, qv, *extra)``."""
-    return df.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv"), *extra)
+def _queries(df: DataFrame, *extra: str) -> DataFrame:
+    """Query side of a similarity join: ``(query_id, qv, *extra)``, the
+    extras as SQL text."""
+    return df.selectExpr("vec_id AS query_id", "embedding AS qv", *extra)
 
 
-def _topk(df: DataFrame, order: Column, k: int) -> DataFrame:
-    """Per-query top-k: rank each query's candidates by the score ordering
-    ``order`` (e.g. ``F.col("cosine").desc()``; ties → lower match_id) as
+def _topk(df: DataFrame, order: str, k: int) -> DataFrame:
+    """Per-query top-k: rank each query's candidates by the SQL score
+    ordering ``order`` (e.g. ``"cosine DESC"``; ties → lower match_id) as
     ``rk`` and keep ranks ≤ k — the global top-k merge after local pruning
     (REPOSE, ICDE 2021) every operator here ends with."""
-    w = Window.partitionBy("query_id").orderBy(order, F.col("match_id"))
-    return df.withColumn("rk", F.row_number().over(w)).filter(F.col("rk") <= k)
+    rank = f"row_number() OVER (PARTITION BY query_id ORDER BY {order}, match_id)"
+    return df.withColumn("rk", F.expr(rank)).filter(f"rk <= {int(k)}")
 
 
 def _join_back(shortlist: DataFrame, corpus: DataFrame, queries: DataFrame) -> DataFrame:
@@ -99,8 +107,8 @@ def brute_force_topk(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame
     scanned once, never shuffled by pair."""
     scored = _corpus(corpus).join(
         F.broadcast(_queries(queries)), F.col("match_id") != F.col("query_id")
-    ).withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-    return _topk(scored, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
+    ).withColumn("cosine", F.expr(cosine("qv", "cv")))
+    return _topk(scored, "cosine DESC", k).select("query_id", "match_id", "cosine", "rk")
 
 
 def truncated_prefix_topk(
@@ -131,15 +139,14 @@ def truncated_prefix_topk(
     ).select(
         "query_id",
         "match_id",
-        cosine(F.slice("qv", 1, prefix_dim), F.slice("cv", 1, prefix_dim)).alias(
-            "cos_prefix"
+        F.expr(
+            cosine(f"slice(qv, 1, {prefix_dim})", f"slice(cv, 1, {prefix_dim})")
+            + " AS cos_prefix"
         ),
     )
-    short = _topk(scored, F.col("cos_prefix").desc(), shortlist).select("query_id", "match_id")
-    rer = _join_back(short, corpus, queries).withColumn(
-        "cosine", cosine(F.col("qv"), F.col("cv"))
-    )
-    return _topk(rer, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
+    short = _topk(scored, "cos_prefix DESC", shortlist).select("query_id", "match_id")
+    rer = _join_back(short, corpus, queries).withColumn("cosine", F.expr(cosine("qv", "cv")))
+    return _topk(rer, "cosine DESC", k).select("query_id", "match_id", "cosine", "rk")
 
 
 def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
@@ -149,12 +156,15 @@ def _hyperplanes(dim: int, n_planes: int, seed: int) -> list[list[float]]:
     ]
 
 
-def array_lit(nested) -> Column:
-    """Constant (nested) double-array literal in ONE Py4J call.
+def array_lit(nested) -> str:
+    """Constant (nested) double-array literal as SQL text, so the caller's
+    one ``F.expr`` parses the whole constant JVM-side in ONE Py4J call.
 
     ``F.lit([...])`` round-trips to the JVM per element (~0.3 ms each), so a
-    plane matrix built that way costs seconds of plan-build time. Rendering
-    the constant as SQL text and parsing it JVM-side is one call total.
+    plane matrix built that way costs seconds of plan-build time. The text
+    nests into the SQL-text kernels (:func:`_nearest`, the SRP bucketing)
+    unchanged; each element renders as a ``D`` double literal (a bare
+    ``0.5`` is a DECIMAL in Spark SQL).
     """
 
     def render(x) -> str:
@@ -162,35 +172,27 @@ def array_lit(nested) -> Column:
             return "array(" + ",".join(render(e) for e in x) + ")"
         return repr(float(x)) + "D"
 
-    return F.expr(render(nested))
-
-
-def _bucket_of(vec: Column, planes: Column) -> Column:
-    """SRP bucket id from a planes array column: bit i = sign(vec·plane_i),
-    folded as sum of 2^i — one transform + one aggregate expression."""
-    bits = F.transform(
-        planes,
-        lambda p, i: F.when(dot(vec, p) > 0, F.pow(F.lit(2.0), i.cast("double"))).otherwise(
-            F.lit(0.0)
-        ),
-    )
-    return F.aggregate(bits, F.lit(0.0), lambda a, b: a + b).cast("long")
+    return render(nested)
 
 
 def _bucketize_tables(df: DataFrame, idname: str, tables: list) -> DataFrame:
     """(id, vec) → one row per (id, table, SRP bucket). All tables in one
     nested literal + one transform: the per-table expression-build loop was
-    the dominant plan-build cost."""
-    out = df.select(F.col("vec_id").alias(idname), F.col("embedding").alias(f"{idname}_v"))
-    buckets = F.transform(
-        array_lit(tables),
-        lambda planes, t: F.struct(
-            t.cast("integer").alias("tbl"),
-            _bucket_of(F.col(f"{idname}_v"), planes).alias("bkt"),
-        ),
+    the dominant plan-build cost. Bit i of a table's bucket id is
+    sign(vec·plane_i), folded as the sum of 2^i."""
+    vec = f"{idname}_v"
+    bits = (
+        f"transform(planes, (p, i) -> CASE WHEN {dot(vec, 'p')} > 0"
+        " THEN power(2D, CAST(i AS DOUBLE)) ELSE 0D END)"
     )
-    return out.select(idname, f"{idname}_v", F.explode(buckets).alias("tb")).select(
-        idname, f"{idname}_v", "tb.tbl", "tb.bkt"
+    buckets = (
+        f"transform({array_lit(tables)}, (planes, t) -> struct(CAST(t AS INT) AS tbl,"
+        f" CAST(aggregate({bits}, 0D, (acc, v) -> acc + v) AS BIGINT) AS bkt))"
+    )
+    return (
+        df.selectExpr(f"vec_id AS {idname}", f"embedding AS {vec}")
+        .selectExpr(idname, vec, f"explode({buckets}) AS tb")
+        .select(idname, vec, "tb.tbl", "tb.bkt")
     )
 
 
@@ -202,12 +204,12 @@ def _lsh_rank_candidates(cb: DataFrame, qb: DataFrame, k: int) -> DataFrame:
     per pair; TIES.md)."""
     cand = (
         cb.join(F.broadcast(qb), on=["tbl", "bkt"])
-        .filter(F.col("match_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("query_id_v"), F.col("match_id_v")))
+        .filter("match_id != query_id")
+        .withColumn("cosine", F.expr(cosine("query_id_v", "match_id_v")))
         .groupBy("query_id", "match_id")
         .agg(F.first("cosine").alias("cosine"))
     )
-    return _topk(cand, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
+    return _topk(cand, "cosine DESC", k).select("query_id", "match_id", "cosine", "rk")
 
 
 def lsh_topk(
@@ -300,18 +302,46 @@ def sample_centroids(corpus: DataFrame, n: int, method: str = "hash") -> list[li
     return [[float(x) for x in row[0]] for row in rows]
 
 
-def _nearest(cent_arr: Column, n: int) -> Column:
-    """The ``n`` centroids nearest to the row's ``embedding`` by cosine,
-    nearest first, as (negcos, cid) structs (ties → lower cid, by struct
-    ordering; a query's cids are distinct). ``cent_arr`` is the operator's
-    one :func:`array_lit` of the centroid list (centroid index = cid)."""
-    scored = F.transform(
-        cent_arr,
-        lambda cv, i: F.struct(
-            (-cosine(F.col("embedding"), cv)).alias("negcos"), i.cast("integer").alias("cid")
-        ),
+def _nearest(cents: str, n: int) -> str:
+    """SQL text: the ``n`` centroids nearest to the row's ``embedding`` by
+    cosine, nearest first, as (negcos, cid) structs (ties → lower cid, by
+    struct ordering; a query's cids are distinct). ``cents`` is the
+    operator's one :func:`array_lit` of the centroid list (centroid index =
+    cid)."""
+    return (
+        f"slice(array_sort(transform({cents}, (cv, i) -> struct("
+        f"-({cosine('embedding', 'cv')}) AS negcos, CAST(i AS INT) AS cid))), 1, {n})"
     )
-    return F.slice(F.array_sort(scored), 1, n)
+
+
+def _probe_cids(vecs: list, centroids: list[list[float]], n_probe: int) -> list[list[int]]:
+    """The driver twin of :func:`_nearest`: each query vector's ``n_probe``
+    nearest centroid ids, nearest first, bit-equal to the JVM pick.
+
+    Spark folds every dot product and squared norm from 0D in component
+    order, so each sum here is one vectorised add per dimension in that
+    order (``np.dot``/``np.sum`` sum in another order, which can flip a
+    near-tie); the products, ``sqrt`` and the division are IEEE on both
+    sides. Ranks go by (−cosine, cid), the struct order of ``_nearest``.
+    A zero-norm query or centroid raises: NumPy would return NaN where
+    Spark's ANSI division raises ``[DIVIDE_BY_ZERO]``."""
+    c = np.asarray(centroids, dtype=np.float64)
+    q = np.asarray(vecs, dtype=np.float64).reshape(len(vecs), c.shape[1])
+    dots = np.zeros((len(q), len(c)))
+    q_sq = np.zeros(len(q))
+    c_sq = np.zeros(len(c))
+    for j in range(c.shape[1]):
+        dots += q[:, j, None] * c[:, j]
+        q_sq += q[:, j] * q[:, j]
+        c_sq += c[:, j] * c[:, j]
+    denom = np.sqrt(q_sq)[:, None] * np.sqrt(c_sq)
+    if (denom == 0).any():
+        raise ZeroDivisionError(
+            "[DIVIDE_BY_ZERO] a zero-norm query or centroid has no cosine"
+        )
+    negcos = -(dots / denom)
+    cid = np.broadcast_to(np.arange(len(c)), negcos.shape)
+    return np.lexsort((cid, negcos))[:, :n_probe].tolist()
 
 
 def ivf_topk(
@@ -336,17 +366,16 @@ def ivf_topk(
     cents = centroids if centroids is not None else sample_centroids(corpus, n_centroids)
     # one nested literal (centroid index = cid) — see array_lit on why.
     cent_arr = array_lit(cents)
-    c = _corpus(corpus, _nearest(cent_arr, 1)[0]["cid"].alias("cid"))
+    c = _corpus(corpus, f"{_nearest(cent_arr, 1)}[0].cid AS cid")
     q = _queries(
-        queries,
-        F.explode(F.transform(_nearest(cent_arr, n_probe), lambda s: s["cid"])).alias("cid"),
+        queries, f"explode(transform({_nearest(cent_arr, n_probe)}, s -> s.cid)) AS cid"
     )
     cand = (
         c.join(F.broadcast(q), on="cid")
-        .filter(F.col("match_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
+        .filter("match_id != query_id")
+        .withColumn("cosine", F.expr(cosine("qv", "cv")))
     )
-    return _topk(cand, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
+    return _topk(cand, "cosine DESC", k).select("query_id", "match_id", "cosine", "rk")
 
 
 def ivf_knn_join(
@@ -375,17 +404,16 @@ def ivf_knn_join(
     Returns (query_id, match_id, cosine, rk) with rk ≤ k per query,
     ties broken on match_id (the uniform similarity-family policy)."""
     cent_arr = array_lit(centroids)
-    c = _corpus(corpus, _nearest(cent_arr, 1)[0]["cid"].alias("cid"))
+    c = _corpus(corpus, f"{_nearest(cent_arr, 1)}[0].cid AS cid")
     q = _queries(
-        corpus,
-        F.explode(F.transform(_nearest(cent_arr, n_probe), lambda s: s["cid"])).alias("cid"),
+        corpus, f"explode(transform({_nearest(cent_arr, n_probe)}, s -> s.cid)) AS cid"
     )
     cand = (
         c.join(q, on="cid")
-        .filter(F.col("match_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
+        .filter("match_id != query_id")
+        .withColumn("cosine", F.expr(cosine("qv", "cv")))
     )
-    return _topk(cand, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
+    return _topk(cand, "cosine DESC", k).select("query_id", "match_id", "cosine", "rk")
 
 
 def assign_centroids(corpus: DataFrame, centroids: list[list[float]]) -> DataFrame:
@@ -396,7 +424,7 @@ def assign_centroids(corpus: DataFrame, centroids: list[list[float]]) -> DataFra
     columns (label/lang/tenant) ride along into the partitioned layout,
     which is what makes FILTERED vector search a parquet pushdown instead
     of a join-back (ivf_topk_partitioned's pre_filter)."""
-    return corpus.select("*", _nearest(array_lit(centroids), 1)[0]["cid"].alias("cid"))
+    return corpus.select("*", F.expr(f"{_nearest(array_lit(centroids), 1)}[0].cid AS cid"))
 
 
 def semantic_dedup(
@@ -432,7 +460,7 @@ def semantic_dedup(
     dropped = (
         a.join(b, "cid")
         .filter(F.col("_id_a") < F.col("_id_b"))
-        .filter(cosine(F.col("_va"), F.col("_vb")) >= threshold)
+        .filter(F.expr(f"{cosine('_va', '_vb')} >= {float(threshold)!r}D"))
         .select(F.col("_id_b").alias("vec_id"))
         .distinct()
     )
@@ -454,7 +482,7 @@ def kmeans_step(corpus: DataFrame, centroids: DataFrame) -> DataFrame:
     scored = corpus.select(
         F.col("vec_id").alias("_id"), F.col("embedding").alias("_v")
     ).crossJoin(F.broadcast(centroids)).withColumn(
-        "_cos", cosine(F.col("_v"), F.col("cv"))
+        "_cos", F.expr(cosine("_v", "cv"))
     )
     w = Window.partitionBy("_id").orderBy(F.col("_cos").desc(), F.col("cid"))
     assigned = scored.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1)
@@ -482,7 +510,7 @@ def _adc(codebook: list[list[list[float]]]) -> Column:
     ``Σ_m L2²(sub_m(qv), codebook[m][codes[m]])`` — table lookups against
     one codebook literal, never the raw corpus floats."""
     dsub = len(codebook[0][0])
-    cb = array_lit(codebook)
+    cb = F.expr(array_lit(codebook))
     return F.aggregate(
         F.sequence(F.lit(0), F.lit(len(codebook) - 1)),
         F.lit(0.0),
@@ -520,7 +548,7 @@ def pq_encode(df: DataFrame, codebook: list[list[list[float]]]) -> DataFrame:
     SQL literal (see :func:`array_lit`)."""
     n_sub = len(codebook)
     dsub = len(codebook[0][0])
-    cb = array_lit(codebook)  # [M][K][dsub]
+    cb = F.expr(array_lit(codebook))  # [M][K][dsub]
     sub = lambda v, mi: F.slice(v, mi * dsub + 1, dsub)  # noqa: E731
     codes = F.transform(
         F.sequence(F.lit(0), F.lit(n_sub - 1)),
@@ -561,7 +589,7 @@ def pq_topk(
     scored = encoded.join(
         F.broadcast(_queries(queries)), F.col("match_id") != F.col("query_id")
     ).withColumn("approx_d", _adc(cbook))
-    return _topk(scored, F.col("approx_d").asc(), k).select(
+    return _topk(scored, "approx_d", k).select(
         "query_id", "match_id", "approx_d", "rk"
     )
 
@@ -588,7 +616,7 @@ def pq_rerank_topk(
     exact = _join_back(shortlist, corpus, queries).withColumn(
         "dist", l2_sq(F.col("qv"), F.col("cv"))
     )
-    return _topk(exact, F.col("dist").asc(), k).select("query_id", "match_id", "dist", "rk")
+    return _topk(exact, "dist", k).select("query_id", "match_id", "dist", "rk")
 
 
 def ivf_pq_topk(
@@ -619,27 +647,26 @@ def ivf_pq_topk(
     # stored form of the corpus: (cid, codes) — encode + assign, one narrow pass
     coded = pq_encode(corpus, cbook).select(
         F.col("vec_id").alias("match_id"),
-        _nearest(cent_arr, 1)[0]["cid"].alias("cid"),
+        F.expr(f"{_nearest(cent_arr, 1)}[0].cid AS cid"),
         "codes",
     )
     q = _queries(
-        queries,
-        F.explode(F.transform(_nearest(cent_arr, n_probe), lambda s: s["cid"])).alias("cid"),
+        queries, f"explode(transform({_nearest(cent_arr, n_probe)}, s -> s.cid)) AS cid"
     )
     # each corpus vector lives in exactly one list and probe cids are
     # distinct per query → (query_id, match_id) is already unique, no dedup
     scored = (
         coded.join(F.broadcast(q), on="cid")
-        .filter(F.col("match_id") != F.col("query_id"))
+        .filter("match_id != query_id")
         .withColumn("approx_d", _adc(cbook))
     )
-    shortlist = _topk(scored, F.col("approx_d").asc(), rerank).select(
+    shortlist = _topk(scored, "approx_d", rerank).select(
         "query_id", "match_id"
     )
     exact = _join_back(shortlist, corpus, queries).withColumn(
         "dist", l2_sq(F.col("qv"), F.col("cv"))
     )
-    return _topk(exact, F.col("dist").asc(), k).select("query_id", "match_id", "dist", "rk")
+    return _topk(exact, "dist", k).select("query_id", "match_id", "dist", "rk")
 
 
 def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
@@ -657,12 +684,12 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame, k: int) -> DataFrame:
     the LSH/IVF bucketed paths compose the same way (mismatch filter inside
     the bucket join).
     """
-    q = _queries(queries, F.col("label").alias("q_label"))
-    c = _corpus(corpus, F.col("label").alias("c_label"))
+    q = _queries(queries, "label AS q_label")
+    c = _corpus(corpus, "label AS c_label")
     scored = c.join(
         F.broadcast(q), F.col("c_label") != F.col("q_label")
-    ).withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
-    return _topk(scored, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
+    ).withColumn("cosine", F.expr(cosine("qv", "cv")))
+    return _topk(scored, "cosine DESC", k).select("query_id", "match_id", "cosine", "rk")
 
 
 def sign_words(vec: Column, dim: int) -> Column:
@@ -727,13 +754,11 @@ def hamming_rerank_topk(
     scored = c.join(
         F.broadcast(q), F.col("match_id") != F.col("query_id")
     ).select("query_id", "match_id", hamming.alias("hamming"))
-    shortlist = _topk(scored, F.col("hamming").asc(), rerank).select(
+    shortlist = _topk(scored, "hamming", rerank).select(
         "query_id", "match_id", "hamming"
     )
-    rer = _join_back(shortlist, corpus, queries).withColumn(
-        "cosine", cosine(F.col("qv"), F.col("cv"))
-    )
-    return _topk(rer, F.col("cosine").desc(), k).select(
+    rer = _join_back(shortlist, corpus, queries).withColumn("cosine", F.expr(cosine("qv", "cv")))
+    return _topk(rer, "cosine DESC", k).select(
         "query_id", "match_id", "hamming", "cosine", "rk"
     )
 
@@ -776,22 +801,27 @@ def ivf_topk_partitioned(
     tests/test_plan_quality.py::test_ivf_persisted_scan_partition_pruned),
     so only n_probe/n_centroids of the corpus directories are read.
 
-    ``queries`` is evaluated exactly ONCE: one row per query — (query_id,
-    its vector, its n_probe centroid ids) — is collected to the driver,
-    the probe set is read off those rows, and the broadcast query side is
-    rebuilt from them with ``createDataFrame`` (Arrow into a JVM-local
+    ``queries`` is evaluated exactly ONCE: one collect of its (vec_id,
+    embedding) rows. Each query's n_probe centroid ids are picked on the
+    driver against the centroids held as a float64 array
+    (:func:`_probe_cids`, bit-equal to the JVM's :func:`_nearest`), so no
+    centroid literal enters any plan of this operator: the probe set
+    reaches Spark only as the literal ``IN`` list above. The broadcast
+    query side is rebuilt from the collected rows, one row per (query,
+    probed cid), with ``createDataFrame`` (Arrow into a JVM-local
     relation: no second scan, no second Python-worker start for a
-    Python-built frame). The collect is bounded by |queries| × (dim +
-    n_probe) values — query sets are small by contract, the same
-    bounded-collect rule as sample_centroids; queries = corpus is
-    :func:`ivf_knn_join`'s job. Because the probe set and the joined rows
-    come from the same collected rows, a nondeterministic ``queries``
-    frame cannot yield a probe set that disagrees with the joined rows.
-    Results are identical to :func:`ivf_topk` with the same centroids
-    because the per-query candidate join on cid already restricts to
-    each query's own probes; the same unique-vec_id precondition makes
-    every (query_id, match_id) pair meet in exactly one cid, so no dedup
-    aggregate runs.
+    Python-built frame). The collect is bounded by |queries| × dim values
+    — query sets are small by contract, the same bounded-collect rule as
+    sample_centroids; queries = corpus is :func:`ivf_knn_join`'s job.
+    Because the probe set and the joined rows come from the same
+    collected rows, a nondeterministic ``queries`` frame cannot yield a
+    probe set that disagrees with the joined rows. Results are identical
+    to :func:`ivf_topk` with the same centroids because the per-query
+    candidate join on cid already restricts to each query's own probes;
+    the same unique-vec_id precondition makes every (query_id, match_id)
+    pair meet in exactly one cid, so no dedup aggregate runs. A zero-norm
+    query or centroid raises ``ZeroDivisionError``, as the JVM pick
+    raises ``[DIVIDE_BY_ZERO]``.
 
     ``pre_filter`` is FILTERED vector search (the metadata-constrained
     ANN every RAG deployment runs — "top-k among docs with lang='de'"):
@@ -811,26 +841,30 @@ def ivf_topk_partitioned(
     directories, the pushed predicate cuts row groups inside them, and
     the cosine evaluates only on surviving rows.
     """
-    cent_arr = array_lit(centroids)
     # the one evaluation of ``queries`` (see the docstring)
-    probes = _queries(
-        queries, F.transform(_nearest(cent_arr, n_probe), lambda s: s["cid"]).alias("probe")
+    qs = _queries(queries)
+    rows = qs.collect()
+    cids = _probe_cids([r["qv"] for r in rows], centroids, n_probe)
+    pdf = pd.DataFrame(
+        [(r["query_id"], r["qv"], cid) for r, probe in zip(rows, cids) for cid in probe],
+        columns=["query_id", "qv", "cid"],
     )
-    pdf = probes.toPandas()
-    probed = sorted({int(c) for cids in pdf["probe"] for c in cids})
-    q = spark.createDataFrame(pdf, probes.schema).select(
-        "query_id", "qv", F.explode("probe").alias("cid")
+    q = spark.createDataFrame(
+        pdf, StructType([*qs.schema.fields, StructField("cid", IntegerType(), False)])
     )
-    c = read_parquet(spark, path).filter(F.col("cid").isin(probed))
+    probed = sorted({cid for probe in cids for cid in probe})
+    c = read_parquet(spark, path).filter(
+        f"cid IN ({', '.join(map(str, probed))})" if probed else "false"
+    )
     if pre_filter is not None:
         c = c.filter(pre_filter)
     cand = (
         _corpus(c, "cid")
         .join(F.broadcast(q), on="cid")
-        .filter(F.col("match_id") != F.col("query_id"))
-        .withColumn("cosine", cosine(F.col("qv"), F.col("cv")))
+        .filter("match_id != query_id")
+        .withColumn("cosine", F.expr(cosine("qv", "cv")))
     )
-    return _topk(cand, F.col("cosine").desc(), k).select("query_id", "match_id", "cosine", "rk")
+    return _topk(cand, "cosine DESC", k).select("query_id", "match_id", "cosine", "rk")
 
 
 def append_ivf_batch(batch: DataFrame, path: str, centroids: list[list[float]]) -> None:
@@ -932,8 +966,8 @@ def sq8_rerank_topk(
     scored = c.join(
         F.broadcast(q), F.col("match_id") != F.col("query_id")
     ).select("query_id", "match_id", _int_dot(F.col("qc"), F.col("cc")).alias("dot_sq8"))
-    shortlist = _topk(scored, F.col("dot_sq8").desc(), rerank).select("query_id", "match_id")
+    shortlist = _topk(scored, "dot_sq8 DESC", rerank).select("query_id", "match_id")
     rer = _join_back(shortlist, corpus, queries).withColumn(
         "dot_u12", _int_dot(u6_components("qv"), u6_components("cv"))
     )
-    return _topk(rer, F.col("dot_u12").desc(), k).select("query_id", "match_id", "dot_u12", "rk")
+    return _topk(rer, "dot_u12 DESC", k).select("query_id", "match_id", "dot_u12", "rk")

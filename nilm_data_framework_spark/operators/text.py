@@ -600,11 +600,12 @@ def _term_tf(term: str) -> Column:
 
 def _check_terms(terms: list[str]) -> None:
     """Query terms are spliced into column names (``tf_<t>``/``df_<t>``)
-    and a SQL-text idf expression — a term that is not a bare lowercase
-    identifier (apostrophes, dots, hyphens: all producible by whitespace
-    tokenization of real queries) would break parsing or resolve as a
-    struct access, and duplicates create ambiguous columns. Reject both
-    up front with a clear error instead."""
+    and SQL text (the score, the per-term aggregates, the term ``IN``
+    list) — a term that is not a bare lowercase identifier (apostrophes,
+    dots, hyphens: all producible by whitespace tokenization of real
+    queries) would break parsing or resolve as a struct access, and
+    duplicates create ambiguous columns. Reject both up front with a
+    clear error."""
     import re
 
     bad = [t for t in terms if not re.fullmatch(r"[a-z0-9_]+", t)]
@@ -663,37 +664,44 @@ def bm25_scores(df: DataFrame, terms: list[str]) -> DataFrame:
             for t_ in terms
         ],
     )
-    scored = toks.crossJoin(F.broadcast(stats))
-    score = _bm25_score_expr(terms)
-    return scored.select(
-        F.col("doc_id"),
-        "dl",
-        *[F.col(f"tf_{t_}") for t_ in terms],
-        score.alias("bm25_raw"),
-        F.round(score, 4).alias("bm25"),
-    )
+    return toks.crossJoin(F.broadcast(stats)).selectExpr(*_bm25_output(terms))
 
 
-def _bm25_score_expr(terms: list[str]) -> Column:
-    """The BM25 score expression over (dl, tf_<t>..., n_docs, sum_dl,
-    df_<t>...) columns — factored so the full-scan path (bm25_scores) and
+def _bm25_score_expr(terms: list[str]) -> str:
+    """The BM25 score over (dl, tf_<t>..., n_docs, sum_dl, df_<t>...)
+    columns as SQL text — shared so the full-scan path (bm25_scores) and
     the inverted-index path (bm25_topk_indexed) execute the IDENTICAL
     fixed-order IEEE op sequence: bit-equal scores are what let the
-    indexed probe share the full-scan DuckDB oracle."""
-    k1, b = BM25_K1, BM25_B
-    avgdl = F.expr("CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)")
-    score = F.lit(0.0)
+    indexed probe share the full-scan DuckDB oracle. Constants are ``D``
+    double literals (a bare ``0.0`` is a DECIMAL in Spark SQL); the terms
+    passed :func:`_check_terms`, so splicing them into the text is safe."""
+    avgdl = "CAST(sum_dl AS DOUBLE) / CAST(n_docs AS DOUBLE)"
+    score = "0D"
     for t_ in terms:
-        idf = F.expr(
+        idf = (
             f"ln(1.0 + (CAST(n_docs AS DOUBLE) - CAST(df_{t_} AS DOUBLE) + 0.5)"
             f" / (CAST(df_{t_} AS DOUBLE) + 0.5))"
         )
-        tf = F.col(f"tf_{t_}").cast("double")
-        denom = tf + F.lit(k1) * (
-            F.lit(1.0 - b) + F.lit(b) * (F.col("dl").cast("double") / avgdl)
+        tf = f"CAST(tf_{t_} AS DOUBLE)"
+        denom = (
+            f"{tf} + {BM25_K1!r}D * ({1.0 - BM25_B!r}D + {BM25_B!r}D"
+            f" * (CAST(dl AS DOUBLE) / ({avgdl})))"
         )
-        score = score + idf * ((tf * F.lit(k1 + 1.0)) / denom)
+        score = f"({score}) + ({idf}) * (({tf} * {BM25_K1 + 1.0!r}D) / ({denom}))"
     return score
+
+
+def _bm25_output(terms: list[str]) -> list[str]:
+    """The ``selectExpr`` list of both BM25 paths: (doc_id, dl, tf_<t>...,
+    bm25_raw, bm25 rounded 4dp)."""
+    score = _bm25_score_expr(terms)
+    return [
+        "doc_id",
+        "dl",
+        *[f"tf_{t_}" for t_ in terms],
+        f"{score} AS bm25_raw",
+        f"round({score}, 4) AS bm25",
+    ]
 
 
 def _doc_tokens(df: DataFrame) -> DataFrame:
@@ -814,34 +822,28 @@ def bm25_hits_indexed(spark, path: str, terms: list[str]) -> DataFrame:
     _check_terms(terms)
     stats0 = spark.read.schema(BM25_STATS_SCHEMA).parquet(f"{path}/stats")
     post = spark.read.schema(BM25_POSTINGS_SCHEMA).parquet(f"{path}/postings").filter(
-        F.col("term").isin(terms)
+        "term IN (" + ", ".join(f"'{t_}'" for t_ in terms) + ")"
     )
+    # per-term df and tf as SQL text: one parse per aggregate, not a
+    # Column built node by node over Py4J
     dft = post.groupBy().agg(
         *[
-            F.sum((F.col("term") == t_).cast("long")).cast("long").alias(f"df_{t_}")
+            F.expr(f"CAST(sum(CAST(term = '{t_}' AS BIGINT)) AS BIGINT) AS df_{t_}")
             for t_ in terms
         ]
     )
     stats = stats0.crossJoin(F.broadcast(dft))
     per_doc = post.groupBy("doc_id").agg(
-        F.first("dl").alias("dl"),
+        F.expr("first(dl) AS dl"),
         *[
-            F.coalesce(
-                F.sum(F.when(F.col("term") == t_, F.col("tf"))), F.lit(0)
+            F.expr(
+                f"CAST(coalesce(sum(CASE WHEN term = '{t_}' THEN tf END), 0) AS BIGINT)"
+                f" AS tf_{t_}"
             )
-            .cast("long")
-            .alias(f"tf_{t_}")
             for t_ in terms
         ],
     )
-    score = _bm25_score_expr(terms)
-    return per_doc.crossJoin(F.broadcast(stats)).select(
-        "doc_id",
-        "dl",
-        *[F.col(f"tf_{t_}") for t_ in terms],
-        score.alias("bm25_raw"),
-        F.round(score, 4).alias("bm25"),
-    )
+    return per_doc.crossJoin(F.broadcast(stats)).selectExpr(*_bm25_output(terms))
 
 
 def bm25_topk_indexed(spark, path: str, terms: list[str], k: int) -> DataFrame:
@@ -850,9 +852,7 @@ def bm25_topk_indexed(spark, path: str, terms: list[str], k: int) -> DataFrame:
     full-scan ranking for every positively-scored rank. The top-k cut is
     TakeOrderedAndProject on (bm25_raw DESC, doc_id); the rank column is
     assigned afterwards over the ≤k coalesced rows."""
-    from pyspark.sql import Window
-
     scored = bm25_hits_indexed(spark, path, terms)
-    top = scored.orderBy(F.col("bm25_raw").desc(), "doc_id").limit(k).coalesce(1)
-    w = Window.orderBy(F.col("bm25_raw").desc(), "doc_id")
-    return top.withColumn("rk", F.row_number().over(w)).drop("bm25_raw")
+    top = scored.orderBy(F.desc("bm25_raw"), "doc_id").limit(k).coalesce(1)
+    rank = F.expr("row_number() OVER (ORDER BY bm25_raw DESC, doc_id)")
+    return top.withColumn("rk", rank).drop("bm25_raw")

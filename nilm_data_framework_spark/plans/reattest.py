@@ -38,7 +38,10 @@ REATTEST: frozenset[str] = frozenset({
     "bm25_upsert_probe_equiv",
     # ivf_topk_partitioned evaluates its query side once (collect +
     # local relation) instead of a distinct-collect plus a re-evaluation,
-    # and runs no (query_id, match_id) dedup aggregate
+    # and runs no (query_id, match_id) dedup aggregate; it now picks the
+    # probe lists on the driver, so its broadcast side is one row per
+    # (query, probed cid) with no Generate/Filter over it (also in both
+    # RAG persisted gates below)
     "ivf_topk_persisted",
     "ivf_append_probe_equiv",
     "ivf_delete_probe_equiv",

@@ -493,7 +493,7 @@ def int8_quant_fidelity(spark: SparkSession, sf_dir: str) -> DataFrame:
             * F.col("_scale"),
         ),
     )
-    c = d.select("label", S.cosine(F.col("embedding"), F.col("_deq")).alias("_cos"))
+    c = d.selectExpr("label", f"{S.cosine('embedding', '_deq')} AS _cos")
     return c.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_vecs"),
         F.round(F.avg("_cos"), 4).alias("avg_fidelity"),

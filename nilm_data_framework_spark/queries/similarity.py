@@ -150,7 +150,7 @@ def embedding_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir).select("vec_id", "label", "embedding")
     a = e.alias("a")
     b = e.alias("b")
-    cos = S.cosine(F.col("a.embedding"), F.col("b.embedding"))
+    cos = F.expr(S.cosine("a.embedding", "b.embedding"))
     return (
         a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
         .withColumn("_cos", cos)
@@ -766,7 +766,7 @@ def contrastive_triplets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     scored = (
         c.join(F.broadcast(q), F.col("match_id") != F.col("query_id"))
-        .withColumn("cos", S.cosine(F.col("qv"), F.col("cv")))
+        .withColumn("cos", F.expr(S.cosine("qv", "cv")))
         .withColumn("same", F.col("c_label") == F.col("q_label"))
     )
     w = Window.partitionBy("query_id", "same").orderBy(
@@ -1646,7 +1646,7 @@ def maxsim_multivector_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             "tok",
             "mdoc_id",
-            dot(F.col("qv"), F.col("dv")).alias("dp"),
+            F.expr(f"{dot('qv', 'dv')} AS dp"),
         )
         .groupBy("query_id", "tok", "mdoc_id")
         .agg(F.max("dp").alias("mx"))

@@ -1,13 +1,16 @@
 """Fixed per-request costs of the serve path: program-written layouts open
 without a schema-inference job, the IVF probe evaluates its query frame
-once, the canonical store keeps its in-file sort order, partitioned
-writes run no empty writer tasks, and Python workers come from the
-package's daemon module."""
+once and picks its probe lists on the driver exactly as the JVM would,
+the BM25 and IVF probes build their plans in a bounded number of Py4J
+round trips, the canonical store keeps its in-file sort order,
+partitioned writes run no empty writer tasks, and Python workers come
+from the package's daemon module."""
 
 from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 import uuid
@@ -22,6 +25,9 @@ from nilm_data_framework_spark.operators import similarity as S
 from nilm_data_framework_spark.operators import text as T
 from nilm_data_framework_spark.sources import canonical as C
 from tests.conftest import SF_DIR
+
+# the gate scale of the oracle-parity runs, next to the test scale
+GATE_SF_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
 
 
 def _jobs_during(spark, build):
@@ -145,6 +151,89 @@ def test_ivf_partitioned_empty_queries(spark, tmp_path):
     S.write_ivf_corpus(emb, path, cents)
     none = emb.filter(F.col("vec_id") < 0)
     assert S.ivf_topk_partitioned(spark, path, none, k=5, centroids=cents).count() == 0
+
+
+def _jvm_probe_cids(frame, centroids, n_probe):
+    """Each row's ``n_probe`` nearest centroid ids as the JVM picks them
+    (the :func:`S._nearest` kernel of assign_centroids and ivf_topk)."""
+    pick = f"transform({S._nearest(S.array_lit(centroids), n_probe)}, s -> s.cid) AS cids"
+    return [r["cids"] for r in frame.selectExpr(pick).collect()]
+
+
+def test_driver_probe_pick_matches_jvm_nearest(spark):
+    emb = spark.read.parquet(f"{GATE_SF_DIR}/embeddings.parquet").orderBy("vec_id")
+    cents = S.sample_centroids(emb, 16)
+    vecs = [r["embedding"] for r in emb.select("embedding").collect()]
+    assert len(vecs) == 500
+    for n_probe in range(1, 5):
+        assert S._probe_cids(vecs, cents, n_probe) == _jvm_probe_cids(emb, cents, n_probe)
+
+
+def test_driver_probe_pick_breaks_exact_ties_on_lower_cid(spark):
+    # centroids 1 and 2 are the same vector: every query ties on them
+    cents = [[1.0, 0.0, 0.0], [0.5, 0.5, 0.0], [0.5, 0.5, 0.0], [0.0, 0.0, 1.0]]
+    vecs = [[0.6, 0.4, 0.1], [0.1, 0.1, 0.9]]
+    frame = spark.createDataFrame([(v,) for v in vecs], "embedding array<float>")
+    assert S._probe_cids(vecs, cents, 1)[0] == [1]
+    for n_probe in range(1, 5):
+        assert S._probe_cids(vecs, cents, n_probe) == _jvm_probe_cids(frame, cents, n_probe)
+
+
+def test_ivf_partitioned_zero_norm_query_fails_loudly(spark, tmp_path):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = S.sample_centroids(emb, 8)
+    path = str(tmp_path / "ivf_zero")
+    S.write_ivf_corpus(emb, path, cents)
+    zero = spark.createDataFrame([(10**9, [0.0] * 64)], "vec_id long, embedding array<float>")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        S.ivf_topk_partitioned(spark, path, zero, k=5, centroids=cents).collect()
+
+
+def _py4j_commands(spark, monkeypatch, run) -> int:
+    """Py4J commands sent while ``run()`` builds and collects a frame,
+    without the memory releases (``m``) the garbage collector sends at
+    unpredictable times."""
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *args, **kwargs):
+        if command[:1] != "m":
+            sent.append(command[:1])
+        return send(command, *args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    try:
+        run()
+    finally:
+        monkeypatch.undo()
+    return len(sent)
+
+
+# measured 93 (BM25, two terms) and 128 (IVF, one query); the Column-API
+# builds of the same plans sent 795 and 1,151
+BM25_PROBE_MAX_COMMANDS = 110
+IVF_PROBE_MAX_COMMANDS = 150
+
+
+def test_bm25_probe_py4j_round_trips(spark, tmp_path, monkeypatch):
+    path = str(tmp_path / "bm25")
+    T.write_bm25_index(spark.read.parquet(f"{SF_DIR}/documents.parquet"), path)
+    terms = ["spark", "vector"]
+    n = _py4j_commands(spark, monkeypatch, lambda: T.bm25_hits_indexed(spark, path, terms).collect())
+    assert n <= BM25_PROBE_MAX_COMMANDS, n
+
+
+def test_ivf_probe_py4j_round_trips(spark, tmp_path, monkeypatch):
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    cents = S.sample_centroids(emb, 16)
+    path = str(tmp_path / "ivf")
+    S.write_ivf_corpus(emb, path, cents)
+    row = emb.orderBy("vec_id").first()
+    q = spark.createDataFrame([(row[0], list(row[1]))], "vec_id long, embedding array<float>")
+    run = lambda: S.ivf_topk_partitioned(spark, path, q, 10, cents, n_probe=4).collect()  # noqa: E731
+    n = _py4j_commands(spark, monkeypatch, run)
+    assert n <= IVF_PROBE_MAX_COMMANDS, n
 
 
 def _final_plan(desc: str) -> str:

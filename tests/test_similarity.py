@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from nilm_data_framework_spark.operators import similarity as S
@@ -123,9 +124,16 @@ def test_cosine_expression(spark):
     df = spark.createDataFrame(
         pd.DataFrame({"a": [[1.0, 0.0], [1.0, 1.0]], "b": [[0.0, 1.0], [1.0, 1.0]]})
     )
-    got = df.select(S.cosine(F.col("a"), F.col("b")).alias("c")).collect()
+    got = df.selectExpr(f"{S.cosine('a', 'b')} AS c").collect()
     assert abs(got[0]["c"] - 0.0) < 1e-12
     assert abs(got[1]["c"] - 1.0) < 1e-12
+
+
+def test_cosine_of_zero_vector_raises(spark):
+    """The zero-vector precondition fails loudly: ANSI division raises."""
+    df = spark.createDataFrame([([0.0, 0.0], [1.0, 2.0])], "a array<double>, b array<double>")
+    with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+        df.selectExpr(f"{S.cosine('a', 'b')} AS c").collect()
 
 
 def test_pq_soundness_and_l2_recall(spark):
